@@ -14,6 +14,13 @@ schemas and key domains as the engine's fixture tables:
   languages, ``source`` = ``src{doc_id % 20}``, ``n_chars`` = text length.
 - ``embeddings``: ``vec_id`` dense from 0, unit-norm float32 vectors of
   dimension 64 drawn from a 10-component mixture, ``label`` = component.
+  With ``replicas`` > 1 the table holds ``embeddings / replicas`` base
+  vectors and, after them, ``replicas - 1`` perturbed copies of each
+  (``vec_id = r * base + i``, same label): copy ``r`` of vector ``i``
+  adds Gaussian noise of a per-copy scale, so some copies stay within
+  cosine 0.90 of the base vector and some do not -- the near-duplicate
+  states a fleet keeps seeing, which give the top-k queries real
+  neighbours to rank.
 
 The same (sizes, seed) always produces byte-identical files; the engine
 sees only the generated directory.
@@ -73,12 +80,24 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
     )
 
 
-def _embeddings(rng: np.random.Generator, n: int) -> pa.Table:
-    centers = rng.standard_normal((LABELS, DIM))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    labels = rng.integers(0, LABELS, n)
-    x = 0.15 * centers[labels] + rng.standard_normal((n, DIM)) / np.sqrt(DIM)
-    x = (x / np.linalg.norm(x, axis=1, keepdims=True)).astype(np.float32)
+def _unit(x: np.ndarray) -> np.ndarray:
+    return x / np.linalg.norm(x, axis=1, keepdims=True)
+
+
+def _embeddings(rng: np.random.Generator, n: int, replicas: int) -> pa.Table:
+    if n % replicas:
+        raise ValueError(f"embeddings={n} is not a multiple of replicas={replicas}")
+    base = n // replicas
+    centers = _unit(rng.standard_normal((LABELS, DIM)))
+    labels = rng.integers(0, LABELS, base)
+    x = _unit(0.15 * centers[labels] + rng.standard_normal((base, DIM)) / np.sqrt(DIM))
+    # noise scale s gives a copy cosine ~ 1 / sqrt(1 + s^2) to its base
+    # vector: s < 0.48 stays above 0.90
+    scale = rng.uniform(0.1, 0.7, (replicas - 1, base, 1))
+    noise = rng.standard_normal((replicas - 1, base, DIM)) / np.sqrt(DIM)
+    copies = [_unit(x + s * g) for s, g in zip(scale, noise)]
+    x = np.concatenate([x, *copies]).astype(np.float32)
+    labels = np.tile(labels, replicas)
     return pa.table(
         {
             "vec_id": pa.array(np.arange(n, dtype=np.int64)),
@@ -89,7 +108,7 @@ def _embeddings(rng: np.random.Generator, n: int) -> pa.Table:
 
 
 def generate(out_dir: str, seed: int, events: int, devices: int, documents: int,
-             embeddings: int) -> dict[str, str]:
+             embeddings: int, replicas: int = 1) -> dict[str, str]:
     """Write the three tables for ``seed`` into ``out_dir``; return
     ``{table: path}``.  Each table has its own stream derived from the
     seed, so resizing one table leaves the others' bytes unchanged."""
@@ -97,7 +116,7 @@ def generate(out_dir: str, seed: int, events: int, devices: int, documents: int,
     builders = {
         "events": lambda r: _events(r, events, devices),
         "documents": lambda r: _documents(r, documents),
-        "embeddings": lambda r: _embeddings(r, embeddings),
+        "embeddings": lambda r: _embeddings(r, embeddings, replicas),
     }
     paths = {}
     for i, (name, build) in enumerate(builders.items()):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload in a fresh process and print its metrics.
 
-    python3 perfbench/run.py --workload fleet --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload fleet --seed 1 --seconds 8 --trace 0
 
 Steps, all inside a per-run work directory under ``perfbench/_work``
 (deleted at exit, so every run starts from the same cold state):
@@ -41,18 +41,31 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 WORKLOADS = {
-    # the reference's IoT fleet dataflow: device profiles and path-3 kNN
-    # novelty (execution-bound, no eager jobs), then the availableNow
-    # detection stream (windowed LWW pivot, paths 1-2, into the snapshot
-    # and anomaly sinks).  The stream runs last: a finished stream can
-    # slow later batch queries in the same JVM.  No connected components.
+    # the reference's IoT fleet dataflow, batch side then stream:
+    # device profiles, exact path-3 kNN novelty, IVF and PQ top-k,
+    # latest-per-device and the as-of serving join (execution-bound,
+    # one eager job, in the PQ scan), then the availableNow detection stream (windowed
+    # LWW pivot, paths 1-2, into the snapshot and anomaly sinks).  From
+    # the second pass on, the batch queries run after the previous
+    # pass's finished stream, as a daily job's would after yesterday's
+    # drain.  No connected components.  The events keep the fixture's
+    # density (~67 per device over 30 days); the 4,000 embeddings are
+    # 500 base vectors and 7 perturbed copies of each.  A pass takes
+    # 10-12 s and the first warm one still spends a varying share of its
+    # CPU in the JIT compiler, so the median is taken over two timed
+    # passes in every run.
     "fleet": {
         "queries": [
             "device_profile_build",
             "path3_novelty_flags",
+            "ivf_grouped_knn",
+            "pq_knn",
+            "latest_event_per_user",
+            "asof_event_snapshot_join",
             "streaming_detect_e2e",
         ],
-        "sizes": {"events": 10000, "devices": 150, "documents": 100, "embeddings": 2000},
+        "sizes": {"events": 10000, "devices": 150, "documents": 100, "embeddings": 4000,
+                  "replicas": 8},
         "min_timed_passes": 2,
     },
     # near-duplicate clustering over four evidence classes: ~90% of the
@@ -66,6 +79,10 @@ WORKLOADS = {
         "min_timed_passes": 3,
     },
 }
+
+
+def all_queries() -> list[str]:
+    return [q for wl in WORKLOADS.values() for q in wl["queries"]]
 
 
 # -- process tree accounting via /proc ------------------------------------
@@ -212,6 +229,10 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--inputs", metavar="DIR",
+                    help="run on the events/documents/embeddings parquet files in DIR "
+                         "instead of generated inputs, to compare a workload's layer mix "
+                         "with the engine's fixture (the seed then only names the run)")
     args = ap.parse_args(argv)
     wl = WORKLOADS[args.workload]
     names = wl["queries"]
@@ -234,8 +255,13 @@ def main(argv=None) -> int:
         from perfbench import inputs
         from vectorsearch_scylla_spark.session import get_spark
 
-        sf_dir = os.path.join(work, "inputs")
-        paths = inputs.generate(sf_dir, args.seed, **wl["sizes"])
+        if args.inputs:
+            sf_dir = os.path.abspath(args.inputs)
+            paths = {t: os.path.join(sf_dir, f"{t}.parquet")
+                     for t in ("events", "documents", "embeddings")}
+        else:
+            sf_dir = os.path.join(work, "inputs")
+            paths = inputs.generate(sf_dir, args.seed, **wl["sizes"])
         conf = {
             "spark.local.dir": tmp,
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -269,14 +295,13 @@ def main(argv=None) -> int:
         passes += timed
 
         if tracer:
-            from perfbench import layers
+            from perfbench.trace import per_layer
 
             tracer.wait_for_streams()
-            metrics, per_pass = layers.per_layer(tracer, timed, args.workload)
+            metrics = per_layer(tracer, timed, all_queries(), args.workload)
             metrics["setup.session_s"]["value"] = session_s
             metrics["setup.cold_pass_s"]["value"] = passes[0]["wall_s"]
             metrics["proc.peak_rss_mb"]["value"] = tree_peak_rss_mb()
-            print(json.dumps({"per_pass": per_pass}))
         else:
             metrics = {
                 "setup_s": {"value": setup_s, "unit": "s"},

@@ -14,9 +14,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench import inputs  # noqa: E402
-from perfbench.run import WORKLOADS  # noqa: E402
+from perfbench.run import WORKLOADS, all_queries  # noqa: E402
 
-SIZES = {"events": 500, "devices": 15, "documents": 40, "embeddings": 60}
+SIZES = {"events": 500, "devices": 15, "documents": 40, "embeddings": 60, "replicas": 3}
 
 
 def _digests(out_dir: str, seed: int) -> dict[str, str]:
@@ -45,16 +45,19 @@ def test_inputs_keep_the_engine_key_domains(tmp_path):
     assert set(ev["user_id"]) <= set(range(SIZES["devices"]))
     emb = pq.read_table(paths["embeddings"]).to_pydict()
     assert set(emb["label"]) <= set(range(inputs.LABELS))
+    assert emb["vec_id"] == list(range(SIZES["embeddings"]))
+    base = SIZES["embeddings"] // SIZES["replicas"]
+    assert emb["label"] == emb["label"][:base] * SIZES["replicas"]
     assert {len(v) for v in emb["embedding"]} == {inputs.DIM}
     docs = pq.read_table(paths["documents"]).to_pydict()
     assert docs["n_chars"] == [len(t) for t in docs["text"]]
 
 
 def test_benchmark_json_matches_the_runner():
-    from perfbench.layers import metric_units
+    from perfbench.trace import metric_units
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     assert [w["name"] for w in spec["workloads"]] == list(WORKLOADS)
-    assert {m["name"]: m["unit"] for m in spec["per_layer"]} == metric_units()
+    assert {m["name"]: m["unit"] for m in spec["per_layer"]} == metric_units(all_queries())
     assert len(spec["per_layer"]) <= 128
