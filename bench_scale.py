@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Larger-scale bench point for the kNN + dedup operator families.
+"""Larger-scale bench point for the dedup clustering and IVF families.
 
 Synthesizes a ``SPARK_GRAFT_SCALE``× (default 10×) corpus from the
 ``$SPARK_GRAFT_SF_DIR`` fixtures (default sf0.1 → ≈50 k docs / 100 k
 vectors), materializes it as parquet so every timed operator runs a
-real scan, and times the scale-path kernels end-to-end to a noop sink.
+real scan, and times the scale paths end-to-end to a noop sink.
 
 Replication is PERTURBED, which makes the dedup numbers a realistic
 stress: replica k of a document appends a ``r<k>`` token (so every
@@ -13,11 +13,22 @@ must find ~45 pairs per group without any bucket blowing up), and
 replica k of a vector nudges one coordinate (10-way near-identical
 clusters for the ANN paths).
 
-Prints ONE JSON line:
-    {"metric": "scale_bench_wall_time", "value": N, "unit": "sec",
-     "queries": {...}, "scale": K, "n_docs": D, "n_vecs": V}
-Interpretation guidance lives in BENCH_SCALE.md (written by hand from
-these numbers — rerun this script to reproduce).
+Three measurements, picked with ``SPARK_GRAFT_SECTIONS`` (a comma
+list; unset = the two timed rows):
+
+- ``union`` / ``cascade``: union-evidence duplicate clustering, full
+  union vs cheap-evidence-first cascade (the registered
+  ``dedup_clusters_union_cascade`` code path).  Prints
+  ``{"metric": "scale_bench_wall_time", "value": N, "unit": "sec",
+  "queries": {...}, "scale": K, "n_docs": D, "n_vecs": V}``.
+- ``clique``: one ~1000-member band-bucket clique, plain vs salted
+  ``banded_pairs`` expansion, with per-task runtime quantiles.
+- ``sweep``: time and recall@5 of the grouped IVF probe at K ≈ √N per
+  nprobe point, against the exact blocked sweep.
+
+The two studies print ``{"metric": "scale_bench_study", ...}``.
+Interpretation guidance, and the results of the studies this script
+no longer runs, live in BENCH_SCALE.md.
 """
 
 from __future__ import annotations
@@ -167,763 +178,6 @@ def _clique_study(spark, docs0, base: str) -> dict:
     return out
 
 
-def _app_stage_totals(spark) -> dict | None:
-    """Bytes moved so far, summed over every COMPLETED stage of the
-    application via the REST API (None when the UI server is off).
-    Callers snapshot before/after a region and subtract — the deltas
-    are the data-movement account the 100 TB projection needs: input
-    scanned, shuffle written/read, and spill (which must be zero for
-    the in-memory-shuffle claims to transfer)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=complete", timeout=30
-        ) as r:
-            st = json.loads(r.read())
-    except Exception:
-        return None
-    tot = dict.fromkeys(
-        [
-            "input_bytes",
-            "shuffle_read_bytes",
-            "shuffle_write_bytes",
-            "memory_spill_bytes",
-            "disk_spill_bytes",
-        ],
-        0,
-    )
-    for s in st:
-        tot["input_bytes"] += s.get("inputBytes", 0)
-        tot["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-        tot["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        tot["memory_spill_bytes"] += s.get("memoryBytesSpilled", 0)
-        tot["disk_spill_bytes"] += s.get("diskBytesSpilled", 0)
-    return tot
-
-
-def _funnel_study(spark, docs, emb, base: str) -> dict:
-    """The 100 TB dress rehearsal this sandbox can host (r6 judge item
-    #5): the full curation funnel as ONE pipeline over the scaled
-    corpus — union-evidence CASCADE dedup → canonical keeper set →
-    quality gate → sampled-training IVF index build over the surviving
-    embeddings — with the per-stage wall-time split.  Every stage
-    materializes its output (parquet / localCheckpoint), so each
-    number is a real stage boundary, the way a production curation
-    run would persist between phases."""
-    from vectorsearch_scylla_spark.operators.graph import incremental_components
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        lloyd_kmeans,
-    )
-    from vectorsearch_scylla_spark.plans.registry import _cascade_union_evidence
-
-    stages: dict = {}
-    counts: dict = {}
-    io_before = _app_stage_totals(spark)
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] funnel {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    counts["docs_in"] = docs.count()
-    box: dict = {}
-    # 1. evidence: cheap edges + components + survivor verification +
-    # embedding edges (all eagerly materialized inside the registered
-    # cascade helper — the same code dedup_clusters_union_cascade runs)
-    stage(
-        "cascade_evidence",
-        lambda: box.update(_cascade_union_evidence(spark, None, docs=docs, emb=emb)),
-    )
-    # 2. final components: incremental fold of the spanning expensive
-    # edges into the cheap components (the registered cascade query's
-    # exact path — the cheap edge bulk is never re-propagated)
-    comp = stage(
-        "cascade_components",
-        lambda: incremental_components(
-            box["cheap_components"], box["spanning_new"]
-        ).localCheckpoint(),
-    )
-    # 3. canonical keeper set: drop every non-canonical dup member
-    dup_losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    keep_path = os.path.join(base, "funnel_keepers")
-    stage(
-        "canonical_keepers",
-        lambda: docs.join(dup_losers, "doc_id", "left_anti").write.parquet(keep_path),
-    )
-    keepers = spark.read.parquet(keep_path)
-    counts["keepers"] = keepers.count()
-    # 4. quality gate: deterministic text heuristics (word count,
-    # lexical diversity, mean word length) — the corpus_quality_filter
-    # family's shape, map-only over the keeper set
-    w = F.split(F.col("text"), " ")
-    gated_path = os.path.join(base, "funnel_quality")
-    stage(
-        "quality_gate",
-        lambda: keepers.filter(F.col("text").isNotNull())
-        .filter(F.size(w).between(3, 100_000))
-        .filter(
-            (F.size(F.array_distinct(w)).cast("double") / F.size(w)) > 0.2
-        )
-        .filter((F.length("text") / F.size(w)) < 25)
-        .write.parquet(gated_path),
-    )
-    survivors = spark.read.parquet(gated_path)
-    counts["quality_survivors"] = survivors.count()
-    # 5. embeddings of surviving docs (shared id scheme: vec i ↔ doc i)
-    surv_vecs = emb.join(
-        survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    n_vecs = surv_vecs.count()
-    counts["vectors_indexed"] = n_vecs
-    ivf_k = max(8, int(round(n_vecs**0.5)))
-    cents: list = []
-    # 6. sampled-training coarse quantizer (the 256·K FAISS-practice
-    # cap — constant-cost in corpus size) ...
-    stage(
-        f"ivf_sampled_train_k{ivf_k}",
-        lambda: cents.extend(
-            lloyd_kmeans(
-                surv_vecs, k=ivf_k, iters=2, kernel="numpy", train_rows=256 * ivf_k
-            )
-        ),
-    )
-    # 7. ... and the single full-corpus assignment pass, materialized
-    # as the cluster-partitioned inverted lists a real build writes
-    lists_path = os.path.join(base, "funnel_ivf_lists")
-    stage(
-        "ivf_assign_materialize",
-        lambda: assign_clusters_np(surv_vecs, cents, dtype="float32")
-        .repartition(ivf_k, "cluster_id")
-        .write.partitionBy("cluster_id")
-        .parquet(lists_path),
-    )
-    out = {
-        "stages_sec": stages,
-        "counts": counts,
-        "total_sec": round(sum(stages.values()), 3),
-        "ivf_k": ivf_k,
-    }
-    io_after = _app_stage_totals(spark)
-    if io_before is not None and io_after is not None:
-        out["data_moved_mib"] = {
-            k: round((io_after[k] - io_before[k]) / 2**20, 1) for k in io_after
-        }
-        print(
-            f"[bench_scale] funnel data moved: {out['data_moved_mib']}",
-            file=sys.stderr,
-        )
-    return out
-
-
-def _incremental_study(spark, docs, base: str) -> dict:
-    """Increment-vs-batch clustering at scale (r7): yesterday's corpus
-    is clustered once (pairs + components, the expensive artifacts);
-    today a ~1 % perturbed increment arrives.  Measures the registered
-    incremental path — asymmetric |new|·bands simhash probes against
-    the PERSISTED base signature table, then
-    ``incremental_components`` (star replay pruned to affected
-    components) — against the honest comparator: a full batch
-    recompute over base ∪ increment.  The claim being priced: the
-    increment's cost is O(|new| + affected), independent of the base
-    corpus and its edge count."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-    from vectorsearch_scylla_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-
-    stages: dict = {}
-    counts: dict = {}
-    io_marks: dict = {}
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] inc {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    def io_mark(name: str) -> None:
-        t = _app_stage_totals(spark)
-        if t is not None:
-            io_marks[name] = t
-
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    counts["n_base"] = nn.count()
-
-    pairs_path = os.path.join(base, "inc_base_pairs")
-    sigs_path = os.path.join(base, "inc_base_sigs")
-    labels_path = os.path.join(base, "inc_base_labels")
-    # --- yesterday: the persisted artifacts a deployment keeps --------
-    stage(
-        "base_pairs",
-        lambda: simhash_near_dup_pairs(nn, max_hamming=5)
-        .select("id_a", "id_b")
-        .write.parquet(pairs_path),
-    )
-    stage(
-        "base_signatures",
-        lambda: simhash128(nn).write.parquet(sigs_path),
-    )
-    stage(
-        "base_components",
-        lambda: connected_components(
-            spark.read.parquet(pairs_path)
-        ).write.parquet(labels_path),
-    )
-    prev = spark.read.parquet(labels_path)
-    counts["base_edges"] = spark.read.parquet(pairs_path).count()
-
-    # --- today: a ~1 % perturbed increment ----------------------------
-    inc_path = os.path.join(base, "inc_increment")
-    nn.filter(F.col("doc_id") % 97 == 0).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" inc")).alias("text"),
-    ).write.parquet(inc_path)
-    inc = spark.read.parquet(inc_path)
-    counts["n_increment"] = inc.count()
-
-    edges_box: dict = {}
-
-    def inc_pairs() -> None:
-        cross = simhash_near_dup_pairs(
-            inc, max_hamming=5, against_sigs=spark.read.parquet(sigs_path)
-        ).select("id_a", "id_b")
-        within = simhash_near_dup_pairs(inc, max_hamming=5).select("id_a", "id_b")
-        edges_box["e"] = cross.unionByName(within).localCheckpoint()
-        counts["increment_edges"] = edges_box["e"].count()
-
-    io_mark("inc_start")
-    stage("increment_pairs", inc_pairs)
-    stage(
-        "increment_update",
-        lambda: incremental_components(prev, edges_box["e"])
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-    )
-    io_mark("inc_end")
-
-    # --- the honest comparator: batch recompute over base ∪ increment --
-    def batch_recompute() -> None:
-        allrows = nn.unionByName(inc)
-        pairs = simhash_near_dup_pairs(allrows, max_hamming=5).select(
-            "id_a", "id_b"
-        ).localCheckpoint()
-        connected_components(pairs).write.format("noop").mode("overwrite").save()
-
-    stage("batch_recompute_all", batch_recompute)
-    io_mark("batch_end")
-    inc_total = round(stages["increment_pairs"] + stages["increment_update"], 3)
-    out = {
-        "stages_sec": stages,
-        "counts": counts,
-        "incremental_total_sec": inc_total,
-        "batch_total_sec": stages["batch_recompute_all"],
-        "speedup": round(stages["batch_recompute_all"] / inc_total, 1)
-        if inc_total
-        else None,
-    }
-    # data-movement account: the O(|new|) claim in bytes — the
-    # increment's shuffle volume vs the batch recompute's, same run
-    if {"inc_start", "inc_end", "batch_end"} <= io_marks.keys():
-        out["data_moved_mib"] = {
-            phase: {
-                k: round((b[k] - a[k]) / 2**20, 1) for k in b
-            }
-            for phase, a, b in [
-                ("incremental", io_marks["inc_start"], io_marks["inc_end"]),
-                ("batch", io_marks["inc_end"], io_marks["batch_end"]),
-            ]
-        }
-        print(
-            f"[bench_scale] inc data moved: {out['data_moved_mib']}",
-            file=sys.stderr,
-        )
-    return out
-
-
-def _chain_study(
-    spark,
-    docs,
-    base: str,
-    n_days: int = 3,
-    compact_day: int | None = None,
-    tag: str = "chain",
-) -> dict:
-    """Multi-day CHAINED increments (r9; week-long variant r10): the
-    r7/r8 incremental rows price ONE increment against a frozen base;
-    a deployment runs the loop daily, rolling each certified
-    increment's signatures into the persisted artifact
-    (``roll_forward_signatures``) so day d+1 probes base ∪ days 1..d.
-    This study runs ``n_days`` consecutive ~1 % increments and prices
-    each day's full loop — bipartite pair probe vs the (growing)
-    artifact, within-increment self-join, star-replay label update,
-    artifact append — then the honest comparator: one batch recompute
-    over base ∪ all increments.  ``compact_day`` interleaves the
-    small-files maintenance (``compact_signature_artifact``) after
-    that day's roll-forward, priced as its own stage inside the day
-    total — the week-scale run (--sections chain7: 7 days, compact
-    after day 4) shows the chain stays flat THROUGH a compaction.
-
-    The claim being priced: per-day cost is FLAT in the number of
-    days already absorbed (the artifact grows by |inc| rows/day, the
-    probe stays |new|·bands against a hash join, the label update
-    stays O(affected)), while the batch alternative re-pays the whole
-    corpus every day.  dayN/day1 ≈ 1.0 is the flatness witness."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        compact_signature_artifact,
-        roll_forward_signatures,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-    from vectorsearch_scylla_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-    from vectorsearch_scylla_spark.session import drop_inherited_stats
-
-    stages: dict = {}
-    counts: dict = {}
-    io_marks: dict = {}
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] chain {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    def io_mark(name: str) -> None:
-        t = _app_stage_totals(spark)
-        if t is not None:
-            io_marks[name] = t
-
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    counts["n_base"] = nn.count()
-
-    # tag-scoped paths so several chain variants (chain, chain7) can
-    # run inside ONE invocation without colliding on errorIfExists
-    art_path = os.path.join(base, f"{tag}_sig_artifact")
-    labels_path = os.path.join(base, f"{tag}_labels_0")
-    stage("base_signatures", lambda: simhash128(nn).write.parquet(art_path))
-    stage(
-        "base_components",
-        lambda: connected_components(
-            simhash_near_dup_pairs(
-                nn, max_hamming=5, docs_sigs=spark.read.parquet(art_path)
-            ).select("id_a", "id_b")
-        ).write.parquet(labels_path),
-    )
-
-    prev = spark.read.parquet(labels_path)
-    day_totals: list[float] = []
-    for day in range(1, n_days + 1):
-        # each day's increment: a disjoint ~1 % slice, perturbed so it
-        # both extends old clusters and forms new within-day pairs
-        inc_path = os.path.join(base, f"{tag}_inc_{day}")
-        nn.filter(F.col("doc_id") % 97 == day).select(
-            (F.col("doc_id") + day * 1_000_000_000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(f" day{day}")).alias("text"),
-        ).write.parquet(inc_path)
-        inc = spark.read.parquet(inc_path)
-        counts[f"n_inc_day{day}"] = inc.count()
-
-        box: dict = {}
-
-        def day_pairs() -> None:
-            inc_sigs = drop_inherited_stats(simhash128(inc).localCheckpoint())
-            box["sigs"] = inc_sigs
-            artifact = spark.read.parquet(art_path)
-            cross = simhash_near_dup_pairs(
-                inc, max_hamming=5, docs_sigs=inc_sigs, against_sigs=artifact
-            ).select("id_a", "id_b")
-            within = simhash_near_dup_pairs(
-                inc, max_hamming=5, docs_sigs=inc_sigs
-            ).select("id_a", "id_b")
-            box["edges"] = cross.unionByName(within).localCheckpoint()
-            counts[f"edges_day{day}"] = box["edges"].count()
-
-        def day_update() -> None:
-            out = os.path.join(base, f"{tag}_labels_{day}")
-            incremental_components(prev, box["edges"]).write.parquet(out)
-            box["labels"] = out
-
-        def day_roll() -> None:
-            roll_forward_signatures(box["sigs"], art_path)
-
-        io_mark(f"day{day}_start")
-        stage(f"day{day}_pairs", day_pairs)
-        stage(f"day{day}_update", day_update)
-        stage(f"day{day}_roll_forward", day_roll)
-        day_stages = [
-            f"day{day}_pairs", f"day{day}_update", f"day{day}_roll_forward"
-        ]
-        if day == compact_day:
-            stage(
-                f"day{day}_compact",
-                lambda: compact_signature_artifact(spark, art_path),
-            )
-            day_stages.append(f"day{day}_compact")
-        io_mark(f"day{day}_end")
-        prev = spark.read.parquet(box["labels"])
-        day_totals.append(round(sum(stages[s] for s in day_stages), 3))
-    counts["artifact_rows_final"] = spark.read.parquet(art_path).count()
-
-    # honest comparator: ONE batch recompute at the final corpus (what
-    # a no-incremental deployment would pay EVERY day by day n_days)
-    def batch_recompute() -> None:
-        allrows = nn
-        for day in range(1, n_days + 1):
-            allrows = allrows.unionByName(
-                spark.read.parquet(os.path.join(base, f"{tag}_inc_{day}"))
-            )
-        pairs = simhash_near_dup_pairs(allrows, max_hamming=5).select(
-            "id_a", "id_b"
-        ).localCheckpoint()
-        connected_components(pairs).write.format("noop").mode("overwrite").save()
-
-    io_mark("batch_start")
-    stage(f"batch_recompute_day{n_days}", batch_recompute)
-    io_mark("batch_end")
-    moved: dict = {}
-    for phase, a, b in [
-        *[
-            (f"day{d}", f"day{d}_start", f"day{d}_end")
-            for d in range(1, n_days + 1)
-        ],
-        (f"batch_day{n_days}", "batch_start", "batch_end"),
-    ]:
-        if a in io_marks and b in io_marks:
-            moved[phase] = {
-                k: round((io_marks[b][k] - io_marks[a][k]) / 2**20, 1)
-                for k in io_marks[b]
-            }
-    return {
-        "stages_sec": stages,
-        "counts": counts,
-        "data_moved_mib": moved,
-        "day_totals_sec": day_totals,
-        f"flatness_day{n_days}_over_day1": round(
-            day_totals[-1] / day_totals[0], 2
-        )
-        if day_totals[0]
-        else None,
-        f"batch_day{n_days}_sec": stages[f"batch_recompute_day{n_days}"],
-        f"day{n_days}_speedup_vs_batch": round(
-            stages[f"batch_recompute_day{n_days}"] / day_totals[-1], 1
-        )
-        if day_totals[-1]
-        else None,
-    }
-
-
-def _neardup_stream_study(
-    spark, docs, base: str, n_epochs: int = 8, fold: bool = True, tag: str = "nds"
-) -> dict:
-    """Continuous ingestion-time dedup at scale (r9; fold added r10):
-    the ``streaming_neardup_e2e`` loop — per micro-batch: fingerprint
-    once, within-batch self-join + band join vs every signature seen
-    so far (base + prior epochs), roll own signatures forward — driven
-    over ``n_epochs`` micro-batches against the scaled corpus.  The
-    claim being priced: per-epoch cost is FLAT as the epoch artifact
-    grows, so the gate can run at ingestion forever.  ``fold=True`` is
-    the r10 registered shape (prior epoch dirs MOVE into one rolled
-    artifact each batch, `seen` is a constant-arity union);
-    ``fold=False`` is the r9 shape whose `seen` unions every prior
-    ``epoch=`` dir — at 50 epochs the difference is the O(epochs)
-    plan/listing term the fold exists to kill."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        fold_streaming_epochs,
-        simhash128,
-        simhash_near_dup_pairs,
-        streaming_seen_signatures,
-    )
-    from vectorsearch_scylla_spark.session import drop_inherited_stats
-
-    stages: dict = {}
-    counts: dict = {}
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] {tag} {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    counts["n_base"] = nn.count()
-    sigs_path = os.path.join(base, "nds_base_sigs")
-    if not os.path.isdir(sigs_path):
-        stage("base_signatures", lambda: simhash128(nn).write.parquet(sigs_path))
-    base_sigs = spark.read.parquet(sigs_path)
-
-    # the stream: ~8 % of the corpus as n_epochs range-split files —
-    # half are perturbed dups of base docs, half dups of OTHER stream
-    # docs (the cross-epoch case the roll-forward exists for)
-    inc = nn.filter(F.col("doc_id") % 25 == 1).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" nds")).alias("text"),
-    )
-    inc = inc.unionByName(
-        inc.filter(F.col("doc_id") % 2 == 1).select(
-            (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
-        )
-    )
-    src = os.path.join(base, f"{tag}_src")
-    inc.repartitionByRange(n_epochs, "doc_id").write.parquet(src)
-    counts["n_stream"] = spark.read.parquet(src).count()
-
-    sig_root = os.path.join(base, f"{tag}_sigs_seen")
-    rolled_dir = os.path.join(base, f"{tag}_sigs_rolled")
-    os.makedirs(sig_root, exist_ok=True)
-    out_dir = os.path.join(base, f"{tag}_pairs")
-    epoch_secs: list = []
-
-    def detect_batch(batch_df, epoch_id: int) -> None:
-        t0 = time.perf_counter()
-        inc_sigs = drop_inherited_stats(simhash128(batch_df).localCheckpoint())
-        if fold:
-            fold_streaming_epochs(spark, sig_root, rolled_dir, int(epoch_id))
-            seen = streaming_seen_signatures(
-                spark, base_sigs, sig_root, rolled_dir, int(epoch_id)
-            )
-        else:
-            seen = base_sigs
-            if any(e.startswith("epoch=") for e in os.listdir(sig_root)):
-                seen = seen.unionByName(
-                    spark.read.option("basePath", sig_root)
-                    .parquet(sig_root)
-                    .filter(F.col("epoch") != int(epoch_id))
-                    .drop("epoch")
-                )
-        cross = simhash_near_dup_pairs(
-            batch_df, max_hamming=5, docs_sigs=inc_sigs, against_sigs=seen
-        )
-        within = simhash_near_dup_pairs(batch_df, max_hamming=5, docs_sigs=inc_sigs)
-        cross.unionByName(within).select(
-            F.least("id_a", "id_b").alias("doc_lo"),
-            F.greatest("id_a", "id_b").alias("doc_hi"),
-            "hamming",
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={epoch_id}"))
-        inc_sigs.write.mode("overwrite").parquet(
-            os.path.join(sig_root, f"epoch={epoch_id}")
-        )
-        epoch_secs.append(round(time.perf_counter() - t0, 3))
-
-    def drain() -> None:
-        q = (
-            spark.readStream.schema(inc.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(detect_batch)
-            .option("checkpointLocation", os.path.join(base, f"{tag}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(1800):
-            q.stop()
-            raise RuntimeError("neardup stream did not drain within 1800s")
-
-    stage(f"drain_{n_epochs}_epochs", drain)
-    counts["pairs_total"] = spark.read.parquet(out_dir).count()
-    counts["epochs"] = len(epoch_secs)
-    half = len(epoch_secs) // 2
-    return {
-        "stages_sec": stages,
-        "counts": counts,
-        "fold": fold,
-        "epoch_secs": epoch_secs,
-        "flatness_last_over_second": round(epoch_secs[-1] / epoch_secs[1], 2)
-        if len(epoch_secs) > 2 and epoch_secs[1]
-        else None,
-        # tail/head mean ratio: steadier flatness witness than a single
-        # epoch pair once n_epochs is large enough for host noise to hit
-        # individual epochs
-        "flatness_tail_over_head": round(
-            (sum(epoch_secs[half:]) / (len(epoch_secs) - half))
-            / (sum(epoch_secs[1:half]) / (half - 1)),
-            2,
-        )
-        if half >= 2 and sum(epoch_secs[1:half]) > 0
-        else None,
-        "per_doc_ms": round(
-            1000.0 * stages[f"drain_{n_epochs}_epochs"] / counts["n_stream"], 3
-        )
-        if counts["n_stream"]
-        else None,
-    }
-
-
-def _bucketed_study(spark, docs, base: str) -> dict:
-    """Storage-layout study (r9): the signature ARTIFACT is read every
-    day by id-equi-joins (the hamming re-attach inside
-    simhash_near_dup_pairs, the incremental probes' payload joins).
-    Stored as plain parquet, every such join re-shuffles the whole
-    artifact; stored as a BUCKETED table (``bucketBy(doc_id)``), the
-    scan itself satisfies the join's clustering requirement, so only
-    the (much smaller) pair side moves — a one-time layout cost that
-    every subsequent day amortizes.
-
-    Measures the re-attach join (pair set ⋈ sigs ⋈ sigs → Hamming
-    filter) over the SAME artifact three consecutive "days", parquet
-    vs bucketed, with the REST shuffle-bytes account.  Broadcast is
-    disabled for the study: it models the 100 TB regime, where neither
-    side fits a broadcast — at fixture scale AQE would quietly
-    broadcast the pair side and hide exactly the exchange this layout
-    decision controls."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        SIG_WORDS,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-
-    stages: dict = {}
-    counts: dict = {}
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] bkt {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    base_sigs_path = os.path.join(base, "bkt_base_sigs")
-    stage("build_signatures", lambda: simhash128(nn).write.parquet(base_sigs_path))
-    base_sigs = spark.read.parquet(base_sigs_path)
-
-    # the DAILY shape (matches the chain study): a ~1 % increment's
-    # pair set is the thing re-attached against the post-roll-forward
-    # artifact every day — pairs ≪ artifact, so the artifact's shuffle
-    # share is the dominant term the layout choice controls
-    inc = nn.filter(F.col("doc_id") % 97 == 1).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" day1")).alias("text"),
-    )
-    inc_sigs_path = os.path.join(base, "bkt_inc_sigs")
-    simhash128(inc).write.parquet(inc_sigs_path)
-    inc_sigs = spark.read.parquet(inc_sigs_path)
-
-    pairs_path = os.path.join(base, "bkt_pairs")
-    stage(
-        "build_day_pair_set",
-        lambda: simhash_near_dup_pairs(
-            inc, max_hamming=5, docs_sigs=inc_sigs, against_sigs=base_sigs
-        )
-        .select("id_a", "id_b")
-        .unionByName(
-            simhash_near_dup_pairs(
-                inc, max_hamming=5, docs_sigs=inc_sigs
-            ).select("id_a", "id_b")
-        )
-        .write.parquet(pairs_path),
-    )
-    pairs = spark.read.parquet(pairs_path)
-    counts["pair_rows"] = pairs.count()
-
-    # the artifact the re-attach reads = base ∪ increment (the
-    # post-roll-forward state), in both layouts
-    sigs_path = os.path.join(base, "bkt_sigs_parquet")
-    spark.read.parquet(base_sigs_path).unionByName(inc_sigs).write.parquet(
-        sigs_path
-    )
-    counts["artifact_rows"] = spark.read.parquet(sigs_path).count()
-
-    table = "vss_bkt_sigs_study"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    stage(
-        "bucketed_write_once",
-        lambda: spark.read.parquet(sigs_path)
-        .write.bucketBy(32, "doc_id")
-        .sortBy("doc_id")
-        .option("path", os.path.join(base, "bkt_sigs_table"))
-        .saveAsTable(table),
-    )
-
-    hamming = F.expr(
-        " + ".join(f"bit_count(a_s{m} ^ b_s{m})" for m in range(SIG_WORDS))
-    ).cast("long")
-
-    def reattach(sig_df) -> int:
-        wa = sig_df.select(
-            F.col("doc_id").alias("id_a"),
-            *[F.col(f"s{m}").alias(f"a_s{m}") for m in range(SIG_WORDS)],
-        )
-        wb = sig_df.select(
-            F.col("doc_id").alias("id_b"),
-            *[F.col(f"s{m}").alias(f"b_s{m}") for m in range(SIG_WORDS)],
-        )
-        return (
-            pairs.join(wa, "id_a")
-            .join(wb, "id_b")
-            .select("id_a", "id_b", hamming.alias("h"))
-            .filter(F.col("h") <= 5)
-            .count()
-        )
-
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        marks: dict = {}
-        t0 = _app_stage_totals(spark)
-        for day in (1, 2, 3):
-            stage(f"parquet_day{day}", lambda: reattach(spark.read.parquet(sigs_path)))
-        t1 = _app_stage_totals(spark)
-        for day in (1, 2, 3):
-            stage(f"bucketed_day{day}", lambda: reattach(spark.table(table)))
-        t2 = _app_stage_totals(spark)
-        if t0 is not None and t1 is not None and t2 is not None:
-            marks = {
-                "parquet_3days": {
-                    k: round((t1[k] - t0[k]) / 2**20, 1) for k in t1
-                },
-                "bucketed_3days": {
-                    k: round((t2[k] - t1[k]) / 2**20, 1) for k in t2
-                },
-            }
-        # plan witness: the bucketed side must satisfy the join's
-        # clustering straight off the scan (no Exchange over the scan)
-        bplan = (
-            pairs.join(
-                spark.table(table).select(F.col("doc_id").alias("id_a"), "s0"),
-                "id_a",
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        counts["bucketed_scan_exchanges"] = bplan.count("Exchange")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    pq3 = sum(stages[f"parquet_day{d}"] for d in (1, 2, 3))
-    bk3 = sum(stages[f"bucketed_day{d}"] for d in (1, 2, 3))
-    return {
-        "stages_sec": stages,
-        "counts": counts,
-        "parquet_3day_sec": round(pq3, 3),
-        "bucketed_3day_sec": round(bk3, 3),
-        "bucketed_speedup_3day": round(pq3 / bk3, 2) if bk3 else None,
-        "layout_cost_sec": stages["bucketed_write_once"],
-        "data_moved_mib": marks,
-    }
-
-
 def _nprobe_sweep_study(spark, emb) -> dict:
     """Standalone time-vs-recall curve of THE production IVF knob
     (nprobe) at the current scale: sampled-training √N-cluster build,
@@ -1008,1925 +262,26 @@ def _nprobe_sweep_study(spark, emb) -> dict:
     }
 
 
-def _incfunnel_study(spark, docs, base: str) -> dict:
-    """Incremental FUNNEL at scale (r8, closes r7 judge item #5): with
-    all three text evidence classes now owning a vs-base incremental
-    mode (exact keys, SimHash ``against_sigs``, MinHash/ngram
-    ``banded_pairs(against=)``) a daily increment can run the whole
-    dedup evidence funnel without re-pairing the base.  Yesterday
-    persists the artifacts a deployment keeps — exact content keys,
-    SimHash signature table, MinHash band index, component labels;
-    today a ~1 % perturbed increment computes exact/simhash/ngram
-    evidence vs those artifacts plus within-increment twins, then
-    folds labels via ``incremental_components``.  The comparator is
-    the honest batch: all three classes + components over
-    base ∪ increment."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        banded_pairs,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-    from vectorsearch_scylla_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-    from vectorsearch_scylla_spark.plans.registry import (
-        _minhash_sig,
-        _with_word_shingles,
-    )
-
-    stages: dict = {}
-    counts: dict = {}
-    io_marks: dict = {}
-
-    def stage(name: str, fn):
-        t0 = time.perf_counter()
-        r = fn()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] incfunnel {name}: {stages[name]} s", file=sys.stderr)
-        return r
-
-    def io_mark(name: str) -> None:
-        t = _app_stage_totals(spark)
-        if t is not None:
-            io_marks[name] = t
-
-    def mh_sides(d):
-        return _with_word_shingles(d).select(
-            "doc_id", _minhash_sig(0, non_null=True), _minhash_sig(1, non_null=True)
-        )
-
-    def jaccard_verify(cands, side_a, side_b):
-        # exact 3-gram Jaccard on candidate pairs; shingles built only
-        # for candidate-matched rows on each side (the registered
-        # ngram_jaccard_incremental shape)
-        def sh(d, idc, alias):
-            matched = d.join(
-                F.broadcast(cands.select(F.col(idc).alias("doc_id")).distinct()),
-                "doc_id",
-            )
-            return _with_word_shingles(matched).select(
-                F.col("doc_id").alias(idc),
-                F.array_distinct(
-                    F.coalesce(F.col("sh"), F.array(F.col("text")))
-                ).alias(f"sh_{alias}"),
-            )
-
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union_sz = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            cands.join(sh(side_a, "id_a", "a"), "id_a")
-            .join(sh(side_b, "id_b", "b"), "id_b")
-            .filter((inter.cast("double") / union_sz) >= 0.6)
-            .select("id_a", "id_b")
-        )
-
-    def exact_edges_within(keyed):
-        return banded_pairs(keyed, ["k"], id_col="doc_id")
-
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    counts["n_base"] = nn.count()
-
-    keys_path = os.path.join(base, "if_base_keys")
-    ssigs_path = os.path.join(base, "if_base_simsigs")
-    mhsigs_path = os.path.join(base, "if_base_mhsigs")
-    labels_path = os.path.join(base, "if_base_labels")
-
-    # --- yesterday: persisted artifacts + base clustering -------------
-    stage(
-        "base_exact_keys",
-        lambda: nn.select("doc_id", F.md5("text").alias("k")).write.parquet(keys_path),
-    )
-    stage("base_simhash_sigs", lambda: simhash128(nn).write.parquet(ssigs_path))
-    stage("base_minhash_index", lambda: mh_sides(nn).write.parquet(mhsigs_path))
-
-    def base_cluster() -> None:
-        ex = exact_edges_within(nn.select("doc_id", F.md5("text").alias("k")))
-        sim = simhash_near_dup_pairs(
-            nn, max_hamming=5, docs_sigs=spark.read.parquet(ssigs_path)
-        ).select("id_a", "id_b")
-        ng = jaccard_verify(
-            banded_pairs(mh_sides(nn), ["sig_0", "sig_1"], id_col="doc_id"), nn, nn
-        )
-        edges = ex.unionByName(sim).unionByName(ng).distinct().localCheckpoint()
-        counts["base_edges"] = edges.count()
-        connected_components(edges).write.parquet(labels_path)
-
-    stage("base_cluster_full", base_cluster)
-    prev = spark.read.parquet(labels_path)
-
-    # --- today: ~1 % perturbed increment ------------------------------
-    inc_path = os.path.join(base, "if_increment")
-    nn.filter(F.col("doc_id") % 97 == 0).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" inc")).alias("text"),
-    ).write.parquet(inc_path)
-    inc = spark.read.parquet(inc_path)
-    counts["n_increment"] = inc.count()
-
-    edges_box: dict = {}
-
-    def inc_evidence() -> None:
-        inc_keys = inc.select("doc_id", F.md5("text").alias("k"))
-        ex_cross = banded_pairs(
-            inc_keys, ["k"], id_col="doc_id", against=spark.read.parquet(keys_path)
-        )
-        ex_within = exact_edges_within(inc_keys)
-        inc_ssigs = simhash128(inc).localCheckpoint()
-        sim_cross = simhash_near_dup_pairs(
-            inc,
-            max_hamming=5,
-            docs_sigs=inc_ssigs,
-            against_sigs=spark.read.parquet(ssigs_path),
-        ).select("id_a", "id_b")
-        sim_within = simhash_near_dup_pairs(
-            inc, max_hamming=5, docs_sigs=inc_ssigs
-        ).select("id_a", "id_b")
-        inc_mh = mh_sides(inc).localCheckpoint()
-        ng_cross = jaccard_verify(
-            banded_pairs(
-                inc_mh, ["sig_0", "sig_1"], id_col="doc_id",
-                against=spark.read.parquet(mhsigs_path),
-            ),
-            inc,
-            nn,
-        )
-        ng_within = jaccard_verify(
-            banded_pairs(inc_mh, ["sig_0", "sig_1"], id_col="doc_id"), inc, inc
-        )
-        edges_box["e"] = (
-            ex_cross.unionByName(ex_within)
-            .unionByName(sim_cross).unionByName(sim_within)
-            .unionByName(ng_cross).unionByName(ng_within)
-            .distinct()
-            .localCheckpoint()
-        )
-        counts["increment_edges"] = edges_box["e"].count()
-
-    io_mark("inc_start")
-    stage("increment_evidence", inc_evidence)
-    stage(
-        "increment_update",
-        lambda: incremental_components(prev, edges_box["e"])
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-    )
-    io_mark("inc_end")
-
-    # --- honest comparator: full batch over base ∪ increment ----------
-    def batch_recompute() -> None:
-        allrows = nn.unionByName(inc)
-        ex = exact_edges_within(allrows.select("doc_id", F.md5("text").alias("k")))
-        sim = simhash_near_dup_pairs(allrows, max_hamming=5).select("id_a", "id_b")
-        ng = jaccard_verify(
-            banded_pairs(mh_sides(allrows), ["sig_0", "sig_1"], id_col="doc_id"),
-            allrows,
-            allrows,
-        )
-        edges = ex.unionByName(sim).unionByName(ng).distinct().localCheckpoint()
-        connected_components(edges).write.format("noop").mode("overwrite").save()
-
-    stage("batch_recompute_all", batch_recompute)
-    io_mark("batch_end")
-    inc_total = round(stages["increment_evidence"] + stages["increment_update"], 3)
-    out = {
-        "stages_sec": stages,
-        "counts": counts,
-        "incremental_total_sec": inc_total,
-        "batch_total_sec": stages["batch_recompute_all"],
-        "speedup": round(stages["batch_recompute_all"] / inc_total, 1)
-        if inc_total
-        else None,
-    }
-    if {"inc_start", "inc_end", "batch_end"} <= io_marks.keys():
-        out["data_moved_mib"] = {
-            phase: {k: round((b[k] - a[k]) / 2**20, 1) for k in b}
-            for phase, a, b in [
-                ("incremental", io_marks["inc_start"], io_marks["inc_end"]),
-                ("batch", io_marks["inc_end"], io_marks["batch_end"]),
-            ]
-        }
-        print(
-            f"[bench_scale] incfunnel data moved: {out['data_moved_mib']}",
-            file=sys.stderr,
-        )
-    return out
-
-
-def _compaction_study(spark, emb0) -> dict:
-    """IVF compaction cost scaling (r8): the claim on
-    ``split_oversized_clusters`` is that work is proportional to the
-    OVERSIZED LISTS, never the corpus — untouched inverted lists are
-    not even read past the size count.  Setup: train a K≈√N coarse
-    quantizer per corpus size, then append the SAME 30 k-row skewed
-    hot-spot (near one centroid, the ivf_incremental_add aftermath
-    this operator exists to repair) to a 1× and a 10× corpus and time
-    the split.  Flat wall across corpus sizes = the claim, measured."""
-    import numpy as np
-
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        lloyd_kmeans,
-        split_oversized_clusters,
-    )
-
-    out: dict = {}
-    hot_n = 30_000
-    for tag, reps in (("base_1x", 1), ("base_10x", 10), ("base_100x", 100)):
-        rep = spark.range(reps).select(F.col("id").cast("int").alias("rep"))
-        corpus = emb0.crossJoin(F.broadcast(rep)).select(
-            (F.col("vec_id") + F.col("rep").cast("long") * 10_000_000).alias("vec_id"),
-            F.expr(
-                "transform(cast(embedding as array<double>), "
-                "(x, i) -> CASE WHEN i = pmod(rep, size(embedding)) "
-                "THEN x + 0.01 * rep ELSE x END)"
-            ).alias("embedding"),
-        )
-        n = corpus.count()
-        k = max(8, int(round(n**0.5)))
-        cents = lloyd_kmeans(corpus, k=k, iters=2, kernel="numpy", train_rows=256 * k)
-        members = assign_clusters_np(corpus, cents, dtype="float64")
-        # skewed append: 30 k rows jittered around centroid 0's vector,
-        # pre-assigned to cluster 0 (what incremental_add would do)
-        hot_id, hot_vec = sorted(cents)[0]
-        d = len(hot_vec)
-        hot = spark.range(hot_n).select(
-            (F.col("id") + 900_000_000).alias("vec_id"),
-            F.expr(
-                f"transform(array({', '.join(repr(x) for x in hot_vec)}), "
-                "(x, i) -> x + cast(pmod(xxhash64(id * 131 + i), 100) as double) / 10000.0)"
-            ).alias("embedding"),
-            F.lit(int(hot_id)).cast("int").alias("cluster_id"),
-        )
-        all_members = members.unionByName(hot).localCheckpoint()
-        sizes = {
-            r["cluster_id"]: r["n"]
-            for r in all_members.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
-        }
-        max_size = int(2.0 * (n + hot_n) / k)
-        oversized_rows = sum(v for v in sizes.values() if v > max_size)
-        t0 = time.perf_counter()
-        _, new_members = split_oversized_clusters(
-            all_members, cents, max_size=max_size, split_k=8, iters=2
-        )
-        new_members.write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 3)
-        out[tag] = {
-            "n_corpus": n,
-            "k": k,
-            "max_size": max_size,
-            "oversized_clusters": int(sum(1 for v in sizes.values() if v > max_size)),
-            "oversized_rows": int(oversized_rows),
-            "split_wall_sec": wall,
-        }
-        print(f"[bench_scale] compact {tag}: {out[tag]}", file=sys.stderr)
-    if out["base_1x"]["split_wall_sec"] > 0:
-        out["wall_ratio_100x_over_1x"] = round(
-            out["base_100x"]["split_wall_sec"] / out["base_1x"]["split_wall_sec"], 2
-        )
-    return out
-
-
-def _ivf_week_study(spark, emb, base: str) -> dict:
-    """A WEEK of IVF index maintenance (r10) — the vector-store twin
-    of the chained dedup week: seven daily vector increments routed
-    through the FROZEN base-trained coarse quantizer (map-only,
-    |inc|-proportional — never a retrain, never a base rescan),
-    appended to a cluster-partitioned list store, with the mid-week
-    maintenance window a real deployment runs after day 4:
-
-    * file-level: ``compact_signature_artifact`` on the store — the
-      r10 partition-aware path, paying back 4 days of per-partition
-      append debt with the layout (and pruning) preserved;
-    * logical: ``split_oversized_clusters`` — drifted increments pile
-      into few lists; the split rewrites ONLY those lists (children
-      append as new partitions + parent dirs deleted, work
-      proportional to the oversized lists, not the corpus).
-
-    Each day's increment DRIFTS progressively from the training
-    distribution (a growing offset on the leading coordinates — the
-    covariate-shift case a frozen quantizer eventually loses to), and
-    each day measures recall@5 of the nprobe=4 probe against the
-    exact blocked ground truth for THAT day's queries over the
-    CURRENT corpus.  The recall curve is the retrain trigger
-    quantified: the day it crosses the budget is the day you retrain
-    — until then the week costs |inc| routing per day.
-    """
-    from vectorsearch_scylla_spark.operators.dedup import (
-        compact_signature_artifact,
-    )
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        ivf_probe_topk_grouped,
-        ivf_recall_audit,
-        lloyd_kmeans,
-        maybe_retrain,
-        probe_clusters_np,
-        split_oversized_clusters,
-    )
-    from vectorsearch_scylla_spark.operators.knn import (
-        topk_similarity_join_blocked,
-    )
-
-    out: dict = {"days": {}}
-    n0 = emb.count()
-    k = max(8, int(round(n0**0.5)))
-    t0 = time.perf_counter()
-    cents = lloyd_kmeans(emb, k=k, iters=2, kernel="numpy", train_rows=256 * k)
-    out["build_sec"] = round(time.perf_counter() - t0, 3)
-    out["n_base"], out["k"] = n0, k
-    max_size = int(2.0 * n0 / k)  # balance budget fixed at day 0
-    out["max_size"] = max_size
-
-    store = os.path.join(base, "ivfweek_lists")
-    t0 = time.perf_counter()
-    assign_clusters_np(emb, cents, dtype="float32").select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("corpus_vec"),
-        "cluster_id",
-    ).repartition(32, "cluster_id").write.partitionBy("cluster_id").parquet(store)
-    out["base_assign_sec"] = round(time.perf_counter() - t0, 3)
-
-    def exact_truth(queries, store_df):
-        """Ground truth for one (queries, store state) pair — computed
-        ONCE and reused across every nprobe point measured against it
-        (the exact pass is the expensive O(Q·N) term; recomputing it
-        per nprobe would multiply study wall time for no information).
-        localCheckpoint (eager) rather than persist: the day-4 truth
-        outlives the split's os-level store surgery, and a lineage-free
-        copy can never be recomputed against the changed listing."""
-        exact = (
-            topk_similarity_join_blocked(
-                queries,
-                store_df.select("corpus_id", "corpus_vec"),
-                k=5,
-                exclude_self=True,
-                dtype="float32",
-            )
-            .select("query_id", F.col("corpus_id").alias("exact_id"))
-            .localCheckpoint()
-        )
-        return exact, exact.count()
-
-    def probe_recall(
-        queries, cents_now, store_df, exact, denom, nprobe: int = 4
-    ) -> tuple[float, float]:
-        t0 = time.perf_counter()
-        probes = probe_clusters_np(
-            queries, cents_now, nprobe=nprobe, vec_col="query_vec"
-        )
-        approx = ivf_probe_topk_grouped(
-            probes, store_df, k=5, exclude_self=True, dtype="float32"
-        ).select("query_id", F.col("corpus_id").alias("approx_id"))
-        hits = exact.join(
-            approx,
-            (exact["query_id"] == approx["query_id"])
-            & (exact["exact_id"] == approx["approx_id"]),
-            "left_semi",
-        ).count()
-        probe_sec = round(time.perf_counter() - t0, 3)
-        return (round(hits / denom, 4) if denom else None), probe_sec
-
-    for day in range(1, 8):
-        # disjoint ~5 % slice, drifted: +0.05·day on the 8 leading
-        # coordinates — the covariate shift the frozen quantizer was
-        # never trained on
-        inc = emb.filter(F.col("vec_id") % 20 == day).select(
-            (F.col("vec_id") + day * 1_000_000_000).alias("vec_id"),
-            F.expr(
-                "transform(cast(embedding as array<double>), "
-                f"(x, i) -> CASE WHEN i < 8 THEN x + {0.05 * day!r} "
-                "ELSE x END)"
-            ).alias("embedding"),
-        )
-        t0 = time.perf_counter()
-        routed = assign_clusters_np(inc, cents, dtype="float32").select(
-            F.col("vec_id").alias("corpus_id"),
-            F.col("embedding").alias("corpus_vec"),
-            "cluster_id",
-        )
-        routed.write.mode("append").partitionBy("cluster_id").parquet(store)
-        route_sec = round(time.perf_counter() - t0, 3)
-
-        store_df = spark.read.parquet(store)
-        sizes = (
-            store_df.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
-        )
-        oversized = sum(1 for r in sizes if r["n"] > max_size)
-        queries = inc.filter(F.col("vec_id") % 97 == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        exact, denom = exact_truth(queries, store_df)
-        recall, probe_sec = probe_recall(
-            queries, cents, store_df, exact, denom
-        )
-        out["days"][str(day)] = {
-            "route_sec": route_sec,
-            "probe_sec": probe_sec,
-            "recall_at_5": recall,
-            "oversized_lists": oversized,
-            "n_corpus": int(sum(r["n"] for r in sizes)),
-            "n_query_pairs": denom,
-        }
-        if day > 4:
-            # post-split the cluster granularity is finer — track the
-            # deployment response (nprobe 4 → 8) alongside the old knob
-            r8, p8 = probe_recall(
-                queries, cents, store_df, exact, denom, nprobe=8
-            )
-            out["days"][str(day)]["recall_at_5_np8"] = r8
-            out["days"][str(day)]["probe_sec_np8"] = p8
-        if day != 4:
-            exact.unpersist()
-        print(f"[bench_scale] ivfweek day{day}: {out['days'][str(day)]}", file=sys.stderr)
-
-        if day == 4:
-            # maintenance window: file compaction (partition-aware),
-            # then the logical split of drift-bloated lists — children
-            # APPEND as brand-new partitions, parent dirs are deleted,
-            # so the rewrite touches only the oversized lists
-            t0 = time.perf_counter()
-            n_files = compact_signature_artifact(spark, store)
-            compact_sec = round(time.perf_counter() - t0, 3)
-            store_df = spark.read.parquet(store)
-            t0 = time.perf_counter()
-            cents, new_members = split_oversized_clusters(
-                store_df, cents, max_size=max_size, split_k=4, iters=2,
-                id_col="corpus_id", vec_col="corpus_vec",
-            )
-            changed = new_members.filter(
-                F.col("cluster_id") >= 1_000_000
-            ).localCheckpoint()
-            parents = {
-                int(r["parent"])
-                for r in changed.select(
-                    (F.floor(F.col("cluster_id") / 1_000_000) - 1).alias("parent")
-                ).distinct().collect()
-            }
-            changed.write.mode("append").partitionBy("cluster_id").parquet(store)
-            for p in parents:
-                shutil.rmtree(
-                    os.path.join(store, f"cluster_id={p}"), ignore_errors=True
-                )
-            # parent dirs were deleted outside Spark — invalidate the
-            # session's file-status cache for the store or later scans
-            # serve the stale listing (FAILED_READ_FILE on deleted
-            # parent part files; hit at 10× smoke scale)
-            spark.catalog.refreshByPath(store)
-            split_sec = round(time.perf_counter() - t0, 3)
-            store_df = spark.read.parquet(store)
-            # the split makes clusters FINER: at fixed nprobe the probe
-            # covers less volume, so recall drops — the paired knob is
-            # nprobe, priced here as the post-split sweep (the saved
-            # per-list cost funds the extra probes).  The split rewrites
-            # only cluster ids, never rows, so day 4's exact ground
-            # truth is still valid and is reused for every point.
-            post = {}
-            for np_i in (4, 8, 16):
-                r, p = probe_recall(
-                    queries, cents, store_df, exact, denom, nprobe=np_i
-                )
-                post[str(np_i)] = {"recall_at_5": r, "probe_sec": p}
-            exact.unpersist()
-            out["maintenance_day4"] = {
-                "compact_sec": compact_sec,
-                "files_after_compact": n_files,
-                "split_sec": split_sec,
-                "parents_split": len(parents),
-                "post_split_nprobe_sweep": post,
-            }
-            print(f"[bench_scale] ivfweek maint: {out['maintenance_day4']}", file=sys.stderr)
-
-    # --- r11 extension: drive the week INTO the retrain trigger ------
-    # (r10 VERDICT #5 — the trigger was prose; maybe_retrain makes it
-    # executable).  The responded knob (nprobe=8 post-split) held
-    # budget through day 7 because the week's linear drift is cohort-
-    # UNIFORM: every day-d vector shifts identically, so a query and
-    # its true neighbors move TOGETHER into the same few lists and
-    # recall survives any shift magnitude (measured: the linear drift
-    # alone never crosses budget even by day 14).  What actually
-    # defeats a frozen quantizer is covariate shift that DIVERSIFIES
-    # WITHIN neighbor sets — day 8 models it as a new data source
-    # joining the stream: on top of the continuing linear term, each
-    # row also shifts +0.5 along an axis chosen by a PER-ROW HASH
-    # (coordinate 8 + xxhash64(vec_id) mod 48), so a query's true
-    # neighbors (its replicate cohort) scatter in 48 different
-    # directions and land in Voronoi cells whose centroids are NOT
-    # near the query.  Two regime traps, both measured before this
-    # one was chosen (the regime-probe study below the table):
-    # `pmod(vec_id, 48)` looks per-row but ISN'T — the replicate
-    # stride 10 M ≡ 16 (mod 48) gives each cohort only 3 distinct
-    # axes, neighbor sets still co-move, and recall held ≥ 0.97
-    # through day 14; and shift +1.0 over-shoots — at ‖bump‖ ≈ ‖vec‖
-    # the same-axis rows become each other's TRUE neighbors (cosine
-    # is bump-dominated), forming 48 self-contained communities that
-    # even a retrained √N quantizer tiles too coarsely (retrain
-    # recovered only 0.858 < budget).  +0.5 with the hashed axis is
-    # the honest middle: base geometry still defines neighbors, the
-    # scatter defeats the frozen tiling (0.82 < 0.90 budget), and the
-    # retrain recovers decisively (0.98).  The audit-driven trigger
-    # runs DAILY at the
-    # responded probe budget; the day the sampled recall crosses, the
-    # escalation fires for real: bounded-sample retrain (256·K md5
-    # draw over the grown corpus, K re-derived ≈ √N), one map-only
-    # re-route pass, store rewritten cluster-partitioned under the NEW
-    # quantizer, and the next day's increment routes map-only through
-    # it — pricing every rung of the ladder: route (daily) « split
-    # (occasional) « retrain (rare).
-    budget = float(os.environ.get("SPARK_GRAFT_IVF_BUDGET", "0.90"))
-    nprobe_b = int(os.environ.get("SPARK_GRAFT_IVF_NPROBE", "8"))
-    ext: dict = {"recall_budget": budget, "nprobe": nprobe_b, "days": {}}
-    out["retrain_extension"] = ext
-    store_df = spark.read.parquet(store)
-
-    def _regime_inc(day: int):
-        return emb.filter(F.col("vec_id") % 20 == (day % 20)).select(
-            (F.col("vec_id") + day * 1_000_000_000).alias("vec_id"),
-            F.expr(
-                "transform(cast(embedding as array<double>), "
-                f"(x, i) -> CASE WHEN i < 8 THEN x + {0.05 * day!r} "
-                "WHEN i = 8 + pmod(xxhash64(vec_id), 48) THEN x + 0.5 "
-                "ELSE x END)"
-            ).alias("embedding"),
-        )
-
-    for day in range(8, 15):
-        inc = _regime_inc(day)
-        t0 = time.perf_counter()
-        assign_clusters_np(inc, cents, dtype="float32").select(
-            F.col("vec_id").alias("corpus_id"),
-            F.col("embedding").alias("corpus_vec"),
-            "cluster_id",
-        ).write.mode("append").partitionBy("cluster_id").parquet(store)
-        route_sec = round(time.perf_counter() - t0, 3)
-        spark.catalog.refreshByPath(store)
-        store_df = spark.read.parquet(store)
-        queries = inc.filter(F.col("vec_id") % 97 == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        t0 = time.perf_counter()
-        new_cents, new_members, rep = maybe_retrain(
-            store_df, cents, queries,
-            recall_budget=budget, nprobe_max=nprobe_b, k=5,
-            max_audit_queries=512, dtype="float32",
-            audit_after=False,  # audit the PERSISTED store below instead
-        )
-        trigger_sec = round(time.perf_counter() - t0, 3)
-        row = {
-            "route_sec": route_sec,
-            "trigger_sec": trigger_sec,  # audit only until the day it fires
-            "recall_at_budget_nprobe": rep["recall_before"],
-            "retrained": rep["retrained"],
-        }
-        ext["days"][str(day)] = row
-        if rep["retrained"]:
-            # persist the re-routed store as a VERSIONED dir + pointer
-            # flip (the deployment move; compact_signature_artifact's
-            # two-rename swap is the in-place alternative)
-            store2 = f"{store}_retrained_d{day}"
-            t0 = time.perf_counter()
-            new_members.repartition(rep["k_after"], "cluster_id").write.partitionBy(
-                "cluster_id"
-            ).parquet(store2)
-            row["persist_sec"] = round(time.perf_counter() - t0, 3)
-            # keep the frozen pre-retrain state for the entrypoint
-            # replay below (the old dir is never rewritten — the
-            # retrain persisted to a VERSIONED sibling)
-            pre_retrain_store, pre_retrain_cents = store, cents
-            store, store_df = store2, spark.read.parquet(store2)
-            cents = new_cents
-            row["k_before"], row["k_after"] = rep["k_before"], rep["k_after"]
-            row["n_corpus"] = rep["n_corpus"]
-            # Post-retrain nprobe RE-TUNE — the same paired knob the
-            # day-4 split priced: retraining re-tiles the space (K
-            # re-derived ≈ √N over a corpus now holding nine
-            # sub-manifolds), so the probe budget that matched the OLD
-            # tiling is not automatically the knee of the new one.
-            # The retrain rewrites cluster ids, never rows, so the
-            # day's exact ground truth is computed once on the
-            # persisted store and reused across the sweep.
-            exact, denom = exact_truth(queries, store_df)
-            sweep = {}
-            nprobe_resp = None
-            for np_i in (nprobe_b, 2 * nprobe_b, 4 * nprobe_b):
-                r, p = probe_recall(
-                    queries, cents, store_df, exact, denom, nprobe=np_i
-                )
-                sweep[str(np_i)] = {"recall_at_5": r, "probe_sec": p}
-                if nprobe_resp is None and r is not None and r >= budget:
-                    nprobe_resp = np_i
-            exact.unpersist()
-            row["post_retrain_nprobe_sweep"] = sweep
-            row["responded_nprobe"] = nprobe_resp
-            print(f"[bench_scale] ivfweek retrain d{day}: {row}", file=sys.stderr)
-            if nprobe_resp is None:
-                # no silent caps: say the sweep never restored budget
-                ext["note"] = (
-                    f"post-retrain sweep up to nprobe={4 * nprobe_b} "
-                    "never restored budget"
-                )
-                break
-            # witness day: the new source keeps streaming; the NEXT
-            # increment routes map-only through the NEW frozen
-            # quantizer and holds budget at the re-tuned probe knob
-            wday = day + 1
-            winc = _regime_inc(wday)
-            t0 = time.perf_counter()
-            assign_clusters_np(winc, cents, dtype="float32").select(
-                F.col("vec_id").alias("corpus_id"),
-                F.col("embedding").alias("corpus_vec"),
-                "cluster_id",
-            ).write.mode("append").partitionBy("cluster_id").parquet(store)
-            w_route = round(time.perf_counter() - t0, 3)
-            spark.catalog.refreshByPath(store)
-            wq = winc.filter(F.col("vec_id") % 97 == 0).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("query_vec"),
-            )
-            w_recall, _ = ivf_recall_audit(
-                wq, cents, spark.read.parquet(store), k=5, nprobe=nprobe_resp,
-                dtype="float32", max_queries=512,
-            )
-            ext["witness_day"] = {
-                "day": wday, "route_sec": w_route,
-                "nprobe": nprobe_resp,
-                "recall_at_responded_nprobe": w_recall,
-            }
-            print(f"[bench_scale] ivfweek witness: {ext['witness_day']}", file=sys.stderr)
-
-            # Library coherence check (r11): replay the SAME frozen
-            # day-8 state through the composed production entrypoint
-            # (ivf_maintenance_step) under TWO policies.  The audit
-            # sample is identical by construction (103 day-8 queries
-            # < the 512 md5 cap) and the trainer draws are md5-
-            # deterministic, so agreement means BIT-IDENTICAL recall
-            # numbers, not merely similar ones.
-            #   era policy — the week's own: the responded nprobe (8)
-            #     is the spend ceiling for THIS tiling era
-            #     (nprobe_grid=(8,)); a fresh tiling may re-tune
-            #     upward (post_retrain_grid=(8,16,32)).  Must take
-            #     the manual escalation exactly: retrain, K 600→529,
-            #     knee 16.
-            #   wide policy — ceiling (8,16,32) on the CURRENT
-            #     tiling: measures what deferring the retrain costs.
-            #     The first run of this replay (committed in git
-            #     history) found the old tiling holds budget at
-            #     nprobe=32 (recall 0.913) — i.e. the retrain is a
-            #     POLICY decision: serving the stale tiling at 32/600
-            #     lists probes ~1.8× the volume of the fresh tiling's
-            #     16/529 knee, on an index that keeps decaying.
-            from vectorsearch_scylla_spark.operators.ivf import (
-                ivf_maintenance_step,
-            )
-
-            t0 = time.perf_counter()
-            _, _, mrep = ivf_maintenance_step(
-                spark.read.parquet(pre_retrain_store),
-                pre_retrain_cents, queries,
-                recall_budget=budget,
-                nprobe_grid=(nprobe_b,),
-                post_retrain_grid=(nprobe_b, 2 * nprobe_b, 4 * nprobe_b),
-                max_audit_queries=512, dtype="float32",
-            )
-            ext["maintenance_step_replay_era_policy"] = {
-                "wall_sec": round(time.perf_counter() - t0, 3),
-                "actions": mrep["actions"],
-                "nprobe": mrep["nprobe"],
-                "k_after": mrep["k_after"],
-                "recall_before": mrep["retune"]["recall_at"].get(nprobe_b),
-                "recall_at_knee": (
-                    mrep.get("retune_after_retrain", {})
-                    .get("recall_at", {})
-                    .get(mrep["nprobe"])
-                ),
-                "agrees_with_manual": bool(
-                    mrep["actions"] == ["retune", "retrain", "retune"]
-                    and mrep["nprobe"] == nprobe_resp
-                    and mrep["k_after"] == rep["k_after"]
-                    and mrep["retune"]["recall_at"].get(nprobe_b)
-                    == rep["recall_before"]
-                ),
-            }
-            print(
-                "[bench_scale] ivfweek step replay (era): "
-                f"{ext['maintenance_step_replay_era_policy']}",
-                file=sys.stderr,
-            )
-            t0 = time.perf_counter()
-            _, _, wrep = ivf_maintenance_step(
-                spark.read.parquet(pre_retrain_store),
-                pre_retrain_cents, queries,
-                recall_budget=budget,
-                nprobe_grid=(nprobe_b, 2 * nprobe_b, 4 * nprobe_b),
-                max_audit_queries=512, dtype="float32",
-            )
-            ext["maintenance_step_replay_wide_policy"] = {
-                "wall_sec": round(time.perf_counter() - t0, 3),
-                "actions": wrep["actions"],
-                "nprobe": wrep["nprobe"],
-                "k_after": wrep["k_after"],
-                "recall_at": {
-                    str(n): r for n, r in wrep["retune"]["recall_at"].items()
-                },
-                "deferred_retrain": "retrain" not in wrep["actions"],
-            }
-            print(
-                "[bench_scale] ivfweek step replay (wide): "
-                f"{ext['maintenance_step_replay_wide_policy']}",
-                file=sys.stderr,
-            )
-            break
-        print(f"[bench_scale] ivfweek ext d{day}: {row}", file=sys.stderr)
-    else:
-        # no silent caps: the drift never crossed the budget in the
-        # extension window — say so rather than implying it fired
-        ext["note"] = "trigger never crossed budget through day 14"
-    return out
-
-
-def _pq_stale_study(spark, emb, base: str) -> dict:
-    """r11: the PQ codebook-staleness loop at scale — the quantized
-    twin of the IVF drift week's retrain rung (same corpus shapes, so
-    the two studies price the same deployment).  Codebooks are trained
-    once on the 200 k cohort corpus and frozen; a 10 k 'new source'
-    day joins whose cohorts each shift +0.5 along their own hashed
-    axis (the regime the unit test derives: shared WITHIN a cohort so
-    the twins' stale codes collapse onto the base codeword; per-row
-    scatter and uniform shifts were both measured NOT to degrade ADC
-    recall — see test_maybe_retrain_pq_fires_on_drift_and_noops_in_
-    budget).  The trigger (maybe_retrain_pq) audits the newest
-    increment's vectors, retrains the SAME codebook shape on the
-    current corpus, and re-encodes in one map-only pass — every rung
-    walled here.
-    """
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        maybe_retrain_pq,
-        pq_recall_audit,
-        train_pq,
-    )
-
-    m, dsub = 8, 8
-    ksub = int(os.environ.get("SPARK_GRAFT_PQ_KSUB", "64"))
-    out: dict = {"m": m, "ksub": ksub, "dsub": dsub}
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("corpus_vec"),
-    )
-    t0 = time.perf_counter()
-    books = train_pq(
-        corpus, m=m, ksub=ksub, iters=2, dsub=dsub,
-        id_col="corpus_id", vec_col="corpus_vec", kernel="numpy",
-    )
-    out["train_sec"] = round(time.perf_counter() - t0, 3)
-    codes_path = os.path.join(base, "pq_codes")
-    t0 = time.perf_counter()
-    encode_pq_np(corpus, books, dsub=dsub, vec_col="corpus_vec").drop(
-        "corpus_vec"
-    ).write.parquet(codes_path)
-    out["encode_sec"] = round(time.perf_counter() - t0, 3)
-    codes = spark.read.parquet(codes_path)
-    out["n_corpus"] = corpus.count()
-
-    self_queries = corpus.filter(F.col("corpus_id") % 97 == 0).select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-    t0 = time.perf_counter()
-    healthy, d0 = pq_recall_audit(
-        self_queries, codes, books, corpus, k=5, dsub=dsub, max_queries=512,
-    )
-    out["audit_sec"] = round(time.perf_counter() - t0, 3)
-    out["recall_healthy"] = healthy
-    out["n_audit_pairs"] = d0
-    print(f"[bench_scale] pqstale healthy: {out}", file=sys.stderr)
-
-    # the new source day: cohort-shared hashed-axis shift, routed
-    # through the FROZEN books (the daily path: encode is map-only)
-    inc = emb.filter(F.col("vec_id") % 20 == 8).select(
-        (F.col("vec_id") + 1_000_000_000).alias("corpus_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), (x, i) -> "
-            "CASE WHEN i = pmod(xxhash64(pmod(corpus_id, 10000000)), 64) "
-            "THEN x + 0.5 ELSE x END)"
-        ).alias("corpus_vec"),
-    )
-    t0 = time.perf_counter()
-    encode_pq_np(inc, books, dsub=dsub, vec_col="corpus_vec").drop(
-        "corpus_vec"
-    ).write.mode("append").parquet(codes_path)
-    out["inc_encode_sec"] = round(time.perf_counter() - t0, 3)
-    spark.catalog.refreshByPath(codes_path)
-    codes = spark.read.parquet(codes_path)
-    grown = corpus.unionByName(inc).localCheckpoint()
-    drift_queries = inc.filter(F.col("corpus_id") % 97 == 0).select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-    budget = float(os.environ.get("SPARK_GRAFT_PQ_BUDGET", "0"))
-    t0 = time.perf_counter()
-    new_books, new_codes, rep = maybe_retrain_pq(
-        grown, codes, books, drift_queries,
-        recall_budget=budget if budget else round(healthy - 0.05, 4),
-        k=5, dsub=dsub, max_audit_queries=512, audit_after=False,
-    )
-    out["trigger_sec"] = round(time.perf_counter() - t0, 3)
-    out["recall_stale"] = rep["recall_before"]
-    out["retrained"] = rep["retrained"]
-    out["recall_budget"] = rep["recall_budget"]
-    if rep["retrained"]:
-        # persist the re-encoded table (versioned dir — the same
-        # pointer-flip deployment move as the IVF store swap)
-        t0 = time.perf_counter()
-        new_codes.write.parquet(f"{codes_path}_retrained")
-        out["persist_sec"] = round(time.perf_counter() - t0, 3)
-        new_codes = spark.read.parquet(f"{codes_path}_retrained")
-        t0 = time.perf_counter()
-        r_after, _ = pq_recall_audit(
-            drift_queries, new_codes, new_books, grown,
-            k=5, dsub=dsub, max_queries=512,
-        )
-        out["audit_after_sec"] = round(time.perf_counter() - t0, 3)
-        out["recall_after"] = r_after
-        # the base workload must not regress under the refreshed books
-        r_base, _ = pq_recall_audit(
-            self_queries, new_codes, new_books, grown,
-            k=5, dsub=dsub, max_queries=512,
-        )
-        out["recall_healthy_after"] = r_base
-    print(f"[bench_scale] pqstale: {out}", file=sys.stderr)
-    return out
-
-
-def _ivf_stream_day_study(spark, emb, base: str) -> dict:
-    """r12 (r11 VERDICT task 6): the maintenance ladder priced INSIDE
-    the add stream — the deployment shape where "maintenance day" is a
-    scheduled in-stream step, not a separate batch job.  Two
-    independent streamed days over the SAME frozen base index
-    (ivfweek's √N build on the scale corpus), each drained through
-    ``ivf_add_stream`` with the drift week's era policy wired in
-    (``nprobe_grid=(8,)``, ``post_retrain_grid=(8,16,32)``, budget
-    0.90, bounded 512-query audit on the NEWEST adds):
-
-    * **no-op day** — a day-1-style increment (cohort-uniform +0.05
-      linear drift).  The in-stream audit finds the era grid holds
-      budget; the day costs route + fold + one bounded audit.
-    * **retrain day** — the week-2 day-8 increment (+0.05·8 linear
-      PLUS +0.5 along a per-row-hashed axis — the neighbor-scattering
-      covariate shift that actually defeats a frozen tiling).  The
-      era grid exhausts mid-stream, the retrain rung fires INSIDE the
-      drain: bounded-sample re-train, full map-only re-route, store
-      generation swap (staged dir + rename), rolled reset, and the
-      REMAINING micro-batches route through the refreshed quantizer.
-
-    The ratio noop/retrain is the in-stream twin of the manual week's
-    "route « audit « retrain" ladder pricing; at 100 TB the retrain
-    day ≈ one extra full-route day amortized over the weeks between
-    firings, now measured with the streaming machinery included."""
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        lloyd_kmeans,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import ivf_add_stream
-
-    out: dict = {}
-    n0 = emb.count()
-    k = max(8, int(round(n0**0.5)))
-    t0 = time.perf_counter()
-    cents = lloyd_kmeans(emb, k=k, iters=2, kernel="numpy", train_rows=256 * k)
-    out["build_sec"] = round(time.perf_counter() - t0, 3)
-    out["n_base"], out["k"] = n0, k
-
-    lists = os.path.join(base, "ivfstream_lists")
-    t0 = time.perf_counter()
-    assign_clusters_np(emb, cents, dtype="float32").select(
-        "vec_id", "embedding", "cluster_id"
-    ).repartition(32, "cluster_id").write.partitionBy("cluster_id").parquet(lists)
-    out["base_assign_sec"] = round(time.perf_counter() - t0, 3)
-
-    budget = float(os.environ.get("SPARK_GRAFT_IVF_BUDGET", "0.90"))
-    policy = {
-        "recall_budget": budget,
-        "nprobe_grid": (8,),
-        "post_retrain_grid": (8, 16, 32),
-        "every": 1,
-        "max_audit_queries": 512,
-        "audit_source": "recent",
-    }
-    out["policy"] = {
-        k2: (list(v) if isinstance(v, tuple) else v) for k2, v in policy.items()
-    }
-
-    def run_day(tag: str, inc) -> dict:
-        src = os.path.join(base, f"ivfstream_src_{tag}")
-        inc.repartition(8).write.parquet(src)
-        work = os.path.join(base, f"ivfstream_work_{tag}")
-        os.makedirs(work, exist_ok=True)
-        t0 = time.perf_counter()
-        state = ivf_add_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            cents,
-            lists,
-            work,
-            max_files_per_trigger=4,  # 8 part files -> 2 micro-batches
-            compact_at_files=64,
-            maintenance=policy,
-            kernel="numpy",
-            timeout_sec=1800,
-        )
-        wall = round(time.perf_counter() - t0, 3)
-        day = {
-            "drain_sec": wall,
-            "epochs": state["epochs"],
-            "generation": state["generation"],
-            "maintenance": [
-                {
-                    "epoch": r["epoch"],
-                    "actions": r["actions"],
-                    "nprobe": r["nprobe"],
-                    "recall_era": r["retune"]["recall_at"],
-                    "recall_post": (r.get("retune_after_retrain") or {}).get(
-                        "recall_at"
-                    ),
-                    "k_after": r.get("k_after"),
-                }
-                for r in state["reports"]
-            ],
-        }
-        print(f"[bench_scale] ivfstream {tag}: {day}", file=sys.stderr)
-        return day
-
-    # no-op day: cohort-uniform linear drift (the week's day-1 shape —
-    # measured robust: queries and neighbors co-move, budget holds)
-    healthy = emb.filter(F.col("vec_id") % 20 == 1).select(
-        (F.col("vec_id") + 1_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), "
-            "(x, i) -> CASE WHEN i < 8 THEN x + 0.05 ELSE x END)"
-        ).alias("embedding"),
-    )
-    out["noop_day"] = run_day("noop", healthy)
-
-    # retrain day: week-2 day-8 recipe — continuing linear term PLUS
-    # +0.5 along a per-row-hashed axis (xxhash64, NOT pmod — the
-    # cohort-correlation trap measured in the week-2 regime probes)
-    drift = emb.filter(F.col("vec_id") % 20 == 8).select(
-        (F.col("vec_id") + 8_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), "
-            "(x, i) -> CASE WHEN i < 8 THEN x + 0.4 "
-            "WHEN i = 8 + pmod(xxhash64(vec_id), 48) THEN x + 0.5 "
-            "ELSE x END)"
-        ).alias("embedding"),
-    )
-    out["retrain_day"] = run_day("drift", drift)
-    return out
-
-
-def _ivf_stream_chain_study(spark, emb, base: str) -> dict:
-    """r13 (r12 VERDICT task 4): MULTI-FIRING generation churn.  The
-    r12 in-stream day study measures at most ONE escalation; a month
-    at 100 TB sees many, and the open questions are mechanical: does
-    store-generation disk debt accumulate across firings (high-water),
-    what does retiring a superseded generation cost, and does the
-    per-day fold stay flat as generations churn?
-
-    Six chained days through ONE work dir + ONE source dir (new files
-    appended per day; the stream's checkpoint resumes and processes
-    only the new ones — the production restart-per-day shape, each
-    entry passing the STALE initial centroids that resume must
-    override): days 2/4/5 fire, days 1/3/6 are healthy.  Per day:
-    drain wall, generation, maintenance actions, and the on-disk
-    generation census (store_gen* dirs + bytes, rolled bytes) — the
-    after-day census shows retained debt; the during-swap transient is
-    bounded by prev_gen + staged new gen + rolled, reported per
-    firing.  Retirement latency is measured directly: a superseded
-    generation is fabricated after the chain and the entry-side sweep
-    timed.
-
-    The three firings are FORCED by per-day budget (0.995 on firing
-    days) rather than by drift realism, deliberately: the organic
-    chain attempts reproduced the r12 drift-insensitivity finding at
-    chain scale — a retrained tiling is NOT re-defeated by re-salting
-    the hashed-axis scatter atop the manifold it already learned
-    (day 4/5 recipes that structurally mirror a firing day-2 recipe
-    audit ABOVE budget against the day-2 retrain), large coherent
-    shifts (new linear block, or scatter ≥0.8) move the cohort into
-    few lists and are trivially served, and the "recent" audit
-    dilutes each day's drift with the healthy adds accumulated in
-    rolled since the last swap.  Realistic consecutive organic
-    firings therefore need genuinely novel drift mechanisms per
-    firing, which is exactly why churn MECHANICS (disk, retirement,
-    fold flatness) deserve their own forced-firing measurement —
-    the organic when-does-it-fire question is the ivfweek /
-    ivfstream studies' subject."""
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        lloyd_kmeans,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import (
-        _resume_newest_generation,
-        ivf_add_stream,
-    )
-
-    out: dict = {}
-    n0 = emb.count()
-    k = max(8, int(round(n0**0.5)))
-    t0 = time.perf_counter()
-    cents = lloyd_kmeans(emb, k=k, iters=2, kernel="numpy", train_rows=256 * k)
-    out["build_sec"] = round(time.perf_counter() - t0, 3)
-    out["n_base"], out["k"] = n0, k
-
-    lists = os.path.join(base, "ivfchain_lists")
-    assign_clusters_np(emb, cents, dtype="float32").select(
-        "vec_id", "embedding", "cluster_id"
-    ).repartition(32, "cluster_id").write.partitionBy("cluster_id").parquet(lists)
-
-    def policy(budget: float) -> dict:
-        return {
-            "recall_budget": budget,
-            "nprobe_grid": (8,),
-            "post_retrain_grid": (8, 16, 32),
-            "every": 1,
-            "max_audit_queries": 512,
-            "audit_source": "recent",
-        }
-
-    healthy_budget = float(os.environ.get("SPARK_GRAFT_IVF_BUDGET", "0.85"))
-    # no grid can hold 0.995 on these fixtures: the firing-day audit
-    # exhausts the era grid deterministically and the retrain rung
-    # fires (and swaps) every firing day — see the docstring for why
-    # forcing beats drift-recipe roulette here
-    fire_budget = 0.995
-    out["policy"] = {
-        "healthy": policy(healthy_budget),
-        "fire": policy(fire_budget),
-    }
-    out["policy"] = {
-        side: {
-            k2: (list(v) if isinstance(v, tuple) else v)
-            for k2, v in p.items()
-        }
-        for side, p in out["policy"].items()
-    }
-
-    src = os.path.join(base, "ivfchain_src")
-    work = os.path.join(base, "ivfchain_work")
-    os.makedirs(work, exist_ok=True)
-
-    def du(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
-
-    def census() -> dict:
-        gens = {
-            d: du(os.path.join(work, d))
-            for d in sorted(os.listdir(work))
-            if d.startswith("store_gen")
-        }
-        rolled = os.path.join(work, "rolled")
-        return {
-            "gens": gens,
-            "rolled_bytes": du(rolled) if os.path.isdir(rolled) else 0,
-        }
-
-    def day(tag: str, inc, budget: float) -> dict:
-        inc.repartition(8).write.mode("append").parquet(src)
-        t0 = time.perf_counter()
-        state = ivf_add_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            cents,  # stale initials every day — resume must override
-            lists,
-            work,
-            max_files_per_trigger=4,
-            compact_at_files=64,
-            maintenance=policy(budget),
-            kernel="numpy",
-            timeout_sec=1800,
-        )
-        wall = round(time.perf_counter() - t0, 3)
-        rep = {
-            "drain_sec": wall,
-            "epochs": state["epochs"],
-            "generation": state["generation"],
-            "actions": [
-                {"epoch": r["epoch"], "actions": r["actions"]}
-                for r in state["reports"]
-            ],
-            "disk": census(),
-        }
-        print(f"[bench_scale] ivfchain {tag}: {rep}", file=sys.stderr)
-        return rep
-
-    def healthy_inc(mod: int, tag_base: int):
-        return emb.filter(F.col("vec_id") % 20 == mod).select(
-            (F.col("vec_id") + tag_base).alias("vec_id"),
-            F.expr(
-                "transform(cast(embedding as array<double>), "
-                "(x, i) -> CASE WHEN i < 8 THEN x + 0.05 ELSE x END)"
-            ).alias("embedding"),
-        )
-
-    def shift_inc(mod: int, tag_base: int, salt: int, mag: float = 0.6):
-        # the ivfstream retrain-day drift shape (linear term + SUBTLE
-        # per-row hashed-axis scatter — small enough that rows stay
-        # near their original tiles while true neighbors reorder
-        # around the axis term), fresh salt per day
-        return emb.filter(F.col("vec_id") % 20 == mod).select(
-            (F.col("vec_id") + tag_base).alias("vec_id"),
-            F.expr(
-                "transform(cast(embedding as array<double>), "
-                f"(x, i) -> CASE WHEN i < 8 THEN x + {0.4 + salt * 0.1} "
-                f"WHEN i = 8 + pmod(xxhash64(vec_id + {salt}), 48) "
-                f"THEN x + {mag} ELSE x END)"
-            ).alias("embedding"),
-        )
-
-    hb, fb = healthy_budget, fire_budget
-    out["day1_healthy"] = day("d1-healthy", healthy_inc(1, 1_000_000_000), hb)
-    out["day2_fire"] = day("d2-fire", shift_inc(2, 2_000_000_000, 1), fb)
-    out["day3_healthy"] = day("d3-healthy", healthy_inc(3, 3_000_000_000), hb)
-    out["day4_fire"] = day("d4-fire", shift_inc(4, 4_000_000_000, 2), fb)
-    out["day5_fire"] = day("d5-fire", shift_inc(5, 5_000_000_000, 3), fb)
-    out["day6_healthy"] = day("d6-healthy", healthy_inc(6, 6_000_000_000), hb)
-
-    # retirement latency, measured directly: fabricate a superseded
-    # generation (full copy of the live one) and time the entry-side
-    # sweep that retires it.  Locally this is an rmtree; on an object
-    # store it is a bulk delete — the SHAPE (O(generation files),
-    # off the hot path) is what transfers.
-    gen_ids = [
-        int(d[len("store_gen"):])
-        for d in os.listdir(work)
-        if d.startswith("store_gen") and d[len("store_gen"):].isdigit()
-    ]
-    if gen_ids:
-        final_gen = max(gen_ids)
-        live = os.path.join(work, f"store_gen{final_gen}")
-        stale = os.path.join(work, f"store_gen{final_gen - 1}")
-
-        def resume_once() -> float:
-            t0 = time.perf_counter()
-            _resume_newest_generation(
-                spark, work, os.path.join(work, "rolled"), "vec_id",
-                "_centroids.json", "cluster_id", vec_col="embedding",
-            )
-            return round(time.perf_counter() - t0, 3)
-
-        # timing the whole call would attribute the entry's other
-        # work to retirement, so: baseline first (nothing to retire),
-        # then the same call with a fabricated superseded generation —
-        # the DIFF is the retirement itself (locally an rmtree; on an
-        # object store a bulk delete off the hot path).  Since the
-        # _rolled_absorbed marker landed, the baseline entry is the
-        # CHEAP marker-gated path (~ms — the corpus-sized rolled-heal
-        # anti-join only runs when a crash left no marker), so the
-        # published baseline measures the steady-state restart cost,
-        # not a heal.
-        out["resume_entry_baseline_sec"] = resume_once()
-        shutil.copytree(live, stale)
-        with_stale = resume_once()
-        out["retirement_sweep_sec"] = round(
-            with_stale - out["resume_entry_baseline_sec"], 3
-        )
-        out["retired_bytes"] = du(live)
-        assert not os.path.isdir(stale)
-    return out
-
-
-def _pq_stream_day_study(spark, emb, base: str) -> dict:
-    """r12 (late): the codebook-staleness loop priced INSIDE the code
-    ingest stream — pq_add_stream's twin of the ivfstream study, on
-    the pqstale study's corpus and drift recipe (200 k cohort corpus,
-    m=8/dsub=8, ksub=256 — the capacity cell the two-cell study shows
-    CAN recover).  Two independent streamed days over the same frozen
-    base code store, each drained in 3 micro-batches (two ~45 %
-    files, then a ~10 % tail file written later so its mtime orders
-    it last) with the maintenance day at epoch 2 — the audit then
-    sees ~90 % of the increment, matching the batch study's
-    full-increment measurement:
-
-    * no-op day: an undrifted 10 k slice — the sampled ADC recall on
-      the newest adds holds the healthy−0.05 budget; the day costs
-      encode + fold + one bounded audit.
-    * refresh day: the cohort-shared hashed-axis +0.5 shift — the
-      audit crosses, maybe_retrain_pq fires IN-STREAM with the
-      rollback rail on; an adopted refresh re-encodes the committed
-      view map-only into a new store generation (books sidecar), and
-      the remaining micro-batch encodes with the refreshed books.
-      Whether adoption or rollback wins is itself the measurement
-      (the two-capacity-cell lesson, now in-stream)."""
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        pq_recall_audit,
-        train_pq,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import pq_add_stream
-
-    m, dsub = 8, 8
-    ksub = int(os.environ.get("SPARK_GRAFT_PQ_KSUB", "256"))
-    # SPARK_GRAFT_PQ_TIEAWARE=1 runs the whole watch on the tie-aware
-    # metric (returned neighbor counts iff its TRUE cosine reaches the
-    # exact kth score) — the calibration finding's root fix
-    tie_aware = os.environ.get("SPARK_GRAFT_PQ_TIEAWARE", "") == "1"
-    out: dict = {"m": m, "ksub": ksub, "dsub": dsub, "tie_aware": tie_aware}
-    corpus = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    t0 = time.perf_counter()
-    books = train_pq(
-        corpus, m=m, ksub=ksub, iters=2, dsub=dsub,
-        id_col="vec_id", vec_col="embedding", kernel="numpy",
-    )
-    out["train_sec"] = round(time.perf_counter() - t0, 3)
-    store = os.path.join(base, "pqstream_base")
-    t0 = time.perf_counter()
-    encode_pq_np(corpus, books, dsub=dsub, vec_col="embedding").write.parquet(
-        store
-    )
-    out["base_encode_sec"] = round(time.perf_counter() - t0, 3)
-    out["n_base"] = corpus.count()
-
-    self_queries = corpus.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    healthy, _ = pq_recall_audit(
-        self_queries,
-        spark.read.parquet(store).drop("embedding"),
-        books,
-        corpus,
-        k=5, dsub=dsub, corpus_id="vec_id", corpus_vec="embedding",
-        max_queries=512, tie_aware=tie_aware,
-    )
-    out["recall_healthy_base_self"] = healthy
-
-    # the no-op increment is small PER-ROW hashed scatter (+0.02), not
-    # verbatim copies: exact duplicates tie with their originals
-    # across the whole top-k boundary and audit tie-set mismatch, not
-    # staleness (first run of this study: duplicate adds audited at
-    # 0.42 and spuriously fired the trigger)
-    healthy_inc = emb.filter(F.col("vec_id") % 20 == 1).select(
-        (F.col("vec_id") + 1_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), (x, i) -> "
-            "CASE WHEN i = pmod(xxhash64(vec_id), 64) "
-            "THEN x + 0.02 ELSE x END)"
-        ).alias("embedding"),
-    )
-    # COMMISSIONING BASELINE (the study's core finding — see the
-    # BENCH_SCALE.md write-up): on this 100-replica cohort corpus the
-    # fresh-add watch's recall is TIE-DOMINATED (ADC cannot order
-    # within a 100-member near-duplicate pile, so any fresh add
-    # audits far below the base self-audit even with zero drift) —
-    # a budget calibrated on base-self recall mis-fires on every
-    # healthy day.  The deployment-correct budget is calibrated on
-    # the SAME watch population it will gate: an undrifted
-    # commissioning day's audit, minus the margin.
-    grown0 = corpus.unionByName(healthy_inc)
-    codes0 = (
-        spark.read.parquet(store)
-        .drop("embedding")
-        .unionByName(
-            encode_pq_np(
-                healthy_inc, books, dsub=dsub, vec_col="embedding"
-            ).drop("embedding")
-        )
-    )
-    commissioning, _ = pq_recall_audit(
-        healthy_inc.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        ),
-        codes0, books, grown0,
-        k=5, dsub=dsub, corpus_id="vec_id", corpus_vec="embedding",
-        max_queries=512, tie_aware=tie_aware,
-    )
-    budget = round(commissioning - 0.05, 4)
-    out["recall_commissioning"], out["recall_budget"] = commissioning, budget
-    print(f"[bench_scale] pqstream healthy: {out}", file=sys.stderr)
-
-    policy = {
-        "recall_budget": budget,
-        "every": 2,
-        "max_audit_queries": 512,
-        "audit_source": "recent",
-        "rollback": True,
-        "tie_aware": tie_aware,
-    }
-
-    def run_day(tag: str, inc) -> dict:
-        src = os.path.join(base, f"pqstream_src_{tag}")
-        # two ~45 % files first, the ~10 % tail written AFTER (later
-        # mtime -> last epoch): maintenance at epoch 2 audits ~90 %
-        main = inc.filter(F.col("vec_id") % 10 != 0)
-        tail = inc.filter(F.col("vec_id") % 10 == 0)
-        main.coalesce(2).write.parquet(src)
-        tail.coalesce(1).write.mode("append").parquet(src)
-        work = os.path.join(base, f"pqstream_work_{tag}")
-        os.makedirs(work, exist_ok=True)
-        t0 = time.perf_counter()
-        state = pq_add_stream(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            books,
-            store,
-            work,
-            id_col="vec_id",
-            vec_col="embedding",
-            dsub=dsub,
-            max_files_per_trigger=1,
-            compact_at_files=64,
-            maintenance=policy,
-            timeout_sec=1800,
-        )
-        day = {
-            "drain_sec": round(time.perf_counter() - t0, 3),
-            "epochs": state["epochs"],
-            "generation": state["generation"],
-            "maintenance": state["reports"],
-        }
-        print(f"[bench_scale] pqstream {tag}: {day}", file=sys.stderr)
-        return day
-
-    out["noop_day"] = run_day("noop", healthy_inc)
-
-    drift_inc = emb.filter(F.col("vec_id") % 20 == 8).select(
-        (F.col("vec_id") + 8_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), (x, i) -> "
-            "CASE WHEN i = pmod(xxhash64(pmod(vec_id, 10000000)), 64) "
-            "THEN x + 0.5 ELSE x END)"
-        ).alias("embedding"),
-    )
-    out["refresh_day"] = run_day("drift", drift_inc)
-
-    # COMMISSIONED chain (r13; r12 VERDICT task 3 at scale): the same
-    # calibration the manual block above does by hand, run through the
-    # MECHANIZED in-stream rule — two chained healthy days through one
-    # work dir with maintenance recall_budget="commission".  Day 1's
-    # first fired maintenance epoch commissions (measures its own
-    # population, persists budget = observed − margin beside the
-    # stores, never escalates); day 2 restarts, resumes the persisted
-    # budget, and must NO-OP even though every day here audits far
-    # below base-self recall (the tie-domination regime).
-    cpolicy = dict(policy)
-    cpolicy.update(recall_budget="commission", commission_margin=0.05)
-    csrc = os.path.join(base, "pqstream_src_comm")
-    cwork = os.path.join(base, "pqstream_work_comm")
-    os.makedirs(cwork, exist_ok=True)
-
-    def comm_day(tag: str, inc) -> dict:
-        main = inc.filter(F.col("vec_id") % 10 != 0)
-        tail = inc.filter(F.col("vec_id") % 10 == 0)
-        main.coalesce(2).write.mode("append").parquet(csrc)
-        tail.coalesce(1).write.mode("append").parquet(csrc)
-        t0 = time.perf_counter()
-        state = pq_add_stream(
-            spark, csrc, spark.read.parquet(csrc).schema, books, store,
-            cwork, id_col="vec_id", vec_col="embedding", dsub=dsub,
-            max_files_per_trigger=1, compact_at_files=64,
-            maintenance=cpolicy, timeout_sec=1800,
-        )
-        day = {
-            "drain_sec": round(time.perf_counter() - t0, 3),
-            "epochs": state["epochs"],
-            "generation": state["generation"],
-            "commissioned_budget": state["commissioned_budget"],
-            "maintenance": state["reports"],
-        }
-        print(f"[bench_scale] pqstream comm-{tag}: {day}", file=sys.stderr)
-        return day
-
-    day2_inc = emb.filter(F.col("vec_id") % 20 == 3).select(
-        (F.col("vec_id") + 3_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(cast(embedding as array<double>), (x, i) -> "
-            "CASE WHEN i = pmod(xxhash64(vec_id), 64) "
-            "THEN x + 0.02 ELSE x END)"
-        ).alias("embedding"),
-    )
-    out["commission_day1"] = comm_day("d1", healthy_inc.select(
-        (F.col("vec_id") + 1_000_000_000).alias("vec_id"), "embedding"
-    ))
-    out["commission_day2"] = comm_day("d2", day2_inc)
-    return out
-
-
-def _genstore_commit_study(spark, emb, base: str) -> dict:
-    """r14 (r13 VERDICT task 3): price the manifest-pointer generation
-    commit against the default rename commit.  Same frame, same cycle
-    (publish → rolled reset → swap-completed marker → retire the
-    superseded generation) run GENS times through _swap_in_generation
-    under each strategy, then one resume through
-    _resume_newest_generation — the walls' difference IS the manifest
-    indirection (one extra tiny-file PUT per commit for the marker
-    flip, a manifest read per resolution, and unreferenced-prefix
-    sweeping instead of glob-the-staging-suffix).  The generation
-    WRITE dominates both; the commit primitive must be noise."""
-    import time as _t
-
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        make_generation_storage,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import (
-        _resume_newest_generation,
-        _swap_in_generation,
-    )
-
-    frame = emb.select(
-        F.col("vec_id"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        F.pmod(F.col("vec_id"), F.lit(8)).cast("int").alias("cluster_id"),
-    ).localCheckpoint()
-    n_rows = frame.count()
-    gens = 4
-    out: dict = {"n_rows": n_rows, "gens": gens}
-    for strategy in ("rename", "manifest"):
-        work = os.path.join(base, f"genstore_{strategy}")
-        os.makedirs(work)
-        storage = make_generation_storage(strategy, work)
-        rolled = os.path.join(work, "rolled")
-        walls = []
-        gen_dir, gen_n = None, 0
-        for _g in range(gens):
-            # seed a rolled store so every cycle pays the reset too
-            frame.limit(200).write.mode("overwrite").parquet(rolled)
-            t0 = _t.perf_counter()
-            gen_dir, gen_n = _swap_in_generation(
-                spark, work, gen_n, frame, "_centroids.json",
-                [[0, [1.0, 0.0]]], rolled, gen_dir,
-                partition_col="cluster_id", n_parts=8, storage=storage,
-            )
-            walls.append(_t.perf_counter() - t0)
-        t0 = _t.perf_counter()
-        got_dir, got_n, _sc = _resume_newest_generation(
-            spark, work, rolled, "vec_id", "_centroids.json", "cluster_id",
-            vec_col="embedding", storage=storage,
-        )
-        resume = _t.perf_counter() - t0
-        assert got_n == gens and got_dir == gen_dir
-        out[f"{strategy}_commit_sec"] = [round(w, 3) for w in walls]
-        out[f"{strategy}_commit_mean_sec"] = round(sum(walls) / gens, 3)
-        out[f"{strategy}_resume_sec"] = round(resume, 3)
-    out["indirection_sec_per_commit"] = round(
-        out["manifest_commit_mean_sec"] - out["rename_commit_mean_sec"], 3
-    )
-    print(f"[bench_scale] genstore: {out}", file=sys.stderr)
-    return out
-
-
-def _media_throughput_study(spark, base: str) -> dict:
-    """r13: price the codec-free media kernels — the multimodal
-    family's scale claim made measurable.  Synthesizes a PCM corpus
-    (deterministic per-asset int16 waveforms, ~1 MB/asset, built
-    distributed — the driver never holds the blobs) and times each
-    kernel end-to-end to a count, reporting MB/s of blob bytes
-    processed.  All three are map-only Arrow-batched scans, so the
-    per-core rate IS the 100 TB projection: total wall = bytes /
-    (rate × cores), no shuffle term to grow."""
-    import time as _t
-
-    from vectorsearch_scylla_spark.multimodal.media import (
-        audio_pcm_features,
-        extract_byte_features,
-        sniff_av_container,
-        sniff_image_meta,
-    )
-
-    n_assets = int(os.environ.get("SPARK_GRAFT_MEDIA_ASSETS", "512"))
-    samples = 524_288  # 1 MiB of int16 per asset
-    blobs_path = os.path.join(base, "media_blobs")
-    t0 = _t.perf_counter()
-
-    # deterministic per-asset waveform — int16 bytes of a sawtooth-ish
-    # wave, value = ((id*7 + i*13) % 4096 - 2048) * 16 — generated
-    # INSIDE the workers (vectorized, one pass; the driver never
-    # holds a blob)
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"asset_id": [], "kind": [], "content": [], "meta": []}
-            for aid in pdf["id"]:
-                i = np.arange(samples, dtype=np.int64)
-                wave = (((aid * 7 + i * 13) % 4096) - 2048) * 16
-                out["asset_id"].append(int(aid))
-                out["kind"].append("audio")
-                out["content"].append(wave.astype("<i2").tobytes())
-                out["meta"].append(None)
-            yield pd.DataFrame(out)
-
-    spark.range(n_assets).repartition(32).mapInPandas(
-        gen,
-        schema=(
-            "asset_id long, kind string, content binary, "
-            "meta map<string,string>"
-        ),
-    ).write.mode("overwrite").parquet(blobs_path)
-    out: dict = {
-        "n_assets": n_assets,
-        "mb_total": round(n_assets * samples * 2 / 1e6, 1),
-        "gen_sec": round(_t.perf_counter() - t0, 3),
-    }
-    media = spark.read.parquet(blobs_path)
-
-    # Measurement shape (r14): TWO full round-robin passes over the
-    # kernel sequence, per-kernel best across passes.  A single cold
-    # execution bundles plan construction, codegen, and whatever
-    # JVM/worker pressure the PREVIOUS kernel left behind — the r13
-    # single-shot readings mismeasured the last-timed kernel by ~7×
-    # (byte_features 48 MB/s in-study vs ~580 in a clean session; the
-    # kernel microbenches 3× FASTER than the audio kernel single-core)
-    # — and consecutive best-of-2 cannot escape a pressure window that
-    # covers both runs (the container_sniff readings reproduced low
-    # across positions while every clean-session probe read ~650).
-    # Round-robin decorrelates each kernel from any fixed neighbor;
-    # the first-pass wall stays visible in *_cold_sec.  The
-    # steady-state rate is the 100 TB projection.
-    _kernels: list = []
-
-    def rate(tag: str, fn, src_df=None, tail=False) -> None:
-        _kernels.append((tag, fn, src_df, tail))
-
-    def run_rates() -> None:
-        walls: dict = {t: [] for t, _f, _s, _l in _kernels}
-        rows: dict = {}
-        # two round-robin passes over the small-output kernels, then
-        # the tail kernels (the 1.6M-row explode) strictly LAST — in
-        # the rotation its pass-1 position would put the pass-2 run
-        # of whatever follows it inside its GC/transfer shadow
-        rotation = [k for k in _kernels if not k[3]]
-        tail_ks = [k for k in _kernels if k[3]]
-        schedule = rotation * 2 + [k for k in tail_ks for _ in range(2)]
-        for tag, fn, src_df, _l in schedule:
-            t0 = _t.perf_counter()
-            rows[tag] = fn(src_df if src_df is not None else media).count()
-            walls[tag].append(_t.perf_counter() - t0)
-        for tag, _fn, _src, _l in _kernels:
-            wall = min(walls[tag])
-            out[f"{tag}_sec"] = round(wall, 3)
-            out[f"{tag}_cold_sec"] = round(walls[tag][0], 3)
-            out[f"{tag}_mb_per_s"] = round(out["mb_total"] / wall, 1)
-            out[f"{tag}_rows"] = rows[tag]
-
-    # small-output kernels first, the 1.6M-row per-window explode LAST
-    # within each pass: its result transfer + GC shadows whatever runs
-    # next (the r13 readings that followed it sat in that shadow)
-    rate("audio_features", lambda d: audio_pcm_features(d))
-    rate("container_sniff", lambda d: sniff_av_container(d))
-    rate("image_sniff", lambda d: sniff_image_meta(d))
-    rate("byte_features", lambda d: extract_byte_features(d))
-
-    # codec-free PNG pixel decode (r14): the same per-asset MiB as a
-    # 1024×1024 gray 8-bit PNG (filter-0 rows, zlib level 1 — the
-    # inflate+unfilter+pixel-transfer path is what's being priced;
-    # MB/s is of DECODED pixels so the row compares with the others)
-    png_path = os.path.join(base, "media_pngs")
-    side = 1024
-
-    def gen_png(batches):
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        def chunk(cid, data):
-            return (
-                struct.pack(">I", len(data)) + cid + data
-                + struct.pack(">I", zlib.crc32(cid + data))
-            )
-
-        ihdr = chunk(b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 0, 0, 0, 0))
-        for pdf in batches:
-            out = {"asset_id": [], "kind": [], "content": [], "meta": []}
-            for aid in pdf["id"]:
-                i = np.arange(samples, dtype=np.int64)
-                wave = ((((aid * 7 + i * 13) % 4096) - 2048) * 16).astype("<i2")
-                gray = np.frombuffer(wave.tobytes(), dtype=np.uint8).reshape(
-                    side, side
-                )
-                raw = b"".join(
-                    b"\x00" + gray[y].tobytes() for y in range(side)
-                )
-                png = (
-                    b"\x89PNG\r\n\x1a\n" + ihdr
-                    + chunk(b"IDAT", zlib.compress(raw, 1))
-                    + chunk(b"IEND", b"")
-                )
-                out["asset_id"].append(int(aid))
-                out["kind"].append("image")
-                out["content"].append(png)
-                out["meta"].append(None)
-            yield pd.DataFrame(out)
-
-    spark.range(n_assets).repartition(32).mapInPandas(
-        gen_png,
-        schema=(
-            "asset_id long, kind string, content binary, "
-            "meta map<string,string>"
-        ),
-    ).write.mode("overwrite").parquet(png_path)
-    pngs = spark.read.parquet(png_path)
-    from vectorsearch_scylla_spark.multimodal.media import decode_image
-
-    rate("png_decode", lambda d: decode_image(d), src_df=pngs)
-
-    rate(
-        "audio_per_window",
-        lambda d: audio_pcm_features(d, per_window=True),
-        tail=True,
-    )
-    run_rates()
-    print(f"[bench_scale] media: {out}", file=sys.stderr)
-    return out
-
-
-def _sig_compact_knee_study(spark, docs, base: str) -> dict:
-    """r12 (r11 VERDICT task 7): the compaction-CADENCE knee for the
-    bucketed signature artifact — the number the 25 B-doc lifecycle
-    projection needs.  Every ``roll_forward_signatures_bucketed``
-    append adds up to n_buckets files (the bucketed-write fan-out),
-    so files/bucket grows one per day; the daily re-attach join pays
-    file-open/footer cost per file.  This study appends ``n_days``
-    daily ~1 % increments into a 32-bucket artifact, measures the
-    SAME day-shaped re-attach join (pair set ⋈ sigs ⋈ sigs → Hamming
-    filter, broadcast disabled — the 100 TB regime) at files/bucket ∈
-    {1, 2, 4, 8, 16}, then prices one ``compact_bucketed_artifact``
-    rewrite and re-measures the fpb=1 floor.  The knee is the
-    files/bucket level where the accumulated per-day join penalty
-    (vs the compacted floor) first exceeds one rewrite — i.e. the
-    break-even cadence: compact every ceil(rewrite_sec /
-    per_day_penalty_sec) days, equivalently whenever files/bucket
-    crosses the measured knee."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        SIG_WORDS,
-        compact_bucketed_artifact,
-        roll_forward_signatures_bucketed,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-
-    out: dict = {"curve": {}}
-    n_days = int(os.environ.get("SPARK_GRAFT_KNEE_DAYS", "16"))
-    nn = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-
-    table = "vss_knee_sigs"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    t0 = time.perf_counter()
-    base_sigs = simhash128(nn)
-    roll_forward_signatures_bucketed(
-        base_sigs, table, path=os.path.join(base, "knee_sigs_table")
-    )
-    out["base_write_sec"] = round(time.perf_counter() - t0, 3)
-    out["artifact_rows_base"] = spark.table(table).count()
-
-    # one fixed day-shaped pair set (an increment's candidates vs the
-    # artifact) reused at every measurement point, so the ONLY moving
-    # part across the curve is the artifact's file count
-    inc0 = nn.filter(F.col("doc_id") % 97 == 1).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" probe")).alias("text"),
-    )
-    inc0_sigs = simhash128(inc0).localCheckpoint()
-    pairs_path = os.path.join(base, "knee_pairs")
-    simhash_near_dup_pairs(
-        inc0, max_hamming=5, docs_sigs=inc0_sigs, against_sigs=spark.table(table)
-    ).select("id_a", "id_b").write.parquet(pairs_path)
-    pairs = spark.read.parquet(pairs_path)
-    out["pair_rows"] = pairs.count()
-
-    hamming = F.expr(
-        " + ".join(f"bit_count(a_s{m} ^ b_s{m})" for m in range(SIG_WORDS))
-    ).cast("long")
-
-    def files_per_bucket() -> float:
-        import glob as _g
-
-        loc = os.path.join(base, "knee_sigs_table")
-        n = len(
-            set(_g.glob(os.path.join(loc, "*.parquet")))
-            | set(_g.glob(os.path.join(loc, "part-*")))
-        )
-        return round(n / 32.0, 2)
-
-    def reattach_sec() -> float:
-        sig_df = spark.table(table)
-        wa = sig_df.select(
-            F.col("doc_id").alias("id_a"),
-            *[F.col(f"s{m}").alias(f"a_s{m}") for m in range(SIG_WORDS)],
-        )
-        wb = sig_df.select(
-            F.col("doc_id").alias("id_b"),
-            *[F.col(f"s{m}").alias(f"b_s{m}") for m in range(SIG_WORDS)],
-        )
-        t0 = time.perf_counter()
-        (
-            pairs.join(wa, "id_a")
-            .join(wb, "id_b")
-            .select("id_a", "id_b", hamming.alias("h"))
-            .filter(F.col("h") <= 5)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return round(time.perf_counter() - t0, 3)
-
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        marks = set()
-        f = 1
-        while f <= n_days:
-            marks.add(f)
-            f *= 2
-        # warm the re-attach plan once, untimed: its first execution
-        # pays codegen/JIT (+2.5 s measured — larger than every real
-        # file-count penalty on the curve), which polluted the first
-        # two curve points and broke the knee derivation on the first
-        # run of this study.  Each mark then takes min-of-2 — the
-        # penalty signal at small fpb is single-digit-percent, well
-        # under one host-noise swing.
-        reattach_sec()
-        out["curve"]["1"] = {
-            "files_per_bucket": files_per_bucket(),
-            "reattach_sec": min(reattach_sec(), reattach_sec()),
-        }
-        for day in range(1, n_days):
-            inc = nn.filter(F.col("doc_id") % 97 == (day + 1) % 97).select(
-                (F.col("doc_id") + (day + 1) * 1_000_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(f" d{day}")).alias("text"),
-            )
-            t0 = time.perf_counter()
-            roll_forward_signatures_bucketed(simhash128(inc), table)
-            append_sec = round(time.perf_counter() - t0, 3)
-            fpb = day + 1
-            if fpb in marks:
-                out["curve"][str(fpb)] = {
-                    "files_per_bucket": files_per_bucket(),
-                    "reattach_sec": min(reattach_sec(), reattach_sec()),
-                    "append_sec": append_sec,
-                }
-                print(
-                    f"[bench_scale] sigknee fpb={fpb}: " + str(out["curve"][str(fpb)]),
-                    file=sys.stderr,
-                )
-
-        t0 = time.perf_counter()
-        out["files_after_compact"] = compact_bucketed_artifact(spark, table)
-        out["compact_sec"] = round(time.perf_counter() - t0, 3)
-        out["post_compact_reattach_sec"] = reattach_sec()
-        out["artifact_rows_final"] = spark.table(table).count()
-
-        # the knee: the smallest files/bucket from which the re-attach
-        # penalty vs the compacted floor is REAL — >30 % above floor at
-        # that mark AND every larger mark (monotone onset).  A noise
-        # spike at one mark must not mint a knee (the first run of
-        # this study derived knee=8 from exactly that).
-        floor = out["post_compact_reattach_sec"]
-        fpbs = sorted(int(x) for x in out["curve"])
-        knee = None
-        for i, fpb in enumerate(fpbs):
-            if all(
-                out["curve"][str(g)]["reattach_sec"] > 1.3 * floor
-                for g in fpbs[i:]
-            ):
-                knee = fpb
-                break
-        out["knee_files_per_bucket"] = knee
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-    print(f"[bench_scale] sigknee: {out}", file=sys.stderr)
-    return out
-
-
-def _bigk_assign_study(spark) -> dict:
-    """r7 judge item #4: price the closure-embedded vs broadcast
-    centroid transport for the full-corpus assignment pass at the
-    largest K the sandbox comfortably fits.  Synthetic N×d corpus and
-    K random centroids (assignment cost is transport + one BLAS block
-    per batch — real data adds nothing here); per task, the
-    closure-embedded kernel re-ships the whole matrix while the
-    broadcast kernel ships a handle, so the gap grows with task count
-    and matrix size — exactly the 100 TB axis (K ≈ 10⁵ → ~300 MB/task
-    vs once/executor)."""
-    import numpy as np
-    from pyspark import cloudpickle
-
-    from vectorsearch_scylla_spark.operators.ivf import (
-        _bc_assign_kernel,
-        assign_clusters_bc,
-        assign_clusters_np,
-    )
-
-    n, d, k = 400_000, 64, 16_384
-    rng = np.random.default_rng(7)
-    cents = [(i, [float(x) for x in rng.standard_normal(d)]) for i in range(k)]
-    vecs = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            f"transform(sequence(0, {d - 1}), "
-            "i -> cast(pmod(xxhash64(id * 97 + i), 1000) as double) / 500.0 - 1.0)"
-        ).alias("embedding"),
-    ).repartition(64).persist()
-    vecs.write.format("noop").mode("overwrite").save()
-
-    out: dict = {"n": n, "d": d, "k": k, "tasks": 64}
-    # matrix bytes every task re-ships on the closure-embedded path
-    Cn = np.asarray([v for _, v in cents], dtype="float32")
-    out["matrix_mb"] = round(Cn.nbytes / 2**20, 1)
-    bc_probe = spark.sparkContext.broadcast((np.arange(4), np.eye(2)))
-    out["bc_closure_kb"] = round(
-        len(cloudpickle.dumps(_bc_assign_kernel(bc_probe, "embedding", "cluster_id"))) / 1024, 1
-    )
-    getattr(spark.sparkContext, "_pickled_broadcast_vars", set()).clear()
-    bc_probe.destroy()
-    for tag, fn in (("closure_embedded", assign_clusters_np),
-                    ("broadcast", assign_clusters_bc)):
-        t0 = time.perf_counter()
-        fn(vecs, cents, dtype="float32").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] bigk {tag}: {out[f'{tag}_sec']} s", file=sys.stderr)
-    # probe side (query fan-out, nprobe=4): same transport asymmetry.
-    # Queries are a SLICE of the corpus (a serving batch, not a full
-    # re-scan) — and the per-row fan-out materialization dominates the
-    # kernel either way, so the slice isolates the transport delta
-    # without hours of pandas row-repeat.
-    from vectorsearch_scylla_spark.operators.ivf import (
-        probe_clusters_bc,
-        probe_clusters_np,
-    )
-
-    queries = vecs.filter(F.col("vec_id") % 8 == 0).repartition(64).persist()
-    out["n_queries"] = queries.count()
-    for tag, fn in (("probe_closure_embedded", probe_clusters_np),
-                    ("probe_broadcast", probe_clusters_bc)):
-        t0 = time.perf_counter()
-        fn(queries, cents, nprobe=4, dtype="float32").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-        print(f"[bench_scale] bigk {tag}: {out[f'{tag}_sec']} s", file=sys.stderr)
-    queries.unpersist()
-    vecs.unpersist()
-    return out
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     scale = int(os.environ.get("SPARK_GRAFT_SCALE", "10"))
-    # SPARK_GRAFT_SECTIONS=dedup,cascade,... runs only the named
-    # section tags (unset = everything): re-measuring one expensive
-    # row (the 100× full-union e2e is ~27 min) must not require
-    # re-running the whole battery.
     sections = set(
         filter(None, os.environ.get("SPARK_GRAFT_SECTIONS", "").split(","))
-    )
-
-    def want(tag: str) -> bool:
-        return not sections or tag in sections
+    ) or {"union", "cascade"}
+    unknown = sections - {"union", "cascade", "clique", "sweep"}
+    if unknown:
+        raise SystemExit(f"unknown SPARK_GRAFT_SECTIONS tags: {sorted(unknown)}")
 
     # the clique study reads per-task runtime quantiles from the REST
     # API, so its session needs the UI server — configs only apply at
     # first creation, hence decided here
-    extra = (
-        # retainedStages raised for the funnel: its iterative component
-        # rounds produce >1000 stages at 100× and the default retention
-        # would silently undercount the data-movement deltas
-        {"spark.ui.enabled": "true", "spark.ui.retainedStages": "20000"}
-        if sections & {"clique", "funnel", "inc", "incfunnel", "chain", "chain7", "bucketed"}
-        else None
-    )
+    extra = {"spark.ui.enabled": "true"} if "clique" in sections else None
     spark = get_spark("vectorsearch-scylla-spark-scale-bench", extra_configs=extra)
     spark.sparkContext.setLogLevel("ERROR")
 
     from vectorsearch_scylla_spark.functions.hyperplane import hyperplane_near_dup_pairs
     from vectorsearch_scylla_spark.operators.dedup import simhash_near_dup_pairs
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        lloyd_kmeans,
-        probe_clusters,
-    )
-    from vectorsearch_scylla_spark.operators.knn import topk_similarity_join_blocked
 
     docs0 = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     emb0 = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -2955,72 +310,12 @@ def main() -> None:
         emb = spark.read.parquet(os.path.join(base, "embeddings"))
         n_docs, n_vecs = docs.count(), emb.count()
 
-        # standalone studies: SPARK_GRAFT_SECTIONS=clique and/or
-        # =funnel run ONLY the named study and print their own JSON —
-        # both are additive long-running measurements that must not
-        # balloon the default battery
-        if sections and sections <= {"clique", "funnel", "sweep", "inc", "bigk", "incfunnel", "compact", "chain", "chain7", "bucketed", "ndstream", "ndepochs", "ivfweek", "pqstale", "ivfstream", "ivfchain", "sigknee", "pqstream", "media", "genstore"}:
+        if sections & {"clique", "sweep"}:
             study: dict = {}
             if "clique" in sections:
                 study["clique_study"] = _clique_study(spark, docs0, base)
-            if "funnel" in sections:
-                study["funnel"] = _funnel_study(spark, docs, emb, base)
             if "sweep" in sections:
                 study["nprobe_sweep"] = _nprobe_sweep_study(spark, emb)
-            if "inc" in sections:
-                study["incremental_clustering"] = _incremental_study(spark, docs, base)
-            if "bigk" in sections:
-                study["bigk_assign"] = _bigk_assign_study(spark)
-            if "incfunnel" in sections:
-                study["incremental_funnel"] = _incfunnel_study(spark, docs, base)
-            if "compact" in sections:
-                study["compaction"] = _compaction_study(spark, emb0)
-            if "chain" in sections:
-                study["chained_increments"] = _chain_study(spark, docs, base)
-            if "chain7" in sections:
-                # week-long chain with the mid-week maintenance window
-                # (r10): 7 days, artifact compacted after day 4's roll
-                study["chained_week"] = _chain_study(
-                    spark, docs, base, n_days=7, compact_day=4, tag="chain7"
-                )
-            if "bucketed" in sections:
-                study["bucketed_artifact"] = _bucketed_study(spark, docs, base)
-            if "ndstream" in sections:
-                study["neardup_stream"] = _neardup_stream_study(spark, docs, base)
-            if "ivfweek" in sections:
-                study["ivf_week"] = _ivf_week_study(spark, emb, base)
-            if "ivfstream" in sections:
-                study["ivf_stream_day"] = _ivf_stream_day_study(spark, emb, base)
-            if "ivfchain" in sections:
-                study["ivf_stream_chain"] = _ivf_stream_chain_study(
-                    spark, emb, base
-                )
-            if "media" in sections:
-                study["media_throughput"] = _media_throughput_study(
-                    spark, base
-                )
-            if "genstore" in sections:
-                study["genstore_commit"] = _genstore_commit_study(
-                    spark, emb, base
-                )
-            if "pqstream" in sections:
-                study["pq_stream_day"] = _pq_stream_day_study(spark, emb, base)
-            if "sigknee" in sections:
-                study["sig_compact_knee"] = _sig_compact_knee_study(spark, docs, base)
-            if "pqstale" in sections:
-                study["pq_stale"] = _pq_stale_study(spark, emb, base)
-            if "ndepochs" in sections:
-                # the 'continuous past a day' witness (r10): 50 epochs,
-                # fold (r10 registered shape) vs no-fold (r9 shape whose
-                # `seen` unions every prior epoch dir) — same data, same
-                # stream; the no-fold run's per-epoch growth is exactly
-                # the O(epochs) plan term fold_streaming_epochs kills
-                study["neardup_epochs_fold"] = _neardup_stream_study(
-                    spark, docs, base, n_epochs=50, fold=True, tag="nde_f"
-                )
-                study["neardup_epochs_nofold"] = _neardup_stream_study(
-                    spark, docs, base, n_epochs=50, fold=False, tag="nde_n"
-                )
             print(
                 json.dumps(
                     {
@@ -3038,66 +333,25 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
 
         times: dict[str, float] = {}
-        ivf_k = nprobe = train_cap = None
-        ivf_recall = None
-        nprobe_sweep = {}
-        pq_recall = {}
-        # dedup-only mode: run just the dedup-family rows named in
-        # SPARK_GRAFT_SECTIONS (dedup / union / cascade) and skip the
-        # knn/ivf/pq/streaming regions entirely
-        dedup_only = bool(sections) and sections <= {"dedup", "union", "cascade"}
-
         _ROW_TAG = {
             "dedup_union_clusters_e2e": "union",
             "dedup_union_clusters_cascade": "cascade",
         }
 
         def timed(name: str, fn) -> None:
-            if dedup_only and _ROW_TAG.get(name, "dedup") not in sections:
+            if _ROW_TAG[name] not in sections:
                 return
             t0 = time.perf_counter()
             fn()
             times[name] = round(time.perf_counter() - t0, 3)
-            # stderr progress line so a long battery is observable
-            # without polluting the stdout JSON contract
+            # stderr progress line so a long run is observable without
+            # polluting the stdout JSON contract
             print(f"[bench_scale] {name}: {times[name]} s", file=sys.stderr)
 
         # warm the Python worker pool / Arrow lanes (see bench.py)
         spark.range(32).repartition(32).mapInPandas(
             lambda it: it, schema="id long"
         ).write.format("noop").mode("overwrite").save()
-
-        timed(
-            "dedup_exact",
-            lambda: noop(
-                docs.groupBy(F.md5("text").alias("h"))
-                .agg(F.count("*").alias("c"), F.min("doc_id").alias("keeper"))
-                .filter(F.col("c") > 1)
-            ),
-        )
-
-        # chunk-level dedup: map-side chunk explode + one hash shuffle;
-        # replica groups duplicate every chunk, so output tracks the
-        # replica factor times chunks/doc
-        from vectorsearch_scylla_spark.plans.registry import _chunk_docs
-
-        timed(
-            "chunk_dedup",
-            lambda: noop(
-                _chunk_docs(docs.filter(F.col("text").isNotNull()))
-                .groupBy(F.md5(F.col("chunk_text").cast("binary")).alias("h"))
-                .agg(F.count("*").alias("c"), F.min("doc_id").alias("keeper"))
-                .filter(F.col("c") > 1)
-            ),
-        )
-        timed(
-            "simhash_near_dup_pairs",
-            lambda: noop(simhash_near_dup_pairs(docs, max_hamming=5)),
-        )
-        timed(
-            "embedding_neardup_pairs",
-            lambda: noop(hyperplane_near_dup_pairs(emb, threshold=0.92, dim=64)),
-        )
 
         def _without_runtime_filter(fn):
             """Run fn with runtime bloom-filter injection OFF.
@@ -3253,517 +507,6 @@ def main() -> None:
             lambda: _without_runtime_filter(union_cc_cascade),
         )
 
-        if not dedup_only:
-            queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-                F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-            )
-            corpus = emb.select(
-                F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-            )
-            # float32: the documented 100 TB default (float64 is only for
-            # oracle hash-matching)
-            timed(
-                "knn_bruteforce_blocked",
-                lambda: noop(
-                    topk_similarity_join_blocked(
-                        queries, corpus, k=5, exclude_self=True, dtype="float32"
-                    )
-                ),
-            )
-
-            # the no-driver-collect two-sided twin: same |Q|x|C| dot
-            # products; measures what the Q*CB + N*QB replica shuffle costs
-            # relative to the driver-broadcast sweep at this scale
-            from vectorsearch_scylla_spark.operators.knn import (
-                topk_similarity_join_cogrouped,
-            )
-
-            timed(
-                "knn_bruteforce_cogrouped",
-                lambda: noop(
-                    topk_similarity_join_cogrouped(
-                        queries,
-                        corpus,
-                        k=5,
-                        exclude_self=True,
-                        dtype="float32",
-                        n_query_blocks=max(1, scale // 8),
-                        n_corpus_blocks=8,
-                    )
-                ),
-            )
-
-            # SQ8: int8 codes + per-vector scale derived in-query (map-only
-            # projection), full-precision queries vs dequantized corpus
-            # through the same blocked kernel — 4x fewer stored bytes
-            sq8_corpus = emb.select(
-                F.col("vec_id").alias("corpus_id"),
-                # scale captured as a lambda var (1-element array) so the
-                # array_max evaluates once per row, not per element
-                F.expr(
-                    "element_at(transform("
-                    "  array(greatest(array_max(transform(cast(embedding as array<double>),"
-                    " y -> abs(y))), 1e-12d) / 127.0d),"
-                    "  s -> transform(cast(embedding as array<double>),"
-                    " x -> CAST(CAST(floor(x / s + 0.5d) AS TINYINT) AS DOUBLE) * s)"
-                    "), 1)"
-                ).alias("corpus_vec"),
-            )
-            timed(
-                "sq8_knn_blocked",
-                lambda: noop(
-                    topk_similarity_join_blocked(
-                        queries, sq8_corpus, k=5, corpus_id="corpus_id",
-                        exclude_self=True, dtype="float32",
-                    )
-                ),
-            )
-
-            cents: list = []
-
-            def ivf_build() -> None:
-                cents.extend(lloyd_kmeans(emb, k=8, iters=3))
-
-            # SPARK_GRAFT_SKIP_INTERPRETED=1 skips the interpreted-fold
-            # trainer at large scale points: it exists only for bit-exact
-            # oracle parity (the BLAS twin below is the documented scale
-            # path, producing bit-identical centroids on this corpus) and
-            # its cost would dominate the whole run at ≥100×.
-            if os.environ.get("SPARK_GRAFT_SKIP_INTERPRETED") != "1":
-                timed("ivf_kmeans_build", ivf_build)
-
-            # the documented scale swap-in: same trainer, blocked NumPy
-            # BLAS assignment passes instead of interpreted cosine folds
-            def ivf_build_np() -> None:
-                got = lloyd_kmeans(emb, k=8, iters=3, kernel="numpy")
-                if not cents:  # interpreted build skipped: probe uses these
-                    cents.extend(got)
-
-            timed("ivf_kmeans_build_np", ivf_build_np)
-
-            def ivf_probe() -> None:
-                # corpus assignment is INDEX-BUILD work (materialized once in
-                # the registry's build_ivf_index); use the scale kernel here
-                # so the probe timing isn't dominated by interpreted folds
-                members = assign_clusters_np(emb, cents).select(
-                    F.col("vec_id").alias("corpus_id"),
-                    F.col("embedding").alias("corpus_vec"),
-                    "cluster_id",
-                )
-                probes = probe_clusters(queries, cents, nprobe=2, vec_col="query_vec")
-                noop(
-                    topk_similarity_join_blocked(
-                        probes,
-                        members,
-                        k=5,
-                        exclude_self=True,
-                        dtype="float32",
-                        join_keys=["cluster_id"],
-                    )
-                )
-
-            timed("ivf_probe_topk", ivf_probe)
-
-            # --- IVF at a REALISTIC cluster count: K ≈ √N, nprobe scaled to
-            # keep ~1 % of the corpus per query.  The k=8/nprobe=2 point
-            # above keeps the oracle-pinned toy constants (each probe covers
-            # ¼ of the corpus, so probe fan-out DOUBLES work vs brute
-            # force); this one shows the pruning payoff those constants
-            # hide: the cogrouped per-cluster scan does Q·N·(nprobe/K) dot
-            # products with no driver collect on either side.
-            from vectorsearch_scylla_spark.operators.ivf import (
-                ivf_probe_topk_grouped,
-                probe_clusters_np,
-            )
-
-            ivf_k = max(8, int(round(n_vecs**0.5)))
-            nprobe = max(2, ivf_k // 100)
-            cents_sqrt: list = []
-            timed(
-                f"ivf_kmeans_build_np_k{ivf_k}",
-                lambda: cents_sqrt.extend(
-                    lloyd_kmeans(emb, k=ivf_k, iters=2, kernel="numpy")
-                ),
-            )
-
-            # --- bounded-sample training (r6): the SAME trainer capped at
-            # the FAISS-practice 256·K md5-ordered sample — the default
-            # build_ivf_index path.  Each iteration scans sample-sized
-            # data; only the final (caller-side) assignment touches the
-            # full corpus.  The cap binds once N > 256·K (k=8 → any scale
-            # ≥ 10×; K=√N → 100×), and the grouped probe + recall below
-            # run from the SAMPLED centroids so the row also shows the cap
-            # does not cost recall.
-            train_cap = 256 * ivf_k
-            cents_sqrt_s: list = []
-            timed(
-                f"ivf_kmeans_build_np_k{ivf_k}_sampled",
-                lambda: cents_sqrt_s.extend(
-                    lloyd_kmeans(
-                        emb, k=ivf_k, iters=2, kernel="numpy", train_rows=train_cap
-                    )
-                ),
-            )
-            cents_k8_s: list = []
-            timed(
-                "ivf_kmeans_build_np_sampled",
-                lambda: cents_k8_s.extend(
-                    lloyd_kmeans(emb, k=8, iters=3, kernel="numpy", train_rows=2048)
-                ),
-            )
-            if train_cap >= n_vecs:
-                cents_sqrt_s[:] = cents_sqrt  # cap didn't bind: identical train
-
-            grouped_out: list = []
-
-            def ivf_probe_sqrt() -> None:
-                members = assign_clusters_np(emb, cents_sqrt_s).select(
-                    F.col("vec_id").alias("corpus_id"),
-                    F.col("embedding").alias("corpus_vec"),
-                    "cluster_id",
-                )
-                probes = probe_clusters_np(
-                    queries, cents_sqrt_s, nprobe=nprobe, vec_col="query_vec"
-                )
-                out = ivf_probe_topk_grouped(
-                    probes, members, k=5, exclude_self=True, dtype="float32"
-                )
-                out.cache()
-                noop(out)
-                grouped_out.append(out)
-
-            timed(f"ivf_probe_topk_grouped_k{ivf_k}_np{nprobe}", ivf_probe_sqrt)
-
-            # recall@5 of the pruned scan vs the exact blocked sweep — a
-            # speed row without its recall is not a result.  Persisted: the
-            # ground truth is reused by 3 recall evaluations × 2 actions
-            # each, and at 100× one exact sweep costs ~80 s.
-            exact = (
-                topk_similarity_join_blocked(
-                    queries, corpus, k=5, exclude_self=True, dtype="float32"
-                )
-                .select("query_id", F.col("corpus_id").alias("exact_id"))
-                .persist()
-            )
-            approx = grouped_out[0].select(
-                "query_id", F.col("corpus_id").alias("approx_id")
-            )
-            hit = exact.join(
-                approx,
-                (exact["query_id"] == approx["query_id"])
-                & (exact["exact_id"] == approx["approx_id"]),
-                "left_semi",
-            ).count()
-            denom = exact.count()
-            ivf_recall = round(hit / denom, 4) if denom else None
-            grouped_out[0].unpersist()
-
-            # --- optional nprobe sweep (SPARK_GRAFT_NPROBE_SWEEP=1): the
-            # time-vs-recall curve of THE production knob.  Reuses the
-            # persisted exact ground truth; each point is one grouped
-            # probe run from the sampled-trained centroids.
-            nprobe_sweep: dict = {}
-            if os.environ.get("SPARK_GRAFT_NPROBE_SWEEP") == "1":
-                for np_i in (2, 4, 8, 16):
-                    t0 = time.perf_counter()
-                    members_s = assign_clusters_np(emb, cents_sqrt_s).select(
-                        F.col("vec_id").alias("corpus_id"),
-                        F.col("embedding").alias("corpus_vec"),
-                        "cluster_id",
-                    )
-                    probes_s = probe_clusters_np(
-                        queries, cents_sqrt_s, nprobe=np_i, vec_col="query_vec"
-                    )
-                    out_s = ivf_probe_topk_grouped(
-                        probes_s, members_s, k=5, exclude_self=True, dtype="float32"
-                    )
-                    out_s = out_s.persist()
-                    out_s.write.format("noop").mode("overwrite").save()
-                    dt = round(time.perf_counter() - t0, 3)
-                    approx_s = out_s.select(
-                        "query_id", F.col("corpus_id").alias("approx_id")
-                    )
-                    hits_s = exact.join(
-                        approx_s,
-                        (exact["query_id"] == approx_s["query_id"])
-                        & (exact["exact_id"] == approx_s["approx_id"]),
-                        "left_semi",
-                    ).count()
-                    out_s.unpersist()
-                    nprobe_sweep[str(np_i)] = {
-                        "sec": dt,
-                        "recall_at_5": round(hits_s / denom, 4) if denom else None,
-                    }
-
-            # --- PQ: train / encode (index build) / ADC scan (query path)
-            from vectorsearch_scylla_spark.operators.pq import (
-                encode_pq_np,
-                pq_adc_topk_np,
-                train_pq,
-            )
-
-            books: list = []
-
-            def pq_train() -> None:
-                # numpy assignment kernel: the documented scale build path
-                books.extend(
-                    train_pq(emb, m=4, ksub=4, iters=2, dsub=16, kernel="numpy")
-                )
-
-            timed("pq_train", pq_train)
-
-            codes_path = os.path.join(base, "pq_codes")
-
-            def pq_encode() -> None:
-                # encode is index-BUILD work: materialize the code table the
-                # way the registry's build_pq_index does
-                encode_pq_np(
-                    emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-                    books,
-                    dsub=16,
-                ).drop("embedding").write.parquet(codes_path)
-
-            timed("pq_encode_np", pq_encode)
-
-            # --- Streaming pipeline at 1× and scale×: the batch twins
-            # scale-bench cleanly above; this isolates what the Structured
-            # Streaming MACHINERY costs by running streaming_detect_e2e's
-            # exact pipeline (file source → watermarked LWW pivot →
-            # broadcast-profile Path-1/2 detection → foreachBatch dual
-            # sink, availableNow) on the fixture events and on a scale×
-            # replica (devices replicated with distinct ids, so state
-            # cardinality scales too).  Runs LAST: completed streaming
-            # queries leave JVM residue that slows later batch queries.
-            from vectorsearch_scylla_spark.plans.registry import (
-                METRICS,
-                quantize,
-            )
-            from vectorsearch_scylla_spark.sources.tables import device_metrics_raw
-            from vectorsearch_scylla_spark.operators.window_pivot import window_start
-
-            def stream_detect_point(tag: str, raw_df) -> None:
-                sdir = os.path.join(base, f"stream_{tag}")
-                raw_df.write.parquet(os.path.join(sdir, "src"))
-                raw_m = spark.read.parquet(os.path.join(sdir, "src"))
-                lww = raw_m.groupBy(
-                    "device_id",
-                    window_start("timestamp", 60).alias("ws"),
-                    "metric_name",
-                ).agg(
-                    F.max_by(
-                        "metric_value", F.struct("timestamp", "event_id")
-                    ).alias("v")
-                )
-                snapb = lww.groupBy("device_id", "ws").agg(
-                    *[
-                        F.coalesce(
-                            F.max(F.when(F.col("metric_name") == m, F.col("v"))),
-                            F.lit(0.0),
-                        ).alias(f"m_{m}")
-                        for m in METRICS
-                    ]
-                )
-                prof_plan = snapb.groupBy("device_id").agg(
-                    *[
-                        a
-                        for m in METRICS
-                        for a in (
-                            quantize(F.avg(f"m_{m}")).alias(f"mean_{m}"),
-                            quantize(F.stddev_pop(f"m_{m}")).alias(f"std_{m}"),
-                        )
-                    ]
-                )
-                prof_plan.write.parquet(os.path.join(sdir, "profiles"))
-                profiles = spark.read.parquet(os.path.join(sdir, "profiles"))
-
-                from vectorsearch_scylla_spark.streaming.pipeline import (
-                    detect_paths12,
-                    detection_sinks,
-                    windowed_snapshot_stream,
-                )
-
-                def drain() -> None:
-                    stream = spark.readStream.schema(raw_m.schema).parquet(
-                        os.path.join(sdir, "src")
-                    )
-                    snaps = windowed_snapshot_stream(
-                        stream, window_seconds=60, watermark_windows=2
-                    )
-                    detected = detect_paths12(
-                        snaps, profiles, METRICS, sim_threshold=0.90
-                    )
-                    q = detection_sinks(detected, os.path.join(sdir, "out"))
-                    if not q.awaitTermination(600):
-                        q.stop()
-                        raise RuntimeError(f"stream_{tag} did not drain in 600s")
-
-                # timed section = the streaming drain only (profile build is
-                # the "earlier batch job" in the registry query too)
-                timed(f"streaming_detect_pipeline_{tag}", drain)
-
-            raw1 = device_metrics_raw(spark, sf_dir).select(
-                "device_id", "timestamp", "metric_name", "metric_value", "event_id"
-            )
-            rawN = raw1.crossJoin(F.broadcast(reps)).select(
-                F.concat(
-                    F.col("device_id"), F.lit("-r"), F.col("rep").cast("string")
-                ).alias("device_id"),
-                "timestamp",
-                "metric_name",
-                "metric_value",
-                (F.col("event_id") + F.col("rep").cast("long") * 100_000_000).alias(
-                    "event_id"
-                ),
-            )
-
-            def streaming_points() -> None:
-                stream_detect_point("1x", raw1)
-                stream_detect_point(f"{scale}x", rawN)
-
-            # (PQ ADC scan continues here; the streaming closures above are
-            # invoked only AFTER it — JVM residue rule.)
-
-            def pq_scan() -> None:
-                # blocked NumPy ADC (the scale kernel; the registry query
-                # keeps the declarative LUT join for oracle parity)
-                codes = spark.read.parquet(codes_path)
-                noop(
-                    pq_adc_topk_np(
-                        queries, codes, books, k=5, dsub=16,
-                        corpus_id="neighbor_id", exclude_self=True,
-                    )
-                )
-
-            timed("pq_adc_scan_np", pq_scan)
-
-            # --- PQ vs RESIDUAL-PQ recall@5 at the same codebook budget
-            # (m=4, ksub=4): quantization recall isolated from probe recall
-            # by scanning the FULL corpus both ways.  Residual codebooks
-            # (FAISS `IVF,PQ`, registry query ivfpq_residual_knn) spend
-            # their codewords on within-cluster variance, so they should
-            # recover recall the raw-vector codes lose.
-            from vectorsearch_scylla_spark.operators.ivf import _arr_sql
-            from vectorsearch_scylla_spark.operators.pq import encode_pq_np
-
-            def _recall(approx_df) -> float:
-                hits = exact.join(
-                    approx_df,
-                    (exact["query_id"] == approx_df["query_id"])
-                    & (exact["exact_id"] == approx_df["aid"]),
-                    "left_semi",
-                ).count()
-                d = exact.count()
-                return round(hits / d, 4) if d else float("nan")
-
-            pq_recall: dict = {}
-            from vectorsearch_scylla_spark.operators.pq import train_pq
-
-            # residual machinery shared by every budget point: residuals
-            # against the k=8 coarse quantizer, reconstructed candidates
-            # scored as cos(q, c + r̂)
-            members_np = assign_clusters_np(emb, cents).select(
-                F.col("vec_id").alias("corpus_id"),
-                "cluster_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-            )
-            cent_case = (
-                "CASE cluster_id "
-                + " ".join(
-                    f"WHEN {cid} THEN {_arr_sql(cv)}" for cid, cv in cents
-                )
-                + " END"
-            )
-            res = members_np.select(
-                "corpus_id",
-                "cluster_id",
-                F.expr(
-                    f"zip_with(embedding, {cent_case}, (x, y) -> x - y)"
-                ).alias("embedding"),
-            )
-
-            def _cw_cases(bks) -> str:
-                return ", ".join(
-                    "CASE code%d %s END"
-                    % (s, " ".join(f"WHEN {c} THEN {_arr_sql(cv)}" for c, cv in bk))
-                    for s, bk in enumerate(bks)
-                )
-
-            def pq_recall_eval() -> None:
-                codes_df = spark.read.parquet(codes_path)
-                raw_top = pq_adc_topk_np(
-                    queries, codes_df, books, k=5, dsub=16,
-                    corpus_id="neighbor_id", exclude_self=True,
-                ).select("query_id", F.col("neighbor_id").alias("aid"))
-                pq_recall["raw"] = _recall(raw_top)
-
-                rbooks = train_pq(
-                    res, m=4, ksub=4, iters=2, dsub=16,
-                    id_col="corpus_id", kernel="numpy",
-                )
-                recon = encode_pq_np(res, rbooks, dsub=16).select(
-                    "corpus_id",
-                    F.expr(
-                        f"zip_with({cent_case}, concat({_cw_cases(rbooks)}), (x, y) -> x + y)"
-                    ).alias("corpus_vec"),
-                )
-                res_top = topk_similarity_join_blocked(
-                    queries, recon, k=5, exclude_self=True, dtype="float32"
-                ).select("query_id", F.col("corpus_id").alias("aid"))
-                pq_recall["residual"] = _recall(res_top)
-
-            timed("pq_recall_eval", pq_recall_eval)
-
-            # --- PRODUCTION-budget PQ point (r5 judge item 3): the 4×4
-            # budget above isolates the residual-vs-raw STRUCTURE but its
-            # absolute recall (~0.25) is not shippable.  Measure a budget
-            # you would deploy: m=8 subspaces × ksub codewords over the
-            # 64-dim vectors (dsub=8), raw AND residual at the same bytes.
-            def pq_budget_point(m2: int, k2: int, tag: str) -> None:
-                d2 = 64 // m2
-                braw = train_pq(
-                    emb.select(F.col("vec_id").alias("corpus_id"), "embedding"),
-                    m=m2, ksub=k2, iters=2, dsub=d2,
-                    id_col="corpus_id", kernel="numpy",
-                )
-                recon_raw = encode_pq_np(
-                    emb.select(
-                        F.col("vec_id").alias("corpus_id"),
-                        F.col("embedding").cast("array<double>").alias("embedding"),
-                    ),
-                    braw,
-                    dsub=d2,
-                ).select(
-                    "corpus_id",
-                    F.expr(f"concat({_cw_cases(braw)})").alias("corpus_vec"),
-                )
-                raw_top = topk_similarity_join_blocked(
-                    queries, recon_raw, k=5, exclude_self=True, dtype="float32"
-                ).select("query_id", F.col("corpus_id").alias("aid"))
-                pq_recall[f"raw_{tag}"] = _recall(raw_top)
-
-                rbooks2 = train_pq(
-                    res, m=m2, ksub=k2, iters=2, dsub=d2,
-                    id_col="corpus_id", kernel="numpy",
-                )
-                recon2 = encode_pq_np(res, rbooks2, dsub=d2).select(
-                    "corpus_id",
-                    F.expr(
-                        f"zip_with({cent_case}, concat({_cw_cases(rbooks2)}), (x, y) -> x + y)"
-                    ).alias("corpus_vec"),
-                )
-                res_top2 = topk_similarity_join_blocked(
-                    queries, recon2, k=5, exclude_self=True, dtype="float32"
-                ).select("query_id", F.col("corpus_id").alias("aid"))
-                pq_recall[f"residual_{tag}"] = _recall(res_top2)
-                pq_recall[f"bytes_per_vec_{tag}"] = m2 * max(1, (k2 - 1).bit_length()) / 8
-
-            timed("pq_recall_m8k16", lambda: pq_budget_point(8, 16, "m8k16"))
-            timed("pq_recall_m8k64", lambda: pq_budget_point(8, 64, "m8k64"))
-            exact.unpersist()
-
-            # streaming LAST (see comment above stream_detect_point)
-            streaming_points()
-
         total = round(sum(times.values()), 3)
         print(
             json.dumps(
@@ -3775,19 +518,6 @@ def main() -> None:
                     "scale": scale,
                     "n_docs": n_docs,
                     "n_vecs": n_vecs,
-                    "ivf_sqrtn": {
-                        "k": ivf_k,
-                        "nprobe": nprobe,
-                        "recall_at_5": ivf_recall,
-                        "train_cap": train_cap,
-                        "train_cap_bound": (
-                            bool(train_cap < n_vecs)
-                            if train_cap is not None
-                            else None
-                        ),
-                        "nprobe_sweep": nprobe_sweep,
-                    },
-                    "pq_recall_at_5": pq_recall,
                 }
             )
         )

@@ -1,6 +1,6 @@
 """Unit tests for the operator library on small synthetic frames:
 join-key constraints, kNN strategy agreement (expression vs blocked vs
-LSH), detection formulas, serving helpers.
+hyperplane LSH), detection formulas, serving helpers.
 """
 
 from __future__ import annotations
@@ -10,15 +10,17 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from vectorsearch_scylla_spark.functions.vector import cosine_similarity, l2_normalize
+from vectorsearch_scylla_spark.functions.hyperplane import hyperplane_topk_join
+from vectorsearch_scylla_spark.functions.vector import cosine_similarity
 from vectorsearch_scylla_spark.operators.knn import (
-    cosine_pairs_blocked,
-    lsh_topk_similarity_join,
     topk_similarity_join,
     topk_similarity_join_blocked,
 )
-from vectorsearch_scylla_spark.operators.detection import path3_novelty
-from vectorsearch_scylla_spark.operators.serving import asof_bucket_join, latest_per_key
+from vectorsearch_scylla_spark.operators.serving import bucket_10s
+from vectorsearch_scylla_spark.streaming.pipeline import (
+    detect_path3_batch,
+    detect_paths12,
+)
 
 
 @pytest.fixture(scope="module")
@@ -36,13 +38,6 @@ def test_cosine_zero_norm_guard(spark):
     out = [r[0] for r in df.select(cosine_similarity("a", "b")).collect()]
     assert out[0] == 0.0
     assert abs(out[1] - 1.0) < 1e-12
-
-
-def test_l2_normalize_keeps_zero_vectors(spark):
-    df = spark.createDataFrame([([0.0, 0.0],), ([3.0, 4.0],)], "a array<double>")
-    rows = [r[0] for r in df.select(l2_normalize("a")).collect()]
-    assert rows[0] == [0.0, 0.0]
-    assert abs(rows[1][0] - 0.6) < 1e-12 and abs(rows[1][1] - 0.8) < 1e-12
 
 
 def test_topk_blocked_matches_expression(spark, emb):
@@ -77,7 +72,11 @@ def test_lsh_recall_against_exact(spark, emb):
         F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
     )
     exact = topk_similarity_join(q, c, k=5).collect()
-    approx = lsh_topk_similarity_join(q, c, k=5, num_hash_tables=3).collect()
+    # the fixture's true top-5 neighbours sit at cosine 0.27-0.39
+    # (nothing is near), so the bands are sized for that regime: a pair
+    # at cos 0.3 shares a 4-bit band with prob 0.597^4 = 0.127 and is
+    # missed by all 32 bands with prob ~1.3 %
+    approx = hyperplane_topk_join(q, c, k=5, n_bands=32, band_bits=4).collect()
     e = {(r["query_id"], r["corpus_id"]) for r in exact}
     a = {(r["query_id"], r["corpus_id"]) for r in approx}
     recall = len(e & a) / len(e)
@@ -200,8 +199,8 @@ def test_assign_clusters_bc_agreement(spark, emb):
     literal paths on every fixture row at float64 — same argmax-cosine
     semantics, same BLAS math, only the matrix transport differs."""
     from vectorsearch_scylla_spark.operators.ivf import (
+        _assign_clusters_bc,
         assign_clusters,
-        assign_clusters_bc,
         assign_clusters_np,
         lloyd_kmeans,
     )
@@ -210,10 +209,9 @@ def test_assign_clusters_bc_agreement(spark, emb):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = lloyd_kmeans(vecs, k=8, iters=2)
-    bc_out = {
-        r["vec_id"]: r["cluster_id"]
-        for r in assign_clusters_bc(vecs, cents, dtype="float64").collect()
-    }
+    bc_df, bc = _assign_clusters_bc(vecs, cents, dtype="float64")
+    bc_out = {r["vec_id"]: r["cluster_id"] for r in bc_df.collect()}
+    bc.unpersist()
     np_out = {
         r["vec_id"]: r["cluster_id"]
         for r in assign_clusters_np(vecs, cents, dtype="float64").collect()
@@ -270,46 +268,6 @@ def test_assign_clusters_bc_closure_stays_small(spark):
     from vectorsearch_scylla_spark.operators.ivf import build_ivf_index
 
     assert inspect.signature(build_ivf_index).parameters["bc_threshold"].default == 4096
-
-
-def test_probe_clusters_bc_agreement(spark, emb):
-    """Query-side twin of the broadcast-assignment pin: the broadcast
-    multi-probe kernel must emit the same (row, probed cluster)
-    fan-out as probe_clusters_np at float64, and its closure must
-    carry only the broadcast handle."""
-    from pyspark import cloudpickle
-
-    from vectorsearch_scylla_spark.operators.ivf import (
-        _bc_probe_kernel,
-        lloyd_kmeans,
-        probe_clusters_bc,
-        probe_clusters_np,
-    )
-
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents = lloyd_kmeans(vecs, k=8, iters=2)
-    bc_out = {
-        (r["vec_id"], r["cluster_id"])
-        for r in probe_clusters_bc(vecs, cents, nprobe=2, dtype="float64").collect()
-    }
-    np_out = {
-        (r["vec_id"], r["cluster_id"])
-        for r in probe_clusters_np(vecs, cents, nprobe=2, dtype="float64").collect()
-    }
-    assert bc_out == np_out
-
-    import numpy as np
-
-    sc = spark.sparkContext
-    bc = sc.broadcast((np.arange(4), np.eye(2)))
-    try:
-        small = len(cloudpickle.dumps(_bc_probe_kernel(bc, 2, "embedding", "cluster_id")))
-        assert small < 50_000, small
-    finally:
-        getattr(sc, "_pickled_broadcast_vars", set()).clear()
-        bc.destroy()
 
 
 def test_ivf_append_only_lifecycle_composes(spark, emb):
@@ -418,16 +376,15 @@ def test_assign_probe_kernels_survive_long_centroid_ids(spark):
     its output to int32 unconditionally, so routing NEW vectors or
     probes against a POST-COMPACTION centroid table (second-generation
     child ids ≈ (c+1)·1e6·1e6 > 2^31) silently WRAPPED the cluster id
-    and mis-routed.  All six kernels (expr/np/bc × assign/probe) must
-    emit exact long ids against such a table — and keep int32 output
-    for small-id tables so no existing consumer or oracle changes
-    shape."""
+    and mis-routed.  Every kernel (expr/np/bc assign, expr/np probe)
+    must emit exact long ids against such a table — and keep int32
+    output for small-id tables so no existing consumer or oracle
+    changes shape."""
     from vectorsearch_scylla_spark.operators.ivf import (
+        _assign_clusters_bc,
         assign_clusters,
-        assign_clusters_bc,
         assign_clusters_np,
         probe_clusters,
-        probe_clusters_bc,
         probe_clusters_np,
     )
 
@@ -441,7 +398,7 @@ def test_assign_probe_kernels_survive_long_centroid_ids(spark):
     for fn, kw in [
         (assign_clusters, {}),
         (assign_clusters_np, {"dtype": "float64"}),
-        (assign_clusters_bc, {"dtype": "float64"}),
+        (lambda *a, **k: _assign_clusters_bc(*a, **k)[0], {"dtype": "float64"}),
     ]:
         out = fn(vecs, cents, **kw)
         assert dict(out.dtypes)["cluster_id"] == "bigint", fn.__name__
@@ -450,7 +407,6 @@ def test_assign_probe_kernels_survive_long_centroid_ids(spark):
     for fn, kw in [
         (probe_clusters, {}),
         (probe_clusters_np, {"dtype": "float64"}),
-        (probe_clusters_bc, {"dtype": "float64"}),
     ]:
         out = fn(vecs, cents, nprobe=2, **kw)
         assert dict(out.dtypes)["cluster_id"] == "bigint", fn.__name__
@@ -532,24 +488,6 @@ def test_ivf_probe_topk_grouped_matches_masked_blocked_join(spark, emb):
     assert g == m and len(g) > 0
 
 
-def test_cosine_pairs_blocked_threshold(spark, emb):
-    pairs = cosine_pairs_blocked(emb, threshold=0.9).collect()
-    assert all(r["similarity"] > 0.9 and r["id_a"] < r["id_b"] for r in pairs)
-
-
-def test_cosine_pairs_blocked_collect_guard(spark, emb):
-    """r10: the bounded-inputs contract is enforced, not just
-    documented — above the cap the kernel raises an actionable error
-    naming the corpus-scale path; at the cap it proceeds."""
-    n = emb.count()
-    with pytest.raises(ValueError, match="hyperplane_near_dup_pairs"):
-        cosine_pairs_blocked(emb, threshold=0.9, max_collect_rows=n - 1)
-    assert (
-        cosine_pairs_blocked(emb, threshold=0.99, max_collect_rows=n).count()
-        >= 0
-    )
-
-
 def test_media_kernels_byte_exact_on_non_ascii(spark):
     """Both the Spark media kernels AND the registered DuckDB oracles
     must agree with ground-truth BYTE semantics on non-ASCII UTF-8 —
@@ -620,55 +558,72 @@ def test_media_kernels_byte_exact_on_non_ascii(spark):
 
 
 def test_path3_novelty_same_device_constraint(spark):
-    # two devices; d1 has 3 tightly-clustered normal rows, d2 has rows
+    # two devices; d1 has 3 identical normal windows, d2 has windows
     # identical to d1's — if the same-device constraint leaked, d1's
     # snapshot would count d2's rows as neighbors.
-    rows = []
-    for i, dev in [(0, "d1"), (1, "d1"), (2, "d1"), (3, "d2"), (4, "d2"), (5, "d2")]:
-        rows.append((i, dev, [1.0, 0.0, 0.0], False))
+    metrics = ["a", "b"]
     hist = spark.createDataFrame(
-        rows, "snapshot_id long, device_id string, embedding array<double>, is_anomalous boolean"
+        [(dev, ws, 1.0, 0.0) for dev in ("d1", "d2") for ws in (0, 60, 120)],
+        "device_id string, ws long, m_a double, m_b double",
     )
-    snaps = hist.filter(F.col("snapshot_id") == 0)
-    out = path3_novelty(
-        snaps, hist, k=10, min_matches=3, sim_threshold=0.99, id_col="snapshot_id"
+    snaps = spark.createDataFrame(
+        [("d1", 0, {"a": 1.0})],
+        "device_id string, ws long, metrics map<string,double>",
+    ).withColumn("window_start", F.timestamp_seconds("ws"))
+    out = detect_path3_batch(
+        snaps, hist, metrics, sim_threshold=0.99, k=10, min_similar=3
     ).collect()[0]
-    # only d1's OTHER two rows qualify (self excluded, d2 excluded)
+    # only d1's OTHER two windows qualify (self excluded, d2 excluded)
     assert out["similar_count"] == 2
     assert bool(out["path3_triggered"]) is True
 
 
-def test_latest_per_key(spark):
-    df = spark.createDataFrame(
-        [("a", 1, "x"), ("a", 3, "y"), ("b", 2, "z")],
-        "k string, snapshot_time int, v string",
-    )
-    out = {r["k"]: r["v"] for r in latest_per_key(df, "k").collect()}
-    assert out == {"a": "y", "b": "z"}
-
-
 def test_asof_bucket_join_rounding(spark):
-    ev = spark.createDataFrame(
-        [("d1", "2024-01-01 00:00:14")], "device_id string, detected_at string"
-    ).withColumn("detected_at", F.to_timestamp("detected_at"))
-    sn = spark.createDataFrame(
-        [("d1", "2024-01-01 00:00:11"), ("d1", "2024-01-01 00:00:21")],
-        "device_id string, snapshot_time string",
-    ).withColumn("snapshot_time", F.to_timestamp("snapshot_time"))
-    out = asof_bucket_join(ev, sn, "detected_at", "snapshot_time", ["device_id"])
-    # both round to the 00:00:10 bucket → exactly one match (00:00:11)
-    rows = out.collect()
-    assert len(rows) == 1
-    assert rows[0]["snapshot_time"].second == 11
+    # the as-of join rounds both sides to 10 s buckets
+    # (dashboard/app.py:534,569): an event at :14 matches the snapshot
+    # at :11, not the one at :21
+    df = spark.createDataFrame(
+        [(14,), (11,), (21,), (10,), (19,)], "s long"
+    ).withColumn("ts", F.timestamp_seconds("s"))
+    got = {r["s"]: r["b"] for r in df.select("s", bucket_10s("ts").alias("b")).collect()}
+    assert got == {14: 10, 11: 10, 21: 20, 10: 10, 19: 10}
 
 
 def test_anomaly_score_formula(spark):
-    from vectorsearch_scylla_spark.operators.detection import anomaly_score
+    metrics = ["a", "b"]
+    snaps = spark.createDataFrame(
+        [("d1", {"a": 3.0, "b": 4.0})],
+        "device_id string, metrics map<string,double>",
+    ).select(
+        "device_id",
+        F.lit(None).cast("timestamp").alias("window_start"),
+        F.lit(None).cast("timestamp").alias("window_end"),
+        "metrics",
+        F.lit(None).cast("timestamp").alias("snapshot_time"),
+        F.lit(2).alias("n_metrics"),
+    )
+    profiles = spark.createDataFrame(
+        [("d1", 4.0, 0.5, 3.0, 0.1)],
+        "device_id string, mean_a double, std_a double, mean_b double, std_b double",
+    )
+    got = detect_paths12(snaps, profiles, metrics).collect()[0]["anomaly_score"]
+    # sim = (3·4 + 4·3) / (5·5) = 0.96; |z| = (2, 10) →
+    # max(0, 1 - 0.96) + min(1, (2 + 10)/40) = 0.04 + 0.3
+    assert math.isclose(got, 0.34, rel_tol=1e-12)
 
-    df = spark.createDataFrame([(0.8, [2.0, 15.0])], "sim double, zs array<double>")
-    got = df.select(anomaly_score(F.col("sim"), F.col("zs")).alias("s")).collect()[0]["s"]
-    # max(0, 1-0.8) + min(1, (2 + 10)/40) = 0.2 + 0.3
-    assert math.isclose(got, 0.5, rel_tol=1e-12)
+
+def test_profile_metric_domain_is_closed(spark, sf_dir):
+    """build_profiles_fixed_metrics drops any metric outside the
+    metric list it is given, without a trace; device_profile_build
+    passes METRICS, so device_metrics_raw's metric_name domain must
+    stay inside it (the precondition in the function's docstring)."""
+    from vectorsearch_scylla_spark.plans.registry import METRICS
+    from vectorsearch_scylla_spark.sources.tables import device_metrics_raw
+
+    raw = device_metrics_raw(spark, sf_dir)
+    seen = {r[0] for r in raw.select("metric_name").distinct().collect()}
+    assert seen, "fixture has no metric rows"
+    assert seen <= set(METRICS), sorted(seen - set(METRICS))
 
 
 def test_simhash128_matches_reference_bits(spark):
@@ -825,40 +780,6 @@ def test_connected_components_long_chain_pointer_jump(spark):
     assert got == {i: 0 for i in range(41)}
 
 
-def test_embed_texts_inference_shape(spark, sf_dir):
-    """V2 inference-shaped embedding generation: the mapInPandas
-    vectorizer must be deterministic across runs, partitionings, and
-    Arrow batch sizes (per-worker lazy model init must not leak into
-    results), emit unit-norm float32 vectors, and zero-embed null/empty
-    text."""
-    import math
-
-    from vectorsearch_scylla_spark.functions.embed import embed_texts
-    from vectorsearch_scylla_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
-    a = {r["doc_id"]: r["emb"] for r in embed_texts(docs, out_col="emb").collect()}
-    b = {
-        r["doc_id"]: r["emb"]
-        for r in embed_texts(docs.repartition(7), out_col="emb").collect()
-    }
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
-    try:
-        c = {
-            r["doc_id"]: r["emb"]
-            for r in embed_texts(docs.repartition(3), out_col="emb").collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    assert a == b == c
-    assert len(a) == 200 and all(len(v) == 64 for v in a.values())
-    norms = [math.sqrt(sum(x * x for x in v)) for v in a.values()]
-    assert all(abs(n - 1.0) < 1e-3 or n == 0.0 for n in norms)
-    nulls = spark.createDataFrame([(1, None), (2, "")], "doc_id long, text string")
-    z = {r["doc_id"]: r["emb"] for r in embed_texts(nulls, out_col="emb").collect()}
-    assert all(all(x == 0.0 for x in v) for v in z.values())
-
-
 def test_connected_components_random_graphs_vs_union_find(spark):
     """Randomized spec test for the distributed CC: 30 random graphs
     (disjoint id spaces) folded into ONE edge frame and clustered in a
@@ -979,34 +900,6 @@ def test_pq_adc_matches_numpy_reference(spark, sf_dir):
         )[:5]
         for rank, j in enumerate(order, start=1):
             assert got[(ids[qi], rank)] == ids[j], (ids[qi], rank)
-
-
-def test_encode_pq_np_matches_expr_kernel(spark, sf_dir):
-    """The blocked NumPy encode (scale build path) must agree with the
-    oracle-parity expression kernel on the fixture corpus — codes AND
-    the reconstructed norm."""
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq,
-        encode_pq_np,
-        train_pq,
-    )
-    from vectorsearch_scylla_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    books = train_pq(emb, m=4, ksub=4, iters=2, dsub=16)
-    expr_rows = {
-        r["vec_id"]: (r["code0"], r["code1"], r["code2"], r["code3"], r["rnorm"])
-        for r in encode_pq(emb, books, dsub=16).collect()
-    }
-    np_rows = {
-        r["vec_id"]: (r["code0"], r["code1"], r["code2"], r["code3"], r["rnorm"])
-        for r in encode_pq_np(emb, books, dsub=16, dtype="float64").collect()
-    }
-    assert set(expr_rows) == set(np_rows)
-    for vid, (c0, c1, c2, c3, rn) in expr_rows.items():
-        n0, n1, n2, n3, rn2 = np_rows[vid]
-        assert (c0, c1, c2, c3) == (n0, n1, n2, n3), vid
-        assert abs(rn - rn2) < 1e-9, vid
 
 
 def test_pq_adc_topk_np_matches_expr(spark, sf_dir):
@@ -2539,176 +2432,6 @@ def test_incremental_chain_seven_days_with_compaction(spark, tmp_path):
         assert final[d * 100 + 2] == final[(d - 1) * 100 + 3]
 
 
-def test_roll_forward_signatures_bucketed(spark, tmp_path):
-    """r10: the bucketed-artifact layout the r9 storage study priced,
-    as product — create + append accumulate exactly, schema drift is
-    rejected, the id-equi re-attach join reads the bucketed scan with
-    NO artifact-side Exchange (the plain-parquet twin pays one), and
-    the against_sigs probe from the table is value-identical."""
-    import contextlib
-    import io
-    import re
-
-    from vectorsearch_scylla_spark.operators.dedup import (
-        roll_forward_signatures_bucketed,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    base_rows = [(i, f"bucketed base doc {i} payload {i * 271}") for i in range(8)]
-    inc_rows = [(100, base_rows[3][1]), (101, "bucketed increment singleton")]
-    tbl = "vss_test_bkt_sigs"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    roll_forward_signatures_bucketed(
-        simhash128(mk(base_rows)), tbl, path=str(tmp_path / "bkt_tbl")
-    )
-    roll_forward_signatures_bucketed(simhash128(mk(inc_rows)), tbl)
-    got_ids = sorted(r["doc_id"] for r in spark.table(tbl).select("doc_id").collect())
-    assert got_ids == sorted([r[0] for r in base_rows + inc_rows])
-
-    # near-miss schema rejected before any write
-    drifted = simhash128(mk([(999, "x")])).withColumnRenamed("s0", "sig0")
-    with pytest.raises(ValueError, match="schema does not match"):
-        roll_forward_signatures_bucketed(drifted, tbl)
-
-    # plan: the id-equi join's artifact side must carry NO Exchange
-    # when read from the bucketed table (broadcast disabled so the
-    # fixture-scale planner cannot hide the exchange this layout kills)
-    pairs = mk([(100, ""), (3, "")]).select(F.col("doc_id").alias("id_a"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        def n_exchanges(artifact):
-            j = pairs.join(
-                artifact.withColumnRenamed("doc_id", "id_a"), "id_a"
-            )
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                j.explain("formatted")
-            return len(re.findall(r"\(\d+\) Exchange", buf.getvalue()))
-
-        pq = str(tmp_path / "plain_sigs")
-        spark.table(tbl).write.parquet(pq)
-        assert n_exchanges(spark.table(tbl)) == n_exchanges(
-            spark.read.parquet(pq)
-        ) - 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-
-    # value parity: probing against the bucketed table == the parquet
-    # artifact (the verifier's band join + Hamming re-attach)
-    probe = mk([(200, base_rows[5][1])])
-    def pair_set(art):
-        return {
-            (r["id_a"], r["id_b"])
-            for r in simhash_near_dup_pairs(probe, against_sigs=art).collect()
-        }
-    assert pair_set(spark.table(tbl)) == pair_set(spark.read.parquet(pq))
-    assert (200, 5) in pair_set(spark.table(tbl))
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_incremental_chain_bucketed_artifact(spark, tmp_path):
-    """r10: the bucketed artifact through the FULL chained loop — the
-    unit test pins plan shape and one probe; this certifies that a
-    3-day incremental chain probing and rolling forward the BUCKETED
-    table (spark.table as against_sigs, bucketed appends as the
-    roll-forward) ends at labels identical to the batch recompute —
-    i.e. the layout swap is a pure storage decision, invisible to the
-    pipeline's semantics."""
-    from vectorsearch_scylla_spark.operators.dedup import (
-        roll_forward_signatures_bucketed,
-        simhash128,
-        simhash_near_dup_pairs,
-    )
-    from vectorsearch_scylla_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-    from vectorsearch_scylla_spark.session import drop_inherited_stats
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    base_rows = [
-        (i, f"bucketed chain base doc {i} payload {i * 6101}") for i in range(10)
-    ]
-    days = [
-        [(100, base_rows[2][1]),  # merges into a base component
-         (101, "bucketed chain family text one two three")],
-        [(200, "bucketed chain family text one two three")],  # via artifact
-        [(300, base_rows[7][1]),
-         (301, "bucketed chain family text one two three")],
-    ]
-    tbl = "vss_test_bkt_chain"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    base = mk(base_rows)
-    roll_forward_signatures_bucketed(
-        simhash128(base), tbl, path=str(tmp_path / "bkt_chain_tbl")
-    )
-    labels = (
-        base.select(F.col("doc_id").alias("node"))
-        .join(
-            connected_components(
-                simhash_near_dup_pairs(base).select("id_a", "id_b")
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("component", "node").alias("component"))
-    )
-    corpus_rows = list(base_rows)
-    for day_rows in days:
-        inc = mk(day_rows)
-        inc_sigs = drop_inherited_stats(simhash128(inc).localCheckpoint())
-        cross = simhash_near_dup_pairs(
-            inc, docs_sigs=inc_sigs, against_sigs=spark.table(tbl)
-        ).select("id_a", "id_b")
-        within = simhash_near_dup_pairs(inc, docs_sigs=inc_sigs).select(
-            "id_a", "id_b"
-        )
-        updated = incremental_components(labels, cross.unionByName(within))
-        labels = drop_inherited_stats(
-            mk(corpus_rows + day_rows)
-            .select(F.col("doc_id").alias("node"))
-            .join(updated, "node", "left")
-            .select("node", F.coalesce("component", "node").alias("component"))
-            .localCheckpoint()
-        )
-        roll_forward_signatures_bucketed(inc_sigs, tbl)
-        corpus_rows = corpus_rows + day_rows
-
-    corpus = mk(corpus_rows)
-    batch = (
-        corpus.select(F.col("doc_id").alias("node"))
-        .join(
-            connected_components(
-                simhash_near_dup_pairs(corpus).select("id_a", "id_b")
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("component", "node").alias("component"))
-    )
-    got = {(r["node"], r["component"]) for r in labels.collect()}
-    want = {(r["node"], r["component"]) for r in batch.collect()}
-    assert got == want, (got - want, want - got)
-    # the table holds exactly the fresh fingerprints of the corpus
-    art = {tuple(r) for r in spark.table(tbl).collect()}
-    fresh = {tuple(r) for r in simhash128(corpus).collect()}
-    assert art == fresh
-    # and the cross-day family actually chained through the artifact
-    final = {r["node"]: r["component"] for r in labels.collect()}
-    assert final[101] == final[200] == final[301]
-    assert final[100] == final[2] and final[300] == final[7]
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
 def test_roll_forward_signatures_rejects_schema_drift(spark, tmp_path):
     """A near-miss schema (renamed column, narrowed type) must be
     rejected, not silently appended into a mixed-schema artifact."""
@@ -3215,158 +2938,6 @@ def test_compact_signature_artifact_mixed_layout_raises(spark, tmp_path):
     assert os.path.isdir(os.path.join(store, "cluster_id=0"))
 
 
-def test_compact_bucketed_artifact(spark, tmp_path):
-    """r11 (r10 VERDICT #4): automated file-count maintenance for the
-    BUCKETED signature artifact — after daily bucketed appends the
-    table holds up to n_buckets files per append; compaction must land
-    exactly one file per bucket, preserve rows, keep the table's
-    location/spec, and keep the layout's whole point: the id-equi join
-    still reads the bucketed scan with NO artifact-side Exchange."""
-    import contextlib
-    import glob
-    import io
-    import os
-    import re
-
-    from vectorsearch_scylla_spark.operators.dedup import (
-        compact_bucketed_artifact,
-        roll_forward_signatures_bucketed,
-        simhash128,
-    )
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    tbl = "vss_test_bkt_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = str(tmp_path / "bkt_compact_tbl")
-    n_buckets = 4
-    roll_forward_signatures_bucketed(
-        simhash128(mk([(i, f"bucketed doc {i} payload {i * 37}") for i in range(8)])),
-        tbl,
-        n_buckets=n_buckets,
-        path=loc,
-    )
-    for day in (1, 2, 3):
-        roll_forward_signatures_bucketed(
-            simhash128(mk([(day * 100 + j, f"day {day} doc {j}") for j in range(3)])),
-            tbl,
-            n_buckets=n_buckets,
-        )
-    before = {tuple(r) for r in spark.table(tbl).collect()}
-    files_before = len(glob.glob(os.path.join(loc, "*.parquet")))
-    assert files_before > n_buckets  # the append debt is real
-
-    n_files = compact_bucketed_artifact(spark, tbl)
-    assert n_files == n_buckets  # exactly one file per bucket
-    assert len(glob.glob(os.path.join(loc, "*.parquet"))) == n_buckets
-    assert {tuple(r) for r in spark.table(tbl).collect()} == before
-    # no orphan staging table, no crash debris
-    assert not spark.catalog.tableExists(f"{tbl}__compact_staging")
-    assert not os.path.exists(loc + ".compact.staging")
-    assert not os.path.exists(loc + ".compact.old")
-
-    # the layout's raison d'être survives: id-equi join against the
-    # compacted table still plans ZERO artifact-side Exchange vs the
-    # plain-parquet copy's one (broadcast disabled so the fixture-scale
-    # planner cannot hide it)
-    pairs = mk([(100, ""), (3, "")]).select(F.col("doc_id").alias("id_a"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        def n_exchanges(artifact):
-            j = pairs.join(artifact.withColumnRenamed("doc_id", "id_a"), "id_a")
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                j.explain("formatted")
-            return len(re.findall(r"\(\d+\) Exchange", buf.getvalue()))
-
-        pq = str(tmp_path / "plain_copy")
-        spark.table(tbl).write.parquet(pq)
-        assert n_exchanges(spark.table(tbl)) == n_exchanges(
-            spark.read.parquet(pq)
-        ) - 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-
-    # the compacted table still serves appends
-    roll_forward_signatures_bucketed(
-        simhash128(mk([(999, "post compact append")])), tbl, n_buckets=n_buckets
-    )
-    assert 999 in {r["doc_id"] for r in spark.table(tbl).collect()}
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    # plain parquet artifact (no bucket spec) is rejected with guidance
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_plain")
-    mk([(1, "x")]).write.option(
-        "path", str(tmp_path / "plain_tbl")
-    ).saveAsTable(f"{tbl}_plain")
-    with pytest.raises(ValueError, match="no bucket spec"):
-        compact_bucketed_artifact(spark, f"{tbl}_plain")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_plain")
-
-
-def test_compact_bucketed_artifact_crash_recovery(spark, tmp_path):
-    """r11: every crash window of the bucketed compactor's
-    write-staging → two-rename → drop-staging sequence heals on the
-    next entry, exactly like the parquet twin's windows — plus this
-    twin's extra orphan, the staging TABLE metadata."""
-    import glob
-    import os
-    import shutil
-
-    from vectorsearch_scylla_spark.operators.dedup import (
-        compact_bucketed_artifact,
-    )
-
-    def mk_table(name, loc):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.createDataFrame(
-            [(i, i * 7) for i in range(10)], "doc_id long, sig long"
-        ).repartition(3).write.bucketBy(2, "doc_id").sortBy("doc_id").option(
-            "path", loc
-        ).saveAsTable(name)
-        return {tuple(r) for r in spark.table(name).collect()}
-
-    # window 1: crash mid-staging-write — stale staging dir AND an
-    # orphan staging-table metadata entry exist
-    tbl, loc = "vss_bktcr_1", str(tmp_path / "t1")
-    rows = mk_table(tbl, loc)
-    os.makedirs(loc + ".compact.staging")
-    with open(loc + ".compact.staging/part-junk.parquet", "w") as f:
-        f.write("torn")
-    spark.createDataFrame([(0, 0)], "doc_id long, sig long").write.option(
-        "path", str(tmp_path / "orphan_loc")
-    ).saveAsTable(f"{tbl}__compact_staging")
-    n = compact_bucketed_artifact(spark, tbl)
-    assert n == 2
-    assert {tuple(r) for r in spark.table(tbl).collect()} == rows
-    assert not spark.catalog.tableExists(f"{tbl}__compact_staging")
-    assert not os.path.exists(loc + ".compact.staging")
-
-    # window 2: crash between the two renames — live dir missing, full
-    # artifact stranded at .compact.old
-    tbl, loc = "vss_bktcr_2", str(tmp_path / "t2")
-    rows = mk_table(tbl, loc)
-    os.rename(loc, loc + ".compact.old")
-    n = compact_bucketed_artifact(spark, tbl)
-    assert n == 2
-    assert {tuple(r) for r in spark.table(tbl).collect()} == rows
-
-    # window 3: crash after promote, before cleanup — live dir already
-    # compacted, .compact.old left behind
-    tbl, loc = "vss_bktcr_3", str(tmp_path / "t3")
-    rows = mk_table(tbl, loc)
-    shutil.copytree(loc, loc + ".compact.old")
-    n = compact_bucketed_artifact(spark, tbl)
-    assert n == 2
-    assert not os.path.exists(loc + ".compact.old")
-    assert {tuple(r) for r in spark.table(tbl).collect()} == rows
-    assert len(glob.glob(os.path.join(loc, "*.parquet"))) == 2
-    for t in ("vss_bktcr_1", "vss_bktcr_2", "vss_bktcr_3"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_maybe_retrain_fires_on_drift_and_noops_in_budget(spark, sf_dir):
     """r11 (r10 VERDICT #5): the executable IVF retrain trigger — the
     escalation past split+nprobe the drift week left as prose.  A
@@ -3462,94 +3033,6 @@ def test_maybe_retrain_fires_on_drift_and_noops_in_budget(spark, sf_dir):
     assert rep2["recall_before"] == 1.0
     assert rep2["recall_after"] is None
     assert same_cents is cents and same_members is store
-
-
-def test_retune_nprobe_finds_knee_and_signals_escalation(spark, sf_dir):
-    """r11: the probe-budget knee finder pairing every granularity
-    change the maintenance ladder makes (split re-fines, retrain
-    re-tiles — BENCH_SCALE.md measured nprobe 4->8 and 8->16 after
-    them).  On a drifted store the knee must be the SMALLEST grid
-    point meeting budget, the report must carry every evaluated point
-    (ascending, early-stopped), and an unreachable budget must return
-    None — the caller's escalation signal."""
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters_np,
-        ivf_recall_audit,
-        lloyd_kmeans,
-        retune_nprobe,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = emb.filter(F.col("vec_id") % 10 != 7)
-    k = max(8, int(round(base.count() ** 0.5)))
-    cents = lloyd_kmeans(base, k=k, iters=2, kernel="numpy", train_rows=256 * k)
-    store = assign_clusters_np(base, cents, dtype="float32").select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("corpus_vec"),
-        "cluster_id",
-    )
-    inc = emb.filter(F.col("vec_id") % 20 == 3).select(
-        (F.col("vec_id") + 1_000_000_000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) -> CASE WHEN i < 8 "
-            "THEN x + 0.45 ELSE x END)"
-        ).alias("embedding"),
-    )
-    store = store.unionByName(
-        assign_clusters_np(inc, cents, dtype="float32").select(
-            F.col("vec_id").alias("corpus_id"),
-            F.col("embedding").alias("corpus_vec"),
-            "cluster_id",
-        )
-    ).localCheckpoint()
-    queries = store.filter(F.col("corpus_id") >= 1_000_000_000).select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-
-    # per-point recalls at the fixed audit sample are deterministic and
-    # monotone in nprobe (more probed lists can only add candidates) —
-    # establish the landscape once with the single-point audit
-    grid = (1, 2, 4, 8, len(cents))
-    landscape = {
-        n: ivf_recall_audit(
-            queries, cents, store, k=5, nprobe=n, max_queries=64
-        )[0]
-        for n in grid
-    }
-    assert landscape[len(cents)] == 1.0  # probing everything is exact
-    assert all(
-        landscape[a] <= landscape[b] + 1e-12
-        for a, b in zip(grid, grid[1:])
-    )
-
-    # pick a budget strictly between two landscape points so the knee
-    # is unambiguous: the first grid point at-or-above it
-    lo, hi = landscape[1], 1.0
-    budget = (lo + hi) / 2 if lo < 1.0 else 0.999
-    expect = next(n for n in grid if landscape[n] >= budget)
-    knee, rep = retune_nprobe(
-        queries, cents, store,
-        recall_budget=budget, nprobe_grid=grid, k=5, max_queries=64,
-    )
-    assert knee == expect
-    assert rep["n_audit_pairs"] > 0
-    # ascending walk, early-stopped at the knee; every evaluated point
-    # agrees exactly with the single-point audit (same md5 sample)
-    assert list(rep["recall_at"]) == [n for n in grid if n <= knee]
-    for n, r in rep["recall_at"].items():
-        assert r == landscape[n]
-
-    # unreachable budget on a truncated grid -> None, all points in
-    # the report (the escalation signal maybe_retrain answers)
-    knee2, rep2 = retune_nprobe(
-        queries, cents, store,
-        recall_budget=1.01, nprobe_grid=(1, 2), k=5, max_queries=64,
-    )
-    assert knee2 is None
-    assert list(rep2["recall_at"]) == [1, 2]
 
 
 def test_ivf_maintenance_step_empty_grid_fails_before_any_spend():
@@ -3680,1270 +3163,36 @@ def test_ivf_maintenance_step_walks_ladder_cheap_to_expensive(spark, sf_dir):
     assert rep4["k_after"] == rep3["k_after"]  # same deterministic retrain
 
 
-def test_maybe_retrain_pq_fires_on_drift_and_noops_in_budget(spark, sf_dir):
-    """r11: the codebook-staleness trigger for the quantized family —
-    the PQ twin of maybe_retrain.  On a cohort corpus (5 near-copies
-    per base vector: wide neighbor margins, the regime PQ is FOR),
-    codebooks trained on the base distribution mis-score an increment
-    whose cohorts each drift along their own shared axis — the twins'
-    codes collapse onto the base codeword, ADC can no longer separate
-    drifted twins from undrifted copies, and sampled recall drops.
-    Retraining the same codebook SHAPE on the current corpus recovers
-    scoring quality (PQ staleness decays and recovers SMOOTHLY — no
-    cliff, unlike the IVF mis-route).  An in-budget audit must be a
-    pure no-op.  All recalls are deterministic (md5 sampling,
-    md5-seeded training), so the crossings asserted here are exact."""
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        maybe_retrain_pq,
-        pq_recall_audit,
-        train_pq,
-    )
-
-    m, ksub, dsub = 8, 32, 8
-    emb0 = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").cast("array<double>").alias("corpus_vec"),
-    )
-    reps = spark.range(5).select(F.col("id").cast("int").alias("rep"))
-    emb = emb0.crossJoin(F.broadcast(reps)).select(
-        (F.col("corpus_id") + F.col("rep").cast("long") * 10_000).alias(
-            "corpus_id"
-        ),
-        F.expr(
-            "transform(corpus_vec, (x, i) -> CASE WHEN i = pmod(rep, 64) "
-            "THEN x + 0.01 * rep ELSE x END)"
-        ).alias("corpus_vec"),
-    )
-    base = emb.filter(F.col("corpus_id") % 10 != 7).localCheckpoint()
-    books = train_pq(
-        base, m=m, ksub=ksub, iters=2, dsub=dsub,
-        id_col="corpus_id", vec_col="corpus_vec", kernel="numpy",
-    )
-    base_codes = encode_pq_np(
-        base, books, dsub=dsub, vec_col="corpus_vec"
-    ).drop("corpus_vec").localCheckpoint()
-
-    self_queries = base.limit(100).select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-    healthy, d0 = pq_recall_audit(
-        self_queries, base_codes, books, base,
-        k=5, dsub=dsub, max_queries=64,
-    )
-    assert d0 > 0 and healthy is not None and healthy >= 0.6
-    # audit is deterministic (same md5 sample both calls)
-    again, d1 = pq_recall_audit(
-        self_queries, base_codes, books, base,
-        k=5, dsub=dsub, max_queries=64,
-    )
-    assert (healthy, d0) == (again, d1)
-
-    # in-budget at exactly the healthy level: pure no-op
-    b2, c2, rep2 = maybe_retrain_pq(
-        base, base_codes, books, self_queries,
-        recall_budget=healthy, k=5, dsub=dsub, max_audit_queries=64,
-    )
-    assert rep2["retrained"] is False and rep2["recall_after"] is None
-    assert b2 is books and c2 is base_codes
-    assert rep2["recall_before"] == healthy
-
-    # drifted increment: every cohort (same base id mod 10k) shifts
-    # +0.5 along ITS OWN hashed axis — shared within the cohort, so
-    # the twins' stale codes collapse onto the base codeword and ADC
-    # stops separating them from the undrifted copies; encoded with
-    # the STALE books, audited by its own vectors (the watch a
-    # deployment runs on the newest increment)
-    inc = emb.filter(F.col("corpus_id") % 20 == 3).select(
-        (F.col("corpus_id") + 1_000_000_000).alias("corpus_id"),
-        F.expr(
-            "transform(corpus_vec, (x, i) -> CASE WHEN i = "
-            "pmod(xxhash64(pmod(corpus_id, 10000)), 64) "
-            "THEN x + 0.5 ELSE x END)"
-        ).alias("corpus_vec"),
-    )
-    grown = base.unionByName(inc).localCheckpoint()
-    grown_codes = base_codes.unionByName(
-        encode_pq_np(inc, books, dsub=dsub, vec_col="corpus_vec").drop(
-            "corpus_vec"
-        )
-    ).localCheckpoint()
-    drift_queries = inc.select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-    stale, _ = pq_recall_audit(
-        drift_queries, grown_codes, books, grown,
-        k=5, dsub=dsub, max_queries=64,
-    )
-    assert stale is not None and stale < healthy - 0.05
-
-    b3, c3, rep3 = maybe_retrain_pq(
-        grown, grown_codes, books, drift_queries,
-        recall_budget=min(healthy, stale + 0.05),
-        k=5, dsub=dsub, max_audit_queries=64,
-    )
-    assert rep3["retrained"] is True
-    assert rep3["recall_before"] == stale
-    # shape preserved: m subspaces, <= ksub codewords each (k-means may
-    # drop empty clusters), every corpus row re-encoded exactly once
-    assert len(b3) == m and all(len(b) <= ksub for b in b3)
-    assert c3.count() == grown.count()
-    assert {f"code{s}" for s in range(m)} | {"corpus_id", "rnorm"} == set(
-        c3.columns
-    )
-    # refreshed codewords score the drifted neighborhood better
-    assert rep3["recall_after"] is not None
-    assert rep3["recall_after"] > rep3["recall_before"]
-
-    # rollback rail (the capacity-starved lesson from the scale
-    # study): an unreachable budget fires the retrain but the
-    # post-audit misses, so with rollback_below_budget the originals
-    # come back untouched and the report carries the rejected
-    # measurement — the escalate-to-composition signal
-    b5, c5, rep5 = maybe_retrain_pq(
-        grown, grown_codes, books, drift_queries,
-        recall_budget=1.01, k=5, dsub=dsub, max_audit_queries=64,
-        rollback_below_budget=True,
-    )
-    assert rep5["rolled_back"] is True and rep5["retrained"] is False
-    assert b5 is books and c5 is grown_codes
-    assert rep5["recall_after"] is not None  # the rejected measurement
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="audit_after"):
-        maybe_retrain_pq(
-            grown, grown_codes, books, drift_queries,
-            recall_budget=0.5, audit_after=False,
-            rollback_below_budget=True,
-        )
-
-    # capacity is the INTENDED ksub, not the surviving codeword count
-    # (r11 ADVICE): hand in books that lost codewords to empty-cluster
-    # drops — an explicit ksub must restore full capacity on retrain
-    # instead of ratcheting down to the survivors' max
-    starved = [b[: ksub - 2] for b in books]
-    # caller-supplied recall_before: grown_codes were encoded against
-    # the FULL books, so auditing them against the starved list would
-    # index past its codewords — the fast path skips that audit, which
-    # is also how the maintenance ladder invokes this trigger
-    b6, _, rep6 = maybe_retrain_pq(
-        grown, grown_codes, starved, drift_queries,
-        recall_budget=0.5, recall_before=0.0, k=5, dsub=dsub,
-        max_audit_queries=64, ksub=ksub, audit_after=False,
-    )
-    assert rep6["ksub"] == ksub and rep6["retrained"] is True
-    assert rep6["n_audit_pairs"] is None  # unknown, not a -1 sentinel
-    assert all(len(b) <= ksub and len(b) > 0 for b in b6)
-    # and the default (no ksub) keeps the current max — the
-    # backward-compatible behavior
-    _, _, rep7 = maybe_retrain_pq(
-        grown, grown_codes, starved, drift_queries,
-        recall_budget=0.0, recall_before=1.0, k=5, dsub=dsub,
-        max_audit_queries=64,
-    )
-    assert rep7["ksub"] == ksub - 2 and rep7["retrained"] is False
-    # empty books fail loudly, not with a bare max() error
-    with _pytest.raises(ValueError, match="books is empty"):
-        maybe_retrain_pq(
-            grown, grown_codes, [], drift_queries,
-            recall_budget=0.5, k=5, dsub=dsub,
-        )
-
-
-def test_pq_recall_audit_tie_aware_on_duplicate_heavy_corpus(spark):
-    """r12 (the pqstream study's calibration finding, mechanized): on
-    a corpus of exact-duplicate groups, the id-set recall punishes ADC
-    for returning a different-but-equally-near duplicate — every group
-    member ties the exact kth score, the exact side retains all
-    boundary ties, and tie-blind recall reads ~k/(group-1) no matter
-    how healthy the codebooks are.  tie_aware=True scores a returned
-    neighbor by its TRUE cosine against the query's exact kth score,
-    so the same healthy state reads 1.0."""
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        pq_recall_audit,
-        train_pq,
-    )
-
-    # each group: 7 members at pairwise-EQUAL true cosine (cos²θ —
-    # every member is center + sinθ along its OWN orthogonal axis), so
-    # the exact side id-breaks a 6-way tie while ADC orders the same
-    # tie by QUANTIZED score (the members' distinct axes quantize to
-    # different codewords) — the two deterministic tie-breaks diverge,
-    # which is exactly what happens at scale between the float32
-    # blocked ground truth and the quantized ADC scan
-    import math
-
-    dim, m, ksub, dsub, groups, reps = 16, 2, 8, 8, 2, 7
-    ct, st = math.cos(0.45), math.sin(0.45)
-    rows = []
-    for g in range(groups):
-        axes = [a for a in range(dim) if a != g]
-        for i in range(reps):
-            v = [0.0] * dim
-            v[g] = ct
-            v[axes[(i * 3) % len(axes)]] += st
-            rows.append((g * 100 + i, v))
-    corpus = spark.createDataFrame(
-        rows, "corpus_id long, corpus_vec array<double>"
-    )
-    books = train_pq(
-        corpus, m=m, ksub=ksub, iters=2, dsub=dsub,
-        id_col="corpus_id", vec_col="corpus_vec", kernel="numpy",
-    )
-    codes = encode_pq_np(corpus, books, dsub=dsub, vec_col="corpus_vec").drop(
-        "corpus_vec"
-    )
-    queries = corpus.select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-
-    blind, blind_pairs = pq_recall_audit(
-        queries, codes, books, corpus, k=3, dsub=dsub, max_queries=16
-    )
-    aware, aware_pairs = pq_recall_audit(
-        queries, codes, books, corpus, k=3, dsub=dsub, max_queries=16,
-        tie_aware=True,
-    )
-    # tie-blind: exact and ADC resolve the 6-way true-cosine tie
-    # differently (id vs quantized score), so the id-set intersection
-    # reads well below 1.0 on a perfectly healthy state; tie-aware:
-    # every returned member reaches the kth true score -> exactly 1.0
-    assert blind is not None and blind < 0.9
-    assert aware == 1.0
-    n_sample = groups * reps  # 14 < max_queries: the whole corpus
-    assert aware_pairs == n_sample * 3 and blind_pairs >= aware_pairs
-
-    # tie_aware threads through BOTH of maybe_retrain_pq's audits: the
-    # same healthy state reads 1.0 tie-aware, so any budget <= 1.0 is
-    # a pure no-op — where the tie-blind metric would have mis-fired
-    # the retrain on every maintenance day
-    from vectorsearch_scylla_spark.operators.pq import maybe_retrain_pq
-
-    b, c, rep = maybe_retrain_pq(
-        corpus, codes, books, queries,
-        recall_budget=0.99, k=3, dsub=dsub, max_audit_queries=16,
-        tie_aware=True,
-    )
-    assert rep["recall_before"] == 1.0 and rep["retrained"] is False
-    assert b is books and c is codes
-
-
-
-def test_audio_pcm_features_exact_on_synthetic_signals(spark):
-    """r13: the raw-PCM audio kernel computes REAL windowed DSP
-    features with no codec dependency — verify exact values on
-    constructed signals: full-scale square wave (known RMS, known ZCR,
-    fully clipped), silence (silence_frac 1.0), a half-scale constant
-    (known RMS, zero ZCR), sub-window and odd-length blobs, and the
-    per-window exploded shape."""
-    import numpy as np
-
-    from vectorsearch_scylla_spark.multimodal.media import (
-        audio_pcm_features,
-    )
-
-    win, hop = 8, 4
-    # square wave period 2: +FS, -FS, ... -> every adjacent pair
-    # crosses zero; int16 full scale on both rails -> clip_frac 1.0
-    square = np.tile(
-        np.array([32767, -32768], dtype="<i2"), 16
-    )  # 32 samples
-    silence = np.zeros(32, dtype="<i2")
-    half = np.full(32, 16384, dtype="<i2")  # ~0.5 FS constant, no ZC
-    short = np.array([1, 2, 3], dtype="<i2")  # < one window
-    rows = [
-        (1, "audio", bytearray(square.tobytes()), None),
-        (2, "audio", bytearray(silence.tobytes()), None),
-        (3, "audio", bytearray(half.tobytes()), None),
-        (4, "audio", bytearray(short.tobytes()), None),
-        (5, "audio", bytearray(square.tobytes()[:17]), None),  # odd tail
-        (6, "audio", None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {
-        r["asset_id"]: r.asDict()
-        for r in audio_pcm_features(
-            df, window_samples=win, hop_samples=hop
-        ).collect()
-    }
-    n_w = 1 + (32 - win) // hop  # 7 windows over 32 samples
-
-    sq = got[1]
-    assert sq["n_samples"] == 32 and sq["n_windows"] == n_w
-    # RMS of a +FS/-FS square: sqrt(mean of 1 and (32768/32767)^2)
-    exp_rms = float(np.sqrt((1.0 + (32768.0 / 32767.0) ** 2) / 2.0))
-    assert sq["mean_rms"] == pytest.approx(exp_rms, rel=1e-9)
-    assert sq["max_rms"] == pytest.approx(exp_rms, rel=1e-9)
-    assert sq["mean_zcr"] == pytest.approx(1.0)  # every adjacent pair flips
-    assert sq["silence_frac"] == 0.0 and sq["clip_frac"] == 1.0
-
-    si = got[2]
-    assert si["mean_rms"] == 0.0 and si["silence_frac"] == 1.0
-    assert si["mean_zcr"] == 0.0 and si["clip_frac"] == 0.0
-
-    hf = got[3]
-    assert hf["mean_rms"] == pytest.approx(16384.0 / 32767.0, rel=1e-9)
-    assert hf["mean_zcr"] == 0.0 and hf["clip_frac"] == 0.0
-
-    sh = got[4]  # shorter than one window: no windows, silent by defn
-    assert sh["n_samples"] == 3 and sh["n_windows"] == 0
-    assert sh["silence_frac"] == 1.0 and sh["mean_rms"] == 0.0
-
-    odd = got[5]  # 17 bytes -> 8 full samples -> one window exactly
-    assert odd["n_samples"] == 8 and odd["n_windows"] == 1
-    assert odd["clip_frac"] == 1.0
-
-    nil = got[6]
-    assert nil["n_samples"] == 0 and nil["n_windows"] == 0
-
-    # dtype-derived rails: int32 PCM at its own full scale must read
-    # the same normalized features as the int16 twin (rails from
-    # np.iinfo, not hardcoded 32767)
-    sq32 = np.tile(
-        np.array([2147483647, -2147483648], dtype="<i4"), 16
-    )
-    df32 = spark.createDataFrame(
-        [(7, "audio", bytearray(sq32.tobytes()), None)],
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    g32 = audio_pcm_features(
-        df32, window_samples=win, hop_samples=hop, pcm_dtype="<i4"
-    ).collect()[0]
-    exp32 = float(
-        np.sqrt((1.0 + (2147483648.0 / 2147483647.0) ** 2) / 2.0)
-    )
-    assert g32["mean_rms"] == pytest.approx(exp32, rel=1e-9)
-    assert g32["mean_zcr"] == pytest.approx(1.0)
-    assert g32["clip_frac"] == 1.0
-
-    # unsigned / float PCM is refused loudly (no sign bit -> ZCR would
-    # silently read 0; no integer rails -> clip_frac meaningless)
-    with pytest.raises(ValueError, match="SIGNED integer"):
-        audio_pcm_features(df, pcm_dtype="u1")
-
-    # per-window exploded shape agrees with the summary
-    per_w = audio_pcm_features(
-        df.filter("asset_id = 1"), window_samples=win, hop_samples=hop,
-        per_window=True,
-    ).collect()
-    assert [r["win_idx"] for r in sorted(per_w, key=lambda r: r["win_idx"])] == list(range(n_w))
-    assert all(r["rms"] == pytest.approx(exp_rms, rel=1e-9) for r in per_w)
-    assert all(r["zcr"] == pytest.approx(1.0) for r in per_w)
-
-
-def test_sniff_image_meta_parses_real_headers(spark):
-    """r13: codec-free image metadata sniffing — handcraft minimal but
-    SPEC-CORRECT container headers for PNG/GIF/BMP/JPEG (including a
-    JPEG whose SOF0 sits behind APP0+DQT+DHT segments and a restart
-    marker, the layout real camera files have) and verify exact
-    format/width/height; malformed and truncated bytes classify as
-    unknown/NULL instead of throwing."""
-    import struct
-
-    from vectorsearch_scylla_spark.multimodal.media import sniff_image_meta
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13) + b"IHDR"
-        + struct.pack(">II", 640, 480) + b"\x08\x02\x00\x00\x00"
-    )
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00\x00\x00"
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 100, 0, 0, 54)
-        + struct.pack("<I", 40) + struct.pack("<ii", 256, -128)
-    )  # negative height = top-down rows; sniffer reports 128
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    jpeg = (
-        b"\xff\xd8"
-        + seg(0xE0, b"JFIF\x00" + b"\x00" * 9)   # APP0
-        + seg(0xDB, b"\x00" + b"\x01" * 64)       # DQT
-        + seg(0xC4, b"\x00" + b"\x01" * 16)       # DHT (a 0xCn NON-frame)
-        + b"\xff\xd0"                              # RST0 standalone
-        + seg(0xC0, b"\x08" + struct.pack(">HH", 1080, 1920) + b"\x03")
-    )
-    rows = [
-        (1, "image", bytearray(png), None),
-        (2, "image", bytearray(gif), None),
-        (3, "image", bytearray(bmp), None),
-        (4, "image", bytearray(jpeg), None),
-        (5, "image", bytearray(b"\x89PNG\r\n\x1a\nxx"), None),  # truncated
-        (6, "image", bytearray(b"not an image at all"), None),
-        (7, "image", None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {
-        r["asset_id"]: (r["format"], r["width"], r["height"])
-        for r in sniff_image_meta(df).collect()
-    }
-    assert got[1] == ("png", 640, 480)
-    assert got[2] == ("gif", 320, 200)
-    assert got[3] == ("bmp", 256, 128)
-    assert got[4] == ("jpeg", 1920, 1080)
-    assert got[5] == ("png", None, None)
-    assert got[6] == ("unknown", None, None)
-    assert got[7] == ("unknown", None, None)
-
-
-def test_sniff_av_container_wav_roundtrips_into_pcm_features(spark):
-    """r13: container sniffing + the WAV fmt-chunk parse make the audio
-    path codec-free end to end — build a spec-correct 16-bit PCM WAV
-    around a known square wave, sniff it, slice the data payload at
-    the sniffed offset, and verify audio_pcm_features reads the SAME
-    features as on the raw PCM; magic-byte detection pinned for
-    mp4/webm/mkv/ogg/flac/mp3/avi and unknown/truncated bytes."""
-    import struct
-
-    import numpy as np
-
-    from vectorsearch_scylla_spark.multimodal.media import (
-        audio_pcm_features,
-        sniff_av_container,
-    )
-
-    pcm = np.tile(np.array([32767, -32768], dtype="<i2"), 16)
-    data = pcm.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    rows = [
-        (1, "audio", bytearray(wav), None),
-        (2, "video", bytearray(b"\x00\x00\x00\x18ftypisom" + b"\x00" * 8), None),
-        (3, "video", bytearray(b"\x1a\x45\xdf\xa3" + b"...webm..."), None),
-        (4, "video", bytearray(b"\x1a\x45\xdf\xa3" + b"..matroska.."), None),
-        (5, "audio", bytearray(b"OggS" + b"\x00" * 8), None),
-        (6, "audio", bytearray(b"fLaC" + b"\x00" * 8), None),
-        (7, "audio", bytearray(b"ID3\x04\x00" + b"\x00" * 8), None),
-        (8, "audio", bytearray(b"\xff\xfb\x90\x00" + b"\x00" * 8), None),
-        (9, "video", bytearray(b"RIFF\x24\x00\x00\x00AVI " + b"\x00" * 8), None),
-        (10, "blob", bytearray(b"zz"), None),
-        (11, "blob", None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in sniff_av_container(df).collect()}
-
-    w = got[1]
-    assert w["container"] == "wav" and w["detail"] == "pcm"
-    assert (w["channels"], w["sample_rate"], w["bits_per_sample"]) == (1, 16000, 16)
-    assert w["data_len"] == len(data)
-    # slice the payload at the sniffed offset: features must equal the
-    # raw-PCM reading exactly
-    payload = bytes(wav)[w["data_offset"] : w["data_offset"] + w["data_len"]]
-    assert payload == data
-    both = spark.createDataFrame(
-        [(1, "audio", bytearray(payload), None), (2, "audio", bytearray(data), None)],
-        "asset_id long, kind string, content binary, meta map<string,string>",
-    )
-    f = {r["asset_id"]: r.asDict() for r in audio_pcm_features(
-        both, window_samples=8, hop_samples=4
-    ).collect()}
-    assert f[1] == {**f[2], "asset_id": 1}
-
-    assert (got[2]["container"], got[2]["detail"]) == ("mp4", "isom")
-    assert (got[3]["container"], got[3]["detail"]) == ("webm", "webm")
-    assert (got[4]["container"], got[4]["detail"]) == ("mkv", "matroska")
-    assert got[5]["container"] == "ogg"
-    assert got[6]["container"] == "flac"
-    assert (got[7]["container"], got[7]["detail"]) == ("mp3", "id3")
-    assert (got[8]["container"], got[8]["detail"]) == ("mp3", "framesync")
-    assert got[9]["container"] == "avi"
-    assert got[10]["container"] == "unknown"
-    assert got[11]["container"] == "unknown"
-
-
-def test_audio_g711_and_pcm24_roundtrip_through_sniff(spark):
-    """r14 (VERDICT task 5): the codec-free audio path widens to every
-    WAV ``fmt`` code that needs no external library — G.711 a-law
-    (fmt 6), G.711 µ-law (fmt 7), and 24-bit PCM (fmt 1 / bits 24).
-    Each is built as a spec-correct WAV around KNOWN sample codes,
-    sniffed, sliced at the sniffed data offset, and decoded by
-    ``audio_pcm_features`` with the encoding the sniff names — exact
-    pinned feature values throughout.  The expansion tables are also
-    spot-checked against the scalar ITU-T G.711 formulas."""
-    import struct
-
-    import numpy as np
-
-    from vectorsearch_scylla_spark.multimodal.media import (
-        _g711_alaw_table,
-        _g711_mulaw_table,
-        audio_pcm_features,
-        sniff_av_container,
-    )
-
-    # table spot checks (scalar G.711 reference points)
-    al = _g711_alaw_table()
-    assert al[0xAA] == 32256 and al[0x2A] == -32256  # companding peaks
-    assert al[0xD5] == 8 and al[0x55] == -8  # smallest magnitudes
-    mu = _g711_mulaw_table()
-    assert mu[0x80] == 32124 and mu[0x00] == -32124
-    assert mu[0xFF] == 0 and mu[0x7F] == 0  # µ-law's two zeros
-
-    def wav(fmt_code, ch, sr, bits, payload):
-        balign = ch * max(1, bits // 8)
-        fmt = struct.pack("<HHIIHH", fmt_code, ch, sr, sr * balign, balign, bits)
-        return (
-            b"RIFF" + struct.pack("<I", 36 + len(payload)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(payload)) + payload
-        )
-
-    # alternating companding-peak codes: |x| = 1.0 at every sample,
-    # sign flips every sample -> rms 1.0, zcr 1.0, clip_frac 1.0
-    alaw_pcm = bytes([0xAA, 0x2A] * 16)
-    mulaw_pcm = bytes([0x80, 0x00] * 16)
-    # 24-bit: +2^23-1 then -(2^23-1); only the + rail equals clip_hi
-    # (clip_lo is -2^23) -> clip_frac exactly 0.5
-    pcm24 = (b"\xff\xff\x7f" + b"\x01\x00\x80") * 16
-    rows = [
-        (1, "audio", bytearray(wav(6, 1, 8000, 8, alaw_pcm)), None),
-        (2, "audio", bytearray(wav(7, 1, 8000, 8, mulaw_pcm)), None),
-        (3, "audio", bytearray(wav(1, 1, 48000, 24, pcm24)), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    sniffed = {r["asset_id"]: r.asDict() for r in sniff_av_container(df).collect()}
-    assert sniffed[1]["detail"] == "alaw" and sniffed[1]["bits_per_sample"] == 8
-    assert sniffed[2]["detail"] == "mulaw"
-    assert sniffed[3]["detail"] == "pcm" and sniffed[3]["bits_per_sample"] == 24
-
-    # slice each payload at the sniffed offset and decode with the
-    # encoding the sniff names
-    enc_by_detail = {("alaw", 8): "alaw", ("mulaw", 8): "mulaw", ("pcm", 24): "pcm24"}
-    payloads = {
-        aid: bytes(rows[aid - 1][2])[
-            s["data_offset"] : s["data_offset"] + s["data_len"]
-        ]
-        for aid, s in sniffed.items()
-    }
-    assert payloads == {1: alaw_pcm, 2: mulaw_pcm, 3: pcm24}
-    feats = {}
-    for aid, s in sniffed.items():
-        enc = enc_by_detail[(s["detail"], s["bits_per_sample"])]
-        one = spark.createDataFrame(
-            [(aid, "audio", bytearray(payloads[aid]), None)],
-            "asset_id long, kind string, content binary, "
-            "meta map<string,string>",
-        )
-        feats[aid] = audio_pcm_features(
-            one, window_samples=8, hop_samples=4, encoding=enc
-        ).collect()[0].asDict()
-
-    n_win = 7  # 1 + (32 - 8) // 4
-    for aid in (1, 2):
-        f = feats[aid]
-        assert f["n_samples"] == 32 and f["n_windows"] == n_win
-        assert f["mean_rms"] == 1.0 and f["max_rms"] == 1.0
-        assert f["mean_zcr"] == 1.0
-        assert f["silence_frac"] == 0.0 and f["clip_frac"] == 1.0
-    f = feats[3]
-    assert f["n_samples"] == 32 and f["n_windows"] == n_win
-    assert f["mean_rms"] == 1.0 and f["mean_zcr"] == 1.0
-    assert f["clip_frac"] == 0.5  # only the + rail sits at clip_hi
-
-    # unknown encoding refuses loudly
-    with pytest.raises(ValueError, match="unknown encoding"):
-        audio_pcm_features(df, encoding="opus")
-
-
-def test_sniff_hardening_malformed_jpeg_and_framesync(spark):
-    """r14 (r13 ADVICE): (a) the JPEG walker STOPS at SOS/EOI — a
-    malformed stream (SOS before any SOF, or trailing garbage after
-    EOI containing a fake 0xC0 byte) reports NULL dimensions instead
-    of entropy-coded garbage; stuffing (FF 00) and fill (FF FF) bytes
-    are stepped over, and a valid SOF after restart markers still
-    parses.  (b) the mp3 framesync check validates the MPEG
-    version/layer/bitrate/samplerate fields — sync-only blobs whose
-    fields hit reserved/invalid encodings classify as unknown."""
-    import struct
-
-    from vectorsearch_scylla_spark.multimodal.media import (
-        sniff_av_container,
-        sniff_image_meta,
-    )
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
-
-    sof = seg(0xC0, b"\x08" + struct.pack(">HH", 31, 47) + b"\x03")
-    # SOS before any SOF; scan data contains a fake 0xFF 0xC0 pair
-    # whose "height/width" would read garbage if the walk continued
-    sos_first = (
-        b"\xff\xd8" + seg(0xDA, b"\x01\x01\x00")
-        + b"\x12\xff\xc0\x00\x11\x08\x99\x99\x88\x88" + b"\xff\xd9"
-    )
-    # valid image, then trailing garbage AFTER EOI with a fake SOF
-    eoi_garbage = (
-        b"\xff\xd8" + seg(0xDB, b"\x00" * 5) + b"\xff\xd9"
-        + b"\xff\xc0\x00\x11\x08\x99\x99\x88\x88"
-    )
-    # stuffing + fill bytes before a real SOF, behind an RST marker
-    stuffed_ok = (
-        b"\xff\xd8" + b"\xff\x00" + b"\xff\xff" + b"\xff\xd0" + sof
-    )
-    rows = [
-        (1, "image", bytearray(sos_first), None),
-        (2, "image", bytearray(eoi_garbage), None),
-        (3, "image", bytearray(stuffed_ok), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in sniff_image_meta(df).collect()}
-    assert got[1] == {"asset_id": 1, "format": "jpeg", "width": None, "height": None}
-    assert got[2] == {"asset_id": 2, "format": "jpeg", "width": None, "height": None}
-    assert got[3] == {"asset_id": 3, "format": "jpeg", "width": 47, "height": 31}
-
-    av_rows = [
-        # valid MPEG1 Layer III header survives
-        (1, "audio", bytearray(b"\xff\xfb\x90\x00" + b"\x00" * 8), None),
-        # version bits 01 (reserved)
-        (2, "audio", bytearray(b"\xff\xeb\x90\x00" + b"\x00" * 8), None),
-        # layer bits 00 (reserved)
-        (3, "audio", bytearray(b"\xff\xf9\x90\x00" + b"\x00" * 8), None),
-        # bitrate index 1111 (invalid)
-        (4, "audio", bytearray(b"\xff\xfb\xf0\x00" + b"\x00" * 8), None),
-        # sample-rate bits 11 (reserved)
-        (5, "audio", bytearray(b"\xff\xfb\x9c\x00" + b"\x00" * 8), None),
-        # sync-only two-byte blob: too short to validate
-        (6, "audio", bytearray(b"\xff\xfb"), None),
-    ]
-    av = spark.createDataFrame(
-        av_rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got_av = {
-        r["asset_id"]: (r["container"], r["detail"])
-        for r in sniff_av_container(av).collect()
-    }
-    assert got_av[1] == ("mp3", "framesync")
-    for aid in (2, 3, 4, 5, 6):
-        assert got_av[aid] == ("unknown", None), (aid, got_av[aid])
-
-
 def test_retrain_report_contract_and_comparability():
-    """r14 (r13 VERDICT task 7): both index families' retrain triggers
-    emit ONE report contract (fired / rolled_back / budget /
-    audit_metric / metric_before / metric_after; legacy aliases in
-    sync), and check_reports_comparable refuses mixed-unit
-    comparisons mechanically — mixed audit_metric (a recall vs a
-    tie-tolerant precision) and mixed k (recall@5 vs recall@10)."""
-    import pytest as _pytest
+    """r14 (r13 VERDICT task 7): retrain reports carry ONE contract
+    (fired / rolled_back / budget / audit_metric / metric_before /
+    metric_after) with the legacy aliases born in sync, so reports from
+    different days and configurations read through one key map."""
+    from vectorsearch_scylla_spark.operators.report import retrain_report
 
-    from vectorsearch_scylla_spark.operators.report import (
-        check_reports_comparable,
-        retrain_report,
-    )
-
-    ivf_day = retrain_report(
+    fired_day = retrain_report(
         fired=True, budget=0.9, audit_metric="id_set",
         metric_before=0.4, metric_after=0.95,
         nprobe=4, k=5, k_before=2, k_after=3, n_audit_pairs=64,
     )
-    pq_day = retrain_report(
-        fired=False, budget=0.7, audit_metric="id_set",
-        metric_before=0.8, k=5, m=8, ksub=32, n_audit_pairs=64,
+    quiet_day = retrain_report(
+        fired=False, budget=0.45, audit_metric="tie_aware",
+        metric_before=0.47, k=10, n_audit_pairs=64,
     )
-    # aliases are born in sync
-    for r in (ivf_day, pq_day):
+    contract = {
+        "fired", "rolled_back", "budget", "audit_metric",
+        "metric_before", "metric_after",
+    }
+    for r in (fired_day, quiet_day):
+        assert contract <= set(r)
         assert r["fired"] == r["retrained"]
         assert r["budget"] == r["recall_budget"]
         assert r["metric_before"] == r["recall_before"]
         assert r["metric_after"] == r["recall_after"]
         assert r["rolled_back"] is False
-    # same metric, same k: one key map reads both families
-    check_reports_comparable([ivf_day, pq_day])
-
-    tie_day = retrain_report(
-        fired=False, budget=0.45, audit_metric="tie_aware",
-        metric_before=0.47, k=5, m=8, ksub=32, n_audit_pairs=64,
-    )
-    with _pytest.raises(ValueError, match="mixed audit_metric"):
-        check_reports_comparable([ivf_day, tie_day])
-    k10_day = retrain_report(
-        fired=False, budget=0.9, audit_metric="id_set",
-        metric_before=0.8, k=10, nprobe=4, n_audit_pairs=64,
-    )
-    with _pytest.raises(ValueError, match="mixed audit k"):
-        check_reports_comparable([ivf_day, k10_day])
+    assert fired_day["fired"] is True and quiet_day["fired"] is False
+    assert quiet_day["metric_after"] is None
+    # family diagnostics ride alongside the contract keys
+    assert (fired_day["nprobe"], fired_day["k_after"]) == (4, 3)
 
 
-def test_decode_image_codec_free_png_bmp_netpbm(spark):
-    """r14: pixel decode is REAL without any codec library for the
-    formats whose layout is arithmetic + stdlib — PNG (zlib inflate +
-    scanline unfiltering, all five filter types exercised), BMP
-    (uncompressed 24-bit bottom-up with row padding and 32-bit
-    top-down), and netpbm PGM/PPM (with header comments).  The test
-    FORWARD-filters known pixels with an independent oracle encoder,
-    wraps spec-correct containers, and asserts the decoded bytes equal
-    the source pixels exactly; nearest-neighbor resize and the
-    honestly-gated JPEG fallback (no PIL in this env) are pinned too."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from vectorsearch_scylla_spark.multimodal.media import decode_image
-
-    rng = np.random.default_rng(7)
-
-    def filt_rows(arr, filters):
-        h, w, ch = arr.shape
-        raw = b""
-        prev = np.zeros(w * ch, np.uint8)
-        for y, ft in zip(range(h), filters):
-            line = arr[y].reshape(-1)
-            if ft == 0:
-                filt = line.copy()
-            elif ft == 1:
-                left = np.concatenate([np.zeros(ch, np.uint8), line[:-ch]])
-                filt = line - left
-            elif ft == 2:
-                filt = line - prev
-            elif ft == 3:
-                left = np.concatenate([np.zeros(ch, np.uint8), line[:-ch]])
-                filt = line - (
-                    (left.astype(int) + prev.astype(int)) // 2
-                ).astype(np.uint8)
-            else:  # Paeth
-                filt = np.empty_like(line)
-                for i in range(len(line)):
-                    a = int(line[i - ch]) if i >= ch else 0
-                    b_ = int(prev[i])
-                    c = int(prev[i - ch]) if i >= ch else 0
-                    p = a + b_ - c
-                    pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
-                    pred = (
-                        a if (pa <= pb and pa <= pc)
-                        else (b_ if pb <= pc else c)
-                    )
-                    filt[i] = (int(line[i]) - pred) % 256
-            raw += bytes([ft]) + filt.tobytes()
-            prev = line
-        return raw
-
-    def png_bytes(arr, filters, ctype=None, extra_chunks=(), interlace=0,
-                  depth=8):
-        # arr's last axis is BYTES per pixel (bpp), not samples — for
-        # depth=16 pass big-endian byte pairs; PNG filters are
-        # byte-oriented so filt_rows needs no depth awareness
-        h, w, ch = arr.shape
-        if ctype is None:
-            ctype = {1: 0, 3: 2, 2: 4, 4: 6}[ch]
-        if interlace:
-            # Adam7: each pass is filtered as its own sub-image
-            raw = b""
-            for xs, ys, xstep, ystep in (
-                (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-            ):
-                sub = arr[ys::ystep, xs::xstep]
-                if sub.shape[0] and sub.shape[1]:
-                    raw += filt_rows(
-                        sub, [filters[i % len(filters)] for i in range(sub.shape[0])]
-                    )
-        else:
-            raw = filt_rows(arr, filters)
-        def chunk(cid, data):
-            return (
-                struct.pack(">I", len(data)) + cid + data
-                + struct.pack(">I", zlib.crc32(cid + data))
-            )
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace)
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + b"".join(chunk(cid, data) for cid, data in extra_chunks)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-        )
-
-    # RGB 4x5 exercising every filter type, one per row; gray + RGBA
-    # twins exercise the other bpp values through the same path
-    rgb = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, size=(5, 4, 1), dtype=np.uint8)
-    rgba = rng.integers(0, 256, size=(5, 4, 4), dtype=np.uint8)
-    filters = [0, 1, 2, 3, 4]
-
-    def bmp24(arr):  # bottom-up, 4-byte padded rows
-        h, w, _ = arr.shape
-        row = w * 3
-        pad = (-row) % 4
-        body = b"".join(
-            arr[y, :, ::-1].tobytes() + b"\x00" * pad
-            for y in range(h - 1, -1, -1)
-        )
-        header = (
-            b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                          2835, 2835, 0, 0)
-        )
-        return header + body
-
-    def bmp32_topdown(arr):
-        h, w, _ = arr.shape
-        bgra = arr[:, :, [2, 1, 0, 3]]
-        body = bgra.tobytes()
-        header = (
-            b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, -h, 1, 32, 0, len(body),
-                          2835, 2835, 0, 0)
-        )
-        return header + body
-
-    pgm = b"P5 # a comment\n4 5 255\n" + gray.tobytes()
-    ppm = b"P6\n4 5\n255\n" + rgb.tobytes()
-
-    # palette PNG (color type 3): 4-entry palette, indices exercise
-    # the same unfilter path at bpp=1, then one PLTE lookup; the tRNS
-    # twin promotes the expansion to RGBA
-    pal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [7, 8, 9]], dtype=np.uint8
-    )
-    idx = rng.integers(0, 4, size=(5, 4, 1), dtype=np.uint8)
-    plte = pal.tobytes()
-    trns = bytes([0, 128, 255])  # entries 0-2 translucent, 3 defaults 255
-    pal_png = png_bytes(idx, filters, ctype=3, extra_chunks=[(b"PLTE", plte)])
-    pal_png_a = png_bytes(
-        idx, filters, ctype=3, extra_chunks=[(b"PLTE", plte), (b"tRNS", trns)]
-    )
-    alpha = np.array([0, 128, 255, 255], dtype=np.uint8)
-    pal_rgba = np.concatenate([pal, alpha[:, None]], axis=1)
-    adam_rgb = rng.integers(0, 256, size=(10, 9, 3), dtype=np.uint8)
-
-    def be_bytes(u16):  # (h, w, ch) u16 -> (h, w, 2*ch) u8 big-endian
-        h_, w_ = u16.shape[:2]
-        return np.frombuffer(
-            u16.astype(">u2").tobytes(), dtype=np.uint8
-        ).reshape(h_, w_, -1)
-
-    gray16_b = be_bytes(rng.integers(0, 65536, size=(5, 4, 1), dtype=np.uint16))
-    rgb16_b = be_bytes(rng.integers(0, 65536, size=(5, 4, 3), dtype=np.uint16))
-
-    rows = [
-        (1, "image", bytearray(png_bytes(rgb, filters)), None),
-        (2, "image", bytearray(png_bytes(gray, filters)), None),
-        (3, "image", bytearray(png_bytes(rgba, filters)), None),
-        (4, "image", bytearray(bmp24(rgb)), None),
-        (5, "image", bytearray(bmp32_topdown(rgba)), None),
-        (6, "image", bytearray(pgm), None),
-        (7, "image", bytearray(ppm), None),
-        (8, "image", bytearray(pal_png), None),
-        (10, "image", bytearray(pal_png_a), None),
-        # Adam7-interlaced RGB, dimensions chosen so every one of the
-        # seven passes is non-empty AND ragged (9 not divisible by 8)
-        (11, "image", bytearray(
-            png_bytes(adam_rgb, filters, interlace=1)), None),
-        # 16-bit depths ride the same byte-level unfilter with bpp
-        # doubled — big-endian samples as stored, mode suffixed "16"
-        (12, "image", bytearray(
-            png_bytes(gray16_b, filters, ctype=0, depth=16)), None),
-        (13, "image", bytearray(
-            png_bytes(rgb16_b, filters, ctype=2, depth=16)), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in decode_image(df).collect()}
-    exp = {
-        1: ("RGB", rgb), 2: ("L", gray), 3: ("RGBA", rgba),
-        4: ("RGB", rgb), 5: ("RGBA", rgba), 6: ("L", gray), 7: ("RGB", rgb),
-        8: ("RGB", pal[idx[:, :, 0]]), 10: ("RGBA", pal_rgba[idx[:, :, 0]]),
-    }
-    for aid, (mode, arr) in exp.items():
-        g = got[aid]
-        assert (g["width"], g["height"], g["mode"]) == (4, 5, mode), (aid, g)
-        assert bytes(g["pixels"]) == arr.tobytes(), aid
-    g11 = got[11]
-    assert (g11["width"], g11["height"], g11["mode"]) == (9, 10, "RGB")
-    assert bytes(g11["pixels"]) == adam_rgb.tobytes()
-    for aid, mode, want in ((12, "L16", gray16_b), (13, "RGB16", rgb16_b)):
-        g = got[aid]
-        assert (g["width"], g["height"], g["mode"]) == (4, 5, mode), aid
-        assert bytes(g["pixels"]) == want.tobytes(), aid
-
-    # nearest-neighbor resize: 4x5 -> 2x2 picks rows {0,2} cols {0,2}
-    rez = {
-        r["asset_id"]: r.asDict()
-        for r in decode_image(df, resize=(2, 2)).collect()
-    }
-    want = rgb[[0, 2]][:, [0, 2]]
-    assert bytes(rez[1]["pixels"]) == want.tobytes()
-    assert (rez[1]["width"], rez[1]["height"]) == (2, 2)
-
-    # the sniffing path classifies everything the decode path decodes
-    # — netpbm included (shared header parser)
-    from vectorsearch_scylla_spark.multimodal.media import sniff_image_meta
-
-    sniffed = {
-        r["asset_id"]: (r["format"], r["width"], r["height"])
-        for r in sniff_image_meta(df).collect()
-    }
-    assert sniffed[6] == ("pgm", 4, 5) and sniffed[7] == ("ppm", 4, 5)
-    assert sniffed[1] == ("png", 4, 5) and sniffed[4] == ("bmp", 4, 5)
-
-    # JPEG stays honestly gated: no codec in this env
-    jpeg = spark.createDataFrame(
-        [(9, "image", bytearray(b"\xff\xd8\xff\xe0" + b"\x00" * 32), None)],
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|no imaging"):
-        decode_image(jpeg).collect()
-
-
-def test_decode_image_gif_lzw_codec_free(spark):
-    """r14: single-frame GIF decode is real — pure-Python LZW with
-    variable-width codes, palette expansion, GCE transparency → RGBA,
-    local-color-table override, and GIF interlace row de-permutation.
-    The test encodes known indices with an independent REAL LZW
-    encoder (dictionary growth + width changes, not the uncompressed-
-    GIF trick), wraps a spec-correct container, and pins the decoded
-    bytes; the repeated-run pattern forces the KwKwK special case."""
-    import struct
-
-    import numpy as np
-
-    from vectorsearch_scylla_spark.multimodal.media import decode_image
-
-    def lzw_encode(pixels: bytes, min_code_size: int) -> bytes:
-        clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-        table = {bytes([i]): i for i in range(clear)}
-        next_code = end + 1
-        code_size = min_code_size + 1
-        outbuf = bytearray()
-        acc = bits = 0
-
-        def emit(code):
-            nonlocal acc, bits
-            acc |= code << bits
-            bits += code_size
-            while bits >= 8:
-                outbuf.append(acc & 0xFF)
-                acc >>= 8
-                bits -= 8
-
-        emit(clear)
-        w = b""
-        for px in pixels:
-            wk = w + bytes([px])
-            if wk in table:
-                w = wk
-                continue
-            emit(table[w])
-            table[wk] = next_code
-            next_code += 1
-            # the just-assigned code next_code-1 needs code_size+1
-            # bits once it reaches 2^code_size — widen so the decoder
-            # (which mirrors this after its append) stays in lockstep
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-            w = bytes([px])
-        if w:
-            emit(table[w])
-        emit(end)
-        if bits:
-            outbuf.append(acc & 0xFF)
-        return bytes(outbuf)
-
-    def sub_blocks(data: bytes) -> bytes:
-        out = b""
-        for i in range(0, len(data), 255):
-            part = data[i : i + 255]
-            out += bytes([len(part)]) + part
-        return out + b"\x00"
-
-    pal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [7, 8, 9]], dtype=np.uint8
-    )
-
-    def gif_bytes(idx2d, *, interlace=False, transparent=None, local=False):
-        h, w = idx2d.shape
-        field = 1  # 2 << 1 = 4 palette entries
-        gct_flag = 0 if local else 0x80
-        out = b"GIF89a" + struct.pack("<HH", w, h)
-        out += bytes([gct_flag | field, 0, 0])
-        if not local:
-            out += pal.tobytes()
-        if transparent is not None:
-            out += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-        # a comment extension exercises the sub-block skipper
-        out += bytes([0x21, 0xFE]) + sub_blocks(b"oracle")[:-1] + b"\x00"
-        ipacked = (0x40 if interlace else 0) | (0x80 | field if local else 0)
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([ipacked])
-        if local:
-            out += pal.tobytes()
-        stored = idx2d
-        if interlace:
-            order = np.concatenate([
-                np.arange(0, h, 8), np.arange(4, h, 8),
-                np.arange(2, h, 4), np.arange(1, h, 2),
-            ])
-            stored = idx2d[order]
-        out += bytes([2]) + sub_blocks(lzw_encode(stored.tobytes(), 2))
-        return out + b"\x3b"
-
-    rng = np.random.default_rng(11)
-    # repetitive runs force dictionary reuse AND the KwKwK case;
-    # random tail forces width growth past 2^3 entries
-    runs = np.array(
-        [0] * 7 + [1] * 5 + [2, 2, 0, 0, 1, 1, 2, 3] * 3, dtype=np.uint8
-    )
-    idx = np.concatenate(
-        [np.tile(runs, 3), rng.integers(0, 4, 60).astype(np.uint8)]
-    )[: 12 * 12].reshape(12, 12)
-
-    rows = [
-        (1, "image", bytearray(gif_bytes(idx)), None),
-        (2, "image", bytearray(gif_bytes(idx, interlace=True)), None),
-        (3, "image", bytearray(gif_bytes(idx, transparent=2)), None),
-        (4, "image", bytearray(gif_bytes(idx, local=True)), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in decode_image(df).collect()}
-    rgb = pal[idx]
-    alpha = np.full(4, 255, dtype=np.uint8)
-    alpha[2] = 0
-    rgba = np.concatenate([pal, alpha[:, None]], axis=1)[idx]
-    for aid, want, mode in (
-        (1, rgb, "RGB"), (2, rgb, "RGB"), (3, rgba, "RGBA"), (4, rgb, "RGB"),
-    ):
-        g = got[aid]
-        assert (g["width"], g["height"], g["mode"]) == (12, 12, mode), aid
-        assert bytes(g["pixels"]) == want.tobytes(), aid
-
-
-def test_sniff_av_container_flac_and_ogg_metadata(spark):
-    """r14: FLAC's mandatory leading STREAMINFO block and Ogg's
-    first-page codec id packet (OpusHead / vorbis id header) are pure
-    byte layouts — the sniffer fills channels/sample_rate(/bits) for
-    them exactly as it does for WAV, from spec-correct synthetic
-    fixtures with known field values."""
-    import struct
-
-    from vectorsearch_scylla_spark.multimodal.media import sniff_av_container
-
-    # FLAC: fLaC + block header (type 0, len 34) + STREAMINFO with
-    # sr=44100, channels=2, bits=16, total=1000
-    packed = (44100 << 44) | ((2 - 1) << 41) | ((16 - 1) << 36) | 1000
-    streaminfo = (
-        struct.pack(">HH", 1024, 1024) + b"\x00\x00\x10" + b"\x00\x00\x20"
-        + packed.to_bytes(8, "big") + b"\x00" * 16
-    )
-    assert len(streaminfo) == 34
-    flac = b"fLaC" + bytes([0x80, 0, 0, 34]) + streaminfo
-
-    def ogg_page(payload):
-        nsegs = (len(payload) + 254) // 255
-        segs = bytes([255] * (nsegs - 1) + [len(payload) - 255 * (nsegs - 1)])
-        return (
-            b"OggS" + b"\x00\x02" + b"\x00" * 8 + b"\x01\x02\x03\x04"
-            + b"\x00" * 4 + b"\x00" * 4 + bytes([nsegs]) + segs + payload
-        )
-
-    opus = ogg_page(
-        b"OpusHead" + bytes([1, 2]) + struct.pack("<H", 312)
-        + struct.pack("<I", 48000) + b"\x00\x00\x00"
-    )
-    vorbis = ogg_page(
-        b"\x01vorbis" + struct.pack("<I", 0) + bytes([6])
-        + struct.pack("<I", 44100) + b"\x00" * 9
-    )
-    rows = [
-        (1, "audio", bytearray(flac), None),
-        (2, "audio", bytearray(opus), None),
-        (3, "audio", bytearray(vorbis), None),
-        # truncated flac / non-id ogg stay classification-only
-        (4, "audio", bytearray(b"fLaC\x80\x00"), None),
-        (5, "audio", bytearray(b"OggS" + b"\x00" * 8), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in sniff_av_container(df).collect()}
-    f = got[1]
-    assert (f["container"], f["detail"]) == ("flac", "streaminfo")
-    assert (f["channels"], f["sample_rate"], f["bits_per_sample"]) == (2, 44100, 16)
-    o = got[2]
-    assert (o["container"], o["detail"], o["channels"], o["sample_rate"]) == (
-        "ogg", "opus", 2, 48000)
-    v = got[3]
-    assert (v["container"], v["detail"], v["channels"], v["sample_rate"]) == (
-        "ogg", "vorbis", 6, 44100)
-    assert (got[4]["container"], got[4]["detail"]) == ("flac", None)
-    assert (got[5]["container"], got[5]["detail"]) == ("ogg", None)
-
-
-def test_sniff_av_container_mp4_audio_track(spark):
-    """r14: ISO-BMFF box walking — the sniffer resolves the first
-    sound track's AudioSampleEntry (moov → trak → mdia[hdlr=soun] →
-    minf/stbl/stsd) and fills codec fourcc, channels, sample rate,
-    and sample size from the public 14496-12 layout; a video-only or
-    moov-less mp4 keeps the brand-only detail with NULL fields."""
-    import struct
-
-    from vectorsearch_scylla_spark.multimodal.media import sniff_av_container
-
-    def box(typ, payload):
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    entry = box(
-        b"mp4a",
-        b"\x00" * 16 + struct.pack(">HH", 2, 16) + b"\x00" * 4
-        + struct.pack(">I", 48000 << 16),
-    )
-    stsd = box(b"stsd", b"\x00" * 4 + struct.pack(">I", 1) + entry)
-    stbl = box(b"stbl", stsd)
-    minf = box(b"minf", stbl)
-    hdlr_a = box(b"hdlr", b"\x00" * 8 + b"soun" + b"\x00" * 12)
-    hdlr_v = box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12)
-    trak_a = box(b"trak", box(b"mdia", hdlr_a + minf))
-    trak_v = box(b"trak", box(b"mdia", hdlr_v + minf))
-    ftyp = box(b"ftyp", b"isom" + b"\x00\x00\x02\x00" + b"isomiso2")
-    # a large-ish mdat BEFORE moov proves the walk skips bodies by
-    # size instead of scanning them (the non-faststart file shape)
-    mdat = box(b"mdat", b"\x00" * 4096)
-    mp4_audio = ftyp + mdat + box(b"moov", trak_v + trak_a)
-    mp4_video = ftyp + box(b"moov", trak_v)
-    mp4_bare = b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 8
-
-    rows = [
-        (1, "video", bytearray(mp4_audio), None),
-        (2, "video", bytearray(mp4_video), None),
-        (3, "video", bytearray(mp4_bare), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in sniff_av_container(df).collect()}
-    a = got[1]
-    assert (a["container"], a["detail"]) == ("mp4", "isom/mp4a")
-    assert (a["channels"], a["sample_rate"], a["bits_per_sample"]) == (2, 48000, 16)
-    v = got[2]
-    assert (v["container"], v["detail"]) == ("mp4", "isom")
-    assert v["channels"] is None and v["sample_rate"] is None
-    assert (got[3]["container"], got[3]["detail"]) == ("mp4", "mp42")
-
-
-def test_sniff_av_container_avi_and_ebml_audio_metadata(spark):
-    """r14: the last two containers with NULL audio fields now parse —
-    AVI's hdrl/strl walk reaches the 'auds' stream's WAVEFORMATEX
-    (the same struct WAV's fmt chunk carries), and webm/mkv EBML
-    varint walking reaches the audio TrackEntry's CodecID /
-    SamplingFrequency / Channels / BitDepth.  Spec-correct synthetic
-    fixtures with known values; malformed tails keep
-    classification-only behavior."""
-    import struct
-
-    from vectorsearch_scylla_spark.multimodal.media import sniff_av_container
-
-    # ---- AVI: RIFF/AVI { LIST hdrl { LIST strl { strh(auds), strf } } }
-    def chunk(cid, payload):
-        return cid + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b""
-        )
-
-    strh = chunk(b"strh", b"auds" + b"PCM\x00" + b"\x00" * 40)
-    strf = chunk(b"strf", struct.pack("<HHIIHH", 1, 2, 22050, 88200, 4, 16))
-    strl = chunk(b"LIST", b"strl" + strh + strf)
-    hdrl = chunk(b"LIST", b"hdrl" + b"avih" + struct.pack("<I", 0) + strl)
-    avi_body = b"AVI " + hdrl
-    avi = b"RIFF" + struct.pack("<I", len(avi_body)) + avi_body
-
-    # ---- EBML: header(DocType webm) + Segment{Tracks{TrackEntry}}
-    def el(eid, payload):
-        assert len(payload) < 127
-        return eid + bytes([0x80 | len(payload)]) + payload
-
-    audio = (
-        el(b"\xb5", struct.pack(">f", 48000.0))
-        + el(b"\x9f", b"\x02")
-        + el(b"\x62\x64", b"\x10")
-    )
-    track = el(
-        b"\xae",
-        el(b"\x83", b"\x02") + el(b"\x86", b"A_OPUS") + el(b"\xe1", audio),
-    )
-    tracks = el(b"\x16\x54\xae\x6b", track)
-    header = el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", b"webm"))
-    webm = header + el(b"\x18\x53\x80\x67", tracks)
-
-    rows = [
-        (1, "video", bytearray(avi), None),
-        (2, "video", bytearray(webm), None),
-        (3, "video", bytearray(b"RIFF\x24\x00\x00\x00AVI " + b"\x00" * 8), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = {r["asset_id"]: r.asDict() for r in sniff_av_container(df).collect()}
-    a = got[1]
-    assert a["container"] == "avi" and a["detail"] == "PCM"
-    assert (a["channels"], a["sample_rate"], a["bits_per_sample"]) == (2, 22050, 16)
-    w = got[2]
-    assert (w["container"], w["detail"]) == ("webm", "webm/A_OPUS")
-    assert (w["channels"], w["sample_rate"], w["bits_per_sample"]) == (2, 48000, 16)
-    assert (got[3]["container"], got[3]["detail"]) == ("avi", None)
-
-
-def test_decode_image_null_and_malformed_blobs(spark):
-    """r14 review: NULL content rows emit NULL columns (the sniffers'
-    never-throw posture), and a TRUNCATED codec-free blob surfaces as
-    the one documented NotImplementedError (PIL-less env) instead of
-    a raw struct/zlib error from inside a parser."""
-    from vectorsearch_scylla_spark.multimodal.media import decode_image
-
-    df = spark.createDataFrame(
-        [(1, "image", None, None)],
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    got = decode_image(df).collect()[0].asDict()
-    assert got == {"asset_id": 1, "width": None, "height": None,
-                   "mode": None, "pixels": None}
-
-    truncated_png = spark.createDataFrame(
-        [(2, "image", bytearray(b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR\x00"), None)],
-        "asset_id long, kind string, content binary, "
-        "meta map<string,string>",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|failed to parse"):
-        decode_image(truncated_png).collect()

@@ -1,0 +1,211 @@
+"""Every top-level package function has a non-test caller.
+
+A pure-AST scan, no Spark: starting from the entry points (every
+``@query`` function in the registry, ``__spark_entry__.py``,
+``__main__.py``, ``bench.py``, ``tools/`` and ``perfbench/``, plus the
+functions ``perfbench/trace.py`` wraps by name), follow every name a
+reached function uses to the package function it resolves to.  A
+function the walk never reaches fails the test unless ``ALLOWED``
+names it with the reason it stays.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "vectorsearch_scylla_spark"
+
+# Functions kept with no non-test caller, each for the reason given.  The
+# walk starts from them too, so what they call counts as reached.
+ALLOWED = {
+    "operators.pq.pq_adc_topk":
+        "Spark reference that pq_adc_topk_np is tested bit-for-bit against",
+    "plans.registry.q_dedup_clusters_union":
+        "uncascaded union the cascade tests compare dedup_clusters_union_cascade against",
+    "plans.registry._union_evidence_edges":
+        "evidence edges of q_dedup_clusters_union, the cascade tests' reference",
+    "operators.dedup.roll_forward_signatures":
+        "builds the signature-artifact chains the incremental_components and against= tests run",
+    "operators.dedup._check_artifact_schema":
+        "schema guard roll_forward_signatures applies to every artifact it reads",
+    "streaming.pipeline.metric_stream_from_kafka":
+        "the reference's Kafka ingest transport",
+    "streaming.pipeline.parse_metric_messages":
+        "decodes the Kafka ingest's messages",
+    "streaming.pipeline.to_kafka_messages":
+        "encodes metric rows as the Kafka ingest's messages",
+}
+
+
+def _module_name(path: str) -> str:
+    rel = os.path.relpath(path, os.path.join(ROOT, PACKAGE))
+    parts = rel[:-3].split(os.sep)
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
+
+
+def _py_files(*dirs: str) -> list[str]:
+    out = []
+    for d in dirs:
+        for base, _subdirs, files in os.walk(os.path.join(ROOT, d)):
+            out += [os.path.join(base, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+class _Module:
+    """One parsed file: its top-level functions and import bindings."""
+
+    def __init__(self, path: str, name: str | None = None):
+        self.name = name
+        self.is_package = path.endswith("__init__.py")
+        with open(path) as fh:
+            self.tree = ast.parse(fh.read(), path)
+        self.functions = {
+            n.name: n
+            for n in self.tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        # local name -> package module ("ops.x") or function ("ops.x.f")
+        self.bindings: dict[str, str] = {}
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.ImportFrom):
+                base = self._absolute(node)
+                if base is None:
+                    continue
+                for alias in node.names:
+                    target = f"{base}.{alias.name}" if base else alias.name
+                    self.bindings[alias.asname or alias.name] = target
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.startswith(PACKAGE + ".") and alias.asname:
+                        self.bindings[alias.asname] = alias.name[len(PACKAGE) + 1:]
+
+    def _absolute(self, node: ast.ImportFrom) -> str | None:
+        mod = node.module or ""
+        if node.level:
+            pkg = (self.name or "").split(".")
+            if not self.is_package:
+                pkg = pkg[:-1]
+            pkg = pkg[: len(pkg) - (node.level - 1)]
+            return ".".join([p for p in pkg if p] + ([mod] if mod else []))
+        if mod == PACKAGE:
+            return ""
+        if mod.startswith(PACKAGE + "."):
+            return mod[len(PACKAGE) + 1:]
+        return None
+
+
+def _load_package() -> dict[str, _Module]:
+    return {_module_name(p): _Module(p, _module_name(p)) for p in _py_files(PACKAGE)}
+
+
+def _is_query(fn: ast.AST) -> bool:
+    for dec in fn.decorator_list:
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(target, ast.Name) and target.id == "query":
+            return True
+    return False
+
+
+def _module_body_refs(tree: ast.Module) -> list[ast.AST]:
+    """Module-level statements other than defs and imports: they run at import."""
+    return [
+        n for n in tree.body
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Import, ast.ImportFrom))
+    ]
+
+
+def _decorators_and_defaults(fn: ast.AST) -> list[ast.AST]:
+    args = fn.args
+    return list(fn.decorator_list) + list(args.defaults) + [d for d in args.kw_defaults if d]
+
+
+def reachable(extra_roots=()) -> tuple[set[str], set[str]]:
+    """(every top-level package function, the ones the entry points and
+    ``extra_roots`` reach)."""
+    modules = _load_package()
+    everything = {f"{m}.{f}" for m, mod in modules.items() for f in mod.functions}
+
+    def resolve(target: str) -> str | None:
+        """Follow a binding ("ops.x.f") through re-exports to a function."""
+        for _ in range(5):
+            if target in everything:
+                return target
+            mod, _, attr = target.rpartition(".")
+            if mod in modules and attr in modules[mod].bindings:
+                target = modules[mod].bindings[attr]
+                continue
+            return None
+        return None
+
+    reached: set[str] = set()
+    work: list[tuple[_Module, list[ast.AST]]] = []
+
+    def visit(mod: _Module, nodes: list[ast.AST]) -> None:
+        for root in nodes:
+            for node in ast.walk(root):
+                hit = None
+                if isinstance(node, ast.Name):
+                    if mod.name is not None and node.id in mod.functions:
+                        hit = f"{mod.name}.{node.id}"
+                    elif node.id in mod.bindings:
+                        hit = resolve(mod.bindings[node.id])
+                elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                    base = mod.bindings.get(node.value.id)
+                    if base is not None:
+                        hit = resolve(f"{base}.{node.attr}" if base else node.attr)
+                if hit and hit not in reached:
+                    reached.add(hit)
+                    owner, _, fname = hit.rpartition(".")
+                    fn = modules[owner].functions[fname]
+                    work.append((modules[owner], [fn]))
+
+    for mod in modules.values():
+        visit(mod, _module_body_refs(mod.tree))
+        for fn in mod.functions.values():
+            visit(mod, _decorators_and_defaults(fn))
+            if _is_query(fn):
+                reached.add(f"{mod.name}.{fn.name}")
+                work.append((mod, [fn]))
+    entry_files = [
+        os.path.join(ROOT, "__spark_entry__.py"),
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, PACKAGE, "__main__.py"),
+    ] + _py_files("tools", "perfbench")
+    for path in entry_files:
+        ext = _Module(path)
+        visit(ext, [ext.tree])
+    roots = [n for n in extra_roots if n in everything]
+    trace = _Module(os.path.join(ROOT, "perfbench", "trace.py"))
+    for node in ast.walk(trace.tree):
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "MODULE_FUNCTIONS" for t in node.targets
+        ):
+            roots += [f"{row[0]}.{row[1]}" for row in ast.literal_eval(node.value)]
+    for name in roots:
+        if name not in reached:
+            reached.add(name)
+            owner, _, fname = name.rpartition(".")
+            work.append((modules[owner], [modules[owner].functions[fname]]))
+    while work:
+        mod, nodes = work.pop()
+        visit(mod, nodes)
+    return everything, reached
+
+
+def test_every_package_function_is_reached():
+    everything, reached = reachable(extra_roots=ALLOWED)
+    unreached = sorted(everything - reached - set(ALLOWED))
+    assert not unreached, (
+        "package functions no registered query, stream, tool or benchmark "
+        f"reaches (delete them, or add a reason to ALLOWED): {unreached}"
+    )
+
+
+def test_allow_list_is_current():
+    everything, reached = reachable()
+    stale = sorted(n for n in ALLOWED if n not in everything or n in reached)
+    assert not stale, f"ALLOWED entries that are gone or now reached: {stale}"

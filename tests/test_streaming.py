@@ -1319,176 +1319,6 @@ def test_ivf_add_stream_maintenance_fires_in_stream(spark, tmp_path):
     )
 
 
-def test_pq_add_stream_refresh_fires_in_stream(spark, sf_dir, tmp_path):
-    """r12: the codebook-staleness trigger must fire INSIDE the code
-    ingest stream — the quantized twin of the ivf_add_stream firing
-    test, on the operator test's cohort-drift fixture: codebooks
-    trained on the base distribution mis-score a streamed increment
-    whose cohorts each shift along their own hashed axis, the
-    in-stream audit (on the NEWEST adds) crosses the budget, the
-    rollback-gated retrain adopts, a re-encoded generation swaps in,
-    and the remaining micro-batches encode with the refreshed books."""
-    import os
-
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        pq_recall_audit,
-        train_pq,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import pq_add_stream
-
-    m, ksub, dsub = 8, 32, 8
-    emb0 = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").cast("array<double>").alias("corpus_vec"),
-    )
-    reps = spark.range(5).select(F.col("id").cast("int").alias("rep"))
-    emb = emb0.crossJoin(F.broadcast(reps)).select(
-        (F.col("corpus_id") + F.col("rep").cast("long") * 10_000).alias(
-            "corpus_id"
-        ),
-        F.expr(
-            "transform(corpus_vec, (x, i) -> CASE WHEN i = pmod(rep, 64) "
-            "THEN x + 0.01 * rep ELSE x END)"
-        ).alias("corpus_vec"),
-    )
-    base = emb.filter(F.col("corpus_id") % 10 != 7).localCheckpoint()
-    books = train_pq(
-        base, m=m, ksub=ksub, iters=2, dsub=dsub,
-        id_col="corpus_id", vec_col="corpus_vec", kernel="numpy",
-    )
-    base_store = str(tmp_path / "pq_base")
-    encode_pq_np(base, books, dsub=dsub, vec_col="corpus_vec").write.parquet(
-        base_store
-    )
-    healthy, d0 = pq_recall_audit(
-        base.limit(100).select(
-            F.col("corpus_id").alias("query_id"),
-            F.col("corpus_vec").alias("query_vec"),
-        ),
-        spark.read.parquet(base_store).drop("corpus_vec"),
-        books,
-        base,
-        k=5, dsub=dsub, max_queries=64,
-    )
-    assert d0 > 0 and healthy is not None
-
-    # the drifted increment (cohort-shared hashed axis — the operator
-    # test's recipe) streamed in 4 micro-batches
-    inc = emb.filter(F.col("corpus_id") % 20 == 3).select(
-        (F.col("corpus_id") + 1_000_000_000).alias("corpus_id"),
-        F.expr(
-            "transform(corpus_vec, (x, i) -> CASE WHEN i = "
-            "pmod(xxhash64(pmod(corpus_id, 10000)), 64) "
-            "THEN x + 0.5 ELSE x END)"
-        ).alias("corpus_vec"),
-    )
-    # four SINGLE files with controlled names + strictly increasing
-    # mtimes: the file source orders by (modificationTime, path), so
-    # the epoch -> rows mapping — and therefore every audited recall —
-    # is exactly reproducible (repartition(4) left the split to
-    # listing order and the measured recall wobbled run-to-run)
-    src = str(tmp_path / "pq_src")
-    os.makedirs(src)
-    pdf = inc.toPandas().sort_values("corpus_id").reset_index(drop=True)
-    t0 = 1_700_000_000
-    for qf in range(4):
-        # quarter by COHORT (base id) so a drifted query's twins
-        # commit WITH it — the staleness mechanism is the cohort's
-        # codes collapsing together, invisible if twins straggle
-        part = pdf[((pdf.corpus_id % 10_000) // 20) % 4 == qf]
-        fp = os.path.join(src, f"f{qf}.parquet")
-        part.to_parquet(fp, index=False)
-        os.utime(fp, times=(t0 + qf, t0 + qf))
-    work = str(tmp_path / "pq_work")
-    os.makedirs(work)
-    # the committed-view audit at epoch 2 (queries = the two committed
-    # cohort-quarters) measures 0.7125 on this deterministic fixture
-    # and the post-retrain audit 0.7906 — the budget sits between, so
-    # the day fires AND the recovery clears it (adopted, not rolled
-    # back; the rollback rail itself is pinned by the operator test)
-    budget = 0.75
-    state = pq_add_stream(
-        spark,
-        src,
-        inc.schema,
-        books,
-        base_store,
-        work,
-        id_col="corpus_id",
-        vec_col="corpus_vec",
-        dsub=dsub,
-        max_files_per_trigger=1,
-        compact_at_files=0,
-        maintenance={
-            "recall_budget": budget,
-            "every": 2,
-            "max_audit_queries": 64,
-            "audit_source": "recent",
-        },
-    )
-    assert state["epochs"] == 4
-
-    fired = [r for r in state["reports"] if r["retrained"]]
-    assert fired, f"no refresh adopted; reports={state['reports']}"
-    rep = fired[0]
-    assert rep["epoch"] == 2 and not rep["rolled_back"]
-    assert rep["recall_before"] < budget
-    assert rep["recall_after"] is not None and rep["recall_after"] >= budget
-    assert rep["ksub"] == ksub  # intended capacity, not survivor count
-    # shared retrain-report contract (r14, operators/report.py): the
-    # streaming day report mirrors the cross-family keys, aliases in
-    # sync — one key map reads IVF and PQ maintenance days alike
-    assert rep["fired"] is True and rep["retrained"] is True
-    assert rep["audit_metric"] == "id_set"
-    assert rep["budget"] == rep["recall_budget"] == budget
-    assert rep["metric_before"] == rep["recall_before"]
-    assert rep["metric_after"] == rep["recall_after"]
-
-    # generation swapped: books persisted with the store, state updated
-    assert state["generation"] == 1 and os.path.isdir(state["store"])
-    assert os.path.isfile(os.path.join(state["store"], "_books.json"))
-    assert state["books"] is not books
-
-    # nothing lost, each id exactly once across store ∪ rolled
-    store_df = spark.read.parquet(state["store"])
-    rolled_df = spark.read.parquet(state["rolled"])
-    all_ids = [
-        r["corpus_id"]
-        for r in store_df.select("corpus_id")
-        .unionByName(rolled_df.select("corpus_id"))
-        .collect()
-    ]
-    assert len(all_ids) == len(set(all_ids)) == base.count() + inc.count()
-
-    # post-fire epochs encoded with the REFRESHED books: rolled codes
-    # must equal a fresh encode of their vectors under state["books"]
-    code_cols = [f"code{s}" for s in range(m)]
-    expected = {
-        r["corpus_id"]: tuple(r[c] for c in code_cols)
-        for r in encode_pq_np(
-            rolled_df.select("corpus_id", "corpus_vec"),
-            state["books"],
-            dsub=dsub,
-            vec_col="corpus_vec",
-        ).collect()
-    }
-    for r in rolled_df.collect():
-        assert tuple(r[c] for c in code_cols) == expected[r["corpus_id"]]
-
-    # restart resumes from the persisted generation books
-    state_r = pq_add_stream(
-        spark, src, inc.schema, books, base_store, work,
-        id_col="corpus_id", vec_col="corpus_vec", dsub=dsub,
-        max_files_per_trigger=1, compact_at_files=0,
-    )
-    assert state_r["epochs"] == 0 and state_r["generation"] == 1
-    assert state_r["ksub"] == ksub
-    assert state_r["books"] == [
-        [(int(c), list(map(float, v))) for c, v in b] for b in state["books"]
-    ]
-
-
 def test_resume_recovers_generation_swap_crash_debris(spark, tmp_path):
     """r12 ADVICE (crash-safety of the shared generation machinery):
     the entry-side recovery in ``_resume_newest_generation`` must (a)
@@ -1639,160 +1469,6 @@ def test_resume_recovers_generation_swap_crash_debris(spark, tmp_path):
         )
 
 
-def test_pq_commission_budget_noops_on_healthy_replica_stream(
-    spark, sf_dir, tmp_path
-):
-    """r12 VERDICT task 3 — mechanize the PQ-watch commissioning rule.
-    BENCH_SCALE.md "In-stream PQ refresh day" measured that on a
-    replica-heavy corpus the fresh-add id-set audit is tie-dominated
-    (reads far below the corpus's base-self recall even on a zero-
-    drift day), so a budget derived from base-self recall FALSE-FIRES
-    the refresh on every healthy day.  The mechanized rule —
-    ``maintenance={"recall_budget": "commission"}`` — must instead
-    calibrate on the watch's own first fired day and then NO-OP on the
-    following healthy days.  Fixture: distinct base corpus; the stream
-    adds replica cohorts (12 near-identical twins each, jitter real in
-    the exact score but collapsed by the codes) of held-out vectors —
-    duplicate-heavy but undrifted."""
-    import json
-    import os
-
-    from vectorsearch_scylla_spark.operators.pq import (
-        commission_pq_watch,
-        encode_pq_np,
-        pq_recall_audit,
-        train_pq,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import pq_add_stream
-
-    m, ksub, dsub, k = 8, 64, 8, 5
-    margin = 0.1
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").cast("array<double>").alias("corpus_vec"),
-    )
-    base = emb.filter(F.col("corpus_id") % 10 != 7).localCheckpoint()
-    books = train_pq(
-        base, m=m, ksub=ksub, iters=3, dsub=dsub,
-        id_col="corpus_id", vec_col="corpus_vec", kernel="numpy",
-    )
-    base_store = str(tmp_path / "pq_base")
-    encode_pq_np(base, books, dsub=dsub, vec_col="corpus_vec").write.parquet(
-        base_store
-    )
-
-    # the MISCALIBRATED baseline: base-self recall on the distinct
-    # corpus — the number a deployer would naively derive a budget from
-    base_codes = spark.read.parquet(base_store).drop("corpus_vec")
-    base_queries = base.limit(100).select(
-        F.col("corpus_id").alias("query_id"),
-        F.col("corpus_vec").alias("query_vec"),
-    )
-    base_self, n0 = pq_recall_audit(
-        base_queries, base_codes, books, base,
-        k=k, dsub=dsub, max_queries=48,
-    )
-    assert n0 > 0 and base_self is not None
-
-    # standalone commissioning form: same audit, returns the config
-    cfg = commission_pq_watch(
-        base_queries, base_codes, books, base,
-        margin=margin, k=k, dsub=dsub, max_queries=48, tie_aware=False,
-    )
-    assert cfg["budget"] == pytest.approx(base_self - margin)
-    assert cfg["recall_observed"] == pytest.approx(base_self)
-    assert cfg["audit_metric"] == "id_set" and cfg["n_pairs"] == n0
-    with pytest.raises(ValueError, match="zero pairs"):
-        commission_pq_watch(
-            base_queries.limit(0), base_codes, books, base,
-            margin=margin, k=k, dsub=dsub, max_queries=48,
-        )
-
-    # healthy-but-duplicate-heavy adds: 12 cohorts x 24 replicas of
-    # HELD-OUT vectors (same distribution as base — zero drift), twin
-    # jitter 1e-4..24e-4 on one coordinate: a real exact-score
-    # ordering the byte codes cannot see, so the cohort ADC-ties and
-    # the id-set audit reads tie-resolution, not staleness
-    parents = (
-        emb.filter(F.col("corpus_id") % 10 == 7)
-        .orderBy("corpus_id")
-        .limit(12)
-        .collect()
-    )
-    src = str(tmp_path / "pq_src")
-    os.makedirs(src)
-    import pandas as pd
-
-    t0 = 1_700_000_000
-    for qf in range(3):  # 4 whole cohorts per file, twins never split
-        rows = []
-        for j in range(qf * 4, qf * 4 + 4):
-            vec = list(parents[j]["corpus_vec"])
-            for r in range(24):
-                v = list(vec)
-                v[j % len(v)] += 1e-4 * (r + 1)
-                rows.append((2_000_000_000 + j * 1000 + r, v))
-        fp = os.path.join(src, f"f{qf}.parquet")
-        pd.DataFrame(rows, columns=["corpus_id", "corpus_vec"]).to_parquet(
-            fp, index=False
-        )
-        os.utime(fp, times=(t0 + qf, t0 + qf))
-
-    work = str(tmp_path / "pq_work")
-    os.makedirs(work)
-    mnt = {
-        "recall_budget": "commission",
-        "commission_margin": margin,
-        "every": 1,
-        "max_audit_queries": 48,
-        "audit_source": "recent",
-    }
-    state = pq_add_stream(
-        spark, src, "corpus_id long, corpus_vec array<double>",
-        books, base_store, work,
-        id_col="corpus_id", vec_col="corpus_vec", dsub=dsub,
-        max_files_per_trigger=1, compact_at_files=0, maintenance=mnt,
-    )
-    assert state["epochs"] == 3
-    assert [r["epoch"] for r in state["reports"]] == [1, 2]
-    day1, day2 = state["reports"]
-
-    # day 1 commissions: budget = its own measured recall - margin,
-    # stamped, persisted, and the day never escalates
-    assert day1.get("commissioned") is True and not day1["retrained"]
-    assert day1["audit_metric"] == "id_set"
-    assert day1["recall_budget"] == pytest.approx(
-        max(0.0, day1["recall_before"] - margin)
-    )
-    assert state["commissioned_budget"] == day1["recall_budget"]
-    assert os.path.isfile(os.path.join(work, "_commission.json"))
-
-    # day 2 (healthy, same duplicate-heavy regime) NO-OPS under the
-    # commissioned budget...
-    assert not day2["retrained"] and not day2["rolled_back"]
-    assert day2["recall_before"] >= day2["recall_budget"]
-    assert day2["recall_budget"] == day1["recall_budget"]
-    assert state["generation"] == 0 and state["store"] is None
-
-    # ...while the false-trigger premise holds: the naive base-self
-    # budget sits ABOVE both healthy days' tie-dominated readings —
-    # under it, every one of these days would have fired the retrain
-    naive_budget = base_self - margin
-    assert day1["recall_before"] < naive_budget
-    assert day2["recall_before"] < naive_budget
-
-    # restart: the commissioned budget survives the process (no
-    # re-commissioning on whatever state the restart wakes up to)
-    state_r = pq_add_stream(
-        spark, src, "corpus_id long, corpus_vec array<double>",
-        books, base_store, work,
-        id_col="corpus_id", vec_col="corpus_vec", dsub=dsub,
-        max_files_per_trigger=1, compact_at_files=0, maintenance=mnt,
-    )
-    assert state_r["epochs"] == 0 and state_r["reports"] == []
-    assert state_r["commissioned_budget"] == day1["recall_budget"]
-
-
 def test_ivf_commission_budget_noops_on_boundary_heavy_stream(spark, tmp_path):
     """r13 (the IVF twin of the PQ commissioning test): a deployment
     whose workload legitimately straddles list boundaries audits far
@@ -1858,7 +1534,15 @@ def test_ivf_commission_budget_noops_on_boundary_heavy_stream(spark, tmp_path):
     }
 
     def run_day(day: int) -> dict:
-        straddle(day).repartition(2).write.mode("append").parquet(src)
+        # two files per day, one micro-batch each.  The split is a hash
+        # of the id and the files are written in turn, so which rows
+        # the commissioning epoch audits is the same on any core count
+        # (a round-robin repartition splits by the session's slicing)
+        day_rows = straddle(day)
+        for half in (0, 1):
+            day_rows.filter(
+                F.pmod(F.xxhash64("vec_id"), F.lit(2)) == half
+            ).coalesce(1).write.mode("append").parquet(src)
         return ivf_add_stream(
             spark, src, "vec_id long, embedding array<double>",
             cents, base_lists, work,
@@ -2093,18 +1777,14 @@ def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
 
 
 def test_add_stream_families_run_on_manifest_storage(spark, tmp_path):
-    """r14 (VERDICT task 3): both ``*_add_stream`` families run
-    end-to-end on the object-store-safe MANIFEST strategy.  IVF half —
-    the drift-day firing fixture with ``storage="manifest"``: the
-    retrain fires mid-stream, the committed generation lives under a
+    """r14 (VERDICT task 3): ``ivf_add_stream`` runs end-to-end on the
+    object-store-safe MANIFEST strategy — the drift-day firing fixture
+    with ``storage="manifest"``: the retrain fires mid-stream, the committed generation lives under a
     unique never-renamed prefix referenced by ``_CURRENT`` (no
     canonical ``store_genN`` dir is ever created — nothing needed a
     directory rename), a restart resumes the refreshed quantizer
     THROUGH the manifest, and the swap's crash window (marker field
-    cleared + duplicated rolled rows) heals exactly as in rename mode.
-    PQ half — a generation published through the shared machinery with
-    the PQ sidecar shape ({ksub, books}) resumes books and ksub
-    through the manifest and the stream encodes with them."""
+    cleared + duplicated rolled rows) heals exactly as in rename mode."""
     import json
     import os
 
@@ -2112,14 +1792,10 @@ def test_add_stream_families_run_on_manifest_storage(spark, tmp_path):
     from vectorsearch_scylla_spark.streaming.genstore import (
         ManifestGenerationStorage,
     )
-    from vectorsearch_scylla_spark.streaming.pipeline import (
-        _swap_in_generation,
-        ivf_add_stream,
-        pq_add_stream,
-    )
+    from vectorsearch_scylla_spark.streaming.pipeline import ivf_add_stream
 
-    # ---- IVF half: the firing fixture from
-    # test_ivf_add_stream_maintenance_fires_in_stream, on manifest ----
+    # the firing fixture from
+    # test_ivf_add_stream_maintenance_fires_in_stream, on manifest
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
     base_rows = [
         (i, [1.0, 0.001 * i, 0.0, 0.0]) for i in range(20)
@@ -2215,61 +1891,6 @@ def test_add_stream_families_run_on_manifest_storage(spark, tmp_path):
         r["vec_id"] for r in spark.read.parquet(state_h["rolled"]).collect()
     )
     assert healed == survivors
-
-    # ---- PQ half: publish a generation with the PQ sidecar shape
-    # through the shared machinery, then resume + ingest on it --------
-    dim, dsub = 4, 2
-    books_v1 = [
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-    ]
-    books_v2 = [  # the "refreshed" books a fired day would have adopted
-        [(0, [0.8, 0.2]), (1, [0.2, 0.8])],
-        [(0, [0.9, 0.1]), (1, [0.1, 0.9])],
-    ]
-    pq_work = str(tmp_path / "pq_work")
-    os.makedirs(pq_work)
-    gen_frame = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 1.0], 0, 1), (2, [0.0, 1.0, 1.0, 0.0], 1, 0)],
-        "vec_id long, embedding array<double>, code0 int, code1 int",
-    )
-    sidecar_obj = {
-        "ksub": 2,
-        "books": [
-            [[int(c), list(map(float, v))] for c, v in b] for b in books_v2
-        ],
-    }
-    pq_rolled = os.path.join(pq_work, "rolled")
-    gen_dir, gen = _swap_in_generation(
-        spark, pq_work, 0, gen_frame, "_books.json", sidecar_obj,
-        pq_rolled, None, storage="manifest",
-    )
-    assert gen == 1 and os.path.basename(gen_dir).startswith("store_gen1.")
-
-    pq_src = str(tmp_path / "pq_src")
-    adds = spark.createDataFrame(
-        [(10, [0.5, 0.5, 0.5, 0.5]), (11, [0.9, 0.1, 0.2, 0.8])],
-        "vec_id long, embedding array<double>",
-    )
-    adds.repartition(1).write.parquet(pq_src)
-    pq_state = pq_add_stream(
-        spark, pq_src, adds.schema, books_v1,  # STALE books
-        os.path.join(pq_work, "unused_base"), pq_work,
-        dsub=dsub, compact_at_files=0, storage="manifest",
-    )
-    # books resumed THROUGH the manifest-referenced generation, not
-    # the caller's stale initials; the drained epoch encoded with them
-    assert pq_state["generation"] == 1 and pq_state["store"] == gen_dir
-    assert pq_state["books"] == [
-        [(int(c), list(map(float, v))) for c, v in b] for b in books_v2
-    ]
-    assert pq_state["epochs"] == 1
-    rolled_codes = {
-        r["vec_id"]: (r["code0"], r["code1"])
-        for r in spark.read.parquet(pq_state["rolled"]).collect()
-    }
-    # id 11 under books_v2: sub0 [0.9,0.1] -> code 0, sub1 [0.2,0.8] -> 1
-    assert rolled_codes[11] == (0, 1)
 
 
 def test_manifest_storage_refusals(spark, tmp_path):

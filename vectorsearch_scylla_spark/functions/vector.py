@@ -41,20 +41,6 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
-def l2_normalize(a: Column | str) -> Column:
-    """Unit-normalize an array column; zero vectors stay zero.
-
-    On unit vectors, Euclidean distance is monotone in cosine
-    similarity, which is what lets the LSH approximate path
-    (operators/knn.py) reuse Euclidean bucketing for cosine ranking.
-    """
-    a = _c(a)
-    n = l2_norm(a)
-    return F.when(n == 0.0, a.cast("array<double>")).otherwise(
-        F.transform(a, lambda x: x.cast("double") / n)
-    )
-
-
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b) = a·b / (‖a‖‖b‖), 0.0 if either norm is 0.
 

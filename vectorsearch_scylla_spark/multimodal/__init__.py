@@ -3,10 +3,6 @@ from vectorsearch_scylla_spark.multimodal.media import (
     documents_as_media,
     extract_byte_features,
     sample_frames,
-    audio_pcm_features,
-    sniff_image_meta,
-    sniff_av_container,
-    decode_image,
 )
 
 __all__ = [
@@ -14,8 +10,4 @@ __all__ = [
     "documents_as_media",
     "extract_byte_features",
     "sample_frames",
-    "audio_pcm_features",
-    "sniff_image_meta",
-    "sniff_av_container",
-    "decode_image",
 ]

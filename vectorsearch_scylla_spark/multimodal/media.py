@@ -1,5 +1,5 @@
-"""Multimodal columns: images/audio/video as opaque ``binary`` + typed
-metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+"""Multimodal columns: media as opaque ``binary`` + typed metadata,
+processed by Arrow-batched ``mapInPandas`` kernels.
 
 The reference is text/metric-only; these operators extend the engine for
 large-scale training-data pipelines where a row carries media bytes.
@@ -8,23 +8,12 @@ Design rules for 100 TB:
 - media stays an opaque ``BinaryType`` column; Spark never interprets
   it — no shuffle ever carries decoded frames, only the bytes column
   (columnar parquet with ZSTD) and small extracted-feature columns.
-- decode / feature-extract run inside ``mapInPandas``: one Python
-  worker per partition, Arrow batches in, so per-row overhead is
-  amortized and the decode library (PIL/ffmpeg/...) loads once per
-  worker, not per row.
+- feature extraction runs inside ``mapInPandas``: one Python worker
+  per partition, Arrow batches in, so per-row overhead is amortized
+  and any decode library loads once per worker, not per row.
 - partition sizing: media rows are fat — callers should set
   ``spark.sql.files.maxPartitionBytes`` (or repartition by asset id)
   so one Arrow batch of blobs fits executor memory.
-
-External image/audio codec libraries are NOT available in this
-environment — but most of the media story never needed one: container
-sniffing, WAV/PCM/G.711 audio DSP, and pixel decode for PNG (stdlib
-zlib + arithmetic unfiltering, palette included), uncompressed BMP,
-single-frame GIF (pure-Python LZW), and netpbm are all REAL,
-codec-free implementations below.  Only the formats whose bitstreams
-genuinely require a codec library (for PNG only sub-byte depths;
-for JPEG the whole DCT pipeline) stay honestly gated behind a PIL
-fallback in ``decode_image`` (NotImplementedError when absent).
 """
 
 from __future__ import annotations
@@ -70,21 +59,13 @@ def extract_byte_features(df: DataFrame) -> DataFrame:
     for real feature extraction (e.g. channel histograms) with the same
     execution shape: Arrow batch in → NumPy kernel → small row out.
 
-    KERNEL SHAPE NOTE (r14, closing r13 VERDICT task 4): the r13
-    study's 48 MB/s-vs-367 MB/s spread against the audio kernel was
-    attributed to this loop's per-blob Python handling — that
-    attribution was WRONG.  Measured head-to-head (BENCH_SCALE
-    "Media-kernel throughput, re-measured"): this per-blob loop is
-    326 MB/s single-core in plain pandas (3× the audio kernel's 103 —
-    three masked reductions beat windowed DSP, as they should) and
-    ~580 MB/s aggregate in a clean Spark session; a "vectorized"
-    rewrite (concatenate the batch, per-blob counts via int64
-    cumulative sums) microbenches 10× SLOWER — at 1 MB blobs the loop
-    is already vector-dominated, and the rewrite's 3×8-byte-per-input-
-    byte cumsum temporaries are pure memory-bandwidth waste that
-    collapses under 32 concurrent workers.  The r13 study reading was
-    an ordering artifact (byte_features timed LAST, after the
-    1.6M-row per-window explode), fixed in the study, not here.
+    KERNEL SHAPE NOTE (BENCH_SCALE "Media-kernel throughput,
+    re-measured"): this per-blob loop runs 326 MB/s single-core in
+    plain pandas; a "vectorized" rewrite (concatenate the batch,
+    per-blob counts via int64 cumulative sums) microbenches 10×
+    SLOWER — at 1 MB blobs the loop is already vector-dominated, and
+    the rewrite's 3×8-byte-per-input-byte cumsum temporaries are pure
+    memory-bandwidth waste.
     """
     import numpy as np
     import pandas as pd
@@ -134,1238 +115,4 @@ def sample_frames(df: DataFrame, frame_bytes: int = 16, every_n: int = 2) -> Dat
 
     return df.select("asset_id", "content").mapInPandas(
         kernel, schema="asset_id long, frame_idx int, frame binary"
-    )
-
-
-def _g711_alaw_table():
-    """G.711 a-law → linear int16 expansion table (ITU-T G.711, the
-    public segmented-companding formula: XOR 0x55, 3-bit segment,
-    4-bit mantissa; sign bit SET means positive).  Peak magnitude is
-    ±32256 — a-law's full scale, not int16's."""
-    import numpy as np
-
-    a = np.arange(256, dtype=np.int32) ^ 0x55
-    t = (a & 0x0F) << 4
-    seg = (a & 0x70) >> 4
-    t = np.where(seg == 0, t + 8, (t + 0x108) << np.maximum(seg - 1, 0))
-    return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-def _g711_mulaw_table():
-    """G.711 µ-law → linear int16 expansion table (complement, 3-bit
-    exponent, 4-bit mantissa, bias 0x84; sign bit of the complemented
-    code SET means negative).  Peak magnitude is ±32124."""
-    import numpy as np
-
-    u = (~np.arange(256, dtype=np.int32)) & 0xFF
-    t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-    return np.where(u & 0x80, 0x84 - t, t - 0x84).astype(np.int16)
-
-
-def audio_pcm_features(
-    df: DataFrame,
-    window_samples: int = 400,
-    hop_samples: int = 160,
-    per_window: bool = False,
-    pcm_dtype: str = "<i2",
-    encoding: str = "pcm",
-) -> DataFrame:
-    """REAL (not stubbed) audio feature extraction over raw-PCM blobs
-    — windowed RMS energy, zero-crossing rate, and clipping analysis,
-    the silence/quality gate an audio-corpus curation pipeline runs
-    before anything expensive (the audio twin of ``text_quality``'s
-    cheap-signals-first posture).  Raw PCM needs NO codec library: the
-    blob is reinterpreted as SIGNED integer samples and every feature
-    is a vectorized NumPy pass — the one media family whose decode
-    step is honestly computable in this environment, so unlike
-    :func:`decode_image` there is nothing gated here.
-
-    ``encoding`` selects the sample decode (r14, VERDICT task 5 —
-    covering every WAV ``fmt`` code that needs no external codec,
-    exactly the ones :func:`sniff_av_container` classifies):
-
-    * ``"pcm"`` (default) — ``pcm_dtype`` samples (default
-      little-endian int16); full-scale and clip rails derive from the
-      dtype via ``np.iinfo``, and unsigned/float dtypes are refused —
-      convert upstream; a trailing partial sample is ignored.
-    * ``"pcm24"`` — 24-bit little-endian signed PCM (3-byte frames,
-      sign-extended to int32; rails ±2^23).
-    * ``"alaw"`` / ``"mulaw"`` — G.711 companded telephony audio,
-      expanded through the public ITU-T tables (pure 256-entry
-      lookup, one byte per sample; rails at the companding peaks
-      ±32256 / ±32124 — a G.711 stream saturates THERE, not at
-      int16 full scale).
-
-    Full scale (the [-1, 1] normalizer) and the clip rails always
-    come from the ENCODING's own peak, so ``clip_frac`` means "at
-    this encoding's saturation point" uniformly.
-
-    Defaults are the standard speech framing at 16 kHz: 25 ms windows
-    (400 samples), 10 ms hop (160).  Per asset (default) emits one
-    small summary row::
-
-        (asset_id, n_samples, n_windows,
-         mean_rms, max_rms,      -- per-window RMS of [-1, 1] floats
-         mean_zcr,               -- mean per-window zero-crossing rate
-         silence_frac,           -- windows with RMS < 1e-3
-         clip_frac)              -- samples at int16 full scale
-
-    ``per_window=True`` emits the exploded VAD-ish shape instead:
-    ``(asset_id, win_idx, rms, zcr)`` — one row per analysis window,
-    fanned out inside the worker, no shuffle.  Scale posture matches
-    the module's design rules: bytes never shuffle, features are tiny,
-    and the per-window sums come from ONE cumulative-sum pass over the
-    sample stream — O(n) memory per asset, never a windows × samples
-    temporary (2.5× overlapped windows over a 100 MB blob would
-    otherwise allocate a ~GB product array in the worker).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if window_samples <= 0 or hop_samples <= 0:
-        raise ValueError(
-            "audio_pcm_features: window_samples and hop_samples must be "
-            "positive"
-        )
-    if encoding == "pcm":
-        dt = np.dtype(pcm_dtype)
-        if dt.kind != "i":
-            # unsigned PCM has no sign bit (ZCR would read 0
-            # everywhere) and float PCM has no integer clip rails —
-            # refuse loudly rather than emit silently wrong features
-            raise ValueError(
-                "audio_pcm_features: pcm_dtype must be a SIGNED integer "
-                f"PCM dtype (got {pcm_dtype!r}); convert unsigned/float "
-                "PCM upstream"
-            )
-        info = np.iinfo(dt)
-        itemsize = dt.itemsize
-        full_scale = float(info.max)
-        clip_lo, clip_hi = int(info.min), int(info.max)
-
-        def decode(raw: bytes) -> "np.ndarray":
-            return np.frombuffer(raw, dtype=dt)
-
-    elif encoding == "pcm24":
-        itemsize = 3
-        full_scale = float(2**23 - 1)
-        clip_lo, clip_hi = -(2**23), 2**23 - 1
-
-        def decode(raw: bytes) -> "np.ndarray":
-            b = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3)
-            v = (
-                b[:, 0].astype(np.int32)
-                | (b[:, 1].astype(np.int32) << 8)
-                | (b[:, 2].astype(np.int32) << 16)
-            )
-            return (v ^ 0x800000) - 0x800000  # sign-extend bit 23
-
-    elif encoding in ("alaw", "mulaw"):
-        table = _g711_alaw_table() if encoding == "alaw" else _g711_mulaw_table()
-        itemsize = 1
-        full_scale = float(table.max())
-        clip_lo, clip_hi = int(table.min()), int(table.max())
-
-        def decode(raw: bytes) -> "np.ndarray":
-            return table[np.frombuffer(raw, dtype=np.uint8)]
-
-    else:
-        raise ValueError(
-            f"audio_pcm_features: unknown encoding {encoding!r} — "
-            "expected 'pcm', 'pcm24', 'alaw', or 'mulaw'"
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def _per_window_sums(series: "np.ndarray", width: int, n: int):
-            # per-window sums over hopped windows in O(len(series))
-            # memory via one cumulative sum — never a windows×samples
-            # temporary (the module's 100 TB design rule: a 100 MB
-            # blob with 2.5× window overlap would otherwise allocate
-            # a ~GB dense product array per asset)
-            cs = np.concatenate(([0.0], np.cumsum(series)))
-            starts = np.arange(n) * hop_samples
-            return cs[starts + width] - cs[starts]
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if per_window:
-                out_w = {"asset_id": [], "win_idx": [], "rms": [], "zcr": []}
-            else:
-                out_a = {
-                    "asset_id": [], "n_samples": [], "n_windows": [],
-                    "mean_rms": [], "max_rms": [], "mean_zcr": [],
-                    "silence_frac": [], "clip_frac": [],
-                }
-            for aid, blob in zip(pdf["asset_id"], pdf["content"]):
-                raw = blob if blob is not None else b""
-                n_bytes = len(raw) - len(raw) % itemsize
-                pcm = decode(raw[:n_bytes])
-                n = pcm.size
-                if n >= window_samples:
-                    n_win = 1 + (n - window_samples) // hop_samples
-                    x = pcm.astype(np.float64) / full_scale
-                    rms = np.sqrt(
-                        _per_window_sums(x * x, window_samples, n_win)
-                        / window_samples
-                    )
-                    if window_samples > 1:
-                        signs = np.signbit(pcm)
-                        crossings = (signs[1:] != signs[:-1]).astype(
-                            np.float64
-                        )
-                        zcr = _per_window_sums(
-                            crossings, window_samples - 1, n_win
-                        ) / (window_samples - 1)
-                    else:
-                        zcr = np.zeros(n_win)
-                else:
-                    rms = np.empty(0)
-                    zcr = np.empty(0)
-                if per_window:
-                    out_w["asset_id"].extend([aid] * rms.size)
-                    out_w["win_idx"].extend(range(rms.size))
-                    out_w["rms"].extend(float(v) for v in rms)
-                    out_w["zcr"].extend(float(v) for v in zcr)
-                else:
-                    clip = (
-                        int(((pcm == clip_lo) | (pcm == clip_hi)).sum())
-                        if n
-                        else 0
-                    )
-                    out_a["asset_id"].append(aid)
-                    out_a["n_samples"].append(n)
-                    out_a["n_windows"].append(int(rms.size))
-                    out_a["mean_rms"].append(
-                        float(rms.mean()) if rms.size else 0.0
-                    )
-                    out_a["max_rms"].append(
-                        float(rms.max()) if rms.size else 0.0
-                    )
-                    out_a["mean_zcr"].append(
-                        float(zcr.mean()) if zcr.size else 0.0
-                    )
-                    out_a["silence_frac"].append(
-                        float((rms < 1e-3).mean()) if rms.size else 1.0
-                    )
-                    out_a["clip_frac"].append(clip / n if n else 0.0)
-            yield pd.DataFrame(out_w if per_window else out_a)
-
-    if per_window:
-        schema = "asset_id long, win_idx int, rms double, zcr double"
-    else:
-        schema = (
-            "asset_id long, n_samples long, n_windows long, "
-            "mean_rms double, max_rms double, mean_zcr double, "
-            "silence_frac double, clip_frac double"
-        )
-    return df.select("asset_id", "content").mapInPandas(kernel, schema=schema)
-
-
-def sniff_image_meta(df: DataFrame) -> DataFrame:
-    """REAL (not stubbed) image metadata sniffing — format, width,
-    height straight from the container HEADERS, no codec library: the
-    dimension/format filter every image-corpus curation pass runs
-    BEFORE paying for any decode (drop icons, drop out-of-range aspect
-    ratios, route by format), on bytes alone.
-
-    Pure byte parsing per format magic:
-
-    * PNG — ``\\x89PNG\\r\\n\\x1a\\n``; width/height are the first two
-      big-endian u32 of the IHDR chunk at fixed offset 16.
-    * GIF — ``GIF87a``/``GIF89a``; width/height little-endian u16 at
-      offsets 6/8.
-    * BMP — ``BM``; width/height little-endian i32 at offsets 18/22
-      (height may be negative for top-down rows — absolute value).
-    * JPEG — ``\\xff\\xd8``; walk the marker segments to the first
-      SOF0-SOF15 frame header (skipping the non-frame DHT/DAC/RST/
-      standalone markers) and read height/width as big-endian u16 at
-      +5/+7.
-    * PGM/PPM — netpbm ``P5``/``P6``; width/height from the
-      whitespace-tokenized header (shared parser with
-      :func:`decode_image`'s codec-free raster path).
-
-    Emits ``(asset_id, format string, width int, height int)`` with
-    NULL dimensions (and format ``"unknown"``) for unrecognized or
-    truncated bytes — malformed blobs classify, they never throw.
-    Map-only ``mapInPandas``; only tiny header prefixes are touched,
-    the blob never shuffles.  Pixel DECODE remains
-    :func:`decode_image`'s honestly-gated stub — sniffing is the half
-    of the image story that needs no codec.
-    """
-    import struct
-
-    import pandas as pd
-
-    def _sniff(b: bytes | None) -> tuple[str, int | None, int | None]:
-        if not b or len(b) < 2:
-            return "unknown", None, None
-        if b[:8] == b"\x89PNG\r\n\x1a\n":
-            if len(b) >= 24 and b[12:16] == b"IHDR":
-                w, h = struct.unpack(">II", b[16:24])
-                return "png", w, h
-            return "png", None, None
-        if b[:6] in (b"GIF87a", b"GIF89a"):
-            if len(b) >= 10:
-                w, h = struct.unpack("<HH", b[6:10])
-                return "gif", w, h
-            return "gif", None, None
-        if b[:2] == b"BM":
-            if len(b) >= 26:
-                w, h = struct.unpack("<ii", b[18:26])
-                return "bmp", abs(w), abs(h)
-            return "bmp", None, None
-        if b[:2] == b"\xff\xd8":
-            # marker-segment walk, hardened against malformed streams
-            # (r13 ADVICE): STOP at SOS (0xDA) and EOI (0xD9) — what
-            # follows SOS is entropy-coded data, not segments, and a
-            # walker that keeps reading there interprets entropy bytes
-            # as segment lengths and can land on a garbage 0xC0-0xCF
-            # byte, reporting wrong dimensions instead of NULLs.  The
-            # stuffing escape (0xFF 0x00) and fill bytes (0xFF 0xFF)
-            # are handled explicitly — neither carries a length.
-            i = 2
-            while i + 2 <= len(b):
-                if b[i] != 0xFF:
-                    i += 1
-                    continue
-                marker = b[i + 1]
-                if marker == 0x00:  # byte-stuffing escape, not a marker
-                    i += 2
-                    continue
-                if marker == 0xFF:  # fill byte before a marker
-                    i += 1
-                    continue
-                if marker in (0xD9, 0xDA):
-                    # EOI / start-of-scan with no SOF seen: no frame
-                    # header precedes the scan data — dims unknown
-                    break
-                if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                    i += 2  # standalone markers carry no length
-                    continue
-                if (
-                    0xC0 <= marker <= 0xCF
-                    and marker not in (0xC4, 0xC8, 0xCC)  # DHT/JPG/DAC
-                ):
-                    if i + 9 <= len(b):
-                        h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                        return "jpeg", w, h
-                    break  # truncated frame header
-                if i + 4 > len(b):
-                    break
-                seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-                if seg_len < 2:  # malformed: lengths include themselves
-                    break
-                i += 2 + seg_len
-            return "jpeg", None, None
-        if b[:2] in (b"P5", b"P6"):
-            parsed = _netpbm_header(b)
-            fmt = "pgm" if b[:2] == b"P5" else "ppm"
-            if parsed is None:
-                return fmt, None, None
-            _mode, _nch, w, h, _maxval, _off = parsed
-            return fmt, w, h
-        return "unknown", None, None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {"asset_id": [], "format": [], "width": [], "height": []}
-            for aid, blob in zip(pdf["asset_id"], pdf["content"]):
-                # Arrow hands binary cells over as bytes already — the
-                # r13 bytes(blob) re-wrap copied every blob per row
-                # (r13 VERDICT task 4); bytearray/memoryview cells are
-                # the only case that still needs a materializing copy
-                fmt, w, h = _sniff(
-                    blob if isinstance(blob, bytes) or blob is None
-                    else bytes(blob)
-                )
-                out["asset_id"].append(aid)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
-
-    return df.select("asset_id", "content").mapInPandas(
-        kernel, schema="asset_id long, format string, width int, height int"
-    )
-
-
-def sniff_av_container(df: DataFrame) -> DataFrame:
-    """REAL (not stubbed) audio/video container sniffing — the routing
-    step before any media pipeline: classify the container from magic
-    bytes, and for WAV (RIFF/WAVE) parse the ``fmt `` chunk fully —
-    audio format code, channels, sample rate, bits per sample, and the
-    byte offset+length of the ``data`` payload.  For 16-bit integer
-    PCM WAV that makes the whole audio path codec-free END TO END:
-    ``sniff_av_container`` → slice the data payload →
-    :func:`audio_pcm_features` (whose dtype the sniffed
-    bits-per-sample selects).
-
-    Detected containers: ``wav`` (fully parsed), ``mp4`` (ISO BMFF —
-    r14: the box walk resolves the first sound track's
-    AudioSampleEntry, so ``detail`` is ``"<brand>/<codec fourcc>"``
-    with channels / sample rate / sample size filled; moov-less or
-    video-only files keep the brand-only detail.  The walk skips box
-    BODIES by their size fields, so a GB-scale leading ``mdat`` costs
-    one index jump), ``webm``/``mkv`` (r14: EBML varint walking
-    reaches the audio TrackEntry — ``detail``
-    ``"<doctype>/<CodecID>"`` with channels / sampling frequency /
-    bit depth; Clusters skip by size), ``ogg`` (r14: the first page's codec id
-    packet is parsed — ``detail`` ``"opus"``/``"vorbis"`` with
-    channels + sample rate from the public id-header layouts),
-    ``flac`` (r14: the mandatory leading STREAMINFO block yields
-    channels / sample rate / bits per sample), ``mp3`` (ID3 tag or
-    validated MPEG frame sync), ``avi`` (r14: the hdrl/strl RIFF walk
-    reaches the ``auds`` stream's WAVEFORMATEX — the same struct the
-    WAV path parses).  Unknown or truncated bytes classify as
-    ``unknown`` with NULL fields — never an exception.
-
-    Emits ``(asset_id, container, detail, channels, sample_rate,
-    bits_per_sample, data_offset, data_len)`` — the non-WAV rows carry
-    NULLs for the PCM fields.  Map-only ``mapInPandas``; only header
-    prefixes are inspected.
-    """
-    import struct
-
-    import pandas as pd
-
-    def _wav(b: bytes):
-        # walk RIFF chunks: fmt_ then data (chunks are word-aligned)
-        i = 12
-        fmt = None
-        data_off = data_len = None
-        while i + 8 <= len(b):
-            cid = b[i : i + 4]
-            (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
-            if cid == b"fmt " and i + 8 + 16 <= len(b):
-                fmt = struct.unpack("<HHIIHH", b[i + 8 : i + 24])
-            elif cid == b"data":
-                data_off, data_len = i + 8, clen
-            i += 8 + clen + (clen & 1)
-        if fmt is None:
-            return ("wav", None, None, None, None, None, None)
-        audio_fmt, ch, sr, _brate, _balign, bits = fmt
-        detail = {1: "pcm", 3: "float", 6: "alaw", 7: "mulaw"}.get(
-            audio_fmt, f"fmt{audio_fmt}"
-        )
-        return ("wav", detail, ch, sr, bits, data_off, data_len)
-
-    def _avi(b: bytes):
-        # RIFF/AVI nested LIST walk (public AVI 1.0 layout): LIST hdrl
-        # → LIST strl { strh (fccType at payload+0), strf } — for an
-        # 'auds' stream strf is a WAVEFORMATEX, the same struct the
-        # WAV fmt chunk carries, so the same fields fill.
-        def chunks(start, end):
-            i = start
-            while i + 8 <= end:
-                cid = b[i : i + 4]
-                (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
-                yield cid, i + 8, min(i + 8 + clen, end)
-                i += 8 + clen + (clen & 1)
-
-        detail, ch, sr, bits = None, None, None, None
-        for cid, s, e in chunks(12, len(b)):
-            if cid != b"LIST" or b[s : s + 4] != b"hdrl":
-                continue
-            for cid2, s2, e2 in chunks(s + 4, e):
-                if cid2 != b"LIST" or b[s2 : s2 + 4] != b"strl":
-                    continue
-                fcc_type = fcc_codec = None
-                for cid3, s3, e3 in chunks(s2 + 4, e2):
-                    if cid3 == b"strh" and e3 - s3 >= 8:
-                        fcc_type = b[s3 : s3 + 4]
-                        fcc_codec = b[s3 + 4 : s3 + 8]
-                    elif (
-                        cid3 == b"strf"
-                        and fcc_type == b"auds"
-                        and e3 - s3 >= 16
-                    ):
-                        _fmt, ch, sr, _br, _ba, bits = struct.unpack(
-                            "<HHIIHH", b[s3 : s3 + 16]
-                        )
-                        detail = (
-                            fcc_codec.decode("ascii", errors="replace")
-                            .strip("\x00 ") or None
-                        )
-                if ch is not None:
-                    break
-            break
-        # zeroed WAVEFORMATEX fields are placeholders, not metadata —
-        # normalize to NULL exactly like the mp4/EBML paths so
-        # cross-container `channels IS NOT NULL` filters mean one thing
-        return ("avi", detail, ch or None, sr or None, bits or None,
-                None, None)
-
-    def _boxes(b: bytes, start: int, end: int):
-        # ISO BMFF box walk (ISO 14496-12, public): u32be size + fourcc,
-        # size==1 → u64 largesize, size==0 → to end.  Walking skips a
-        # box's body by its size field, so a leading GB-scale mdat
-        # costs one index jump, not a read.
-        i = start
-        while i + 8 <= end:
-            size = int.from_bytes(b[i : i + 4], "big")
-            typ = b[i + 4 : i + 8]
-            hdr = 8
-            if size == 1:
-                if i + 16 > end:
-                    return
-                size = int.from_bytes(b[i + 8 : i + 16], "big")
-                hdr = 16
-            elif size == 0:
-                size = end - i
-            if size < hdr:
-                return  # malformed: stop walking, keep what we have
-            yield typ, i + hdr, min(i + size, end)
-            i += size
-
-    def _mp4(b: bytes):
-        # fill the audio columns from the first sound track's sample
-        # entry: trak → mdia(hdlr=='soun') → minf/stbl/stsd; the
-        # AudioSampleEntry layout puts channelcount/samplesize at
-        # +16/+18 and the 16.16-fixed samplerate at +24 of the entry
-        # payload.  detail = "<major brand>/<codec fourcc>".
-        brand = b[8:12].decode("ascii", errors="replace").strip()
-        detail, ch, sr, bits = brand, None, None, None
-        try:
-            def child(rng_s, rng_e, name):
-                for t, s, e in _boxes(b, rng_s, rng_e):
-                    if t == name:
-                        return s, e
-                return None
-
-            moov = child(0, len(b), b"moov")
-            if moov:
-                for t, s, e in _boxes(b, *moov):
-                    if t != b"trak":
-                        continue
-                    mdia = child(s, e, b"mdia")
-                    if not mdia:
-                        continue
-                    hdlr = child(*mdia, b"hdlr")
-                    if not hdlr or b[hdlr[0] + 8 : hdlr[0] + 12] != b"soun":
-                        continue
-                    minf = child(*mdia, b"minf")
-                    stbl = minf and child(*minf, b"stbl")
-                    stsd = stbl and child(*stbl, b"stsd")
-                    if not stsd:
-                        continue
-                    entry = next(_boxes(b, stsd[0] + 8, stsd[1]), None)
-                    if entry is None:
-                        continue
-                    fourcc, es, _ee = entry
-                    detail = f"{brand}/" + fourcc.decode(
-                        "ascii", errors="replace"
-                    ).strip()
-                    ch = int.from_bytes(b[es + 16 : es + 18], "big")
-                    bits = int.from_bytes(b[es + 18 : es + 20], "big")
-                    sr = int.from_bytes(b[es + 24 : es + 28], "big") >> 16
-                    break
-        except (IndexError, ValueError):
-            pass  # keep whatever parsed before the malformation
-        return ("mp4", detail, ch or None, sr or None, bits or None,
-                None, None)
-
-    def _ebml_vint(b: bytes, i: int):
-        """Read one EBML variable-width integer (RFC 8794, public):
-        returns ``(width, value, is_unknown, raw_bytes)`` or None on
-        malformed/truncated input.  IDs compare by raw bytes (marker
-        kept); sizes use the value (marker cleared); an all-ones value
-        means 'unknown size'."""
-        if i >= len(b) or b[i] == 0:
-            return None
-        n = 9 - b[i].bit_length()
-        if i + n > len(b):
-            return None
-        raw = b[i : i + n]
-        val = raw[0] & (0xFF >> n)
-        for byt in raw[1:]:
-            val = (val << 8) | byt
-        return n, val, val == (1 << (7 * n)) - 1, raw
-
-    def _ebml_children(b: bytes, start: int, end: int):
-        # yields (raw_id, payload_start, payload_end) for each child;
-        # an unknown-size element extends to the enclosing end and
-        # must be last (per RFC 8794) — the walk descends, not skips
-        i = start
-        while i < end:
-            rid = _ebml_vint(b, i)
-            if rid is None:
-                return
-            i += rid[0]
-            rsz = _ebml_vint(b, i)
-            if rsz is None:
-                return
-            i += rsz[0]
-            e = end if rsz[2] else min(i + rsz[1], end)
-            yield rid[3], i, e
-            if rsz[2]:
-                return
-            i = e
-
-    def _ebml(b: bytes):
-        head = b[: min(len(b), 64)]
-        doctype = (
-            "webm" if b"webm" in head
-            else "matroska" if b"matroska" in head
-            else None
-        )
-        container = "webm" if doctype == "webm" else "mkv"
-        detail, ch, sr, bits = doctype, None, None, None
-        # Segment → Tracks → TrackEntry(TrackType==2 audio) →
-        # {CodecID, Audio{SamplingFrequency, Channels, BitDepth}} —
-        # the public Matroska element IDs; Clusters are skipped by
-        # their size fields, so media payloads cost index jumps
-        try:
-            for rid, s, e in _ebml_children(b, 0, len(b)):
-                if rid != b"\x18\x53\x80\x67":  # Segment
-                    continue
-                for rid2, s2, e2 in _ebml_children(b, s, e):
-                    if rid2 != b"\x16\x54\xae\x6b":  # Tracks
-                        continue
-                    for rid3, s3, e3 in _ebml_children(b, s2, e2):
-                        if rid3 != b"\xae":  # TrackEntry
-                            continue
-                        ttype = codec = audio_rng = None
-                        for rid4, s4, e4 in _ebml_children(b, s3, e3):
-                            if rid4 == b"\x83":
-                                ttype = int.from_bytes(b[s4:e4], "big")
-                            elif rid4 == b"\x86":
-                                codec = (
-                                    b[s4:e4]
-                                    .decode("ascii", errors="replace")
-                                    .strip("\x00")
-                                )
-                            elif rid4 == b"\xe1":
-                                audio_rng = (s4, e4)
-                        if ttype != 2 or audio_rng is None:
-                            continue
-                        for rid5, s5, e5 in _ebml_children(b, *audio_rng):
-                            width = e5 - s5
-                            if rid5 == b"\xb5" and width in (4, 8):
-                                (f,) = struct.unpack(
-                                    ">f" if width == 4 else ">d", b[s5:e5]
-                                )
-                                sr = int(f)
-                            elif rid5 == b"\x9f":
-                                ch = int.from_bytes(b[s5:e5], "big")
-                            elif rid5 == b"\x62\x64":
-                                bits = int.from_bytes(b[s5:e5], "big")
-                        if codec:
-                            detail = f"{doctype or 'mkv'}/{codec}"
-                        return (container, detail, ch or None, sr or None,
-                                bits or None, None, None)
-        except (IndexError, ValueError, struct.error):
-            pass  # malformed: keep the head-scan classification
-        return (container, detail, ch or None, sr or None, bits or None,
-                None, None)
-
-    def _sniff(b: bytes | None):
-        none5 = (None, None, None, None, None)
-        if not b or len(b) < 4:
-            return ("unknown", None) + none5
-        if b[:4] == b"RIFF" and len(b) >= 12:
-            if b[8:12] == b"WAVE":
-                w = _wav(b)
-                return (w[0], w[1], w[2], w[3], w[4], w[5], w[6])
-            if b[8:12] == b"AVI ":
-                return _avi(b)
-        if len(b) >= 12 and b[4:8] == b"ftyp":
-            return _mp4(b)
-        if b[:4] == b"\x1a\x45\xdf\xa3":
-            return _ebml(b)
-        if b[:4] == b"OggS":
-            # identify the codec from the FIRST page's payload (r14):
-            # page header is 27 bytes + segment table, then the codec
-            # id packet — "OpusHead" (channels u8, pre-skip u16, input
-            # rate u32le) or "\\x01vorbis" (version u32, channels u8,
-            # rate u32le), both public id-header layouts
-            if len(b) >= 28:
-                nsegs = b[26]
-                p = 27 + nsegs
-                if b[p : p + 8] == b"OpusHead" and len(b) >= p + 16:
-                    ch = b[p + 9]
-                    (sr,) = struct.unpack("<I", b[p + 12 : p + 16])
-                    return ("ogg", "opus", ch, sr, None, None, None)
-                if b[p : p + 7] == b"\x01vorbis" and len(b) >= p + 16:
-                    ch = b[p + 11]
-                    (sr,) = struct.unpack("<I", b[p + 12 : p + 16])
-                    return ("ogg", "vorbis", ch, sr, None, None, None)
-            return ("ogg", None) + none5
-        if b[:4] == b"fLaC":
-            # STREAMINFO is mandatory and first (r14): metadata block
-            # header (type 0) then 34 bytes; sample rate (20 bits),
-            # channels-1 (3), bits-1 (5) packed big-endian at +10
-            if len(b) >= 8 + 18 and (b[4] & 0x7F) == 0:
-                packed = int.from_bytes(b[8 + 10 : 8 + 18], "big")
-                sr = packed >> 44
-                ch = ((packed >> 41) & 0x07) + 1
-                bits = ((packed >> 36) & 0x1F) + 1
-                if sr:  # 0 is invalid per spec — treat as unparsed
-                    return ("flac", "streaminfo", ch, sr, bits, None, None)
-            return ("flac", None) + none5
-        if b[:3] == b"ID3":
-            return ("mp3", "id3") + none5
-        if (
-            # MPEG frame sync, VALIDATED (r13 ADVICE): sync alone
-            # (0xFF + top-3 bits) fires on ~0.2 % of uniform binary —
-            # and this check runs AFTER the magic-prefix formats, so
-            # arbitrary high-byte blobs classified as "mp3".  Checking
-            # the version/layer/bitrate/samplerate fields against
-            # their reserved/invalid encodings cuts the rate ~2.5×
-            # and rejects exactly the headers no MPEG decoder would
-            # accept either.
-            len(b) >= 3
-            and b[0] == 0xFF
-            and (b[1] & 0xE0) == 0xE0
-            and (b[1] >> 3) & 0x03 != 0x01  # version 01 is reserved
-            and (b[1] >> 1) & 0x03 != 0x00  # layer 00 is reserved
-            and (b[2] >> 4) != 0x0F  # bitrate index 1111 is invalid
-            and (b[2] >> 2) & 0x03 != 0x03  # sample-rate 11 reserved
-        ):
-            return ("mp3", "framesync") + none5
-        return ("unknown", None) + none5
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "asset_id", "container", "detail", "channels", "sample_rate",
-            "bits_per_sample", "data_offset", "data_len",
-        ]
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {c: [] for c in cols}
-            for aid, blob in zip(pdf["asset_id"], pdf["content"]):
-                # no per-row bytes() re-wrap (r13 VERDICT task 4) —
-                # Arrow already delivers bytes; only exotic cell types
-                # pay a materializing copy
-                vals = _sniff(
-                    blob if isinstance(blob, bytes) or blob is None
-                    else bytes(blob)
-                )
-                out["asset_id"].append(aid)
-                for c, v in zip(cols[1:], vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select("asset_id", "content").mapInPandas(
-        kernel,
-        schema=(
-            "asset_id long, container string, detail string, "
-            "channels int, sample_rate int, bits_per_sample int, "
-            "data_offset long, data_len long"
-        ),
-    )
-
-
-def _png_unfilter(raw: bytes, width: int, height: int, bpp: int) -> bytes:
-    """Reverse PNG scanline filtering (PNG spec §9, public): each
-    scanline is one filter-type byte + ``width·bpp`` filtered bytes;
-    types None/Sub/Up/Average/Paeth reconstruct against the left /
-    above / above-left RECONSTRUCTED bytes, all arithmetic mod 256.
-    Sub is a per-lane cumulative sum and Up a vector add (both
-    vectorized); Average and Paeth carry a true left-dependency, so
-    they reconstruct pixel-sequentially within the row — correctness
-    first, and rows are independent of everything but their
-    predecessor, so memory stays O(2 rows)."""
-    import numpy as np
-
-    stride = width * bpp
-    if len(raw) != (stride + 1) * height:
-        raise ValueError(
-            f"PNG decode: decompressed stream is {len(raw)} bytes, "
-            f"expected {(stride + 1) * height} for {width}x{height} "
-            f"@{bpp}bpp — corrupt IDAT or unsupported layout"
-        )
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
-    prev = np.zeros(stride, dtype=np.uint8)
-    out = np.empty((height, stride), dtype=np.uint8)
-    for y in range(height):
-        ftype = int(arr[y, 0])
-        line = arr[y, 1:].copy()
-        if ftype == 0:  # None
-            recon = line
-        elif ftype == 1:  # Sub: per-lane cumulative sum mod 256
-            recon = line.reshape(width, bpp).cumsum(axis=0, dtype=np.uint64)
-            recon = (recon % 256).astype(np.uint8).reshape(stride)
-        elif ftype == 2:  # Up
-            recon = line + prev  # uint8 wraps mod 256
-        elif ftype == 3:  # Average
-            recon = line
-            for i in range(stride):
-                left = int(recon[i - bpp]) if i >= bpp else 0
-                recon[i] = (int(line[i]) + (left + int(prev[i])) // 2) % 256
-        elif ftype == 4:  # Paeth
-            recon = line
-            for i in range(stride):
-                a = int(recon[i - bpp]) if i >= bpp else 0
-                b = int(prev[i])
-                c = int(prev[i - bpp]) if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                recon[i] = (int(line[i]) + pred) % 256
-        else:
-            raise ValueError(f"PNG decode: unknown filter type {ftype}")
-        out[y] = recon
-        prev = out[y]
-    return out.tobytes()
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytes:
-    """GIF-variant LZW decompression (public algorithm, GIF89a spec
-    appendix): variable-width codes read LSB-first, CLEAR resets the
-    dictionary, widths grow to 12 bits as the dictionary fills.
-    Sequential by nature (each code extends the dictionary the next
-    code may reference) — this is honest pure-Python throughput,
-    measured ~8 MB/s/core on run-structured 4-bit indices; see
-    :func:`decode_image`'s scale note."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    code_size = min_code_size + 1
-    out = bytearray()
-    prev = None
-    acc = bits = pos = 0
-    while len(out) < n_pixels:
-        while bits < code_size:
-            if pos >= len(data):
-                raise ValueError("GIF decode: LZW stream truncated")
-            acc |= data[pos] << bits
-            bits += 8
-            pos += 1
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        bits -= code_size
-        if code == clear:
-            table = list(base)
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if code < len(table) and (code < clear or code > end):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # the KwKwK special case
-        else:
-            raise ValueError(f"GIF decode: invalid LZW code {code}")
-        out += entry
-        if prev is not None:
-            table.append(prev + entry[:1])
-            # widen when the NEXT code would not fit (12-bit ceiling;
-            # at 4096 entries the encoder must emit CLEAR)
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        prev = entry
-    return bytes(out[:n_pixels])
-
-
-def _gif_decode(b: bytes):
-    """Single-frame GIF87a/89a decode — logical-screen + palette
-    parsing, extension skipping (honoring the GCE transparency flag →
-    RGBA, mirroring PNG's tRNS), local-color-table override, Adam-less
-    GIF interlace (row permutation), LZW via :func:`_gif_lzw_decode`.
-    Returns the FIRST image frame at the frame's own geometry (the
-    training-data semantics: one image per blob; animation frames
-    beyond the first are not composited).  Returns None on malformed
-    structure."""
-    import struct
-
-    import numpy as np
-
-    try:
-        packed = b[10]
-        i = 13
-        gct = None
-        if packed & 0x80:
-            n = 2 << (packed & 0x07)
-            gct = np.frombuffer(b[i : i + 3 * n], dtype=np.uint8).reshape(-1, 3)
-            i += 3 * n
-        transparent = None
-        while i < len(b):
-            block = b[i]
-            if block == 0x21:  # extension: label + sub-blocks
-                label = b[i + 1]
-                i += 2
-                if label == 0xF9 and b[i] == 4:  # graphic control ext
-                    if b[i + 1] & 0x01:
-                        transparent = b[i + 4]
-                while b[i]:  # sub-blocks until the zero terminator
-                    i += 1 + b[i]
-                i += 1
-            elif block == 0x2C:  # image descriptor
-                _left, _top, w, h = struct.unpack("<HHHH", b[i + 1 : i + 9])
-                ipacked = b[i + 9]
-                i += 10
-                pal = gct
-                if ipacked & 0x80:  # local color table overrides
-                    n = 2 << (ipacked & 0x07)
-                    pal = np.frombuffer(
-                        b[i : i + 3 * n], dtype=np.uint8
-                    ).reshape(-1, 3)
-                    i += 3 * n
-                if pal is None or w <= 0 or h <= 0:
-                    return None
-                min_code_size = b[i]
-                i += 1
-                lzw = bytearray()
-                while b[i]:
-                    lzw += b[i + 1 : i + 1 + b[i]]
-                    i += 1 + b[i]
-                idx = np.frombuffer(
-                    _gif_lzw_decode(bytes(lzw), min_code_size, w * h),
-                    dtype=np.uint8,
-                ).reshape(h, w)
-                if ipacked & 0x40:  # interlaced: de-permute rows
-                    order = np.concatenate([
-                        np.arange(0, h, 8), np.arange(4, h, 8),
-                        np.arange(2, h, 4), np.arange(1, h, 2),
-                    ])
-                    rows = np.empty_like(idx)
-                    rows[order] = idx
-                    idx = rows
-                if int(idx.max(initial=0)) >= pal.shape[0]:
-                    return None  # index past palette end: corrupt
-                if transparent is not None:
-                    alpha = np.full(pal.shape[0], 255, dtype=np.uint8)
-                    if transparent < pal.shape[0]:
-                        alpha[transparent] = 0
-                    pal4 = np.concatenate([pal, alpha[:, None]], axis=1)
-                    return w, h, "RGBA", pal4[idx].tobytes()
-                return w, h, "RGB", pal[idx].tobytes()
-            elif block == 0x3B:  # trailer before any image frame
-                return None
-            else:
-                return None
-        return None
-    except (IndexError, ValueError, struct.error):
-        return None
-
-
-def _decode_codec_free(b: bytes):
-    """Exception-safe wrapper around :func:`_decode_codec_free_inner`:
-    a truncated or corrupt blob of a codec-free format returns None
-    (so the PIL fallback gets its chance and a PIL-less environment
-    raises ONE clear NotImplementedError) instead of crashing the
-    task with a struct/zlib/ValueError from deep inside a parser —
-    the same never-throw posture GIF's decoder already had."""
-    import struct
-    import zlib
-
-    try:
-        return _decode_codec_free_inner(b)
-    except (struct.error, zlib.error, ValueError, IndexError):
-        return None
-
-
-def _decode_codec_free_inner(b: bytes):
-    """Pixel decode for the formats that need NO codec library —
-    returns ``(width, height, mode, pixels)`` or None when the format
-    genuinely requires an external codec (JPEG's DCT).
-
-    * PNG — stdlib ``zlib`` inflates the IDAT stream; scanline
-      unfiltering is pure arithmetic (:func:`_png_unfilter`).  8-bit,
-      color types 0/2/3/4/6 (gray / RGB / palette / gray+alpha /
-      RGBA; palette expands through one vectorized PLTE lookup, tRNS
-      promotes it to RGBA), Adam7 interlace included (each pass
-      unfilters as its own sub-image and scatters onto the output
-      lattice), 16-bit depths included (big-endian samples as stored,
-      mode suffixed "16").  Sub-byte depths return None — PIL
-      territory.
-    * BMP — uncompressed (BI_RGB) 24/32-bit: raw BGR(A) rows, 4-byte
-      padded, bottom-up (or top-down when height < 0); emitted as
-      RGB/RGBA to match PIL's channel order.
-    * GIF — single-frame GIF87a/89a via pure-Python LZW
-      (:func:`_gif_decode`): palette/transparency/interlace handled;
-      real but SEQUENTIAL — see the scale note in
-      :func:`decode_image`.
-    * PGM/PPM (netpbm P5/P6, maxval ≤ 255) — whitespace-separated
-      header then raw bytes.
-    """
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        if b[12:16] != b"IHDR":
-            return None
-        w, h, depth, ctype, comp, filt, interlace = struct.unpack(
-            ">IIBBBBB", b[16:29]
-        )
-        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-        if (
-            channels is None
-            or depth not in (8, 16)
-            or (ctype == 3 and depth != 8)  # sub-byte palette: PIL
-            or comp
-            or filt
-            or interlace > 1
-        ):
-            return None  # sub-byte depths: PIL territory
-        # PNG filtering is BYTE-oriented with the pixel width measured
-        # in bytes (spec: "bpp is the number of bytes per complete
-        # pixel"), so 16-bit images ride the same unfilter kernel with
-        # bpp doubled; samples stay big-endian as stored (mode gains a
-        # "16" suffix — callers needing host-endian ints reinterpret
-        # with >u2, which is a view, not a conversion pass)
-        bpp = channels * (depth // 8)
-        idat, plte, trns = bytearray(), None, None
-        i = 8
-        while i + 8 <= len(b):
-            (clen,) = struct.unpack(">I", b[i : i + 4])
-            cid = b[i + 4 : i + 8]
-            if cid == b"IDAT":
-                idat += b[i + 8 : i + 8 + clen]
-            elif cid == b"PLTE":
-                plte = b[i + 8 : i + 8 + clen]
-            elif cid == b"tRNS":
-                trns = b[i + 8 : i + 8 + clen]
-            elif cid == b"IEND":
-                break
-            i += 12 + clen  # len + id + data + crc
-        raw = zlib.decompress(bytes(idat))
-        if interlace == 1:
-            # Adam7 (PNG spec §8.2, public): seven passes, each a
-            # sub-image with its OWN scanline filtering — unfilter
-            # each pass with the same kernel and scatter it onto the
-            # output grid at the pass's (start, step) lattice
-            out_img = np.zeros((h, w, bpp), dtype=np.uint8)
-            off = 0
-            for xs, ys, xstep, ystep in (
-                (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-            ):
-                pw = (w - xs + xstep - 1) // xstep
-                ph = (h - ys + ystep - 1) // ystep
-                if pw <= 0 or ph <= 0:
-                    continue  # empty pass emits no scanlines
-                nbytes = ph * (1 + pw * bpp)
-                sub = _png_unfilter(raw[off : off + nbytes], pw, ph, bpp)
-                off += nbytes
-                out_img[ys::ystep, xs::xstep] = np.frombuffer(
-                    sub, dtype=np.uint8
-                ).reshape(ph, pw, bpp)
-            pixels = out_img.tobytes()
-        else:
-            pixels = _png_unfilter(raw, w, h, bpp)
-        if ctype == 3:
-            # indexed color: the unfiltered bytes are palette indices;
-            # expansion is one vectorized table lookup (with tRNS the
-            # palette gains an alpha lane — RGBA out)
-            if plte is None or len(plte) % 3:
-                return None  # PLTE is mandatory for color type 3
-            pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-            idx = np.frombuffer(pixels, dtype=np.uint8)
-            if int(idx.max(initial=0)) >= pal.shape[0]:
-                return None  # index past palette end: corrupt
-            if trns is not None:
-                alpha = np.full(pal.shape[0], 255, dtype=np.uint8)
-                alpha[: len(trns)] = np.frombuffer(trns, dtype=np.uint8)
-                pal = np.concatenate([pal, alpha[:, None]], axis=1)
-                return w, h, "RGBA", pal[idx].tobytes()
-            return w, h, "RGB", pal[idx].tobytes()
-        mode = {0: "L", 2: "RGB", 4: "LA", 6: "RGBA"}[ctype]
-        if depth == 16:
-            mode += "16"  # big-endian u16 samples, as stored
-        return w, h, mode, pixels
-
-    if b[:2] == b"BM" and len(b) >= 54:
-        (data_off,) = struct.unpack("<I", b[10:14])
-        w, h_signed = struct.unpack("<ii", b[18:26])
-        planes, bits = struct.unpack("<HH", b[26:30])
-        (compression,) = struct.unpack("<I", b[30:34])
-        if compression != 0 or bits not in (24, 32) or w <= 0:
-            return None  # RLE/bitfield BMPs need a codec path
-        h = abs(h_signed)
-        nch = bits // 8
-        row_bytes = (w * nch + 3) & ~3  # rows pad to 4 bytes
-        if len(b) < data_off + row_bytes * h:
-            return None
-        rows = np.frombuffer(
-            b, dtype=np.uint8, count=row_bytes * h, offset=data_off
-        ).reshape(h, row_bytes)[:, : w * nch].reshape(h, w, nch)
-        if h_signed > 0:
-            rows = rows[::-1]  # bottom-up storage
-        rows = rows[:, :, [2, 1, 0] + ([3] if nch == 4 else [])]  # BGR(A)→RGB(A)
-        return w, h, ("RGBA" if nch == 4 else "RGB"), rows.tobytes()
-
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return _gif_decode(b)
-
-    if b[:2] in (b"P5", b"P6"):
-        parsed = _netpbm_header(b)
-        if parsed is None:
-            return None
-        mode, nch, w, h, maxval, i = parsed
-        if maxval > 255:
-            return None  # 16-bit netpbm not supported
-        if len(b) < i + w * h * nch:
-            return None
-        return w, h, mode, b[i : i + w * h * nch]
-
-    return None
-
-
-def _netpbm_header(b: bytes):
-    """Parse a netpbm P5/P6 header — magic, width, height, maxval as
-    whitespace-separated tokens with ``#`` comments running to end of
-    line, then EXACTLY one whitespace byte before the raster.  Returns
-    ``(mode, channels, width, height, maxval, raster_offset)`` or
-    None on malformed input.  Shared by the sniffing and decode paths
-    so they cannot disagree on what counts as a netpbm blob."""
-    mode = "L" if b[:2] == b"P5" else "RGB"
-    nch = 1 if mode == "L" else 3
-    tokens, i = [], 2
-    while len(tokens) < 3 and i < len(b):
-        c = b[i : i + 1]
-        if c == b"#":
-            while i < len(b) and b[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        else:
-            j = i
-            while j < len(b) and not b[j : j + 1].isspace():
-                j += 1
-            tokens.append(b[i:j])
-            i = j
-    if len(tokens) < 3:
-        return None
-    try:
-        w, h, maxval = (int(t) for t in tokens)
-    except ValueError:
-        return None
-    if w <= 0 or h <= 0 or maxval <= 0:
-        return None
-    return mode, nch, w, h, maxval, i + 1
-
-
-def _resize_nearest(
-    pixels: bytes, w: int, h: int, nch: int, new_w: int, new_h: int
-) -> bytes:
-    """Nearest-neighbor resize, pure NumPy index selection — the
-    deterministic resample used for EVERY decode path (a PIL fallback
-    decode must produce the same bytes as the codec-free path for the
-    same image, so the resample cannot depend on which decoder ran)."""
-    import numpy as np
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, nch)
-    ys = (np.arange(new_h) * h) // new_h
-    xs = (np.arange(new_w) * w) // new_w
-    return arr[ys][:, xs].tobytes()
-
-
-def decode_image(df: DataFrame, resize: tuple[int, int] | None = None) -> DataFrame:
-    """Image decode (+ optional nearest-neighbor resize) to
-    (asset_id, width, height, mode, pixels binary).
-
-    REAL, codec-free (r14), for the formats whose pixel layout is pure
-    arithmetic + stdlib: PNG (8-bit gray/RGB/palette/LA/RGBA,
-    Adam7 and 16-bit depths included — ``zlib`` inflate + scanline
-    unfiltering + PLTE expansion), uncompressed 24/32-bit BMP,
-    single-frame GIF (pure-Python LZW), and netpbm PGM/PPM — see
-    :func:`_decode_codec_free`.  Only formats
-    that genuinely need a codec library (JPEG; sub-byte-depth PNG)
-    fall back to PIL when it
-    is importable and raise ``NotImplementedError`` otherwise — the
-    honestly-gated remainder of MEDIA-DECODE.  JPEG is gated on
-    PRINCIPLE, not effort: ISO 10918 fixes the bitstream but allows
-    implementation-dependent IDCT rounding, so two conforming
-    decoders legitimately disagree per-pixel — a from-scratch DCT
-    path here would break this function's decoder-independent
-    output-bytes contract the moment an environment with libjpeg ran
-    beside it.  ``resize`` always uses
-    the same NumPy nearest-neighbor resample regardless of which
-    decoder produced the pixels, so output bytes do not depend on the
-    environment's codec availability.
-
-    SCALE NOTE: the BMP/netpbm paths and PNG filters None/Sub/Up are
-    NumPy-vectorized and run at the Arrow transfer ceiling
-    (BENCH_SCALE "Media-kernel throughput": PNG ~21 MB/s/core
-    end-to-end on filter-0 rows — the number that study measures).
-    PNG's Average/Paeth filters carry a true left-byte dependency and
-    reconstruct per-byte in Python (:func:`_png_unfilter`), so
-    photographic PNGs whose encoders chose them decode in the same
-    ~8 MB/s/core class as GIF's LZW — route heavy Average/Paeth
-    corpora to a codec-backed executor image just like GIF.  GIF's LZW is
-    inherently sequential (each code extends the dictionary the next
-    code may reference) and runs as a per-code Python loop — measured
-    ~8 MB/s/core of decoded indices (~50× below the vectorized
-    paths).  That is an honest property of the FORMAT, not the
-    engine: a GIF-heavy 100 TB corpus should either route GIFs to a
-    codec-backed executor image (PIL/turbojpeg wheels) or transcode
-    once at ingest; the map-only Spark shape is identical either way.
-    """
-    import pandas as pd
-
-    try:  # gate the optional dependency at plan-build time
-        from PIL import Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        if have_pil:
-            from PIL import Image
-
-        for pdf in batches:
-            out = {"asset_id": [], "width": [], "height": [], "mode": [], "pixels": []}
-            for aid, blob in zip(pdf["asset_id"], pdf["content"]):
-                if blob is None:
-                    # NULL content classifies as NULL row, same
-                    # never-throw posture as the sniffers
-                    out["asset_id"].append(aid)
-                    for c in ("width", "height", "mode", "pixels"):
-                        out[c].append(None)
-                    continue
-                raw = blob if isinstance(blob, bytes) else bytes(blob)
-                got = _decode_codec_free(raw)
-                if got is not None:
-                    w, h, mode, pixels = got
-                elif have_pil:
-                    img = Image.open(io.BytesIO(raw))
-                    w, h, mode, pixels = (
-                        img.width, img.height, img.mode, img.tobytes()
-                    )
-                else:
-                    raise NotImplementedError(
-                        "decode_image: blob is not (or failed to parse "
-                        "as) one of the codec-free formats — PNG "
-                        "8/16-bit incl. palette and Adam7, uncompressed "
-                        "24/32-bit BMP, single-frame GIF, PGM/PPM — and "
-                        "no imaging library is present; plug in "
-                        "PIL/turbojpeg for JPEG and sub-byte-depth PNG"
-                    )
-                if resize is not None:
-                    if not (w and h) or len(pixels) % (w * h):
-                        # packed PIL modes (e.g. "1": 8 px/byte) have
-                        # no rectangular byte lattice for the
-                        # decoder-independent nearest resample
-                        raise ValueError(
-                            f"decode_image: resize unsupported for "
-                            f"mode {mode!r} — tobytes() is not "
-                            "width*height*channels"
-                        )
-                    nch = len(pixels) // (w * h)
-                    pixels = _resize_nearest(
-                        pixels, w, h, nch, resize[0], resize[1]
-                    )
-                    w, h = resize
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mode"].append(mode)
-                out["pixels"].append(pixels)
-            yield pd.DataFrame(out)
-
-    return df.select("asset_id", "content").mapInPandas(
-        kernel, schema="asset_id long, width int, height int, mode string, pixels binary"
     )

@@ -1,51 +1,9 @@
-from vectorsearch_scylla_spark.operators.window_pivot import (
-    tumbling_window_snapshots,
-    pivot_fixed_metrics,
-)
-from vectorsearch_scylla_spark.operators.profiles import (
-    build_profiles,
-    embedding_centroid,
-    metric_stats,
-)
 from vectorsearch_scylla_spark.operators.knn import (
-    cosine_pairs_blocked,
-    lsh_topk_similarity_join,
     topk_similarity_join,
     topk_similarity_join_blocked,
 )
-from vectorsearch_scylla_spark.operators.detection import (
-    anomaly_score,
-    consensus_vote,
-    path1_vote,
-    path2_similarity,
-    path3_novelty,
-    threshold_violations,
-    zscore_outliers,
-)
-from vectorsearch_scylla_spark.operators.serving import (
-    asof_bucket_join,
-    latest_per_key,
-    time_range_history,
-)
 
 __all__ = [
-    "tumbling_window_snapshots",
-    "pivot_fixed_metrics",
-    "build_profiles",
-    "embedding_centroid",
-    "metric_stats",
     "topk_similarity_join",
     "topk_similarity_join_blocked",
-    "cosine_pairs_blocked",
-    "lsh_topk_similarity_join",
-    "threshold_violations",
-    "zscore_outliers",
-    "path1_vote",
-    "path2_similarity",
-    "path3_novelty",
-    "consensus_vote",
-    "anomaly_score",
-    "latest_per_key",
-    "time_range_history",
-    "asof_bucket_join",
 ]

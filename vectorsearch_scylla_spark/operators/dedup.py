@@ -586,54 +586,6 @@ def _recover_interrupted_compaction(artifact_path: str) -> None:
         shutil.rmtree(staging)  # incomplete write from a crashed run
 
 
-def roll_forward_signatures_bucketed(
-    inc_sigs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    n_buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """:func:`roll_forward_signatures` with the artifact kept as a
-    BUCKETED table instead of a plain parquet dir — the layout the r9
-    storage study priced (BENCH_SCALE.md "Bucketed signature
-    artifact"): the artifact is read every day by ``id_col``
-    equi-joins (the Hamming re-attach inside the near-dup verifiers,
-    the incremental probes' payload joins), and a ``bucketBy(n_buckets,
-    id_col)`` table's scan satisfies those joins' clustering
-    requirement by itself — the corpus-sized artifact NEVER shuffles
-    for them (measured: 2.8× less shuffle written / 4.6× less read, 1
-    Exchange vs 2 per re-attach; wall a wash at fixture scale because
-    the eliminated term is the one that grows with the corpus).
-
-    First call creates the table (``path`` pins an external location);
-    subsequent calls append — Spark itself refuses an append whose
-    bucketing spec differs from the table's, and the same (name, type)
-    schema gate as the parquet twin rejects near-miss increments
-    before any write.  Readers use ``spark.table(table)``; pass that
-    frame as ``against_sigs`` exactly like the parquet artifact.
-
-    Trade to know: every append writes up to ``n_buckets`` files per
-    task (the bucketed-write fan-out), so file-count debt accrues
-    FASTER than plain appends — run :func:`compact_bucketed_artifact`
-    in the same maintenance window the daily append owns once the
-    artifact reaches ~16 files per bucket (the measured knee — see
-    the cadence policy in that function's docstring and
-    BENCH_SCALE.md "Signature-artifact compaction cadence").  The parquet artifact + ``compact_signature_
-    artifact`` remains the default; this layout is the opt-in for
-    deployments whose daily cost is dominated by artifact-side
-    shuffle in the id joins.
-    """
-    spark = inc_sigs.sparkSession
-    writer = inc_sigs.write.bucketBy(int(n_buckets), id_col).sortBy(id_col)
-    if path is not None:
-        writer = writer.option("path", path)
-    if not spark.catalog.tableExists(table):
-        writer.saveAsTable(table)
-        return
-    _check_artifact_schema(spark.table(table), inc_sigs, f"the table {table}")
-    writer.mode("append").saveAsTable(table)
-
-
 def fold_streaming_epochs(
     spark,
     sig_root: str,
@@ -1018,135 +970,3 @@ def compact_signature_artifact(
     )
 
 
-def compact_bucketed_artifact(spark, table: str) -> int:
-    """Small-files maintenance for the BUCKETED signature artifact —
-    :func:`compact_signature_artifact`'s twin for the
-    :func:`roll_forward_signatures_bucketed` layout, closing the
-    asymmetry the r10 review named: the opt-in layout for the biggest
-    deployments (bucketed ⇒ the corpus-sized artifact never shuffles
-    for its daily id-equi-joins) accrued up to ``n_buckets`` files PER
-    APPEND with only a documented manual rewrite behind it.
-
-    Mechanics — ONE data rewrite + two renames, same crash story as
-    the parquet twin: the bucket spec (bucket count, bucket columns,
-    sort columns, location) is read from the catalog so the caller
-    cannot mis-specify it; the table is rewritten through a STAGING
-    table with the identical spec at ``<location>.compact.staging``;
-    then the live location dir is swapped in with the deterministic
-    two-rename dance and the staging table's metadata is dropped.  The
-    swap moves FILES ONLY — bucketed part-file names carry their
-    bucket id (``..._00003.c000``), which is how Spark maps files to
-    buckets on read, so a renamed file keeps its bucket identity and
-    the table's no-Exchange join property survives (pinned by
-    ``tests/test_operators.py::test_compact_bucketed_artifact``).
-
-    The rewrite lands EXACTLY one file per bucket:
-    ``repartition(n_buckets, bucket_cols)`` uses the same
-    murmur3-hash partitioning as the bucketed write itself, so each
-    task holds exactly one bucket's rows (this alignment is why
-    bucketed joins skip the Exchange in the first place) and the
-    bucketed writer emits one file per (task, bucket) pair it sees.
-    At 100 TB the rewrite is one full scan + one full write — run it
-    in the same maintenance window the daily append owns, amortized
-    over however many appends it took for file counts to hurt.
-
-    WRITER-CRASH RECOVERY (shared ``_recover_interrupted_compaction``
-    on the location dir, plus a staging-table metadata drop on entry):
-
-    * crash mid-write → stale staging dir + orphan staging table; both
-      are dropped on the next entry;
-    * crash between the renames → live dir missing, full artifact in
-      ``.compact.old``; renamed back on the next entry;
-    * crash after the promote → stale ``.compact.old`` deleted.
-
-    Rows are preserved exactly and the table keeps its location and
-    spec (managed or external alike — the swap never touches
-    metadata for ``table`` itself).  Returns the new file count.
-
-    CADENCE POLICY (measured, BENCH_SCALE.md "Signature-artifact
-    compaction cadence"): run this when the artifact reaches **~16
-    files per bucket**.  The 64-day chain study shows the daily
-    re-attach join flat within noise through 8 files/bucket, then a
-    persistent ~2× step from 16 on (same-data endpoint check: 2.4×
-    at 64 files/bucket); one rewrite costs ~4 floor-rate re-attach
-    days and pays back ~0.6 floor-units/day past the knee — so
-    fortnightly for daily-append deployments, and at the 25 B-doc
-    projection (4096 buckets) the cadence also bounds the artifact
-    at ~65 k files.
-    """
-    import glob
-    import os
-    import re
-    import shutil
-
-    desc = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    }
-    if "Num Buckets" not in desc:
-        raise ValueError(
-            f"compact_bucketed_artifact: table {table} has no bucket "
-            "spec — use compact_signature_artifact for plain parquet "
-            "artifacts"
-        )
-    n_buckets = int(desc["Num Buckets"])
-
-    def _cols(key: str) -> list[str]:
-        return re.findall(r"`([^`]+)`", desc.get(key, ""))
-
-    bucket_cols = _cols("Bucket Columns")
-    sort_cols = _cols("Sort Columns")
-    location = desc["Location"]
-    location = location[len("file:"):] if location.startswith("file:") else location
-    # fail fast on a non-local location BEFORE the full staging
-    # rewrite is paid (r11 review): the swap below is os.rename /
-    # shutil on the catalog Location, which only works on a local
-    # filesystem — on hdfs://... or s3a://... the rewrite would
-    # complete and then strand its output when the rename throws on
-    # the URI string
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", location):
-        raise ValueError(
-            f"compact_bucketed_artifact: table location {location!r} is "
-            "not on the local filesystem — the crash-safe swap uses "
-            "os.rename and cannot operate on a remote URI.  On a "
-            "cluster, rewrite via a staging TABLE + "
-            "ALTER TABLE ... SET LOCATION (or a filesystem-native "
-            "rename) instead."
-        )
-
-    staging_table = f"{table}__compact_staging"
-    staging_dir = f"{location}.compact.staging"
-    old = f"{location}.compact.old"
-    # --- on-entry recovery (dir-level shared with the parquet twin;
-    # the staging TABLE metadata is this twin's extra orphan) ---------
-    spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
-    _recover_interrupted_compaction(location)
-
-    # Read the table's files BY PATH, not via spark.table: the bucketed
-    # scan's output partitioning already satisfies the repartition
-    # below, so Catalyst removes it as redundant — and then the
-    # DisableUnnecessaryBucketedScan rule (which cannot see the WRITE's
-    # distribution need) independently falls back to arbitrary file
-    # partitions, leaving the writer with one file per (input file ×
-    # bucket) instead of one per bucket.  A plain path scan carries no
-    # partitioning claim, so the repartition stands.
-    writer = (
-        spark.read.parquet(location)
-        .repartition(n_buckets, *bucket_cols)
-        .write.bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.option("path", staging_dir).saveAsTable(staging_table)
-    os.rename(location, old)
-    os.rename(staging_dir, location)
-    # the staging table served only as the bucketed writer's target;
-    # its metadata now points at a moved-away dir — drop it.  External
-    # table: the drop removes metadata only, never the (moved) files.
-    spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
-    shutil.rmtree(old, ignore_errors=True)
-    # the swap happened OUTSIDE Spark — invalidate both the table's
-    # catalog file-status cache and the path-keyed one.
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshByPath(location)
-    return len(glob.glob(os.path.join(location, "*.parquet")))

@@ -34,11 +34,6 @@ from pyspark.sql import functions as F
 
 from vectorsearch_scylla_spark.session import drop_inherited_stats
 
-# backwards-compatible alias: the fix was discovered here (r6) and
-# promoted to a shared util in session.py (r7) so every iterative
-# surface (label propagation, Lloyd iterations) applies it
-_drop_inherited_stats = drop_inherited_stats
-
 
 def connected_components(
     edges: DataFrame,
@@ -69,7 +64,7 @@ def connected_components(
     # own checkpoint materializes above it — block eviction or
     # executor loss re-runs the upstream pipeline.  Contents are
     # deterministic, so results are unaffected either way.
-    sym = _drop_inherited_stats(
+    sym = drop_inherited_stats(
         (
             edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
             .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -96,7 +91,7 @@ def connected_components(
             (F.col("mn") < F.col("u")).alias("chg"),
         )
     )
-    new_labels = _drop_inherited_stats(r0.localCheckpoint(eager=False))
+    new_labels = drop_inherited_stats(r0.localCheckpoint(eager=False))
     changed = new_labels.filter(F.col("chg")).count()
     labels = new_labels.select("node", "lbl")
     if changed == 0:
@@ -144,7 +139,7 @@ def connected_components(
                 (F.col("new_lbl") < F.col("own_lbl")).alias("chg"),
             )
         ).localCheckpoint(eager=False)
-        new_labels = _drop_inherited_stats(new_labels)
+        new_labels = drop_inherited_stats(new_labels)
         # the count IS the materializing action (lazy checkpoint): one
         # action per round instead of eager-ckpt job + limit-count jobs
         changed = new_labels.filter(F.col("chg")).count()

@@ -1,7 +1,7 @@
 """Batch top-k similarity join — the engine's replacement for ScyllaDB's
 ``ORDER BY embedding ANN OF ? LIMIT k`` (HNSW/USearch, SURVEY §4.4).
 
-Three strategies, one API:
+Three exact strategies, one API:
 
 1. ``topk_similarity_join`` (exact, expression-based): broadcast the
    query side, join against the corpus, cosine via native array exprs,
@@ -15,10 +15,12 @@ Three strategies, one API:
    inside Arrow batches, shuffle only the per-partition winners
    (Q × k rows per partition), never the corpus.
 
-3. ``lsh_topk_similarity_join`` (approximate): L2-normalize both sides
-   (Euclidean on unit vectors is monotone in cosine) and bucket with
-   random hyperplane projections; candidates = bucket collisions, then
-   exact re-rank.  Trades recall for avoiding the Q×N product.
+3. ``topk_similarity_join_cogrouped`` (exact, two-sided): both sides
+   are hash-blocked and cogrouped, so neither the query set nor the
+   corpus is collected to the driver — the large-Q shape.
+
+The approximate path (random-hyperplane band candidates + exact
+re-rank) is ``functions.hyperplane.hyperplane_topk_join``.
 
 Unlike ScyllaDB's ANN (no WHERE allowed — the reference over-fetches
 LIMIT 50-100 then client-filters, ``detect_anomalies_vector_search.py:
@@ -33,7 +35,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vectorsearch_scylla_spark.functions.vector import cosine_similarity, l2_normalize
+from vectorsearch_scylla_spark.functions.vector import cosine_similarity
 
 
 def topk_similarity_join(
@@ -427,167 +429,3 @@ def topk_similarity_join_cogrouped(
     )
 
 
-def cosine_pairs_blocked(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_collect_rows: int = 1_048_576,
-) -> DataFrame:
-    """All pairs (id_a < id_b) with cosine similarity > threshold, via
-    per-partition NumPy float64 matmul against a broadcast of the full
-    matrix.
-
-    The N×N pair space never materializes as rows: each Arrow batch of
-    B rows does one (B × N) BLAS multiply and emits only the pairs
-    above threshold.  At demo scale this replaced an interpreted
-    expression self-join that was ~100× slower.  BOUNDED INPUTS ONLY:
-    this collects + broadcasts the full (id, vector) set, so it is the
-    exact kernel you run per LSH/MinHash bucket or on one detection
-    microbatch — the registry's corpus-scale near-dup query
-    (``embedding_neardup_pairs``) instead uses
-    ``functions.hyperplane.hyperplane_near_dup_pairs``: seeded
-    random-hyperplane band candidates + an exact per-candidate cosine
-    kernel, never this on a whole corpus.
-
-    Ids keep the input column's type (orderable — pairs are deduped by
-    ``id_a < id_b``).  float64 end-to-end so results hash-match a
-    double-precision SQL oracle.
-
-    ``max_collect_rows`` enforces the bounded-inputs contract the same
-    way ``topk_similarity_join_blocked`` does (r10): the collect is
-    capped at ``max_collect_rows + 1`` rows — the guard itself cannot
-    OOM the driver — and exceeding the cap raises, naming the
-    corpus-scale alternative.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_dt = df.schema[id_col].dataType.simpleString()
-    rows = df.select(id_col, vec_col).limit(int(max_collect_rows) + 1).collect()
-    if len(rows) > max_collect_rows:
-        raise ValueError(
-            "cosine_pairs_blocked: input exceeds max_collect_rows="
-            f"{max_collect_rows} — this kernel broadcasts the full "
-            "(id, vector) set and is the BOUNDED-INPUT path (per LSH/"
-            "MinHash bucket, one detection microbatch).  For a whole "
-            "corpus use functions.hyperplane.hyperplane_near_dup_pairs "
-            "(banded candidates + exact per-candidate cosine); or raise "
-            "max_collect_rows if the driver can genuinely hold the set."
-        )
-    ids = np.asarray([r[id_col] for r in rows])
-    mat = np.asarray([r[vec_col] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    zero = norms == 0.0
-    norms[zero] = 1.0
-    unit = mat / norms
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast((ids, unit, zero.ravel()))
-
-    def emit_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_unit, all_zero = b.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[id_col].to_numpy()
-            bmat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            bnorms = np.linalg.norm(bmat, axis=1, keepdims=True)
-            bzero = (bnorms == 0.0).ravel()
-            bnorms[bnorms == 0.0] = 1.0
-            sims = (bmat / bnorms) @ all_unit.T  # (B, N)
-            sims[bzero, :] = 0.0  # zero-norm guard: cos := 0
-            sims[:, all_zero] = 0.0
-            ii, jj = np.nonzero((sims > threshold) & (bids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": bids[ii],
-                    "id_b": all_ids[jj],
-                    "similarity": sims[ii, jj],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        emit_pairs, schema=f"id_a {id_dt}, id_b {id_dt}, similarity double"
-    )
-
-
-def lsh_topk_similarity_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "corpus_vec",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-    distance_threshold: float = 2.0,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH candidates + exact re-rank.
-
-    Uses ``BucketedRandomProjectionLSH`` on L2-normalized vectors —
-    Euclidean distance on unit vectors is monotone in cosine
-    (dist² = 2 − 2·cos), so Euclidean buckets preserve cosine
-    neighborhoods (SURVEY §4.4 option 2).  Recall is tunable via
-    ``num_hash_tables`` (more tables → more candidates → higher
-    recall); tests check recall ≥ 0.9 against the exact join.
-
-    ``distance_threshold`` bounds the L2 distance of emitted candidate
-    pairs (2.0 = no bound on unit vectors).  For near-duplicate /
-    similar-state retrieval pass the cosine floor's distance image,
-    ``sqrt(2 − 2·min_cos)`` — the join then prunes unrelated pairs
-    instead of carrying them to the re-rank, which is what makes the
-    approximate join sub-quadratic in practice.  ``exclude_self`` drops
-    query==corpus id matches before ranking (for self-join retrieval
-    where the query set is a subset of the corpus).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import VectorUDT  # noqa: F401  (ensures ml is loadable)
-
-    qn = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qvec"),
-        array_to_vector(l2_normalize(query_vec)).alias("features"),
-    )
-    cn = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(corpus_vec).alias("__cvec"),
-        array_to_vector(l2_normalize(corpus_vec)).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="__hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(cn)
-    # unit vectors: max L2 distance is 2.0 → threshold 2.0 keeps all
-    # colliding candidates; ranking below is exact cosine.
-    cand = model.approxSimilarityJoin(
-        model.transform(qn), model.transform(cn), distance_threshold, distCol="__dist"
-    ).select(
-        F.col("datasetA.__qid").alias("__qid"),
-        F.col("datasetB.__cid").alias("__cid"),
-        cosine_similarity(F.col("datasetA.__qvec"), F.col("datasetB.__cvec")).alias(
-            "similarity"
-        ),
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("__qid") != F.col("__cid"))
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("similarity").desc(), F.col("__cid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias(corpus_id),
-            "similarity",
-            "rank",
-        )
-    )

@@ -39,7 +39,6 @@ from vectorsearch_scylla_spark.operators.ivf import (
     _best_cluster_struct,
     lloyd_kmeans,
 )
-from vectorsearch_scylla_spark.operators.report import retrain_report
 
 _EPS = 1e-6
 
@@ -120,69 +119,6 @@ def encode_pq(
             branch = F.when(cond, val) if branch is None else branch.when(cond, val)
         rnorm_sq = branch if rnorm_sq is None else rnorm_sq + branch
     return out.withColumn("rnorm", F.sqrt(rnorm_sq))
-
-
-def encode_pq_np(
-    df: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    dsub: int,
-    vec_col: str = "embedding",
-    dtype: str = "float32",
-) -> DataFrame:
-    """Blocked NumPy encode kernel — the documented scale swap-in for
-    :func:`encode_pq` when bit-exact oracle parity is not required
-    (the expression kernel's m·ksub interpreted cosine folds per row
-    become one BLAS matmul per subspace per Arrow batch).
-
-    Semantics match :func:`encode_pq` (argmax cosine, tie-break lowest
-    code, zero subvectors land in the lowest code); only the fp
-    reduction order differs, which matters only on exact cosine ties.
-    ``dtype='float32'`` is the 100 TB default.
-    """
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    m = len(books)
-    cw = []
-    for book in books:
-        ordered = sorted(book)
-        ids = np.array([c for c, _ in ordered], dtype=np.int64)
-        C = np.asarray([v for _, v in ordered], dtype=dtype)
-        cn = np.linalg.norm(C, axis=1)
-        cn[cn == 0.0] = 1.0
-        cw.append((ids, (C / cn[:, None]).T, np.sum(C.astype(np.float64) ** 2, axis=1)))
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f"code{s}", IntegerType(), False) for s in range(m)]
-        + [StructField("rnorm", DoubleType(), False)]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            V = np.asarray(list(pdf[vec_col]), dtype=dtype)
-            pdf = pdf.copy()
-            nsq = np.zeros(len(pdf), dtype=np.float64)
-            for s in range(m):
-                ids, Cn, cns = cw[s]
-                sub = V[:, s * dsub : (s + 1) * dsub]
-                vn = np.linalg.norm(sub, axis=1)
-                zero = vn == 0.0
-                vn[zero] = 1.0
-                sims = (sub / vn[:, None]) @ Cn
-                sims[zero, :] = 0.0
-                idx = np.argmax(sims, axis=1)
-                pdf[f"code{s}"] = ids[idx].astype("int32")
-                nsq += cns[idx]
-            pdf["rnorm"] = np.sqrt(nsq)
-            yield pdf
-
-    return df.mapInPandas(encode, schema)
 
 
 def build_pq_index(
@@ -527,392 +463,3 @@ def pq_adc_topk_np(
     )
 
 
-def pq_recall_audit(
-    queries: DataFrame,
-    codes: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    members: DataFrame,
-    k: int = 5,
-    dsub: int = 16,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    corpus_id: str = "corpus_id",
-    corpus_vec: str = "corpus_vec",
-    exclude_self: bool = True,
-    dtype: str = "float32",
-    max_queries: int = 512,
-    tie_aware: bool = False,
-    tie_tolerance: float | None = None,
-) -> tuple[float | None, int]:
-    """Sampled recall@k of the PQ ADC scan against the exact
-    full-precision sweep — the codebook-staleness watch for the
-    quantized index family (the registered ``ann_recall_report`` query
-    certifies the audit SHAPE for the IVF pruning; this is the same
-    measurement for the LOSSY side: how much of the neighborhood the
-    m-subspace code approximation still captures as the corpus drifts
-    away from the distribution the codebooks were trained on).
-
-    ``codes`` is the at-rest code table (``corpus_id``, ``code0..``,
-    ``rnorm``); ``members`` carries the full-precision vectors the
-    exact side sweeps (at 100 TB that is the source table the encode
-    pass read — the audit never decodes, it re-reads).  Bounded like
-    :func:`~vectorsearch_scylla_spark.operators.ivf.ivf_recall_audit`:
-    same deterministic md5 query draw, one O(sample·N) exact pass, ADC
-    cost candidates-only.
-
-    RETURN CONTRACT — the two modes measure different things and their
-    second values count different populations (r12 ADVICE; mixing them
-    in budget or pair-count arithmetic is a unit error):
-
-    * ``tie_aware=False`` (default): ``(recall, n_exact_pairs)`` —
-      id-set recall@k (fraction of the exact top-k pairs whose ids the
-      ADC scan returned), denominator = exact pair count.
-    * ``tie_aware=True``: ``(precision, n_returned)`` — fraction of
-      the ADC-RETURNED rows whose true cosine reaches the query's
-      exact kth score (within ``tie_tolerance``), denominator = ADC
-      returned-row count.  Equals acceptable-set recall when both
-      sides return exactly k rows per query, but the population is the
-      returned set, not the exact set.
-
-    Consumers that persist either number should stamp the mode beside
-    it (``"tie_aware" | "id_set"`` — see :func:`maybe_retrain_pq`'s
-    ``report["audit_metric"]``) so cross-mode comparisons can be
-    refused mechanically.
-    """
-    from vectorsearch_scylla_spark.operators.ivf import (
-        _audit_ground_truth,
-    )
-
-    sample, exact, denom = _audit_ground_truth(
-        queries, members,
-        k=k, query_id=query_id, query_vec=query_vec,
-        corpus_id=corpus_id, corpus_vec=corpus_vec,
-        exclude_self=exclude_self, dtype=dtype, max_queries=max_queries,
-    )
-    if not denom:
-        return None, 0
-    approx = pq_adc_topk_np(
-        sample, codes, books, k=k, dsub=dsub,
-        query_id=query_id, corpus_id=corpus_id, query_vec=query_vec,
-        exclude_self=exclude_self, dtype=dtype,
-    ).select(query_id, F.col(corpus_id).alias("__approx_id"))
-    if not tie_aware:
-        hits = exact.join(
-            approx,
-            (exact[query_id] == approx[query_id])
-            & (exact["__exact_id"] == approx["__approx_id"]),
-            "left_semi",
-        ).count()
-        return hits / denom, denom
-    # TIE-AWARE recall (r12, from the pqstream study's calibration
-    # finding): on near-duplicate-heavy corpora many corpus rows tie
-    # the exact kth score, and id-set intersection punishes ADC for
-    # returning a DIFFERENT-but-equally-near neighbor — the fresh-add
-    # watch then reads tie-resolution, not staleness.  Here a returned
-    # neighbor counts as a hit iff its TRUE cosine reaches the query's
-    # exact kth score (within an fp-path epsilon), i.e. recall over
-    # the acceptable-set, not the id-set.  The returned pair count is
-    # the number of ADC-returned rows (the denominator of this
-    # definition); epsilon covers the float32 blocked ground truth vs
-    # the float64 expression re-score.
-    from vectorsearch_scylla_spark.functions.vector import (
-        cosine_similarity,
-    )
-
-    kth = exact.groupBy(query_id).agg(F.min("__exact_sim").alias("__kth"))
-    qv = sample.select(query_id, F.col(query_vec).alias("__qv"))
-    cv = members.select(
-        F.col(corpus_id).alias("__approx_id"),
-        F.col(corpus_vec).alias("__cv"),
-    )
-    # default epsilon covers fp-path divergence only (exact ties); a
-    # caller-supplied tie_tolerance widens acceptability to a TASK
-    # tolerance — the generalized floor on replica-heavy corpora is
-    # sub-resolution ORDERING, where returned twins sit a small but
-    # real margin below the kth score (measured ~1e-3-1e-2 on the
-    # 100-replica cohort corpus, BENCH_SCALE.md "In-stream PQ refresh
-    # day"): neighbors within the task's indifference band count
-    eps = (
-        float(tie_tolerance)
-        if tie_tolerance is not None
-        else (1e-5 if dtype == "float32" else 1e-9)
-    )
-    scored = (
-        approx.join(qv, query_id)
-        .join(cv, "__approx_id")
-        .withColumn(
-            "__cos",
-            cosine_similarity(
-                F.col("__qv").cast("array<double>"),
-                F.col("__cv").cast("array<double>"),
-            ),
-        )
-        .join(kth, query_id)
-        .select((F.col("__cos") >= F.col("__kth") - F.lit(eps)).alias("__hit"))
-        # LAZY (r15): the count below is the materializing action
-        .localCheckpoint(eager=False)
-    )
-    n_ret = scored.count()
-    if not n_ret:
-        return None, 0
-    hits = scored.filter(F.col("__hit")).count()
-    return hits / n_ret, n_ret
-
-
-def maybe_retrain_pq(
-    members: DataFrame,
-    codes: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    queries: DataFrame,
-    recall_budget: float = 0.7,
-    k: int = 5,
-    dsub: int = 16,
-    iters: int = 2,
-    train_rows: int | None = None,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    corpus_id: str = "corpus_id",
-    corpus_vec: str = "corpus_vec",
-    exclude_self: bool = True,
-    dtype: str = "float32",
-    max_audit_queries: int = 512,
-    decimals: int = 6,
-    audit_after: bool = True,
-    recall_before: float | None = None,
-    rollback_below_budget: bool = False,
-    ksub: int | None = None,
-    tie_aware: bool = False,
-    tie_tolerance: float | None = None,
-) -> tuple[list[list[tuple[int, list[float]]]], DataFrame, dict]:
-    """Codebook-staleness trigger for the PQ family — the quantized
-    twin of :func:`~vectorsearch_scylla_spark.operators.ivf.
-    maybe_retrain`: evaluate the sampled ADC recall and, only past
-    budget, retrain the per-subspace codebooks on the bounded
-    md5-ordered sample of the CURRENT corpus and re-encode in one
-    map-only pass.  Returns ``(books, codes, report)`` with the inputs
-    handed back untouched (``report["retrained"]=False``) while the
-    codebooks still hold budget.
-
-    Unlike the IVF coarse quantizer, stale codebooks do not mis-ROUTE
-    anything — they lossily mis-SCORE: drifted vectors fall between
-    codewords trained on the old distribution and reconstruction error
-    grows, so ADC ranking quality decays smoothly rather than
-    cliff-ing.  The deployment watch is therefore the same (sampled
-    recall vs exact on the newest increment's vectors) but the budget
-    is typically set looser (default 0.7 — ADC is the candidate
-    generator; exact re-rank upstream absorbs moderate decay).
-    Retraining keeps the codebook SHAPE (m = ``len(books)``, ksub =
-    ``len(books[0])``, ``dsub``) — byte budget is a storage contract;
-    what refreshes is where the codewords sit.  Cost at 100 TB:
-    training O(m · iters · 256·ksub) corpus-independent, re-encode one
-    map-only scan (the same pass every index build pays), audit
-    bounded as ever.  The caller owns persisting the returned code
-    table and swapping the store — pick the commit primitive the
-    store's filesystem makes atomic (:mod:`~vectorsearch_scylla_
-    spark.streaming.genstore`: staged rename on POSIX/HDFS, manifest
-    PUT on object stores; ``pq_add_stream`` threads its ``storage``
-    knob through exactly this).
-
-    ``rollback_below_budget`` is the safety rail the two-capacity-cell
-    study motivates (BENCH_SCALE.md "PQ codebook staleness at scale"):
-    without capacity headroom (~3 k corpus rows per codeword in the
-    measured ksub=64 cell) a fixed-shape retrain just RE-SPREADS
-    scarcity — the drifted region wins ~1 codeword per subspace while
-    the old manifold loses words, and recall came back BELOW the
-    stale value (0.462 → 0.446).  With the flag set (requires
-    ``audit_after``), a retrain whose post-audit still misses budget
-    is NOT adopted: the original ``(books, codes)`` come back with
-    ``report["rolled_back"]=True`` and ``recall_after`` carrying the
-    rejected measurement — the escalate-to-composition signal
-    (residual IVF-PQ: let the coarse quantizer absorb the shift and
-    encode near-stationary residuals) without spending the persist.
-
-    ``tie_aware`` / ``tie_tolerance`` pass through to BOTH audits
-    (entry and post-retrain): on near-duplicate-heavy corpora the
-    id-set recall is tie-dominated and a budget can neither be
-    calibrated nor honestly re-checked against it — see
-    :func:`pq_recall_audit`, whose two modes return DIFFERENT metrics
-    over different denominators.  The report therefore stamps
-    ``audit_metric`` (``"tie_aware" | "id_set"``) beside
-    ``recall_before`` / ``recall_after`` / ``n_audit_pairs`` so a
-    downstream comparison across mixed-mode reports can be refused
-    mechanically rather than silently averaging a recall with a
-    precision (r12 ADVICE).  A caller-supplied ``recall_before`` must
-    have been measured in the SAME mode as these flags — the fast
-    path trusts, it cannot check.
-
-    REPORT CONTRACT (r14, shared with :func:`~vectorsearch_scylla_
-    spark.operators.ivf.maybe_retrain` — see
-    :mod:`~vectorsearch_scylla_spark.operators.report`): the returned
-    report carries ``fired`` / ``rolled_back`` / ``budget`` /
-    ``audit_metric`` / ``metric_before`` / ``metric_after`` with
-    identical semantics across families, plus the PQ diagnostics
-    ``k``/``m``/``ksub``/``n_audit_pairs`` and the legacy aliases;
-    :func:`~vectorsearch_scylla_spark.operators.report.
-    check_reports_comparable` is the mechanical refusal for
-    mixed-metric comparisons.
-    """
-    if rollback_below_budget and not audit_after:
-        raise ValueError(
-            "rollback_below_budget requires audit_after=True — the "
-            "rollback decision IS the post-retrain audit"
-        )
-    if not books:
-        raise ValueError(
-            "maybe_retrain_pq: books is empty — nothing to audit or "
-            "retrain; pass the current trained codebooks"
-        )
-    # ksub is the INTENDED per-subspace capacity, not the surviving
-    # codeword count: train_pq drops empty clusters, so deriving ksub
-    # from max(len(b)) would ratchet capacity downward across repeated
-    # retrains — exactly the headroom the two-capacity-cell study shows
-    # decides whether a refresh pays (r11 ADVICE).  Default keeps the
-    # current max for callers that never lost a codeword.
-    m = len(books)
-    ksub = int(ksub) if ksub is not None else max(len(b) for b in books)
-    if recall_before is None:
-        recall_before, denom = pq_recall_audit(
-            queries, codes, books, members,
-            k=k, dsub=dsub, query_id=query_id, query_vec=query_vec,
-            corpus_id=corpus_id, corpus_vec=corpus_vec,
-            exclude_self=exclude_self, dtype=dtype,
-            max_queries=max_audit_queries, tie_aware=tie_aware,
-            tie_tolerance=tie_tolerance,
-        )
-    else:
-        # caller-supplied measurement; pair count unknown — None, not a
-        # -1 sentinel, so cross-report arithmetic fails loudly (r11
-        # ADVICE, same rule as ivf.maybe_retrain)
-        denom = None
-    # ONE report contract across index families (r13 VERDICT task 7):
-    # fired / rolled_back / budget / audit_metric / metric_before /
-    # metric_after, family diagnostics alongside, legacy spellings as
-    # aliases — see operators/report.py.
-    report = retrain_report(
-        fired=False,
-        budget=float(recall_budget),
-        audit_metric="tie_aware" if tie_aware else "id_set",
-        metric_before=recall_before,
-        k=int(k),
-        m=int(m),
-        ksub=int(ksub),
-        n_audit_pairs=None if denom is None else int(denom),
-    )
-    if recall_before is None or recall_before >= recall_budget:
-        return books, codes, report
-
-    vecs = members.select(corpus_id, corpus_vec)
-    cap = 256 * ksub if train_rows is None else int(train_rows)
-    new_books = train_pq(
-        vecs, m=m, ksub=ksub, iters=iters, dsub=dsub,
-        id_col=corpus_id, vec_col=corpus_vec, decimals=decimals,
-        kernel="numpy", train_rows=cap,
-    )
-    new_codes = encode_pq_np(
-        vecs, new_books, dsub=dsub, vec_col=corpus_vec, dtype=dtype
-    ).drop(corpus_vec)
-    report["retrained"] = report["fired"] = True
-    report["n_corpus"] = int(members.count())
-    if audit_after:
-        recall_after, _ = pq_recall_audit(
-            queries, new_codes, new_books, members,
-            k=k, dsub=dsub, query_id=query_id, query_vec=query_vec,
-            corpus_id=corpus_id, corpus_vec=corpus_vec,
-            exclude_self=exclude_self, dtype=dtype,
-            max_queries=max_audit_queries, tie_aware=tie_aware,
-            tie_tolerance=tie_tolerance,
-        )
-        report["recall_after"] = report["metric_after"] = recall_after
-        if (
-            rollback_below_budget
-            and (recall_after is None or recall_after < recall_budget)
-        ):
-            report["retrained"] = report["fired"] = False
-            report["rolled_back"] = True
-            return books, codes, report
-    return new_books, new_codes, report
-
-
-def commission_pq_watch(
-    queries: DataFrame,
-    codes: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    members: DataFrame,
-    margin: float = 0.05,
-    k: int = 5,
-    dsub: int = 16,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    corpus_id: str = "corpus_id",
-    corpus_vec: str = "corpus_vec",
-    exclude_self: bool = True,
-    dtype: str = "float32",
-    max_queries: int = 64,
-    tie_aware: bool = False,
-    tie_tolerance: float | None = None,
-) -> dict:
-    """Mechanize the r12 calibration rule: CALIBRATE THE BUDGET ON THE
-    WATCH'S OWN POPULATION, never base-self recall.
-
-    Defaults MATCH ``pq_add_stream``'s maintenance defaults
-    (``tie_aware=False``, ``max_audit_queries=64``, ``k=5``) so that
-    commissioning with defaults and deploying with defaults measures
-    the SAME thing; whenever the deployed watch overrides a flag, pass
-    the identical override here — a budget calibrated in one audit
-    mode or sample bound and enforced in another is a unit error (the
-    in-stream ``"commission"`` mode persists its flags and refuses a
-    mismatched restart mechanically).  On
-    near-duplicate-heavy corpora a fresh-add audit is tie-dominated —
-    ADC cannot order within a large near-duplicate cohort, so even a
-    zero-drift add day audits far below the corpus's base self-audit
-    (measured 0.632 base-self vs 0.47 commissioning on the 100-replica
-    cohort corpus, BENCH_SCALE.md "In-stream PQ refresh day") — and a
-    budget derived from base-self recall false-triggers the refresh on
-    every healthy day.
-
-    This runs ONE commissioning audit through the exact measurement
-    the deployed watch will run (:func:`pq_recall_audit` with the same
-    ``tie_aware`` / ``tie_tolerance`` / ``k`` / sample bound) on a
-    state the deployer vouches is UNDRIFTED — typically the watch's
-    first healthy day: ``queries`` drawn from the same population the
-    production ``audit_source`` will draw from (the newest adds for
-    ``"recent"``), ``codes``/``members`` the committed view — and
-    returns the watch configuration::
-
-        {"budget": observed - margin, "recall_observed": r,
-         "n_pairs": n, "margin": margin,
-         "audit_metric": "tie_aware" | "id_set",
-         "tie_tolerance": eps_or_None, "k": k}
-
-    Pass ``budget`` (with the SAME mode flags) to
-    :func:`maybe_retrain_pq` / ``pq_add_stream``'s ``maintenance`` —
-    or skip this function entirely and hand ``pq_add_stream``
-    ``maintenance={"recall_budget": "commission", ...}``, which runs
-    this same calibration in-stream on its first fired maintenance
-    day and persists the result beside the stores.  Raises when the
-    commissioning audit is empty — a budget cannot be calibrated on
-    zero pairs, and silently returning one would arm the watch with a
-    meaningless trigger.
-    """
-    recall, n_pairs = pq_recall_audit(
-        queries, codes, books, members,
-        k=k, dsub=dsub, query_id=query_id, query_vec=query_vec,
-        corpus_id=corpus_id, corpus_vec=corpus_vec,
-        exclude_self=exclude_self, dtype=dtype, max_queries=max_queries,
-        tie_aware=tie_aware, tie_tolerance=tie_tolerance,
-    )
-    if recall is None or not n_pairs:
-        raise ValueError(
-            "commission_pq_watch: the commissioning audit drew zero "
-            "pairs — a recall budget cannot be calibrated on an empty "
-            "sample; commission on a day with committed adds"
-        )
-    return {
-        "budget": max(0.0, recall - float(margin)),
-        "recall_observed": recall,
-        "n_pairs": int(n_pairs),
-        "margin": float(margin),
-        "audit_metric": "tie_aware" if tie_aware else "id_set",
-        "tie_tolerance": tie_tolerance,
-        "k": int(k),
-    }

@@ -7,15 +7,6 @@ N×384 embeddings (``build_profiles.py:90-105``, A4/V5) and (b)
 ``build_profiles.py:131``, A5), skipping devices with < 5 snapshots
 (``build_profiles.py:197-199``).
 
-Spark-first translation — both are single shuffles:
-- centroid: ``posexplode(embedding)`` → ``groupBy(key, pos).avg`` →
-  re-assemble ordered by pos.  Scales to any dim × any row count; the
-  shuffle key (device, pos) is wide enough to spread evenly.
-- stats: explode the metrics map → ``groupBy(key, metric)`` with
-  ``avg/stddev_pop/min/max`` — Catalyst does partial aggregation
-  map-side, so the shuffle carries one row per (device, metric), not
-  per snapshot.
-
 The profile table output is tiny (one row per device) — downstream
 detection broadcast-joins it (SURVEY J1).
 """
@@ -24,45 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def embedding_centroid(
-    df: DataFrame, key: str = "device_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Element-wise mean of an array column per key → (key, centroid).
-
-    Parity: ``pipeline/build_profiles.py:90-105`` (np.mean axis=0).
-    """
-    pos = df.select(key, F.posexplode(vec_col).alias("pos", "val"))
-    means = pos.groupBy(key, "pos").agg(F.avg("val").alias("mean_val"))
-    return (
-        means.groupBy(key)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_val"))).alias("entries")
-        )
-        .select(
-            key,
-            F.transform(F.col("entries"), lambda e: e["mean_val"]).alias("centroid"),
-        )
-    )
-
-
-def metric_stats(
-    df: DataFrame, key: str = "device_id", metrics_col: str = "metrics"
-) -> DataFrame:
-    """Explode a metrics map → per-(key, metric) mean/std/min/max.
-
-    Population std to match ``np.std`` (``build_profiles.py:131``;
-    SURVEY §7.5 warns Spark's ``stddev`` default is sample).
-    """
-    ex = df.select(key, F.explode(metrics_col).alias("metric_name", "metric_value"))
-    return ex.groupBy(key, "metric_name").agg(
-        F.avg("metric_value").alias("mean"),
-        F.stddev_pop("metric_value").alias("std"),
-        F.min("metric_value").alias("min"),
-        F.max("metric_value").alias("max"),
-        F.count("*").alias("n"),
-    )
 
 
 def build_profiles_fixed_metrics(
@@ -76,33 +28,27 @@ def build_profiles_fixed_metrics(
     metric_col: str = "metric_name",
     value_col: str = "metric_value",
 ) -> DataFrame:
-    """Profile build FUSED for the fixed-metric raw-rows case — the
-    shape :func:`build_profiles` computes, produced in TWO exchanges
-    with zero per-snapshot container churn (r16 optimization; guide
-    §2.3/§2.4 — fewer shuffles, aggregate before you shuffle).
+    """Profile build for the fixed-metric raw-rows case in TWO
+    exchanges with zero per-snapshot container churn (guide §2.3/§2.4 —
+    fewer shuffles, aggregate before you shuffle).
 
-    :func:`build_profiles` is the generic operator: its input is
-    already-pivoted snapshots (``metrics`` map + ``embedding`` array),
-    so it must explode every snapshot into ~(dim + n_metrics) tagged
-    entries and re-aggregate them — 2 extra exchanges plus
-    ``collect_list`` map/array assembly that plans as non-codegen
-    ``ObjectHashAggregate``.  When the caller owns the RAW metric rows
-    AND the metric set is a fixed constant AND the embedding is the
-    0-filled featurization of those same metrics (the registry's
-    deterministic V2 featurizer), all of that structure is redundant —
-    the same numbers fold as plain conditional aggregates:
+    The caller owns the RAW metric rows, the metric set is a fixed
+    constant, and the embedding is the 0-filled featurization of those
+    same metrics (the registry's deterministic V2 featurizer).  A
+    map-pivot → featurize → explode → re-aggregate chain would then be
+    redundant structure, and the same numbers fold as plain
+    conditional aggregates:
 
       1. ``groupBy(key, window)``: one conditional ``avg`` per metric
-         (NULL where the metric is absent from the window — exactly
-         the rows the metrics map would not contain) + ``max(ts)``;
+         (NULL where the metric is absent from the window) +
+         ``max(ts)``;
       2. ``groupBy(key)``: per metric ``avg/stddev_pop/min/max/count/
          sum`` over the per-window values (NULL-skipping, so stats
-         cover PRESENT windows exactly like the exploded map entries)
-         + ``count(*)`` (= snapshot_count: every window emits exactly
-         one row) + ``max`` (last_seen);
+         cover PRESENT windows only) + ``count(*)`` (= snapshot_count:
+         every window emits exactly one row) + ``max`` (last_seen);
       3. a pure projection explodes the per-device row into one row
          per PRESENT metric (``n > 0`` — a metric a device never
-         reports gets no map entry in the generic path either).
+         reports gets no row).
 
     The centroid needs no posexplode: position ``i`` of the 0-filled
     featurized embedding averages to ``sum(v_i)/snapshot_count``
@@ -110,9 +56,18 @@ def build_profiles_fixed_metrics(
     sum, and ``value_transform`` outputs are never ``-0.0``), so
     ``centroid_val`` rides the same aggregation.
 
+    Precondition — closed metric domain: every ``metric_col`` value in
+    ``raw`` is one of ``metric_names``.  A row with any other metric
+    matches no conditional aggregate and is dropped without a trace;
+    it still counts towards its window's ``snapshot_count``.  The
+    registry's ``device_metrics_raw`` meets this for ``METRICS`` (its
+    ``metric_name`` is the events' ``event_type``, whose domain is
+    exactly ``METRICS``; pinned by a test).  The function does not
+    check it at run time: that would cost a job on a timed path.
+
     Plan shape: scan → partial/final HashAggregate (key, window) →
     Exchange → partial/final HashAggregate (key) → Exchange → project
-    + explode.  The generic path measured 4 Exchanges + 2 Generates +
+    + explode.  The map-pivot chain measured 4 Exchanges + 2 Generates +
     ObjectHashAggregates on the same input (plans/r16/
     device_profile_build_before.txt).
 
@@ -190,120 +145,3 @@ def build_profiles_fixed_metrics(
     )
 
 
-def build_profiles(
-    snapshots: DataFrame,
-    key: str = "device_id",
-    vec_col: str = "embedding",
-    metrics_col: str = "metrics",
-    min_snapshots: int = 5,
-    anomaly_col: str = "is_anomalous",
-) -> DataFrame:
-    """Full profile build: centroid ⋈ nested stats ⋈ metadata.
-
-    Mirrors ``pipeline/build_profiles.py:173-232``: excludes anomalous
-    snapshots (P9), requires ≥ min_snapshots, records last_seen /
-    snapshot_count (A9).
-
-    Assumes ``vec_col`` is non-null and fixed-dimension (the engine's
-    embedding contract, like the reference's ``vector<float, 384>`` —
-    failures produce zero vectors, never null/empty,
-    ``pipeline/kafka_consumer.py:377-379``); snapshot_count is derived
-    from the exploded vector positions.
-    """
-    normal = snapshots
-    if anomaly_col in snapshots.columns:
-        normal = snapshots.filter(~F.coalesce(F.col(anomaly_col), F.lit(False)))
-
-    # SINGLE-PASS fusion: the centroid needs avg(embedding[pos]) per
-    # (key, pos) and the stats need avg/std/min/max(metrics[name]) per
-    # (key, name).  Computing them as separate branches would recompute
-    # the entire upstream snapshot subtree twice (Catalyst cannot reuse
-    # an aggregation exchange across differently-keyed branches, and at
-    # toy sf0.1 that subtree — a 2-level pivot over ~10M raw rows — IS
-    # the cost of this operator; measured 2.8 s two-branch vs one-scan
-    # here).  Instead each snapshot row explodes once into tagged
-    # entries — ('e', pos) per vector position, ('m', name) per metrics
-    # key — one shuffle keyed (key, kind, name, pos), then ONE tiny
-    # device-level conditional aggregation splits the two families back
-    # apart.  No join, no second scan; meta rides along: every snapshot
-    # emits exactly one row per vector position, so per-(key, pos)
-    # count(*) IS the snapshot count and max(snapshot_time) survives.
-    e_entries = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x, i: F.struct(
-            F.lit("e").alias("kind"),
-            F.lit(None).cast("string").alias("name"),
-            i.cast("int").alias("pos"),
-            x.alias("val"),
-        ),
-    )
-    m_entries = F.transform(
-        F.map_entries(metrics_col),
-        lambda e: F.struct(
-            F.lit("m").alias("kind"),
-            e["key"].cast("string").alias("name"),
-            F.lit(-1).cast("int").alias("pos"),
-            e["value"].cast("double").alias("val"),
-        ),
-    )
-    # concat(x, NULL) is NULL and explode drops NULL rows, so BOTH
-    # sides coalesce to a typed empty array — a null metrics map must
-    # not swallow the embedding entries, and a null embedding (contract
-    # violation, but cheap to be safe against) must not silently drop
-    # that snapshot's metric entries.  NB: a null-embedding snapshot
-    # still contributes no per-pos rows, so it is excluded from
-    # snapshot_count (derived from per-(key, pos) counts).
-    empty_entries = F.array().cast(
-        "array<struct<kind:string,name:string,pos:int,val:double>>"
-    )
-    ent = normal.select(
-        key,
-        "snapshot_time",
-        F.explode(
-            F.concat(
-                F.coalesce(e_entries, empty_entries),
-                F.coalesce(m_entries, empty_entries),
-            )
-        ).alias("ent"),
-    ).select(key, "snapshot_time", "ent.*")
-    per_entry = ent.groupBy(key, "kind", "name", "pos").agg(
-        F.avg("val").alias("mean"),
-        F.stddev_pop("val").alias("std"),
-        F.min("val").alias("min"),
-        F.max("val").alias("max"),
-        F.count("*").alias("n"),
-        F.max("snapshot_time").alias("max_st"),
-    )
-    is_e, is_m = F.col("kind") == "e", F.col("kind") == "m"
-    return (
-        per_entry.groupBy(key)
-        .agg(
-            # collect_list drops nulls, so the WHEN guards split the two
-            # entry families without a second shuffle or a join
-            F.transform(
-                F.array_sort(F.collect_list(F.when(is_e, F.struct("pos", "mean")))),
-                lambda e: e["mean"],
-            ).alias("profile_embedding"),
-            F.max(F.when(is_e, F.col("n"))).alias("snapshot_count"),
-            F.max("max_st").alias("last_seen"),
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            is_m,
-                            F.struct(
-                                F.col("name").alias("metric_name"),
-                                F.struct("mean", "std", "min", "max", "n").alias(
-                                    "stats"
-                                ),
-                            ),
-                        )
-                    )
-                )
-            ).alias("metric_stats"),
-        )
-        .filter(F.col("snapshot_count") >= min_snapshots)
-        .select(
-            key, "snapshot_count", "last_seen", "profile_embedding", "metric_stats"
-        )
-    )

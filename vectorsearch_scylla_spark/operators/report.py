@@ -1,12 +1,9 @@
-"""Shared retrain-report contract across index families (r13 VERDICT
-task 7).
+"""The retrain-report contract (r13 VERDICT task 7).
 
-``maybe_retrain`` (IVF, ``operators/ivf.py``) and ``maybe_retrain_pq``
-(``operators/pq.py``) historically emitted structurally different
-report dicts, so any tool comparing maintenance days across families —
-or even across two deployments of the same family — needed per-family
-key maps before it could refuse an apples-to-oranges comparison.  This
-module is the one report contract both triggers now emit:
+``maybe_retrain`` (IVF, ``operators/ivf.py``) returns one report dict
+per maintenance day, and the streaming maintenance ladder collects them
+in ``state["reports"]``.  This module fixes the keys every report
+carries, so a tool comparing maintenance days needs no key map:
 
 ================  ======  ==============================================
 key               type    meaning
@@ -20,9 +17,7 @@ key               type    meaning
                           units
 ``audit_metric``  str     what ``metric_before``/``metric_after``
                           measure: ``"id_set"`` (id-set recall@k) or
-                          ``"tie_aware"`` (tie-tolerant precision) —
-                          the two modes of ``pq_recall_audit`` /
-                          ``ivf_recall_audit``'s single mode
+                          ``"tie_aware"`` (tie-tolerant precision)
 ``metric_before`` float?  the entry audit (None: audit drew no pairs)
 ``metric_after``  float?  the post-retrain audit (None: not audited —
                           ``audit_after=False`` deployments audit the
@@ -30,19 +25,11 @@ key               type    meaning
 ================  ======  ==============================================
 
 Family diagnostics ride alongside under their own names (``nprobe`` /
-``k_before``/``k_after`` for IVF, ``m``/``ksub`` for PQ, ``k``,
-``n_audit_pairs``, ``n_corpus``) — useful, but NOT the contract.  The
-pre-r14 family spellings (``retrained``, ``recall_budget``,
-``recall_before``, ``recall_after``) remain as read-only aliases for
-existing consumers; writers must keep alias and contract key in sync
-(both trigger functions set them pairwise at the same line).
-
-Mechanical comparability (the ``tools/compare_bench.py`` rule extended
-to maintenance days): :func:`check_reports_comparable` refuses mixed
-``audit_metric`` or mixed ``k`` — averaging a recall with a precision,
-or recall@5 with recall@10, is a unit error a dashboard must refuse
-rather than silently blend (the r12 tie-domination lesson: the two
-metrics disagree by 0.16 ABSOLUTE on the same healthy state).
+``k_before``/``k_after``, ``k``, ``n_audit_pairs``, ``n_corpus``) —
+useful, but NOT the contract.  The pre-r14 spellings (``retrained``,
+``recall_budget``, ``recall_before``, ``recall_after``) remain as
+read-only aliases for existing consumers; writers must keep alias and
+contract key in sync.
 """
 
 from __future__ import annotations
@@ -76,29 +63,3 @@ def retrain_report(
         "recall_after": metric_after,
         **extras,
     }
-
-
-def check_reports_comparable(reports) -> None:
-    """Refuse a cross-report comparison whose members measured
-    different things — mixed ``audit_metric`` (recall vs tie-tolerant
-    precision) or mixed ``k`` (recall@5 vs recall@10).  Raises
-    ``ValueError`` naming the offending mixture; returns None when the
-    set is comparable.  Budgets MAY differ (thresholds are policy, not
-    units)."""
-    reports = list(reports)
-    metrics = {r.get("audit_metric") for r in reports}
-    if len(metrics) > 1:
-        raise ValueError(
-            f"retrain reports are not comparable: mixed audit_metric "
-            f"{sorted(map(str, metrics))} — a recall and a tie-tolerant "
-            "precision are different units (they disagree by ~0.16 "
-            "absolute on the same state; see BENCH_SCALE 'In-stream PQ "
-            "refresh day')"
-        )
-    ks = {r.get("k") for r in reports if r.get("k") is not None}
-    if len(ks) > 1:
-        raise ValueError(
-            f"retrain reports are not comparable: mixed audit k "
-            f"{sorted(ks)} — recall@{min(ks)} and recall@{max(ks)} are "
-            "different units"
-        )

@@ -1,51 +1,14 @@
-"""Serving-layer queries — the dashboard's read API (SURVEY §3.4).
+"""Serving-layer helpers — the dashboard's read API (SURVEY §3.4).
 
-Latest-per-key (W1), time-range history scans (S9), the 10-second
-rounded as-of join of anomaly events to snapshots (J5), and global
-counts (A6).  All Catalyst-native; at scale each is either a
-partition-pruned scan or a single window/aggregate shuffle.
+The serving queries themselves (latest-per-key W1, time-range history
+S9, the 10-second rounded as-of join J5) are registered in
+``plans.registry``; this module holds the shared 10-second bucket key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def latest_per_key(
-    df: DataFrame, key: str | list[str], order_col: str = "snapshot_time"
-) -> DataFrame:
-    """W1: latest row per key — the dashboard's "current state per device"
-    (``dashboard/app.py:134-177``; ScyllaDB ``PER PARTITION LIMIT 1``).
-
-    row_number over (key ORDER BY ts DESC); Spark turns this into a
-    single shuffle with partial top-1 pushdown (WindowGroupLimit) so
-    only one candidate row per key crosses the wire.
-    """
-    keys = [key] if isinstance(key, str) else key
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def time_range_history(
-    df: DataFrame,
-    key_col: str,
-    key_value: str,
-    ts_col: str,
-    start,
-    end=None,
-) -> DataFrame:
-    """S8/S9: per-key time-range scan — partition point-scan + clustering
-    range predicate (``pipeline/detect_anomalies.py:84-99``).  Filters
-    are plain predicates so they push to the parquet scan."""
-    out = df.filter((F.col(key_col) == key_value) & (F.col(ts_col) >= start))
-    if end is not None:
-        out = out.filter(F.col(ts_col) < end)
-    return out
 
 
 def bucket_10s(ts: Column | str, seconds: int = 10) -> Column:
@@ -53,21 +16,3 @@ def bucket_10s(ts: Column | str, seconds: int = 10) -> Column:
     (``dashboard/app.py:534,569`` rounds both sides to 10 s)."""
     ts = F.col(ts) if isinstance(ts, str) else ts
     return (F.floor(F.unix_timestamp(ts) / seconds) * seconds).cast("long")
-
-
-def asof_bucket_join(
-    events: DataFrame,
-    snapshots: DataFrame,
-    event_ts: str,
-    snapshot_ts: str,
-    keys: list[str],
-    seconds: int = 10,
-    how: str = "inner",
-) -> DataFrame:
-    """J5: the dashboard's rounded-time join — events ⋈ snapshots matched
-    by equal N-second bucket + keys (``dashboard/app.py:533-541,
-    566-581``).  An equi-join after bucketing, so Catalyst picks a hash
-    join (broadcast if one side is small) instead of a range join."""
-    e = events.withColumn("__bucket", bucket_10s(event_ts, seconds))
-    s = snapshots.withColumn("__bucket", bucket_10s(snapshot_ts, seconds))
-    return e.join(s, on=[*keys, "__bucket"], how=how)

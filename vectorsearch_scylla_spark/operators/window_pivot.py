@@ -1,29 +1,18 @@
-"""Tumbling-window aggregation + metric pivot: narrow rows → wide snapshots.
+"""Tumbling-window bucketing: the window key every snapshot query groups on.
 
 Reference hot path (SURVEY §3.1): the consumer buckets each metric row
 into ``window_start = floor(ts/W)*W`` (``pipeline/kafka_consumer.py:
 285-289``, A1), buffers with last-write-wins upsert per
 (device, window, metric) (``kafka_consumer.py:317-343``, A5/T3), and
-once a window is 2W old pivots the rows into a ``{metric→value}`` map
-snapshot (``kafka_consumer.py:399-476``, A3).
-
-Spark-first translation: one declarative ``groupBy(device, window)``
-aggregation.  The LWW buffer is ``max_by(value, ts)`` (deterministic
-last write); the pivot is ``map_from_entries(collect_list(...))`` so the
-metric set can vary by device type (SURVEY §7.5 "dynamic pivot") — no
-fixed-column constraint, and no shuffle beyond the single groupBy.
-At 100 TB this is a single hash-aggregate over the scan, partial
-(map-side) aggregation included; no join, no window function.
-
-Scale notes: grouping key (device_id, window_start) has cardinality
-devices × windows — high enough to spread over any executor count;
-skew only if one device emits vastly more metrics, which AQE skew
-handling absorbs.
+once a window is 2W old pivots the rows into a snapshot
+(``kafka_consumer.py:399-476``, A3).  The registry's snapshot queries
+express the LWW buffer and the pivot inline; this module holds the
+shared window key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -36,89 +25,3 @@ def window_start(ts: Column | str, window_seconds: int = 60) -> Column:
     """
     ts = F.col(ts) if isinstance(ts, str) else ts
     return (F.floor(F.unix_timestamp(ts) / window_seconds) * window_seconds).cast("long")
-
-
-def tumbling_window_snapshots(
-    raw: DataFrame,
-    window_seconds: int = 60,
-    value_agg: str = "last",
-    value_transform=None,
-) -> DataFrame:
-    """(device_id, ts, metric_name, metric_value) → one snapshot row per
-    (device_id, window) with a ``metrics`` map column.
-
-    value_agg:
-      - ``last``: last-write-wins within the window per metric — the
-        reference buffer's upsert semantics
-        (``pipeline/kafka_consumer.py:326-339``).
-      - ``avg``: mean per metric within the window (useful when ticks
-        are irregular).
-
-    value_transform: optional ``Column -> Column`` applied to the
-    aggregated per-metric value BEFORE the map is assembled.  Callers
-    that need transformed map values (e.g. quantized doubles for
-    cross-engine parity) must apply it here rather than rebuilding the
-    map afterwards: a post-hoc ``map_from_arrays(map_keys(m),
-    transform(map_values(m), f))`` is re-evaluated by Catalyst at every
-    downstream ``element_at``/``map_entries`` reference — measured 4×
-    the cost of this whole operator at sf0.1.
-    """
-    w = window_start("timestamp", window_seconds).alias("window_start")
-    if value_agg == "last":
-        per_metric_value = F.max_by("metric_value", "timestamp")
-    elif value_agg == "avg":
-        per_metric_value = F.avg("metric_value")
-    else:  # pragma: no cover
-        raise ValueError(f"unknown value_agg {value_agg!r}")
-
-    if value_transform is not None:
-        per_metric_value = value_transform(per_metric_value)
-    per_metric = raw.groupBy(F.col("device_id"), w, F.col("metric_name")).agg(
-        per_metric_value.alias("metric_value"),
-        F.max("timestamp").alias("last_ts"),
-    )
-    # Second-level agg folds metrics into a map — snapshot_time is the
-    # max source tick in the window, like the reference's per-tick
-    # snapshot time (kafka_consumer.py:421-436).
-    return per_metric.groupBy("device_id", "window_start").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("metric_name", "metric_value")))
-        ).alias("metrics"),
-        F.max("last_ts").alias("snapshot_time"),
-        F.count("*").alias("n_metrics"),
-    )
-
-
-def pivot_fixed_metrics(
-    raw: DataFrame,
-    metric_names: list[str],
-    window_seconds: int = 60,
-    value_agg: str = "avg",
-) -> DataFrame:
-    """Fixed-schema variant of the pivot: one double column per metric.
-
-    Used where downstream math wants positional columns (e.g. the
-    deterministic embedding featurizer) and by the SQL oracle, which
-    can express conditional aggregation but not map types.  Metrics
-    absent from a window become 0.0 (the reference skips missing
-    metrics when building embedding text; 0-fill keeps vector length
-    fixed — FIXTURES.md §2).
-    """
-    w = window_start("timestamp", window_seconds).alias("window_start")
-    if value_agg == "avg":
-        agg_fn = F.avg
-    elif value_agg == "last":
-        # max_by over the conditional column
-        def agg_fn(c):  # type: ignore[misc]
-            return F.max_by(c, F.when(c.isNotNull(), F.col("timestamp")))
-    else:  # pragma: no cover
-        raise ValueError(f"unknown value_agg {value_agg!r}")
-
-    aggs = [
-        F.coalesce(
-            F.round(agg_fn(F.when(F.col("metric_name") == m, F.col("metric_value"))), 4),
-            F.lit(0.0),
-        ).alias(f"m_{m}")
-        for m in metric_names
-    ]
-    return raw.groupBy("device_id", w).agg(*aggs, F.count("*").alias("n_rows"))

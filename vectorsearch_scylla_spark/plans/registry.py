@@ -2480,17 +2480,17 @@ def q_path2_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN centroid c ON c.device_id = st.device_id AND c.metric_name = st.metric_name
     """,
     ["A4", "A5", "A9", "P9", "V5", "V2", "F12"],
-    "Behavior-profile build end-to-end through the REAL operator stack "
-    "(operators/profiles.py:build_profiles over "
-    "operators/window_pivot.py:tumbling_window_snapshots): 60 s map "
+    "Behavior-profile build end-to-end through the operator stack "
+    "(operators/profiles.py:build_profiles_fixed_metrics): 60 s "
     "snapshots → deterministic metric-vector featurizer → per-device "
-    "embedding centroid (posexplode path) + per-metric population-std "
-    "stats + last_seen/snapshot_count, devices with ≥5 snapshots only "
-    "(pipeline/build_profiles.py:173-232).  Absorbs the folded r1-r4 "
-    "queries metric_stats_profile (its per-metric stats surface is a "
-    "subset of these columns) and centroid_by_label (same posexplode "
-    "centroid path, here checked per device); the map explode + "
-    "element_at featurizer also covers F12's map-op surface.",
+    "embedding centroid + per-metric population-std stats + "
+    "last_seen/snapshot_count, devices with ≥5 snapshots only "
+    "(pipeline/build_profiles.py:173-232), as two codegen "
+    "aggregations.  Absorbs the folded r1-r4 queries "
+    "metric_stats_profile (its per-metric stats surface is a subset of "
+    "these columns) and centroid_by_label (the centroid, here checked "
+    "per device); the oracle's map explode + element_at featurizer "
+    "also covers F12's map-op surface.",
 )
 def q_device_profile_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectorsearch_scylla_spark.operators.profiles import (
@@ -2500,18 +2500,15 @@ def q_device_profile_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = device_metrics_raw(spark, sf_dir)
     # FUSED fixed-metric profile build (r16; guide §2.3/§2.4): this
     # query owns the raw rows, the metric set is the fixed METRICS
-    # constant, and the V2 featurizer embedding is the 0-filled
-    # featurization of those same metrics — so the generic
-    # map-pivot → featurize → build_profiles chain (4 Exchanges, 2
-    # explodes, ObjectHashAggregate map/array assembly; see
-    # plans/r16/device_profile_build_before.txt) folds to TWO plain
-    # codegen aggregations: per-(device, window) conditional avgs
-    # (quantized inside, same as the old pivot's value_transform),
-    # then per-device stats + sum (centroid position i of the 0-filled
-    # embedding is sum(v_i)/snapshot_count).  Same numbers from the
-    # same per-window value multisets; the generic operator
-    # (operators/profiles.build_profiles) keeps serving map-typed
-    # snapshot inputs and its own tests.
+    # constant (device_metrics_raw's metric_name domain — the closed-
+    # domain precondition in the function's docstring), and the V2
+    # featurizer embedding is the 0-filled featurization of those same
+    # metrics — so a map-pivot → featurize → explode chain (4
+    # Exchanges, 2 explodes, ObjectHashAggregate map/array assembly;
+    # see plans/r16/device_profile_build_before.txt) folds to TWO
+    # plain codegen aggregations: per-(device, window) conditional
+    # avgs (quantized inside), then per-device stats + sum (centroid
+    # position i of the 0-filled embedding is sum(v_i)/snapshot_count).
     prof = build_profiles_fixed_metrics(
         raw,
         METRICS,

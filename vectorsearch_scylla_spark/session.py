@@ -19,8 +19,9 @@ _stats_drop_warned = False
 
 # At cluster scale spark.sql.shuffle.partitions should be ~2-3x total
 # cores (or left to AQE coalescing, which we enable).  Locally, match
-# the core count so tests don't create thousands of tiny tasks.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the core count so tests don't create thousands of tiny tasks: the
+# cores this process may run on, unless SPARK_GRAFT_CPUS says otherwise.
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def drop_inherited_stats(df: DataFrame) -> DataFrame:

@@ -125,16 +125,6 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     return cached
 
 
-def load_all(spark: SparkSession, sf_dir: str, register_views: bool = True) -> dict[str, DataFrame]:
-    """Load every table; optionally register temp views so operators are
-    also expressible through ``spark.sql`` (SURVEY.md §7.1)."""
-    dfs = {name: load_table(spark, sf_dir, name) for name in TABLES}
-    if register_views:
-        for name, df in dfs.items():
-            df.createOrReplaceTempView(name)
-    return dfs
-
-
 def device_metrics_raw(
     spark: SparkSession,
     sf_dir: str,

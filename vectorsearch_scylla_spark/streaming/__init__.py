@@ -1,17 +1,13 @@
 from vectorsearch_scylla_spark.streaming.pipeline import (
     metric_stream_from_kafka,
-    metric_stream_from_files,
     parse_metric_messages,
     windowed_snapshot_stream,
-    snapshot_sink,
     to_kafka_messages,
 )
 
 __all__ = [
     "metric_stream_from_kafka",
-    "metric_stream_from_files",
     "parse_metric_messages",
     "windowed_snapshot_stream",
-    "snapshot_sink",
     "to_kafka_messages",
 ]

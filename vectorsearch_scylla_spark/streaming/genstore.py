@@ -1,7 +1,7 @@
 """Storage-strategy seam for index-generation commits (r13 VERDICT
 task 3).
 
-The ``*_add_stream`` generation machinery commits a rewritten full
+The ``ivf_add_stream`` generation machinery commits a rewritten full
 index in three steps: (1) write it somewhere invisible to readers,
 (2) make it visible atomically, (3) retire the superseded copy.  HOW
 each step is durable is a property of the storage system, not of the
@@ -320,9 +320,9 @@ class ManifestGenerationStorage:
 
 
 def make_generation_storage(storage, base_dir: str):
-    """Resolve the ``storage`` knob of the ``*_add_stream``
-    entrypoints: ``"rename"`` (default) / ``"manifest"`` / an already-
-    constructed strategy object (tests inject these)."""
+    """Resolve the ``storage`` knob of ``ivf_add_stream``:
+    ``"rename"`` (default) / ``"manifest"`` / an already-constructed
+    strategy object (tests inject these)."""
     if storage is None or storage == "rename":
         return RenameGenerationStorage(base_dir)
     if storage == "manifest":

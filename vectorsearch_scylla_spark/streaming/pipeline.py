@@ -160,18 +160,6 @@ def metric_stream_from_kafka(
     return parse_metric_messages(raw)
 
 
-def metric_stream_from_files(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema: T.StructType | None = None
-) -> DataFrame:
-    """File-based streaming source (tests / replay / backfill).  Expects
-    rows already in the narrow metric shape (device_id, timestamp,
-    metric_name, metric_value, ...)."""
-    reader = spark.readStream.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
 def parse_metric_messages(kafka_df: DataFrame) -> DataFrame:
     """Kafka (key, value) bytes → typed metric rows.
 
@@ -641,32 +629,6 @@ def dedup_state_sink(state: DataFrame, base_dir: str, available_now: bool = True
     return writer.start()
 
 
-def snapshot_sink(
-    snapshots: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_seconds: int | None = 30,
-    available_now: bool = False,
-):
-    """S6: append snapshots to partitioned parquet via a streaming write.
-
-    Append mode + watermark = each (device, window) row is written
-    exactly once when its window finalizes (T5); the checkpoint dir
-    replaces the reference's committed offsets + watermark file (T6).
-    """
-    writer = (
-        snapshots.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
 def _recover_rolled_heal(rolled: str) -> None:
     """Heal the crash windows of the rolled store's FIXED-NAME
     two-rename heal swap (``<rolled>.heal.old`` / ``<rolled>.heal.
@@ -697,7 +659,7 @@ def _resume_newest_generation(
     partition_col: str | None, vec_col: str | None = None,
     storage=None,
 ):
-    """Entry-side generation recovery shared by the ``*_add_stream``
+    """Entry-side generation recovery of the ``ivf_add_stream``
     entrypoints: sweep the crash debris no other path owns (stranded
     ``store_gen*.staging.*`` dirs from a swap that died mid-write, and
     interrupted rolled-heal swaps — see :func:`_recover_rolled_heal`),
@@ -885,16 +847,16 @@ def _resume_commissioned_budget(
     base_dir: str, current_cfg: dict
 ) -> tuple[str, float | None]:
     """Load the persisted commissioned budget (``_commission.json``
-    beside the stores) for a ``*_add_stream`` restart, REFUSING a
+    beside the stores) for an ``ivf_add_stream`` restart, REFUSING a
     restart whose audit configuration disagrees with the one the
     budget was measured under — a budget calibrated in one audit
     mode / population / sample bound and enforced in another is a
     unit error, refused mechanically rather than by docstring.
     Returns ``(commission_path, budget_or_None)``; sweeps a crashed
-    mid-persist ``.tmp``.  ``current_cfg``'s keys are
-    family-specific (PQ: audit_metric/tie_tolerance; IVF: the era
-    grid's floor nprobe) — only keys PRESENT in the persisted file
-    are compared, so older files stay loadable."""
+    mid-persist ``.tmp``.  ``current_cfg``'s keys are the watch's
+    audit flags (the era grid's floor nprobe, the audit population,
+    the sample bound) — only keys PRESENT in the persisted file are
+    compared, so older files stay loadable."""
     import json
     import os
 
@@ -953,15 +915,14 @@ def _maintenance_day(
     spark, state: dict, base_dir: str, rolled: str, epoch_id: int,
     sidecar: str, audit_and_plan, storage=None,
 ) -> None:
-    """The shared audit→escalate→swap skeleton of the ``*_add_stream``
-    maintenance days (r12 VERDICT task 5 — the generation machinery
-    was already shared; this lifts the day loop too).
-    ``audit_and_plan()`` runs the family's own ladder against the
+    """The audit→escalate→swap skeleton of the ``ivf_add_stream``
+    maintenance days.
+    ``audit_and_plan()`` runs the index's own ladder against the
     committed view and returns ``(report, adoption)``: ``adoption`` is
     ``None`` on a healthy (or rolled-back) day — audit-only, state
     untouched — else ``(frame, sidecar_obj, state_updates,
     partition_col, n_parts)`` describing the rewritten full index.
-    The driver owns everything family-independent: the epoch-stamped
+    This skeleton owns everything index-independent: the epoch-stamped
     report append, the generation persist (:func:`_swap_in_generation`
     — storage-strategy commit, sidecar co-located, rolled absorbed,
     superseded generation retired), and the post-swap ``state`` update
@@ -984,7 +945,7 @@ def _fold_maintain_route(
     spark, state: dict, epoch_root: str, rolled: str,
     compact_at_files: int, maintenance, every: int, maintain, write_epoch,
 ):
-    """Build the shared ``foreachBatch`` body of the ``*_add_stream``
+    """Build the ``foreachBatch`` body of the ``ivf_add_stream``
     entrypoints.  ORDER IS LOAD-BEARING: fold first (every epoch <
     current moves into rolled), THEN maintain, THEN transform+write
     this epoch.  Maintenance therefore always sees the COMPLETE
@@ -1099,10 +1060,9 @@ def ivf_add_stream(
     ``"recent"`` to audit only the post-generation adds — the
     drift-sensitive choice; see ``_maintain``).
     ``recall_budget`` also accepts ``"commission"`` (with optional
-    ``commission_margin``, default 0.05), the same mechanized
-    calibration rule as ``pq_add_stream``'s: the first fired
-    maintenance day measures the era grid's FLOOR nprobe on the
-    deployer-vouched undrifted state and persists
+    ``commission_margin``, default 0.05), a mechanized calibration
+    rule: the first fired maintenance day measures the era grid's
+    FLOOR nprobe on the deployer-vouched undrifted state and persists
     budget = observed − margin beside the stores (restarts with
     mismatched audit flags are refused); the commissioning day never
     escalates.  A healthy day is audit-only (bounded exact pass;
@@ -1220,7 +1180,7 @@ def ivf_add_stream(
         state["generation"] = gen_n
     m = dict(maintenance or {})
     every = int(m.get("every", 1))
-    # commissioned-budget resume (shared helper; see pq_add_stream),
+    # commissioned-budget resume (see _resume_commissioned_budget),
     # ONLY when commission mode will actually consume it — a stale
     # _commission.json must never block a numeric-budget or pure-
     # ingest restart of the same directory.  The cfg keys are the IVF
@@ -1289,10 +1249,9 @@ def ivf_add_stream(
         queries = q_src.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
         )
-        # recall_budget="commission" (r13; same mechanized rule as
-        # pq_add_stream): the FIRST fired maintenance day measures the
-        # era grid's FLOOR point on the deployer-vouched undrifted
-        # state — that reading, minus commission_margin, becomes the
+        # recall_budget="commission" (r13): the FIRST fired
+        # maintenance day measures the era grid's FLOOR point on the
+        # deployer-vouched undrifted state — that reading, minus commission_margin, becomes the
         # working budget (persisted; restarts with mismatched flags
         # are refused).  The commissioning day never escalates.
         if (
@@ -1401,310 +1360,3 @@ def ivf_add_stream(
     return state
 
 
-def pq_add_stream(
-    spark: SparkSession,
-    src_path: str,
-    src_schema,
-    books: list[list[tuple[int, list[float]]]],
-    base_store_path: str,
-    base_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dsub: int = 16,
-    max_files_per_trigger: int = 8,
-    compact_at_files: int = 48,
-    maintenance: dict | None = None,
-    timeout_sec: int = 600,
-    dtype: str = "float32",
-    storage: str = "rename",
-) -> dict:
-    """STREAMING PQ code ingest + codebook lifecycle — the quantized
-    twin of :func:`ivf_add_stream`, completing the in-stream half of
-    the r11 PQ staleness story: new vectors arrive as a file-source
-    stream, each micro-batch is ADC-encoded with the CURRENT
-    codebooks (:func:`~vectorsearch_scylla_spark.operators.pq.
-    encode_pq_np` — map-only, blocked BLAS) and lands as a flat
-    epoch-dir overwrite (exactly-once under replay), then committed
-    prior epochs fold (rename-only) into the rolled code store with
-    auto-compaction past ``compact_at_files``.  Stores co-locate the
-    RAW vectors with the codes (id, vec, code0.., rnorm): a code
-    table that cannot reach its vectors can neither audit its own
-    staleness nor re-encode under refreshed books.
-
-    ``maintenance`` wires the codebook-staleness trigger in-stream:
-    every ``every`` epochs (skipping epoch 0), after the fold, the
-    committed view's sampled ADC recall is measured against the exact
-    sweep (:func:`~vectorsearch_scylla_spark.operators.pq.
-    pq_recall_audit`, bounded md5 draw) on ``audit_source``
-    (``"members"`` | ``"recent"`` — same semantics as
-    :func:`ivf_add_stream`).  Past budget, :func:`~vectorsearch_
-    scylla_spark.operators.pq.maybe_retrain_pq` fires with the
-    ROLLBACK RAIL ON by default (the capacity-starved lesson: a
-    fixed-shape retrain without codeword headroom makes recall WORSE
-    — a retrain whose post-audit still misses budget is not adopted)
-    and the caller-supplied ``recall_before`` fast path (the entry
-    audit is never paid twice).  An ADOPTED retrain re-encodes the
-    full committed view under the new books in one map-only pass —
-    re-encoding during the generation scan beats joining the
-    trigger's internal code table back to its vectors, which would
-    shuffle the corpus — and swaps it in as a new store generation
-    (shared machinery; commit primitive picked by ``storage`` exactly
-    as in :func:`ivf_add_stream` — ``_books.json`` sidecar with
-    the INTENDED ksub capacity, rolled absorbed, superseded
-    generation retired, crash windows healed on re-entry).
-    Maintenance keys: ``recall_budget`` (default 0.7 — ADC is a
-    candidate generator; exact re-rank upstream absorbs moderate
-    decay), ``every``, ``max_audit_queries`` (default 64), ``k``,
-    ``audit_source``, ``train_rows``, ``iters``, ``rollback``
-    (default True), ``tie_aware`` (default False — pass True on
-    near-duplicate-heavy corpora; see below), ``tie_tolerance``
-    (task indifference band for the tie-aware metric; every report
-    stamps its ``audit_metric`` so mixed-mode comparisons can be
-    refused).  CALIBRATE THE BUDGET ON THE WATCH'S OWN
-    POPULATION: on near-duplicate-heavy corpora a fresh-add audit is
-    tie-dominated (ADC cannot order within a large near-duplicate
-    cohort, so even a zero-drift add day audits far below the base
-    self-audit) — a budget derived from base-self recall mis-fires
-    on every healthy day.  Measure an undrifted commissioning day
-    through this same watch and set the budget from that baseline
-    (BENCH_SCALE.md "In-stream PQ refresh day" measures the gap:
-    base-self 0.632 vs commissioning 0.47 on the 100-replica cohort
-    corpus).
-
-    Returns the state dict: ``books``, ``ksub`` (intended capacity —
-    survives codeword drops across retrains), ``rolled``, ``store``,
-    ``generation``, ``reports`` (one per maintenance day: recall,
-    pair count, ``audit_metric`` mode stamp, trigger report when
-    fired), ``epochs``.  Restart resumes from the newest generation's
-    persisted books exactly like :func:`ivf_add_stream`, whose
-    ID CONTRACT (add-oriented stream; ``(id, vector)``-matched crash
-    heal; duplicate ids are kept, not LWW-resolved) applies here
-    unchanged.
-
-    ``maintenance["recall_budget"]`` also accepts the string
-    ``"commission"`` (with optional ``commission_margin``, default
-    0.05): the first fired maintenance day becomes the commissioning
-    day — its measured recall on the deployer-vouched undrifted state
-    sets the working budget (observed − margin, persisted beside the
-    stores so restarts keep it), and that day never escalates.  This
-    mechanizes the calibration rule above; the standalone form is
-    :func:`~vectorsearch_scylla_spark.operators.pq.
-    commission_pq_watch`.
-
-    Reference parity: the reference re-creates its HNSW index
-    wholesale when the embedding space moves
-    (scylladb_setup/create_iot_schema.py:137-155); this is the lossy
-    code layer's version of that lifecycle with the refresh decision
-    audited, budget-gated, and rollback-protected.
-    """
-    import os
-
-    from vectorsearch_scylla_spark.operators.pq import (
-        encode_pq_np,
-        maybe_retrain_pq,
-        pq_recall_audit,
-    )
-
-    m_sub = len(books)
-    code_cols = [f"code{s}" for s in range(m_sub)]
-    epoch_root = os.path.join(base_dir, "epochs")
-    rolled = os.path.join(base_dir, "rolled")
-    state: dict = {
-        "books": books,
-        "ksub": max(len(b) for b in books),
-        "rolled": rolled,
-        "store": None,
-        "generation": 0,
-        "reports": [],
-        "epochs": 0,
-    }
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        make_generation_storage,
-    )
-
-    gen_storage = make_generation_storage(storage, base_dir)
-    gen_dir, gen_n, sidecar = _resume_newest_generation(
-        spark, base_dir, rolled, id_col, "_books.json", None, vec_col=vec_col,
-        storage=gen_storage,
-    )
-    if gen_dir is not None:
-        state["books"] = [
-            [(int(c), list(v)) for c, v in b] for b in sidecar["books"]
-        ]
-        state["ksub"] = int(sidecar["ksub"])
-        state["store"] = gen_dir
-        state["generation"] = gen_n
-    m = dict(maintenance or {})
-    every = int(m.get("every", 1))
-    # the commissioned budget outlives the process (a restart must not
-    # silently re-commission on whatever state it wakes up to — the
-    # deployer vouched for the COMMISSIONING day's state, not this
-    # one); the shared helper refuses a restart whose audit flags
-    # disagree with the ones the budget was measured under.  Loaded
-    # ONLY when commission mode will consume it — a stale
-    # _commission.json must never block a numeric-budget or pure-
-    # ingest restart of the same directory.
-    state["commissioned_budget"] = None
-    commission_path = os.path.join(base_dir, "_commission.json")
-    commission_cfg: dict = {}
-    if m.get("recall_budget") == "commission":
-        commission_cfg = {
-            "audit_metric": (
-                "tie_aware" if m.get("tie_aware", False) else "id_set"
-            ),
-            "tie_tolerance": m.get("tie_tolerance"),
-            "k": int(m.get("k", 5)),
-            "max_audit_queries": int(m.get("max_audit_queries", 64)),
-            "audit_source": m.get("audit_source", "members"),
-        }
-        commission_path, state["commissioned_budget"] = (
-            _resume_commissioned_budget(base_dir, commission_cfg)
-        )
-
-    def _view() -> DataFrame:
-        # coalesce to the drain's (scale-adaptive) shuffle-partition
-        # count — same small-file/task-overhead rationale as
-        # ivf_add_stream's _members_view; no-op on a production conf
-        cols = [id_col, vec_col, *code_cols, "rnorm"]
-        base = spark.read.parquet(state["store"] or base_store_path).select(cols)
-        if os.path.isdir(rolled):
-            base = base.unionByName(spark.read.parquet(rolled).select(cols))
-        return base.coalesce(_conf_partitions(spark))
-
-    def _audit_and_plan() -> tuple[dict, tuple | None]:
-        view = _view()
-        codes = view.select(id_col, *code_cols, "rnorm")
-        members_v = view.select(id_col, vec_col)
-        q_src = view
-        if m.get("audit_source", "members") == "recent" and os.path.isdir(rolled):
-            q_src = spark.read.parquet(rolled)
-        queries = q_src.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-        )
-        k = int(m.get("k", 5))
-        maq = int(m.get("max_audit_queries", 64))
-        tie_aware = bool(m.get("tie_aware", False))
-        tie_tol = m.get("tie_tolerance")
-        recall, denom = pq_recall_audit(
-            queries, codes, state["books"], members_v,
-            k=k, dsub=dsub, corpus_id=id_col, corpus_vec=vec_col,
-            dtype=dtype, max_queries=maq, tie_aware=tie_aware,
-            tie_tolerance=tie_tol,
-        )
-        # day-report wrapper, key-compatible with the shared retrain-
-        # report contract (operators/report.py): fired / rolled_back /
-        # audit_metric / metric_before / metric_after ride beside the
-        # legacy spellings so maintenance-day tooling reads streaming
-        # and batch reports with one key map
-        report: dict = {
-            "audit_metric": "tie_aware" if tie_aware else "id_set",
-            "recall_before": recall,
-            "metric_before": recall,
-            "metric_after": None,
-            "n_audit_pairs": int(denom),
-            "retrained": False,
-            "fired": False,
-            "rolled_back": False,
-        }
-        # recall_budget="commission" mechanizes the r12 calibration
-        # rule (CALIBRATE ON THE WATCH'S OWN POPULATION): the FIRST
-        # fired maintenance day is the commissioning day — its
-        # measured recall, on a state the deployer vouches is
-        # undrifted, BECOMES the baseline and the working budget is
-        # baseline − commission_margin.  The commissioning day itself
-        # never escalates.  See operators.pq.commission_pq_watch for
-        # the standalone (non-streaming) form.
-        if (
-            m.get("recall_budget") == "commission"
-            and state["commissioned_budget"] is None
-            and recall is not None
-        ):
-            margin = float(m.get("commission_margin", 0.05))
-            state["commissioned_budget"] = max(0.0, recall - margin)
-            _persist_commissioned_budget(
-                commission_path, state["commissioned_budget"], recall,
-                margin, commission_cfg, denom,
-            )
-            report.update(
-                commissioned=True,
-                commission_margin=margin,
-                recall_budget=state["commissioned_budget"],
-                budget=state["commissioned_budget"],
-            )
-            return report, None
-        if m.get("recall_budget") == "commission":
-            budget = state["commissioned_budget"]
-            if budget is None:
-                return report, None
-        else:
-            budget = float(m.get("recall_budget", 0.7))
-        report["recall_budget"] = report["budget"] = budget
-        if recall is None or recall >= budget:
-            return report, None
-        b2, _, rep = maybe_retrain_pq(
-            members_v, codes, state["books"], queries,
-            recall_budget=budget, recall_before=recall,
-            k=k, dsub=dsub, iters=int(m.get("iters", 2)),
-            train_rows=m.get("train_rows"),
-            corpus_id=id_col, corpus_vec=vec_col,
-            dtype=dtype, max_audit_queries=maq,
-            ksub=state["ksub"],
-            audit_after=True,
-            rollback_below_budget=bool(m.get("rollback", True)),
-            tie_aware=tie_aware,
-            tie_tolerance=tie_tol,
-        )
-        report.update(
-            retrained=bool(rep.get("retrained")),
-            fired=bool(rep.get("fired")),
-            rolled_back=bool(rep.get("rolled_back")),
-            recall_after=rep.get("recall_after"),
-            metric_after=rep.get("metric_after"),
-            ksub=rep.get("ksub"),
-        )
-        if not report["retrained"] or report["rolled_back"]:
-            return report, None
-        # adopted: re-encode the full committed view under the new
-        # books during the generation scan (map-only — cheaper than
-        # shuffling the trigger's code table back onto its vectors)
-        gen_frame = encode_pq_np(
-            view.select(id_col, vec_col), b2, dsub, vec_col=vec_col, dtype=dtype
-        )
-        return report, (
-            gen_frame,
-            {
-                "ksub": int(state["ksub"]),
-                "books": [
-                    [[int(c), list(map(float, v))] for c, v in b] for b in b2
-                ],
-            },
-            {"books": b2},
-            None,
-            32,
-        )
-
-    def _maintain(epoch_id: int) -> None:
-        _maintenance_day(
-            spark, state, base_dir, rolled, epoch_id,
-            "_books.json", _audit_and_plan, storage=gen_storage,
-        )
-
-    def _write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        encoded = encode_pq_np(
-            batch_df, state["books"], dsub, vec_col=vec_col, dtype=dtype
-        )
-        encoded.select(id_col, vec_col, *code_cols, "rnorm").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(epoch_root, f"epoch={epoch_id}"))
-
-    route_batch = _fold_maintain_route(
-        spark, state, epoch_root, rolled, compact_at_files,
-        maintenance, every, _maintain, _write_epoch,
-    )
-
-    _drain_file_stream(
-        spark, src_path, src_schema, base_dir, route_batch,
-        max_files_per_trigger, timeout_sec, "pq_add_stream",
-        rolled, compact_at_files,
-    )
-    return state
