@@ -29,9 +29,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from vectorsearch_scylla_spark.session import get_spark  # noqa: E402
-from vectorsearch_scylla_spark.plans.registry import REGISTRY  # noqa: E402
-
 # Headline set: one per major operator family (hot path, kNN, dedup,
 # window/pivot, relational core, serving).
 HEADLINE = [
@@ -122,10 +119,9 @@ FINAL_LINE_TOP_N = 12
 # regime that flat within-run skew cannot see, and its normalized
 # total over-corrects.  Calibrated at REGIME_SF (the scan probe's
 # work scales with the sf dir's lineitem); other scale factors stamp
-# True.  tools/compare_bench.py carries the SAME band for its refusal
-# gate — equality is pinned by tests/test_tools.py (the tool must not
-# import this module: it would drag the pyspark import into a plain
-# file-comparison CLI).
+# True.  tools/compare_bench.py imports both for its refusal gate
+# (package imports live inside the functions, so importing this module
+# does not start pyspark).
 REGIME_BAND = (1.5, 4.0)
 REGIME_SF = 0.1
 
@@ -199,13 +195,21 @@ def final_line(
     )
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+def warm_up(spark, sf_dir: str, names) -> None:
+    """Untimed warm-ups before any timed query in ``names``: page
+    cache, JVM, Python worker pool, NumPy in the workers, the
+    artifacts batch queries stage at plan-construction time, and — when
+    a streaming name is present — the artifacts the streaming queries
+    stage."""
+    import inspect
 
-    spark = get_spark("vectorsearch-scylla-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    from vectorsearch_scylla_spark.operators.knn import (
+        topk_similarity_join_blocked,
+    )
+    from vectorsearch_scylla_spark.plans.registry import (
+        REGISTRY,
+        prestage_streaming_artifacts,
+    )
 
     # warm the OS page cache on the inputs (a cold first read of the
     # parquet data charges disk latency to whichever query touches each
@@ -228,11 +232,6 @@ def main() -> None:
     # the identity warm-up above reuses workers but never imports numpy
     # there, so the FIRST real kernel — knn_bruteforce / path2_anomaly —
     # absorbed ~1-2 s of per-worker import as bench "retry" noise).
-    # Unmeasured, runs before the canary and every timed query.
-    from vectorsearch_scylla_spark.operators.knn import (
-        topk_similarity_join_blocked,
-    )
-
     _wv = spark.range(256).selectExpr(
         "id",
         "transform(sequence(0, 15), i -> cast(pmod(id * (i + 3), 97) AS double)) AS v",
@@ -253,13 +252,11 @@ def main() -> None:
     # here (result discarded) pays the build untimed, so the timed
     # number is the steady-state day cost the query docstrings
     # describe.  Membership is derived from source, not a hand list:
-    # any BATCH headline query whose body stages an artifact
-    # (streaming queries are excluded — calling their fn DRAINS a
-    # stream, and no stream may run before the batch section; their
-    # first runs are retry-exempt and reported as-is anyway).
-    import inspect
-
-    for _n in HEADLINE:
+    # any BATCH query whose body stages an artifact (streaming queries
+    # are excluded — calling their fn DRAINS a stream, and no stream
+    # may run before the batch section; their first runs are
+    # retry-exempt and reported as-is anyway).
+    for _n in names:
         if (
             _n in REGISTRY
             and not _n.startswith("streaming_")
@@ -280,11 +277,22 @@ def main() -> None:
     # streaming_novelty_e2e and the profile build inside
     # streaming_detect_e2e — the structural half of the r10→r12
     # 6.9→17.4 s novelty drift band (BENCH_SCALE.md attribution).
-    from vectorsearch_scylla_spark.plans.registry import (
-        prestage_streaming_artifacts,
-    )
+    if any(n.startswith("streaming_") for n in names):
+        prestage_streaming_artifacts(spark, sf_dir)
 
-    prestage_streaming_artifacts(spark, sf_dir)
+
+def main() -> None:
+    from vectorsearch_scylla_spark.plans.registry import REGISTRY
+    from vectorsearch_scylla_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    spark = get_spark("vectorsearch-scylla-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # unmeasured, runs before the canary and every timed query
+    warm_up(spark, sf_dir, HEADLINE)
 
     def _py_probe(batches):
         # fixed-work Python/memory-bandwidth kernel: a bounded matmul

@@ -1,4 +1,5 @@
-"""Every top-level package function has a non-test caller.
+"""Every top-level package function has a non-test caller, and every
+option it branches on is varied by one.
 
 A pure-AST scan, no Spark: starting from the entry points (every
 ``@query`` function in the registry, ``__spark_entry__.py``,
@@ -7,6 +8,13 @@ functions ``perfbench/trace.py`` wraps by name), follow every name a
 reached function uses to the package function it resolves to.  A
 function the walk never reaches fails the test unless ``ALLOWED``
 names it with the reason it stays.
+
+A second walk over the same non-test code looks at options: a
+parameter with a ``bool`` default that the body branches on, or with a
+``str`` default that the body compares to a string literal.  Some
+non-test call must pass it a value other than its default, or
+``ALLOWED_OPTIONS`` must name it with the reason it stays; otherwise
+the branch only tests select, and the option should be a constant.
 """
 
 from __future__ import annotations
@@ -37,6 +45,10 @@ ALLOWED = {
     "streaming.pipeline.to_kafka_messages":
         "encodes metric rows as the Kafka ingest's messages",
 }
+
+# Options ("module.function.parameter") kept although no non-test caller
+# passes a value other than the default, each for the reason given.
+ALLOWED_OPTIONS: dict[str, str] = {}
 
 
 def _module_name(path: str) -> str:
@@ -123,40 +135,66 @@ def _decorators_and_defaults(fn: ast.AST) -> list[ast.AST]:
     return list(fn.decorator_list) + list(args.defaults) + [d for d in args.kw_defaults if d]
 
 
-def reachable(extra_roots=()) -> tuple[set[str], set[str]]:
-    """(every top-level package function, the ones the entry points and
-    ``extra_roots`` reach)."""
-    modules = _load_package()
-    everything = {f"{m}.{f}" for m, mod in modules.items() for f in mod.functions}
+class _Package:
+    """The parsed package plus name resolution into its functions."""
 
-    def resolve(target: str) -> str | None:
+    def __init__(self):
+        self.modules = _load_package()
+        self.everything = {
+            f"{m}.{f}" for m, mod in self.modules.items() for f in mod.functions
+        }
+
+    def _resolve(self, target: str) -> str | None:
         """Follow a binding ("ops.x.f") through re-exports to a function."""
         for _ in range(5):
-            if target in everything:
+            if target in self.everything:
                 return target
             mod, _, attr = target.rpartition(".")
-            if mod in modules and attr in modules[mod].bindings:
-                target = modules[mod].bindings[attr]
+            if mod in self.modules and attr in self.modules[mod].bindings:
+                target = self.modules[mod].bindings[attr]
                 continue
             return None
         return None
 
+    def function_named(self, mod: _Module, node: ast.AST) -> str | None:
+        """The package function a ``Name`` or ``module.attr`` node in
+        ``mod`` refers to, if any."""
+        if isinstance(node, ast.Name):
+            if mod.name is not None and node.id in mod.functions:
+                return f"{mod.name}.{node.id}"
+            if node.id in mod.bindings:
+                return self._resolve(mod.bindings[node.id])
+        elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            base = mod.bindings.get(node.value.id)
+            if base is not None:
+                return self._resolve(f"{base}.{node.attr}" if base else node.attr)
+        return None
+
+    def definition(self, name: str) -> ast.FunctionDef:
+        owner, _, fname = name.rpartition(".")
+        return self.modules[owner].functions[fname]
+
+
+def _entry_files() -> list[str]:
+    return [
+        os.path.join(ROOT, "__spark_entry__.py"),
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, PACKAGE, "__main__.py"),
+    ] + _py_files("tools", "perfbench")
+
+
+def reachable(extra_roots=()) -> tuple[set[str], set[str]]:
+    """(every top-level package function, the ones the entry points and
+    ``extra_roots`` reach)."""
+    pkg = _Package()
+    modules, everything = pkg.modules, pkg.everything
     reached: set[str] = set()
     work: list[tuple[_Module, list[ast.AST]]] = []
 
     def visit(mod: _Module, nodes: list[ast.AST]) -> None:
         for root in nodes:
             for node in ast.walk(root):
-                hit = None
-                if isinstance(node, ast.Name):
-                    if mod.name is not None and node.id in mod.functions:
-                        hit = f"{mod.name}.{node.id}"
-                    elif node.id in mod.bindings:
-                        hit = resolve(mod.bindings[node.id])
-                elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
-                    base = mod.bindings.get(node.value.id)
-                    if base is not None:
-                        hit = resolve(f"{base}.{node.attr}" if base else node.attr)
+                hit = pkg.function_named(mod, node)
                 if hit and hit not in reached:
                     reached.add(hit)
                     owner, _, fname = hit.rpartition(".")
@@ -170,12 +208,7 @@ def reachable(extra_roots=()) -> tuple[set[str], set[str]]:
             if _is_query(fn):
                 reached.add(f"{mod.name}.{fn.name}")
                 work.append((mod, [fn]))
-    entry_files = [
-        os.path.join(ROOT, "__spark_entry__.py"),
-        os.path.join(ROOT, "bench.py"),
-        os.path.join(ROOT, PACKAGE, "__main__.py"),
-    ] + _py_files("tools", "perfbench")
-    for path in entry_files:
+    for path in _entry_files():
         ext = _Module(path)
         visit(ext, [ext.tree])
     roots = [n for n in extra_roots if n in everything]
@@ -209,3 +242,88 @@ def test_allow_list_is_current():
     everything, reached = reachable()
     stale = sorted(n for n in ALLOWED if n not in everything or n in reached)
     assert not stale, f"ALLOWED entries that are gone or now reached: {stale}"
+
+
+def _options(fn: ast.FunctionDef) -> dict[str, object]:
+    """{parameter: default} for the ``bool`` parameters ``fn`` branches
+    on and the ``str`` parameters it compares to a string literal."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    defaulted = positional[len(positional) - len(args.defaults):]
+    defaults = {a.arg: d for a, d in zip(defaulted, args.defaults)}
+    defaults.update(
+        (a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
+    )
+    consts = {
+        name: d.value for name, d in defaults.items()
+        if isinstance(d, ast.Constant) and isinstance(d.value, (bool, str))
+    }
+    branched, compared = set(), set()
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.IfExp, ast.While)):
+            branched |= {n.id for n in ast.walk(node.test) if isinstance(n, ast.Name)}
+        elif isinstance(node, ast.Compare):
+            sides = [node.left, *node.comparators]
+            literal = any(
+                isinstance(c, ast.Constant) and isinstance(c.value, str)
+                for side in sides for c in ast.walk(side)
+            )
+            if literal:
+                compared |= {s.id for s in sides if isinstance(s, ast.Name)}
+    return {
+        name: value for name, value in consts.items()
+        if (isinstance(value, bool) and name in branched)
+        or (isinstance(value, str) and name in compared)
+    }
+
+
+def _varied_options(pkg: _Package) -> set[str]:
+    """Every "function.parameter" some non-test call passes a value that
+    is not the parameter's literal default (a non-literal counts)."""
+    varied: set[str] = set()
+    files = [(mod, mod.tree) for mod in pkg.modules.values()]
+    files += [(m, m.tree) for m in map(_Module, _entry_files())]
+    for mod, tree in files:
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            name = pkg.function_named(mod, call.func)
+            if name is None:
+                continue
+            fn = pkg.definition(name)
+            params = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+            defaults = _options(fn)
+            passed = []
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    passed += [(p, arg) for p in params[i:]]
+                    break
+                if i < len(params):
+                    passed.append((params[i], arg))
+            for kw in call.keywords:
+                if kw.arg is None:  # **kwargs may carry any option
+                    passed += [(p, kw.value) for p in defaults]
+                else:
+                    passed.append((kw.arg, kw.value))
+            for param, value in passed:
+                if param in defaults and not (
+                    isinstance(value, ast.Constant) and value.value == defaults[param]
+                ):
+                    varied.add(f"{name}.{param}")
+    return varied
+
+
+def test_every_option_is_varied_by_a_non_test_caller():
+    pkg = _Package()
+    varied = _varied_options(pkg)
+    options = {
+        f"{name}.{param}"
+        for name in pkg.everything - set(ALLOWED)
+        for param in _options(pkg.definition(name))
+    }
+    dead = sorted(options - varied - set(ALLOWED_OPTIONS))
+    assert not dead, (
+        "options no non-test caller sets to a non-default value — make each "
+        f"a constant and delete the branch only tests select, or add a reason "
+        f"to ALLOWED_OPTIONS: {dead}"
+    )
+    stale = sorted(n for n in ALLOWED_OPTIONS if n not in options or n in varied)
+    assert not stale, f"ALLOWED_OPTIONS entries that are gone or now varied: {stale}"

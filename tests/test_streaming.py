@@ -1081,6 +1081,24 @@ def test_fold_streaming_epochs_refuses_layout_mix(spark, tmp_path):
         assert spark.read.parquet(rdir).count() == 2
 
 
+def test_ivf_add_stream_rejects_unknown_maintenance_keys(spark, tmp_path):
+    """A ``maintenance`` key ivf_add_stream does not read must raise
+    before anything touches the store — a caller passing a removed
+    option would otherwise silently get a different audit."""
+    import os
+
+    from vectorsearch_scylla_spark.streaming.pipeline import ivf_add_stream
+
+    base = str(tmp_path / "work")
+    for key, value in (("audit_source", "recent"), ("commission_margin", 0.1)):
+        with pytest.raises(ValueError, match=key):
+            ivf_add_stream(
+                spark, str(tmp_path / "src"), None, [], str(tmp_path / "lists"),
+                base, maintenance={"recall_budget": 0.9, key: value},
+            )
+    assert not os.path.exists(base)
+
+
 def test_ivf_add_stream_maintenance_fires_in_stream(spark, tmp_path):
     """r12 (r11 VERDICT task 6): the composed maintenance ladder must
     fire INSIDE the add stream, not only as a batch job.  Fixture: a
@@ -1469,176 +1487,26 @@ def test_resume_recovers_generation_swap_crash_debris(spark, tmp_path):
         )
 
 
-def test_ivf_commission_budget_noops_on_boundary_heavy_stream(spark, tmp_path):
-    """r13 (the IVF twin of the PQ commissioning test): a deployment
-    whose workload legitimately straddles list boundaries audits far
-    below a textbook budget at the era grid's floor nprobe even with
-    ZERO drift — the firing test demonstrates that a 0.9 budget
-    exhausts the (nprobe=1) grid and fires the retrain on exactly this
-    population.  maintenance={"recall_budget": "commission"} must
-    instead calibrate on the watch's own first fired day, no-op on the
-    following same-population day, survive a restart, and refuse a
-    restart whose audit flags disagree with the persisted ones."""
-    import json
-    import os
-
-    import pytest as _pytest
-
-    from vectorsearch_scylla_spark.operators.ivf import assign_clusters_np
-    from vectorsearch_scylla_spark.streaming.pipeline import ivf_add_stream
-
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    base_rows = [(i, [1.0, 0.001 * i, 0.0, 0.0]) for i in range(20)] + [
-        (100 + i, [0.001 * i, 1.0, 0.0, 0.0]) for i in range(20)
-    ]
-    base = spark.createDataFrame(
-        base_rows, "vec_id long, embedding array<double>"
-    )
-    base_lists = str(tmp_path / "base_lists")
-    assign_clusters_np(base, cents, dtype="float64").write.partitionBy(
-        "cluster_id"
-    ).parquet(base_lists)
-
-    def straddle(day: int):
-        # the firing test's boundary-straddling pair recipe — here it
-        # IS the healthy workload, not drift: pairs sit 1 ± ε around
-        # the routing boundary, so nprobe=1 recall is structurally low
-        rows = [
-            (
-                day * 10_000 + i,
-                [
-                    1.0,
-                    1.0 + (0.0005 if i % 2 else -0.0005),
-                    0.02 * (i // 2),
-                    0.0,
-                ],
-            )
-            for i in range(32)
-        ]
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    src = str(tmp_path / "src")
-    work = str(tmp_path / "work")
-    os.makedirs(work)
-    mnt = {
-        "recall_budget": "commission",
-        "commission_margin": 0.1,
-        "nprobe_grid": (1,),
-        "post_retrain_grid": (1, 2, 3),
-        "retrain_k": 3,
-        "every": 1,
-        "max_audit_queries": 64,
-        "audit_source": "recent",
-    }
-
-    def run_day(day: int) -> dict:
-        # two files per day, one micro-batch each.  The split is a hash
-        # of the id and the files are written in turn, so which rows
-        # the commissioning epoch audits is the same on any core count
-        # (a round-robin repartition splits by the session's slicing)
-        day_rows = straddle(day)
-        for half in (0, 1):
-            day_rows.filter(
-                F.pmod(F.xxhash64("vec_id"), F.lit(2)) == half
-            ).coalesce(1).write.mode("append").parquet(src)
-        return ivf_add_stream(
-            spark, src, "vec_id long, embedding array<double>",
-            cents, base_lists, work,
-            max_files_per_trigger=1, compact_at_files=0, maintenance=mnt,
-        )
-
-    state1 = run_day(1)
-    # day 1: the first fired epoch commissions at the grid floor and
-    # never escalates; subsequent epochs of the same day already run
-    # against the commissioned budget
-    assert state1["generation"] == 0 and state1["store"] is None
-    comm = [r for r in state1["reports"] if r["actions"] == ["commission"]]
-    assert len(comm) == 1 and comm[0].get("commissioned") is True
-    assert comm[0]["nprobe"] == 1
-    # the premise: this healthy population reads far below the naive
-    # 0.9 budget the firing test fires under
-    assert comm[0]["recall_before"] < 0.9
-    assert comm[0]["recall_budget"] == pytest.approx(
-        max(0.0, comm[0]["recall_before"] - 0.1)
-    )
-    assert state1["commissioned_budget"] == comm[0]["recall_budget"]
-    with open(os.path.join(work, "_commission.json")) as f:
-        persisted = json.load(f)
-    assert persisted["budget"] == comm[0]["recall_budget"]
-    assert persisted["nprobe_floor"] == 1
-    later = [r for r in state1["reports"] if r["actions"] != ["commission"]]
-    assert all(r["actions"] == ["retune"] for r in later)
-
-    # day 2 (restart, same population): resumes the persisted budget,
-    # every maintenance day is audit-only — no escalation, no swap
-    state2 = run_day(2)
-    assert state2["generation"] == 0 and state2["store"] is None
-    assert state2["commissioned_budget"] == comm[0]["recall_budget"]
-    assert state2["reports"] and all(
-        r["actions"] == ["retune"] and r["nprobe"] == 1
-        for r in state2["reports"]
-    )
-
-    # a restart with a DIFFERENT audit configuration is refused — the
-    # persisted budget is meaningless under other flags
-    bad = dict(mnt, max_audit_queries=128)
-    with _pytest.raises(ValueError, match="different audit configuration"):
-        ivf_add_stream(
-            spark, src, "vec_id long, embedding array<double>",
-            cents, base_lists, work,
-            max_files_per_trigger=1, compact_at_files=0, maintenance=bad,
-        )
-
-    # ...but the stale commission file must NEVER poison restarts that
-    # will not consume it: a numeric-budget restart (mismatched flags
-    # and all) and a maintenance-free pure-ingest restart both enter
-    # cleanly
-    state_n = ivf_add_stream(
-        spark, src, "vec_id long, embedding array<double>",
-        cents, base_lists, work,
-        max_files_per_trigger=1, compact_at_files=0,
-        maintenance=dict(bad, recall_budget=0.0001),
-    )
-    assert state_n["epochs"] == 0 and state_n["commissioned_budget"] is None
-    state_p = ivf_add_stream(
-        spark, src, "vec_id long, embedding array<double>",
-        cents, base_lists, work,
-        max_files_per_trigger=1, compact_at_files=0,
-    )
-    assert state_p["epochs"] == 0 and state_p["commissioned_budget"] is None
-
-
-@pytest.mark.parametrize("strategy", ["rename", "manifest"])
-def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
-    """r13 (parameterized over both storage strategies r14, VERDICT
-    task 3): enumerate the on-disk states a crash can leave at EACH
-    step of the generation swap (invisible write → atomic commit →
+def test_generation_swap_crash_states_all_converge(spark, tmp_path):
+    """r13: enumerate the on-disk states a crash can leave at EACH
+    step of the generation swap (staged write → atomic rename →
     rolled reset → swap-completed marker → superseded-generation
     delete) and assert the next entry converges every one of them to
     the correct committed view with no data loss, no duplicates, and
     no debris.  The swap absorbs rolled rows B into the new generation
     (A ∪ B), so the correct view is: pre-swap (A in gen1 + B in
-    rolled) while the commit has not happened, post-swap (A ∪ B)
+    rolled) while the rename has not happened, post-swap (A ∪ B)
     after it — including the nasty middle states: a PARTIALLY deleted
     rolled dir (rmtree is not atomic; the survivors are bit-identical
     residue the (id, vector) heal must drop), a rolled dir whose
     rmtree got far enough to leave NO parquet part files (r13 ADVICE
     — isdir() true but spark.read.parquet raises; must converge, not
-    fail-stop), and a not-yet-retired gen1.  Strategy mapping:
-    "rename" commits by atomic dir rename with an uncommitted write
-    at ``store_gen2.staging.*`` and an empty-file marker; "manifest"
-    commits by atomically replacing ``_CURRENT`` with an uncommitted
-    write as an UNREFERENCED unique prefix and the marker as a
-    manifest field."""
+    fail-stop), and a not-yet-retired gen1."""
     import json
     import os
     import shutil
 
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        make_generation_storage,
-    )
+    from vectorsearch_scylla_spark.streaming import genstore
     from vectorsearch_scylla_spark.streaming.pipeline import (
         _resume_newest_generation,
     )
@@ -1647,58 +1515,28 @@ def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
     rows_a = [(1, [1.0, 0.0]), (2, [0.0, 1.0])]
     rows_b = [(10, [0.5, 0.5]), (11, [0.25, 0.75])]
     sidecar1, sidecar2 = [[0, [1.0, 0.0]]], [[0, [0.9, 0.1]]]
-    # manifest mode: generations live under unique never-renamed
-    # prefixes; rename mode: canonical store_genN dirs
-    g1_name = "store_gen1" if strategy == "rename" else "store_gen1.aaaa1111"
-    g2_name = "store_gen2" if strategy == "rename" else "store_gen2.bbbb2222"
-    # an uncommitted gen-2 write: rename = a .staging. dir the rename
-    # never promoted; manifest = a fully-written unique prefix the
-    # commit PUT never referenced
-    staged_name = (
-        "store_gen2.staging.cafe01" if strategy == "rename"
-        else "store_gen2.cafe0102"
-    )
-
-    def put_manifest(base, gen, prefix, absorbed):
-        with open(os.path.join(base, "_CURRENT"), "w") as f:
-            json.dump(
-                {"generation": gen, "prefix": prefix,
-                 "rolled_absorbed": absorbed}, f,
-            )
 
     def write_gen(base, name, rows, sidecar_obj, marker):
         d = os.path.join(base, name)
         spark.createDataFrame(rows, schema).write.parquet(d)
         with open(os.path.join(d, "_centroids.json"), "w") as f:
             json.dump(sidecar_obj, f)
-        if marker and strategy == "rename":
+        if marker:
             with open(os.path.join(d, "_rolled_absorbed"), "w") as f:
                 f.write("")
 
     def build(base: str, *, staging: bool, gen2: bool, rolled_rows,
-              gen2_marker: bool, gen1_alive: bool, rolled_empty=False,
-              manifest_tmp=False):
+              gen2_marker: bool, gen1_alive: bool, rolled_empty=False):
         os.makedirs(base)
         if gen1_alive:
-            write_gen(base, g1_name, rows_a, sidecar1, marker=True)
+            write_gen(base, "store_gen1", rows_a, sidecar1, marker=True)
         if staging:
-            write_gen(base, staged_name, rows_a + rows_b, sidecar2,
-                      marker=False)
+            # an uncommitted gen-2 write the rename never promoted
+            write_gen(base, "store_gen2.staging.cafe01", rows_a + rows_b,
+                      sidecar2, marker=False)
         if gen2:
-            write_gen(base, g2_name, rows_a + rows_b, sidecar2,
+            write_gen(base, "store_gen2", rows_a + rows_b, sidecar2,
                       marker=gen2_marker)
-        if strategy == "manifest":
-            # the manifest references the newest COMMITTED generation;
-            # an uncommitted staging prefix is by definition
-            # unreferenced
-            if gen2:
-                put_manifest(base, 2, g2_name, gen2_marker)
-            elif gen1_alive:
-                put_manifest(base, 1, g1_name, True)
-            if manifest_tmp:
-                # a crashed mid-PUT tmp (never the live manifest)
-                with open(os.path.join(base, "_CURRENT.tmp.dead01"), "w") as f:
-                    f.write("{not even json")
         if rolled_rows:
             spark.createDataFrame(rolled_rows, schema).write.parquet(
                 os.path.join(base, "rolled")
@@ -1714,11 +1552,11 @@ def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
     post = (2, sidecar2, sorted(r[0] for r in rows_a + rows_b))
     pre = (1, sidecar1, sorted(r[0] for r in rows_a + rows_b))
     cases = [
-        # crash after the staging write, before the commit: swap never
+        # crash after the staging write, before the rename: swap never
         # happened — pre-swap state stands, uncommitted write swept
         ("staged-only", dict(staging=True, gen2=False, rolled_rows=rows_b,
                              gen2_marker=False, gen1_alive=True), pre),
-        # crash right after the commit: rolled fully intact — every
+        # crash right after the rename: rolled fully intact — every
         # rolled row is absorbed residue, heal empties it
         ("renamed", dict(staging=False, gen2=True, rolled_rows=rows_b,
                          gen2_marker=False, gen1_alive=True), post),
@@ -1738,23 +1576,15 @@ def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
         # crash after the marker, before gen1 retirement
         ("marked-unretired", dict(staging=False, gen2=True, rolled_rows=[],
                                   gen2_marker=True, gen1_alive=True), post),
-        # crash mid-manifest-PUT: the half-written .tmp is never the
-        # live manifest; swept on entry (manifest strategy only — for
-        # rename this degenerates to marked-unretired)
-        ("manifest-tmp", dict(staging=False, gen2=True, rolled_rows=[],
-                              gen2_marker=True, gen1_alive=True,
-                              manifest_tmp=True), post),
     ]
     for name, kw, (exp_gen, exp_sidecar, exp_ids) in cases:
         base = str(tmp_path / name)
         build(base, **kw)
         rolled = os.path.join(base, "rolled")
-        storage = make_generation_storage(strategy, base)
-        exp_dir_name = g2_name if exp_gen == 2 else g1_name
         for attempt in (1, 2):  # second entry pins idempotence
             gen_dir, gen_n, obj = _resume_newest_generation(
                 spark, base, rolled, "vec_id", "_centroids.json", None,
-                vec_col="embedding", storage=storage,
+                vec_col="embedding",
             )
             assert gen_n == exp_gen, (name, attempt, gen_n)
             assert obj == exp_sidecar, (name, attempt)
@@ -1763,208 +1593,16 @@ def test_generation_swap_crash_states_all_converge(spark, tmp_path, strategy):
                 view = view.unionByName(spark.read.parquet(rolled))
             got = sorted(r["vec_id"] for r in view.collect())
             assert got == exp_ids, (name, attempt, got)
-            # converged: no staging/heal/tmp debris, marker present,
+            # converged: no staging/heal debris, marker present,
             # exactly the expected store remains
             left = sorted(os.listdir(base))
             assert not any(
-                ".staging." in d or ".heal" in d or ".tmp." in d
-                for d in left
+                ".staging." in d or ".heal" in d for d in left
             ), (name, attempt, left)
-            assert storage.rolled_absorbed(gen_dir), (name, attempt)
+            assert genstore.rolled_absorbed(gen_dir), (name, attempt)
             gens_left = [d for d in left if d.startswith("store_gen")]
-            assert gens_left == [exp_dir_name], (name, attempt, left)
+            assert gens_left == [f"store_gen{exp_gen}"], (name, attempt, left)
         shutil.rmtree(base, ignore_errors=True)
-
-
-def test_add_stream_families_run_on_manifest_storage(spark, tmp_path):
-    """r14 (VERDICT task 3): ``ivf_add_stream`` runs end-to-end on the
-    object-store-safe MANIFEST strategy — the drift-day firing fixture
-    with ``storage="manifest"``: the retrain fires mid-stream, the committed generation lives under a
-    unique never-renamed prefix referenced by ``_CURRENT`` (no
-    canonical ``store_genN`` dir is ever created — nothing needed a
-    directory rename), a restart resumes the refreshed quantizer
-    THROUGH the manifest, and the swap's crash window (marker field
-    cleared + duplicated rolled rows) heals exactly as in rename mode."""
-    import json
-    import os
-
-    from vectorsearch_scylla_spark.operators.ivf import assign_clusters_np
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        ManifestGenerationStorage,
-    )
-    from vectorsearch_scylla_spark.streaming.pipeline import ivf_add_stream
-
-    # the firing fixture from
-    # test_ivf_add_stream_maintenance_fires_in_stream, on manifest
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    base_rows = [
-        (i, [1.0, 0.001 * i, 0.0, 0.0]) for i in range(20)
-    ] + [
-        (100 + i, [0.001 * i, 1.0, 0.0, 0.0]) for i in range(20)
-    ]
-    base = spark.createDataFrame(
-        base_rows, "vec_id long, embedding array<double>"
-    )
-    base_lists = str(tmp_path / "base_lists")
-    assign_clusters_np(base, cents, dtype="float64").write.partitionBy(
-        "cluster_id"
-    ).parquet(base_lists)
-    drift_rows = [
-        (
-            1000 + i,
-            [1.0, 1.0 + (0.0005 if i % 2 else -0.0005), 0.02 * (i // 2), 0.0],
-        )
-        for i in range(32)
-    ]
-    drift = spark.createDataFrame(
-        drift_rows, "vec_id long, embedding array<double>"
-    )
-    src = str(tmp_path / "src")
-    drift.repartition(4).write.parquet(src)
-    work = str(tmp_path / "work")
-    os.makedirs(work)
-    mcfg = {
-        "recall_budget": 0.9,
-        "nprobe_grid": (1,),
-        "post_retrain_grid": (1, 2, 3),
-        "retrain_k": 3,
-        "every": 2,
-        "max_audit_queries": 64,
-    }
-    state = ivf_add_stream(
-        spark, src, drift.schema, cents, base_lists, work,
-        max_files_per_trigger=1, compact_at_files=0,
-        maintenance=mcfg, storage="manifest",
-    )
-    assert any("retrain" in r["actions"] for r in state["reports"])
-    assert state["generation"] == 1 and state["store"] is not None
-    # the committed generation is a UNIQUE prefix, resolved through
-    # _CURRENT; the canonical rename-mode name never exists
-    store_name = os.path.basename(state["store"])
-    assert store_name.startswith("store_gen1.") and len(store_name) > 11
-    assert not os.path.exists(os.path.join(work, "store_gen1"))
-    with open(os.path.join(work, "_CURRENT")) as f:
-        man = json.load(f)
-    assert man == {
-        "generation": 1, "prefix": store_name, "rolled_absorbed": True
-    }
-    # nothing lost across the manifest commit
-    store_df = spark.read.parquet(state["store"])
-    rolled_df = spark.read.parquet(state["rolled"])
-    all_ids = sorted(
-        r["vec_id"]
-        for r in store_df.unionByName(
-            rolled_df.select(store_df.columns)
-        ).collect()
-    )
-    assert all_ids == sorted(
-        [r[0] for r in base_rows] + [r[0] for r in drift_rows]
-    )
-
-    # restart with STALE initials: the quantizer must resume through
-    # the manifest-referenced generation's sidecar
-    state_r = ivf_add_stream(
-        spark, src, drift.schema, cents, base_lists, work,
-        max_files_per_trigger=1, compact_at_files=0,
-        maintenance=mcfg, storage="manifest",
-    )
-    assert state_r["epochs"] == 0 and state_r["generation"] == 1
-    assert state_r["store"] == state["store"]
-    assert state_r["cents"] == [
-        (int(c), list(map(float, v))) for c, v in state["cents"]
-    ]
-
-    # crash window: duplicated rolled rows + marker field cleared (the
-    # faithful simulation — the real crash closes before the field
-    # flips) must heal on re-entry, dropping exactly the duplicates
-    survivors = sorted(r["vec_id"] for r in rolled_df.collect())
-    store_df.limit(3).select(
-        "vec_id", "embedding", F.lit(0.5).alias("__sim"), "cluster_id"
-    ).write.mode("append").partitionBy("cluster_id").parquet(state["rolled"])
-    spark.catalog.refreshByPath(state["rolled"])
-    ManifestGenerationStorage(work).clear_rolled_absorbed(state["store"])
-    state_h = ivf_add_stream(
-        spark, src, drift.schema, cents, base_lists, work,
-        max_files_per_trigger=1, compact_at_files=0, storage="manifest",
-    )
-    healed = sorted(
-        r["vec_id"] for r in spark.read.parquet(state_h["rolled"]).collect()
-    )
-    assert healed == survivors
-
-
-def test_manifest_storage_refusals(spark, tmp_path):
-    """r14: the manifest strategy's two refusal rails — a _CURRENT
-    that references a missing prefix means the store was damaged
-    externally (referenced prefixes are never swept by this
-    machinery), and retiring the live prefix would destroy the index
-    the manifest points at.  Both refuse loudly instead of guessing."""
-    import json
-    import os
-
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        ManifestGenerationStorage,
-    )
-
-    base = str(tmp_path / "damaged")
-    os.makedirs(base)
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        json.dump(
-            {"generation": 3, "prefix": "store_gen3.dead", "rolled_absorbed": True},
-            f,
-        )
-    storage = ManifestGenerationStorage(base)
-    with pytest.raises(RuntimeError, match="references missing prefix"):
-        storage.list_committed("_centroids.json")
-
-    base2 = str(tmp_path / "live")
-    os.makedirs(base2)
-    live = os.path.join(base2, "store_gen1.abcd1234")
-    os.makedirs(live)
-    with open(os.path.join(base2, "_CURRENT"), "w") as f:
-        json.dump(
-            {"generation": 1, "prefix": "store_gen1.abcd1234",
-             "rolled_absorbed": True}, f,
-        )
-    storage2 = ManifestGenerationStorage(base2)
-    with pytest.raises(RuntimeError, match="refusing to retire live"):
-        storage2.retire(spark, live)
-    assert os.path.isdir(live)  # nothing was deleted
-    # a marker flip for a prefix the manifest does not reference is a
-    # contract violation, not a silent no-op
-    with pytest.raises(RuntimeError, match="marker flip"):
-        storage2.stamp_rolled_absorbed(os.path.join(base2, "store_gen2.ffff"))
-
-
-def test_generation_storage_strategy_mismatch_refused(spark, tmp_path):
-    """r14 review: flipping ``storage=`` on an existing base_dir must
-    refuse, not 'clean' — the manifest sweep would delete a
-    rename-committed generation as unreferenced debris (the only copy
-    of its absorbed rolled rows), and rename discovery is blind to
-    manifest prefixes (it would silently resume from nothing)."""
-    import json
-    import os
-
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        ManifestGenerationStorage,
-        RenameGenerationStorage,
-    )
-
-    # rename-committed store opened with storage='manifest'
-    base = str(tmp_path / "was_rename")
-    os.makedirs(os.path.join(base, "store_gen1"))
-    with pytest.raises(RuntimeError, match="rename-strategy generation"):
-        ManifestGenerationStorage(base).sweep_uncommitted(spark)
-    assert os.path.isdir(os.path.join(base, "store_gen1"))  # untouched
-
-    # manifest-committed store opened with storage='rename'
-    base2 = str(tmp_path / "was_manifest")
-    os.makedirs(os.path.join(base2, "store_gen1.abcd1234"))
-    with open(os.path.join(base2, "_CURRENT"), "w") as f:
-        json.dump({"generation": 1, "prefix": "store_gen1.abcd1234",
-                   "rolled_absorbed": True}, f)
-    with pytest.raises(RuntimeError, match="_CURRENT manifest"):
-        RenameGenerationStorage(base2).sweep_uncommitted(spark)
 
 
 def test_adaptive_stream_partitions_scale_adaptive(spark, tmp_path):

@@ -213,16 +213,3 @@ def test_compare_bench_refuses_uniform_slow_regime(tmp_path, capsys):
     f = _bench(tmp_path, "f.json", canary_sec=[1.0, 0.9, 1.1], sf=0.01)
     rc, out = _run_cmp([e, f], capsys)
     assert rc == 0
-
-
-def test_regime_band_constants_agree():
-    """bench.py stamps canary_regime_ok and tools/compare_bench.py
-    refuses endpoints — both against THE SAME absolute band.  The tool
-    deliberately does not import bench (pyspark import cost in a plain
-    file-comparison CLI), so this pin is what keeps the producer and
-    the refusal gate from silently diverging when the band is
-    recalibrated."""
-    import bench
-
-    assert compare_bench.REGIME_BAND == bench.REGIME_BAND
-    assert compare_bench.REGIME_SF == bench.REGIME_SF

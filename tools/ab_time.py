@@ -38,33 +38,13 @@ def main() -> int:
     )
     args = ap.parse_args()
 
+    from bench import warm_up
+    from vectorsearch_scylla_spark.plans.registry import REGISTRY
     from vectorsearch_scylla_spark.session import get_spark
-    from vectorsearch_scylla_spark.plans.registry import (
-        REGISTRY,
-        prestage_streaming_artifacts,
-    )
 
     spark = get_spark("vss-ab-time")
     spark.sparkContext.setLogLevel("ERROR")
-    # same untimed warmups as bench.py: page cache + workers + staged artifacts
-    import glob as _glob
-
-    for p in _glob.glob(os.path.join(args.sf_dir, "*.parquet")):
-        with open(p, "rb") as f:
-            while f.read(1 << 22):
-                pass
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-    if any(q.startswith("streaming_") for q in args.queries):
-        prestage_streaming_artifacts(spark, args.sf_dir)
-    import inspect
-
-    for q in args.queries:
-        if not q.startswith("streaming_") and "_materialize_once" in inspect.getsource(
-            REGISTRY[q].fn
-        ):
-            REGISTRY[q].fn(spark, args.sf_dir)
+    warm_up(spark, args.sf_dir, args.queries)
 
     def once(name: str) -> float:
         spark.sparkContext.setJobDescription(f"ab:{name}")

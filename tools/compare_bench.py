@@ -42,18 +42,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# healthy settled-canary absolute band (seconds): r11 agreement study
-# rows 1-14 healthy settled samples span 1.57-2.92; every degraded or
-# uniform-slow-regime row has a settled sample outside this band
-# (BENCH_SCALE.md "Canary composite + two-window agreement").  The
-# band is calibrated at REGIME_SF.  Both constants mirror bench.py's
-# (which this CLI deliberately does not import — pyspark cost);
-# equality is pinned by tests/test_tools.py.
-REGIME_BAND = (1.5, 4.0)
-REGIME_SF = 0.1
+# the healthy settled-canary band bench.py stamps canary_regime_ok
+# against (importing bench does not start pyspark)
+from bench import REGIME_BAND, REGIME_SF  # noqa: E402
 
 
 def load(path: str) -> dict:

@@ -222,7 +222,6 @@ def hyperplane_near_dup_pairs(
     against: DataFrame | None = None,
     against_sigs: DataFrame | None = None,
     docs_sigs: DataFrame | None = None,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with cosine > ``threshold`` among band-collision
     candidates: signature pass → band unpivot → per-band equi-join →
@@ -253,12 +252,11 @@ def hyperplane_near_dup_pairs(
     scan of the ids+vectors actually hit by candidates.  ``docs_sigs``
     is the same pre-computed option for the ``df`` side.  All three
     frames must share ``n_bands``/``band_bits``/``seed``/``dim``.
-    The new side broadcasts statically (``broadcast_new``, default
-    True — see ``operators/dedup.banded_pairs``' against= note for
-    why the planner cannot pick that shape itself, and for the
-    oversized-increment failure mode: Spark's 8 GB broadcast-table cap
-    or a driver OOM building the relation — a hard failure whose cure
-    is ``broadcast_new=False``, not more driver memory).
+    The new side broadcasts statically — see ``operators/dedup.
+    banded_pairs``' against= note for why the planner cannot pick that
+    shape itself, and for the oversized-increment failure mode (Spark's
+    8 GB broadcast-table cap or a driver OOM building the relation — a
+    hard failure, not a slowdown).
     """
     import numpy as np
     import pandas as pd
@@ -333,11 +331,11 @@ def hyperplane_near_dup_pairs(
         # banded_pairs' against= note): a checkpointed increment has
         # default stats, and without the hint the planner shuffles the
         # whole base band index per run
-        new_side = _banded(sigs).select(
-            F.col(id_col).alias("id_a"), "band_idx", "band_val"
+        new_side = F.broadcast(
+            _banded(sigs).select(
+                F.col(id_col).alias("id_a"), "band_idx", "band_val"
+            )
         )
-        if broadcast_new:
-            new_side = F.broadcast(new_side)
         cand = (
             new_side.join(
                 _banded(sigs_b).select(

@@ -31,6 +31,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearch_scylla_spark.session import conf_partitions, drop_inherited_stats
+
 SIMHASH_BITS = 128
 SIMHASH_BANDS = 6
 SIMHASH_BAND_BITS = 21  # 6×21 = 126 bits banded; bits 126-127 unbanded
@@ -116,7 +118,6 @@ def banded_pairs(
     split_target: int | None = None,
     max_salts: int | None = None,
     against: DataFrame | None = None,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """All within-bucket unordered id pairs ``(id_a < id_b)`` where a
     bucket is the set of rows equal on ``band_cols`` — the pairwise
@@ -133,17 +134,15 @@ def banded_pairs(
     the base band index instead of |base|².  Caller guarantees
     disjoint id spaces.  No salted expansion is needed: per-bucket
     work is |new∩bucket|·|base∩bucket|, AQE's skew split applies to
-    the bipartite join, and the new side broadcasts STATICALLY
-    (``broadcast_new=True``), leaving the base band index unshuffled —
-    the planner cannot pick that shape itself because checkpointed
-    increments carry default (huge) stats; pass ``broadcast_new=False``
-    for an increment too large to broadcast (reverts to the shuffle
-    join).  KNOW THE FAILURE MODE: with the default hint, an oversized
-    increment does not degrade — it HARD-FAILS, either at Spark's 8 GB
+    the bipartite join, and the new side broadcasts STATICALLY,
+    leaving the base band index unshuffled — the planner cannot pick
+    that shape itself because checkpointed increments carry default
+    (huge) stats.  KNOW THE FAILURE MODE: an increment too large to
+    broadcast does not degrade — it HARD-FAILS, either at Spark's 8 GB
     broadcast-table cap (``SparkException: Cannot broadcast the table
     that is larger than 8GB``) or as a driver OOM while building the
-    broadcast relation; either symptom means reach for
-    ``broadcast_new=False``, not a bigger driver.
+    broadcast relation; either symptom means the increment is outside
+    this mode's |new| ≪ |base| contract.
 
     The failure mode this kills (diagnosed via jstack on the r6 100×
     union bench): a replica clique puts its whole membership into ONE
@@ -227,11 +226,10 @@ def banded_pairs(
         # arrives checkpointed with default (huge) stats, so neither
         # static planning nor AQE's late conversion (which still pays
         # the base-side shuffle WRITE before switching) can see it is
-        # small.  The mode's contract IS |new| ≪ |base|; pass
-        # broadcast_new=False for an increment too big to broadcast.
-        new_side = sides.select(*band_cols, F.col(id_col).alias("id_a"))
-        if broadcast_new:
-            new_side = F.broadcast(new_side)
+        # small.  The mode's contract IS |new| ≪ |base|.
+        new_side = F.broadcast(
+            sides.select(*band_cols, F.col(id_col).alias("id_a"))
+        )
         return (
             new_side.join(
                 against.select(*band_cols, F.col(id_col).alias("id_b")),
@@ -304,16 +302,7 @@ def banded_pairs(
     # it cannot see through the exchange.  With the count pinned the
     # shuffle still moves only oversized-bucket rows, i.e. nothing at
     # all on skew-free inputs.
-    try:
-        n_shuffle = int(
-            sides.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    except (TypeError, ValueError):
-        # platforms that set the conf to a non-numeric sentinel (e.g.
-        # "auto" under auto-optimized shuffle) — fall back to the
-        # cluster's default parallelism; the exact count only needs to
-        # comfortably exceed the salted key cardinality
-        n_shuffle = sides.sparkSession.sparkContext.defaultParallelism or 200
+    n_shuffle = conf_partitions(sides.sparkSession)
     left = (
         big.select(
             *band_cols, F.col(id_col).alias("id_a"), g.alias("gi"), "__r"
@@ -346,7 +335,6 @@ def simhash_near_dup_pairs(
     against: DataFrame | None = None,
     against_sigs: DataFrame | None = None,
     docs_sigs: DataFrame | None = None,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """All pairs with SimHash Hamming distance ≤ ``max_hamming`` —
     EXACT for max_hamming ≤ bands−1 (pigeonhole: see module
@@ -361,11 +349,10 @@ def simhash_near_dup_pairs(
     ever re-pairing the base against itself, so the join is
     |new|·bands probe rows against the base's band index, not
     |base|².  Caller guarantees disjoint id spaces.  The new side
-    broadcasts statically (``broadcast_new``, default True — see
-    :func:`banded_pairs`' against= note for why the planner cannot
-    pick that shape itself, and for the oversized-increment failure
-    mode: the 8 GB broadcast cap / driver OOM, cured by
-    ``broadcast_new=False``, reads as a hard failure, not a slowdown).
+    broadcasts statically — see :func:`banded_pairs`' against= note
+    for why the planner cannot pick that shape itself, and for the
+    oversized-increment failure mode (the 8 GB broadcast cap / driver
+    OOM reads as a hard failure, not a slowdown).
 
     Plan shape: one fingerprint pass per join side, bands unpivoted to
     (id, band_idx, band_val) rows, per-band hash equi-join, Hamming
@@ -424,8 +411,6 @@ def simhash_near_dup_pairs(
         # id_a re-attach, the id_b re-attach); materialize it once so
         # the mapInPandas fingerprint kernel runs one pass, not three
         # (~22 s/pass at the 100× point).
-        from vectorsearch_scylla_spark.session import drop_inherited_stats
-
         if docs_sigs is None:
             # LAZY (r15): the first consuming action materializes the
             # fingerprint pass; all three subtrees then share the
@@ -468,14 +453,14 @@ def simhash_near_dup_pairs(
     # and without the hint the planner SortMergeJoins — shuffling the
     # whole base band index per run/epoch, exactly the cost the
     # persisted artifact exists to avoid.
-    a = _banded(sigs).select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"s{m}").alias(f"a_s{m}") for m in range(SIG_WORDS)],
-        "band_idx",
-        "band_val",
+    a = F.broadcast(
+        _banded(sigs).select(
+            F.col(id_col).alias("id_a"),
+            *[F.col(f"s{m}").alias(f"a_s{m}") for m in range(SIG_WORDS)],
+            "band_idx",
+            "band_val",
+        )
     )
-    if broadcast_new:
-        a = F.broadcast(a)
     b = _banded(sigs_b).select(
         F.col(id_col).alias("id_b"),
         *[F.col(f"s{m}").alias(f"b_s{m}") for m in range(SIG_WORDS)],

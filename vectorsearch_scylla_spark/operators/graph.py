@@ -157,7 +157,6 @@ def incremental_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 25,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Update ``(node, component)`` labels with a NEW batch of edges
     WITHOUT re-reading the old edge set — the cluster-maintenance half
@@ -183,19 +182,15 @@ def incremental_components(
     Returns labels for every node in ``prev`` plus every node
     appearing in ``new_edges``.
 
-    ``broadcast_touched`` (default True): statically broadcast the
-    |increment|-bounded touched-node/component key sets into their
-    probes against the corpus-sized ``prev``/star tables — the
-    checkpointed edge frame carries default (huge) stats, so without
-    the hint those probes SortMergeJoin and shuffle the corpus per
-    increment (the planner trap ``operators/dedup.banded_pairs``'
-    against= note describes).  Pass False for an increment so large
-    its touched set cannot broadcast — the update degrades to the
-    shuffle joins, which at that increment size is the right plan.
-    With the hint left on, such an increment HARD-FAILS (Spark's 8 GB
-    broadcast-table cap, or a driver OOM while building the broadcast
-    relation) rather than slowing down — that symptom means
-    ``broadcast_touched=False``, not a bigger driver.
+    The |increment|-bounded touched-node/component key sets broadcast
+    statically into their probes against the corpus-sized
+    ``prev``/star tables — the checkpointed edge frame carries default
+    (huge) stats, so without the hint those probes SortMergeJoin and
+    shuffle the corpus per increment (the planner trap
+    ``operators/dedup.banded_pairs``' against= note describes).  An
+    increment whose touched set cannot broadcast HARD-FAILS (Spark's
+    8 GB broadcast-table cap, or a driver OOM while building the
+    broadcast relation) rather than slowing down.
     """
     # Truncate the NEW-edge lineage once: this frame feeds the sym
     # checkpoint, the touched-component probe, and (via touched) the
@@ -212,19 +207,17 @@ def incremental_components(
     # from the checkpointed edge frame, whose DEFAULT (huge) stats
     # would otherwise make every probe against the corpus-sized prev /
     # star tables a SortMergeJoin that SHUFFLES THE CORPUS per
-    # increment — the same planner trap the band joins' broadcast_new
-    # hint fixes (see operators/dedup.banded_pairs).  The static
-    # broadcast hints below keep all three probes corpus-shuffle-free:
-    # prev and star stream straight off their scans.
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_touched else df
-
-    touched_nodes = _hint(
+    # increment — the same planner trap the band joins' static
+    # broadcast of the new side fixes (see operators/dedup.
+    # banded_pairs).  The static broadcast hints below keep all three
+    # probes corpus-shuffle-free: prev and star stream straight off
+    # their scans.
+    touched_nodes = F.broadcast(
         new_edges.select(F.col(src).alias("node"))
         .union(new_edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    touched_comps = _hint(
+    touched_comps = F.broadcast(
         drop_inherited_stats(
             prev.join(touched_nodes, "node", "left_semi")
             .select("component")

@@ -231,85 +231,6 @@ def assign_clusters_np(
     return df.mapInPandas(assign, schema)
 
 
-def _bc_assign_kernel(bc, vec_col: str, out_col: str, np_t: str = "int32"):
-    """Arrow-batch assignment closure over a BROADCAST centroid matrix.
-
-    Module-level factory so tests can pin the contract mechanically:
-    the returned closure pickles to a few KB (it carries only the
-    broadcast HANDLE — ``tests/test_operators.py::
-    test_assign_clusters_bc_closure_stays_small``), while the
-    closure-embedded :func:`assign_clusters_np` kernel pickles the
-    whole k×d matrix into EVERY task.  Vector batches are cast to the
-    broadcast matrix's own dtype (``Cn.dtype``) so the matmul never
-    mixes precisions."""
-    import numpy as np
-
-    def assign(batches):
-        ids, Cn = bc.value
-        for pdf in batches:
-            V = np.asarray(list(pdf[vec_col]), dtype=Cn.dtype)
-            vn = np.linalg.norm(V, axis=1)
-            zero = vn == 0.0
-            vn[zero] = 1.0
-            sims = (V / vn[:, None]) @ Cn
-            sims[zero, :] = 0.0
-            best = ids[np.argmax(sims, axis=1)]
-            pdf = pdf.copy()
-            pdf[out_col] = best.astype(np_t)
-            yield pdf
-
-    return assign
-
-
-def _assign_clusters_bc(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "cluster_id",
-    dtype: str = "float32",
-):
-    """Broadcast-variable assignment kernel — the LARGE-K scale path
-    (r7 judge item #4): semantics identical to
-    :func:`assign_clusters_np` (argmax cosine, lowest-id tie-break,
-    zero vectors → lowest id; only the BLAS reduction order differs
-    from the expression fold, exactly as documented there), but the
-    centroid matrix ships via ``SparkContext.broadcast`` instead of
-    being embedded in the task closure.
-
-    Why it matters at scale: at K ≈ 10⁵ coarse centroids over d = 64
-    the float64 matrix is ~50 MB.  Closure-embedded (the
-    ``assign_clusters_np`` path) that matrix is pickled into the
-    serialized task function and re-shipped with EVERY task.  A
-    broadcast ships ONCE per executor (torrent protocol) and the
-    closure carries only the handle.
-
-    Returns ``(df, bc)``: callers that fully materialize the returned
-    DataFrame can ``bc.unpersist()`` afterwards.  :func:`lloyd_kmeans`
-    needs this: it collects one assignment per iteration, and without
-    an explicit unpersist a K>threshold training run accumulates one
-    k×d broadcast per iteration until the JVM ContextCleaner happens
-    to GC the handles.  :func:`build_ivf_index` routes here above
-    ``bc_threshold``; agreement with the literal paths is pinned by
-    ``tests/test_operators.py::test_assign_clusters_bc_agreement``."""
-    import numpy as np
-    from pyspark.sql.types import StructField, StructType
-
-    ordered = sorted(centroids)
-    ids = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    C = np.asarray([v for _, v in ordered], dtype=dtype)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = np.ascontiguousarray((C / cn[:, None]).T)  # d × k, normalized
-    bc = df.sparkSession.sparkContext.broadcast((ids, Cn))
-    spark_t, np_t = _id_out_dtype(centroids)
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, spark_t, False)]
-    )
-    out = df.mapInPandas(_bc_assign_kernel(bc, vec_col, out_col, np_t=np_t), schema)
-    return out, bc
-
-
 def probe_clusters(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -501,30 +422,17 @@ def build_ivf_index(
     vec_col: str = "embedding",
     decimals: int = 6,
     train_rows: int | None = None,
-    kernel: str = "numpy",
-    bc_threshold: int = 4096,
 ) -> tuple[list[tuple[int, list[float]]], str]:
     """Build-once IVF index: train the coarse quantizer, materialize the
     inverted lists as ``cluster_id``-partitioned parquet, and cache both
     on disk keyed by ``cache_token`` (caller folds in source-file
     fingerprints + hyperparameters).  Returns ``(centroids, lists_path)``.
 
-    ``bc_threshold``: above this K the final full-corpus assignment
-    pass takes the broadcast-centroid kernel
-    (:func:`_assign_clusters_bc`) — at K ≈ 10⁵ the centroid matrix is
-    ~300 MB of literals that must ship once per executor as a
-    broadcast, not once per task inside the pickled closure (the
-    closure-embedded kernel is fine at the certified fixture K's and
-    keeps bit-stable float64 agreement with the oracle paths, pinned
-    by tests).  Training itself never exceeds sample scale, so only
-    the assignment pass needs the switch.
-
     This is the "index build" half of the reference's ANN story
     (scylladb_setup/create_iot_schema.py:137-155 builds an HNSW index
     ONCE; queries then only probe it).
 
-    100 TB posture (both defaults exist because the r5 judge named the
-    old full-corpus/interpreted path the repo's one scale-killer):
+    100 TB posture:
 
     - ``train_rows`` caps the TRAINING corpus at a deterministic
       md5-ordered sample (default ``256·k``, FAISS's coarse-quantizer
@@ -532,12 +440,11 @@ def build_ivf_index(
       only, and the FULL corpus is scanned exactly once, by the final
       assignment pass.  Without the cap, ``iters`` full-corpus passes
       each cost a petabyte-scale scan before the one you need.
-    - ``kernel='numpy'`` runs both the training assignments and the
-      final materialization through the blocked float64 BLAS kernel
-      (:func:`assign_clusters_np`) instead of the interpreted cosine
-      fold — identical results off exact cosine ties (pinned by
-      ``tests/test_operators.py``), ~5-8× lower constant.  Pass
-      ``kernel='expr'`` where an oracle demands the fold bit-for-bit.
+    - both the training assignments and the final materialization run
+      through the blocked float64 BLAS kernel (:func:`assign_clusters_np`)
+      instead of the interpreted cosine fold — identical results off
+      exact cosine ties (pinned by ``tests/test_operators.py``), ~5-8×
+      lower constant.
 
     Every subsequent search reads ONLY its probed clusters' partitions —
     Spark prunes the non-probed directories at the parquet scan, so a
@@ -554,9 +461,7 @@ def build_ivf_index(
     cap = 256 * k if train_rows is None else int(train_rows)
     # build parameters fold into the cache key so a logic change can
     # never serve a stale index from a previous configuration
-    path = os.path.join(
-        tempfile.gettempdir(), f"vss_ivf_idx_{cache_token}_s{cap}_{kernel}"
-    )
+    path = os.path.join(tempfile.gettempdir(), f"vss_ivf_idx_{cache_token}_s{cap}")
     cents_file = os.path.join(path, "centroids.json")
     lists_path = os.path.join(path, "lists")
     if os.path.isfile(cents_file):
@@ -565,29 +470,16 @@ def build_ivf_index(
         return cents, lists_path
     cents = lloyd_kmeans(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        decimals=decimals, train_rows=cap, kernel=kernel,
-        bc_threshold=bc_threshold,
+        decimals=decimals, train_rows=cap, kernel="numpy",
     )
     staging = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     os.makedirs(staging, exist_ok=True)
-    bc = None
-    if kernel == "numpy":
-        if k > bc_threshold:
-            # handle-returning variant so the one-shot build can
-            # unpersist its centroid broadcast once the lists are
-            # written (same hygiene as lloyd_kmeans' iterations)
-            members, bc = _assign_clusters_bc(df, cents, vec_col=vec_col, dtype="float64")
-        else:
-            members = assign_clusters_np(df, cents, vec_col=vec_col, dtype="float64")
-    else:
-        members = assign_clusters(df, cents, vec_col=vec_col)
+    members = assign_clusters_np(df, cents, vec_col=vec_col, dtype="float64")
     # one file per non-empty cluster partition: the shuffle co-locates
     # each inverted list, partitionBy splits them into prunable dirs
     members.repartition(k, "cluster_id").write.partitionBy("cluster_id").parquet(
         os.path.join(staging, "lists")
     )
-    if bc is not None:
-        bc.unpersist()
     with open(os.path.join(staging, "centroids.json"), "w") as f:
         json.dump(cents, f)
     try:
@@ -606,7 +498,6 @@ def lloyd_kmeans(
     decimals: int = 6,
     kernel: str = "expr",
     train_rows: int | None = None,
-    bc_threshold: int = 4096,
 ) -> list[tuple[int, list[float]]]:
     """Train the coarse quantizer; returns ``[(cluster_id, centroid)]``
     sorted by cluster id.  ``iters + 1`` Spark jobs: one seed draw and
@@ -632,36 +523,12 @@ def lloyd_kmeans(
     assignment pass — the 100 TB build path (identical asymptotics,
     ~5× lower constant; can differ from the fold only on exact cosine
     ties).  Both feed the SAME Spark-side quantized-mean update, so
-    centroids stay deterministic either way.
+    centroids stay deterministic either way."""
+    def _assign(vdf, cents):
+        if kernel == "numpy":
+            return assign_clusters_np(vdf, cents, vec_col="__v", dtype="float64")
+        return assign_clusters(vdf, cents, vec_col="__v")
 
-    ``bc_threshold`` is the K above which the numpy kernel's
-    assignment rides a broadcast centroid matrix instead of the task
-    closure — the SAME knob :func:`build_ivf_index` exposes, threaded
-    through so a caller raising it there gets the identical kernel
-    choice during training (the two kernels agree everywhere except
-    exact cosine ties, where BLAS layout can pick a different winner).
-    Each iteration's broadcast is unpersisted as soon as the update
-    aggregate is collected, so a long training run holds at most one
-    k×d broadcast at a time."""
-    if kernel == "numpy":
-        def _assign(vdf, cents, vec_col):
-            # same large-K routing as build_ivf_index's final pass: the
-            # training sample is bounded, but its ASSIGNMENT matrix is
-            # not — at K ≈ 10⁵ the per-task closure re-ship dominates
-            # (bit-identical kernels, see _assign_clusters_bc).  The bc
-            # path also hands back the Broadcast so the iteration loop
-            # can unpersist it once the update aggregate is collected.
-            if len(cents) > bc_threshold:
-                return _assign_clusters_bc(
-                    vdf, cents, vec_col=vec_col, dtype="float64"
-                )
-            return (
-                assign_clusters_np(vdf, cents, vec_col=vec_col, dtype="float64"),
-                None,
-            )
-    else:
-        def _assign(vdf, cents, vec_col):
-            return assign_clusters(vdf, cents, vec_col=vec_col), None
     if train_rows is not None and int(train_rows) < k:
         # the documented invariant "seeds are the sample's first k
         # rows" breaks when the sample is smaller than k (seeds
@@ -693,7 +560,7 @@ def lloyd_kmeans(
     seeds = hashed.orderBy("__h", id_col).limit(k).collect()
     cents = [(i, list(r["__v"])) for i, r in enumerate(seeds)]
     for _ in range(iters):
-        assigned, bc = _assign(vecs, cents, vec_col="__v")
+        assigned = _assign(vecs, cents)
         # per-(cluster, pos) quantized means exactly as the oracle CTEs
         # unroll them, then REASSEMBLE the d-length centroid arrays
         # executor-side: the driver collects k ROWS, not k·d — at
@@ -715,10 +582,6 @@ def lloyd_kmeans(
             )
             .collect()
         )
-        if bc is not None:
-            # the collect fully materialized this iteration's
-            # assignment; the broadcast is dead weight from here on
-            bc.unpersist()
         cents = [
             (int(r["cluster_id"]), [e["avg_val"] for e in r["entries"]])
             for r in sorted(rows, key=lambda r: r["cluster_id"])
@@ -1086,8 +949,6 @@ def maybe_retrain(
     dtype: str = "float32",
     max_audit_queries: int = 512,
     decimals: int = 6,
-    kernel: str = "numpy",
-    bc_threshold: int = 4096,
     audit_after: bool = True,
     recall_before: float | None = None,
 ) -> tuple[list[tuple[int, list[float]]], DataFrame, dict]:
@@ -1132,11 +993,9 @@ def maybe_retrain(
     The returned ``members`` frame has ``cluster_col`` rewritten for
     EVERY row (ids from the new quantizer's id space, starting at 0);
     the caller owns persisting it (``partitionBy(cluster_col)``) and
-    swapping the store — pick the commit primitive the store's
-    filesystem makes atomic (:mod:`~vectorsearch_scylla_spark.
-    streaming.genstore`: staged rename on POSIX/HDFS, manifest PUT on
-    object stores; ``ivf_add_stream`` threads its ``storage`` knob
-    through exactly this).  ``queries`` carries
+    swapping the store (``ivf_add_stream`` commits it as a new
+    generation through :mod:`~vectorsearch_scylla_spark.streaming.
+    genstore`'s staged rename).  ``queries`` carries
     ``(query_id, query_vec)`` — the audit sample the deployment
     watches, typically the most recent increment's vectors (drift
     shows up in NEW queries first; the week study samples exactly
@@ -1205,9 +1064,8 @@ def maybe_retrain(
         id_col=id_col,
         vec_col=vec_col,
         decimals=decimals,
-        kernel=kernel,
+        kernel="numpy",
         train_rows=cap,
-        bc_threshold=bc_threshold,
     )
     routed = assign_clusters_np(
         vecs, new_cents, vec_col=vec_col, out_col=cluster_col, dtype=dtype

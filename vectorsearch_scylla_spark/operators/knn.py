@@ -46,7 +46,6 @@ def topk_similarity_join(
     corpus_id: str = "corpus_id",
     query_vec: str = "query_vec",
     corpus_vec: str = "corpus_vec",
-    threshold: float | None = None,
     exclude_self: bool = False,
     join_keys: list[str] | None = None,
 ) -> DataFrame:
@@ -71,8 +70,7 @@ def topk_similarity_join(
     Scale: the query side is broadcast (Q small — detection works on
     one microbatch of new snapshots); the corpus side streams through
     executors partition-by-partition.  No shuffle of the corpus; the
-    only shuffle is the final rank over Q·N' candidate rows, which the
-    optional ``threshold`` prunes first.
+    only shuffle is the final rank over Q·N' candidate rows.
     """
     join_keys = join_keys or []
     q = queries.select(
@@ -91,8 +89,6 @@ def topk_similarity_join(
     pairs = c.join(F.broadcast(q), on=cond, how="inner").withColumn(
         "similarity", cosine_similarity("__qvec", "__cvec")
     )
-    if threshold is not None:
-        pairs = pairs.filter(F.col("similarity") >= threshold)
     w = Window.partitionBy("__qid").orderBy(
         F.col("similarity").desc(), F.col("__cid").asc()
     )

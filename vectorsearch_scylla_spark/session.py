@@ -69,6 +69,17 @@ def drop_inherited_stats(df: DataFrame) -> DataFrame:
         return df
 
 
+def conf_partitions(spark: SparkSession, default: int = 200) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int.
+    Platforms running auto-optimized shuffle set the conf to a
+    non-numeric sentinel (e.g. ``"auto"``); fall back to the cluster's
+    default parallelism there."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism or default
+
+
 def get_spark(
     app_name: str = "vectorsearch-scylla-spark",
     cpus: str | int | None = None,

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vectorsearch_scylla_spark.session import conf_partitions
+
 
 def adaptive_stream_partitions(
     spark: SparkSession,
@@ -83,20 +85,8 @@ def adaptive_stream_partitions(
                 if not fn.startswith(("_", ".")):
                     with contextlib.suppress(OSError):
                         total += os.path.getsize(os.path.join(root, fn))
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     derived = max(floor, -(-total // bytes_per_partition))
-    return min(conf, derived)
-
-
-def _conf_partitions(spark: SparkSession, default: int = 200) -> int:
-    """The session's shuffle-partition count as an int — same
-    non-numeric-sentinel guard as ``operators/dedup.banded_pairs``
-    (platforms running auto-optimized shuffle set the conf to e.g.
-    ``"auto"``)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism or default
+    return min(conf_partitions(spark), derived)
 
 
 @contextlib.contextmanager
@@ -517,7 +507,6 @@ def novelty_sink(
     history: DataFrame,
     metrics_order: list[str],
     base_dir: str,
-    available_now: bool = True,
     **detect_kwargs,
 ):
     """S7 for Path 3: ``foreachBatch`` novelty detection + epoch-
@@ -533,17 +522,16 @@ def novelty_sink(
             os.path.join(events_dir, f"batch={epoch_id}")
         )
 
-    writer = (
+    return (
         snapshots.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", os.path.join(base_dir, "checkpoint"))
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def detection_sinks(detected: DataFrame, base_dir: str, available_now: bool = True):
+def detection_sinks(detected: DataFrame, base_dir: str):
     """S4/S6/S7: ``foreachBatch`` fan-out to BOTH persistent sinks —
     every snapshot appends under ``<base>/snapshots``, anomalous rows
     also under ``<base>/events`` (the consumer's snapshot insert +
@@ -568,14 +556,13 @@ def detection_sinks(detected: DataFrame, base_dir: str, available_now: bool = Tr
         )
         df.unpersist()
 
-    writer = (
+    return (
         detected.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", os.path.join(base_dir, "checkpoint"))
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def exact_dedup_stream(
@@ -607,7 +594,7 @@ def exact_dedup_stream(
     )
 
 
-def dedup_state_sink(state: DataFrame, base_dir: str, available_now: bool = True):
+def dedup_state_sink(state: DataFrame, base_dir: str):
     """Complete-mode ``foreachBatch`` sink for :func:`exact_dedup_stream`:
     every trigger rewrites the full dedup state, so the final parquet
     IS the keep/drop decision for everything ingested (idempotent under
@@ -619,14 +606,13 @@ def dedup_state_sink(state: DataFrame, base_dir: str, available_now: bool = True
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         df.write.mode("overwrite").parquet(out_dir)
 
-    writer = (
+    return (
         state.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", os.path.join(base_dir, "checkpoint"))
         .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _recover_rolled_heal(rolled: str) -> None:
@@ -657,7 +643,6 @@ def _recover_rolled_heal(rolled: str) -> None:
 def _resume_newest_generation(
     spark, base_dir: str, rolled: str, id_col: str, sidecar: str,
     partition_col: str | None, vec_col: str | None = None,
-    storage=None,
 ):
     """Entry-side generation recovery of the ``ivf_add_stream``
     entrypoints: sweep the crash debris no other path owns (stranded
@@ -682,21 +667,17 @@ def _resume_newest_generation(
     any kernel of this engine (cosine/IVF/PQ all propagate it to
     garbage ranks), so the carve-out is documented next to the ID
     CONTRACT rather than paid for with an eqNullSafe-per-element join
-    on every heal.  ``storage`` selects the generation-commit strategy
-    (:mod:`~vectorsearch_scylla_spark.streaming.genstore`; default
-    local-rename).  Returns ``(gen_dir, generation, sidecar_obj)`` or
-    ``(None, 0, None)`` when no generation exists."""
+    on every heal.  Generations commit through
+    :mod:`~vectorsearch_scylla_spark.streaming.genstore`.  Returns
+    ``(gen_dir, generation, sidecar_obj)`` or ``(None, 0, None)`` when
+    no generation exists."""
     import glob
     import json
     import os
     import shutil
 
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        _has_parquet_parts,
-        make_generation_storage,
-    )
+    from vectorsearch_scylla_spark.streaming import genstore
 
-    storage = make_generation_storage(storage, base_dir)
     # entry-side debris sweep (r12 ADVICE): a crash inside
     # _swap_in_generation before its commit point strands an
     # uncommitted write (the swap never happened — pre-swap state
@@ -704,7 +685,7 @@ def _resume_newest_generation(
     # pre-r13 heal left uuid-suffixed .heal./.healed. dirs no code
     # path recovered.  Sweep both, then recover the fixed-name heal
     # markers.
-    storage.sweep_uncommitted(spark)
+    genstore.sweep_uncommitted(base_dir)
     # legacy uuid-suffixed heal dirs (pre-fixed-name swap): when the
     # live rolled dir exists they are post-promote debris — sweep;
     # when it is MISSING they may be the ONLY surviving copy of the
@@ -738,14 +719,14 @@ def _resume_newest_generation(
         shutil.rmtree(p, ignore_errors=True)
     _recover_rolled_heal(rolled)
 
-    gens = storage.list_committed(sidecar)
+    gens = genstore.list_committed(base_dir, sidecar)
     if not gens:
         return None, 0, None
     gen_n, gen_dir = gens[-1]
     with open(os.path.join(gen_dir, sidecar)) as f:
         obj = json.load(f)
     for _g, old_dir in gens[:-1]:
-        storage.retire(spark, old_dir)
+        genstore.retire(spark, old_dir)
     # the rolled-heal check reads the full generation (the anti-join's
     # build side is corpus-sized) — at 100 TB that is a whole store
     # scan per restart, paid even when there is nothing to heal.  The
@@ -757,19 +738,19 @@ def _resume_newest_generation(
     # after the swap and are not in the generation (skipping the heal
     # merely skips the optional idempotent-re-add dedup, which the ID
     # CONTRACT already declares best-effort).
-    if legacy_restored and storage.rolled_absorbed(gen_dir):
+    if legacy_restored and genstore.rolled_absorbed(gen_dir):
         # the restored rolled content is unvouched
-        storage.clear_rolled_absorbed(gen_dir)
+        genstore.clear_rolled_absorbed(gen_dir)
     # r13 ADVICE: a crash mid-way through the rolled reset's rmtree
     # (or mid-heal) can leave `rolled` as an existing dir with ZERO
     # parquet part files (only _SUCCESS, or nothing) — isdir() is true
     # but spark.read.parquet raises "unable to infer schema", fail-
     # stopping every restart.  A part-less rolled dir IS the reset's
     # end state — finish the rmtree and continue.
-    if os.path.isdir(rolled) and not _has_parquet_parts(rolled):
+    if os.path.isdir(rolled) and not genstore.has_parquet_parts(rolled):
         shutil.rmtree(rolled, ignore_errors=True)
         spark.catalog.refreshByPath(rolled)
-    if os.path.isdir(rolled) and not storage.rolled_absorbed(gen_dir):
+    if os.path.isdir(rolled) and not genstore.rolled_absorbed(gen_dir):
         match_cols = [id_col] + ([vec_col] if vec_col else [])
         gen_keys = spark.read.parquet(gen_dir).select(*match_cols)
         rolled_df = spark.read.parquet(rolled)
@@ -795,10 +776,10 @@ def _resume_newest_generation(
             os.rename(staging, rolled)
             shutil.rmtree(old, ignore_errors=True)
             spark.catalog.refreshByPath(rolled)
-    if not storage.rolled_absorbed(gen_dir):
+    if not genstore.rolled_absorbed(gen_dir):
         # healed (or nothing to heal): the committed view is consistent
         # — stamp it so the next restart skips the corpus-sized check
-        storage.stamp_rolled_absorbed(gen_dir)
+        genstore.stamp_rolled_absorbed(gen_dir)
     return gen_dir, gen_n, obj
 
 
@@ -806,12 +787,9 @@ def _swap_in_generation(
     spark, base_dir: str, generation: int, frame: DataFrame, sidecar: str,
     sidecar_obj, rolled: str, prev_store: str | None,
     partition_col: str | None = None, n_parts: int = 32,
-    storage=None,
 ):
     """Adopt a rewritten full-index frame as the next store
-    generation: invisible write + atomic commit (``storage`` picks the
-    primitive — staged dir + rename on a POSIX FS, unique prefix +
-    ``_CURRENT`` manifest PUT on an object store; see
+    generation: invisible write + atomic commit (staged dir + rename,
     :mod:`~vectorsearch_scylla_spark.streaming.genstore`), sidecar
     JSON co-located so a restart resumes the adopted model state,
     rolled reset (its rows are absorbed into the generation),
@@ -821,13 +799,10 @@ def _swap_in_generation(
     import os
     import shutil
 
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        make_generation_storage,
-    )
+    from vectorsearch_scylla_spark.streaming import genstore
 
-    storage = make_generation_storage(storage, base_dir)
-    gen_dir, gen = storage.publish(
-        spark, frame, generation, sidecar, sidecar_obj, partition_col, n_parts
+    gen_dir, gen = genstore.publish(
+        frame, base_dir, generation, sidecar, sidecar_obj, partition_col, n_parts
     )
     if os.path.isdir(rolled):
         shutil.rmtree(rolled)
@@ -836,84 +811,16 @@ def _swap_in_generation(
     # marker that lets every future restart skip the corpus-sized
     # rolled-heal check (see _resume_newest_generation).  Written
     # AFTER the reset by construction: a crash before this line leaves
-    # no marker (manifest field false) and the next entry heals.
-    storage.stamp_rolled_absorbed(gen_dir)
+    # no marker and the next entry heals.
+    genstore.stamp_rolled_absorbed(gen_dir)
     if prev_store and os.path.isdir(prev_store):
-        storage.retire(spark, prev_store)
+        genstore.retire(spark, prev_store)
     return gen_dir, gen
-
-
-def _resume_commissioned_budget(
-    base_dir: str, current_cfg: dict
-) -> tuple[str, float | None]:
-    """Load the persisted commissioned budget (``_commission.json``
-    beside the stores) for an ``ivf_add_stream`` restart, REFUSING a
-    restart whose audit configuration disagrees with the one the
-    budget was measured under — a budget calibrated in one audit
-    mode / population / sample bound and enforced in another is a
-    unit error, refused mechanically rather than by docstring.
-    Returns ``(commission_path, budget_or_None)``; sweeps a crashed
-    mid-persist ``.tmp``.  ``current_cfg``'s keys are the watch's
-    audit flags (the era grid's floor nprobe, the audit population,
-    the sample bound) — only keys PRESENT in the persisted file are
-    compared, so older files stay loadable."""
-    import json
-    import os
-
-    commission_path = os.path.join(base_dir, "_commission.json")
-    if os.path.isfile(f"{commission_path}.tmp"):
-        os.remove(f"{commission_path}.tmp")  # crashed mid-persist
-    if not os.path.isfile(commission_path):
-        return commission_path, None
-    with open(commission_path) as f:
-        persisted = json.load(f)
-    mismatch = {
-        k2: (persisted.get(k2), v)
-        for k2, v in current_cfg.items()
-        if k2 in persisted and persisted.get(k2) != v
-    }
-    if mismatch:
-        raise ValueError(
-            "the persisted commissioned budget was measured under a "
-            f"different audit configuration than this restart's "
-            f"maintenance flags ({mismatch}; file {commission_path}) — "
-            "comparing across audit modes, populations, or sample "
-            "bounds is a unit error.  Re-commission (delete the file "
-            "on a deployer-vouched healthy day) or restart with the "
-            "original flags."
-        )
-    return commission_path, persisted["budget"]
-
-
-def _persist_commissioned_budget(
-    commission_path: str, budget: float, recall: float, margin: float,
-    cfg: dict, n_pairs: int,
-) -> None:
-    """Atomic (write-then-rename) persist of a commissioning day's
-    result plus the audit configuration it was measured under — the
-    flags :func:`_resume_commissioned_budget` refuses mismatches
-    against."""
-    import json
-    import os
-
-    tmp_path = f"{commission_path}.tmp"
-    with open(tmp_path, "w") as f:
-        json.dump(
-            {
-                "budget": budget,
-                "recall_observed": recall,
-                "margin": margin,
-                "n_audit_pairs": int(n_pairs),
-                **cfg,
-            },
-            f,
-        )
-    os.rename(tmp_path, commission_path)
 
 
 def _maintenance_day(
     spark, state: dict, base_dir: str, rolled: str, epoch_id: int,
-    sidecar: str, audit_and_plan, storage=None,
+    sidecar: str, audit_and_plan,
 ) -> None:
     """The audit→escalate→swap skeleton of the ``ivf_add_stream``
     maintenance days.
@@ -924,7 +831,7 @@ def _maintenance_day(
     partition_col, n_parts)`` describing the rewritten full index.
     This skeleton owns everything index-independent: the epoch-stamped
     report append, the generation persist (:func:`_swap_in_generation`
-    — storage-strategy commit, sidecar co-located, rolled absorbed,
+    — atomic rename commit, sidecar co-located, rolled absorbed,
     superseded generation retired), and the post-swap ``state`` update
     that makes THIS and every later micro-batch use the refreshed
     model."""
@@ -936,7 +843,6 @@ def _maintenance_day(
     gen_dir, gen = _swap_in_generation(
         spark, base_dir, state["generation"], frame, sidecar, sidecar_obj,
         rolled, state["store"], partition_col=partition_col, n_parts=n_parts,
-        storage=storage,
     )
     state.update(store=gen_dir, generation=gen, **updates)
 
@@ -1016,6 +922,13 @@ def _drain_file_stream(
     )
 
 
+# the ``maintenance`` keys ivf_add_stream reads; any other key raises
+_MAINTENANCE_KEYS = frozenset({
+    "recall_budget", "nprobe_grid", "post_retrain_grid", "max_size",
+    "retrain_k", "k", "max_audit_queries", "every",
+})
+
+
 def ivf_add_stream(
     spark: SparkSession,
     src_path: str,
@@ -1030,9 +943,6 @@ def ivf_add_stream(
     compact_at_files: int = 48,
     maintenance: dict | None = None,
     timeout_sec: int = 600,
-    kernel: str = "expr",
-    dtype: str = "float32",
-    storage: str = "rename",
 ) -> dict:
     """STREAMING IVF ingest + index lifecycle — the single entrypoint
     behind ``streaming_ivf_add_e2e`` (reg) and the in-stream
@@ -1047,48 +957,38 @@ def ivf_add_stream(
     rolled cluster-partitioned store with partition-aware
     auto-compaction past ``compact_at_files``.
 
-    ``maintenance`` (r12; r11 VERDICT task 6) wires
+    ``maintenance`` wires
     :func:`~vectorsearch_scylla_spark.operators.ivf.
     ivf_maintenance_step` INTO the stream — the scheduled "maintenance
     day" a 100 TB ingest path actually runs, not a separate batch job:
     every ``every`` epochs (default 1, skipping epoch 0 — nothing is
     committed yet), after the fold, the committed index view
-    (base lists ∪ rolled adds) is audited against the era grid.  Keys:
-    ``recall_budget``, ``nprobe_grid``, optional ``post_retrain_grid``
-    / ``max_size`` / ``retrain_k`` / ``max_audit_queries`` (default
-    64) / ``every`` / ``audit_source`` (``"members"`` default, or
-    ``"recent"`` to audit only the post-generation adds — the
-    drift-sensitive choice; see ``_maintain``).
-    ``recall_budget`` also accepts ``"commission"`` (with optional
-    ``commission_margin``, default 0.05), a mechanized calibration
-    rule: the first fired maintenance day measures the era grid's
-    FLOOR nprobe on the deployer-vouched undrifted state and persists
-    budget = observed − margin beside the stores (restarts with
-    mismatched audit flags are refused); the commissioning day never
-    escalates.  A healthy day is audit-only (bounded exact pass;
-    state untouched).  When the grid exhausts below budget the ladder
-    escalates in-stream: the returned re-routed members are persisted
-    as a NEW store generation (commit primitive picked by ``storage``:
-    ``"rename"`` = staged dir + atomic rename for POSIX/HDFS stores,
-    ``"manifest"`` = unique prefix + atomic ``_CURRENT`` manifest PUT
-    for object stores — see :mod:`~vectorsearch_scylla_spark.
-    streaming.genstore`), the rolled store is
-    reset (its rows are absorbed into the generation), and THIS and
-    every subsequent micro-batch route through the refreshed
-    quantizer (per-batch order is fold → maintain → route, so the
-    audit always sees the complete committed view and a generation
-    swap can never leave an old-quantizer epoch dir pending).
-    Post-retrain state is therefore micro-batch-split DEPENDENT by
-    design (which adds saw the old vs new quantizer depends on when
-    the audit crossed) — the registered oracle-certified query runs
-    with a grid whose ceiling probes every list, so its ladder
-    provably never escalates and split-independence holds; the firing
-    regime is certified by the state/plan tests and priced in
-    BENCH_SCALE.md instead.  Single-writer contract: the generation
-    swap plus rolled reset is two steps — run maintenance in the same
-    window that owns the fold, exactly like compaction; a crash
-    BETWEEN the two steps is healed on the next entry (rolled rows
-    already absorbed into the newest generation are dropped before
+    (base lists ∪ rolled adds) is audited against the era grid, with
+    the whole committed corpus as the audit population.  Keys:
+    ``recall_budget`` (default 0.85), ``nprobe_grid``, optional
+    ``post_retrain_grid`` / ``max_size`` / ``retrain_k`` / ``k`` /
+    ``max_audit_queries`` (default 64) / ``every``; any other key
+    raises ``ValueError``.  A healthy day is audit-only (bounded exact
+    pass at float32; state untouched).  When the grid exhausts below
+    budget the ladder escalates in-stream: the returned re-routed
+    members are persisted as a NEW store generation (staged dir +
+    atomic rename — see :mod:`~vectorsearch_scylla_spark.streaming.
+    genstore`), the rolled store is reset (its rows are absorbed into
+    the generation), and THIS and every subsequent micro-batch route
+    through the refreshed quantizer (per-batch order is fold →
+    maintain → route, so the audit always sees the complete committed
+    view and a generation swap can never leave an old-quantizer epoch
+    dir pending).  Post-retrain state is therefore micro-batch-split
+    DEPENDENT by design (which adds saw the old vs new quantizer
+    depends on when the audit crossed) — the registered
+    oracle-certified query runs with a grid whose ceiling probes every
+    list, so its ladder provably never escalates and split-independence
+    holds; the firing regime is certified by the state/plan tests and
+    priced in BENCH_SCALE.md instead.  Single-writer contract: the
+    generation swap plus rolled reset is two steps — run maintenance in
+    the same window that owns the fold, exactly like compaction; a
+    crash BETWEEN the two steps is healed on the next entry (rolled
+    rows already absorbed into the newest generation are dropped before
     anything else reads the store — see the resume block).
 
     ID CONTRACT: the stream is ADD-ORIENTED — ids are expected to be
@@ -1130,23 +1030,17 @@ def ivf_add_stream(
 
     from vectorsearch_scylla_spark.operators.ivf import (
         assign_clusters,
-        assign_clusters_np,
         ivf_maintenance_step,
-        ivf_recall_audit,
     )
 
-    # routing kernel: 'expr' is the fused-expression path whose
-    # float64 left-fold hash-matches the DuckDB oracle (the certified
-    # fixture K's); 'numpy' is the blocked-BLAS scale default — at
-    # K ≈ √N the expression kernel's K interpreted folds per row (and
-    # its K·d-literal plan) are the documented scale-killer
-    def _route(df: DataFrame) -> DataFrame:
-        if kernel == "numpy":
-            return assign_clusters_np(
-                df, state["cents"], vec_col=vec_col, sim_col=sim_col, dtype=dtype
-            )
-        return assign_clusters(df, state["cents"], vec_col=vec_col, sim_col=sim_col)
-
+    m = dict(maintenance or {})
+    unknown = sorted(set(m) - _MAINTENANCE_KEYS)
+    if unknown:
+        raise ValueError(
+            f"ivf_add_stream: unknown maintenance keys {unknown}; "
+            f"accepted keys are {sorted(_MAINTENANCE_KEYS)}"
+        )
+    every = int(m.get("every", 1))
     epoch_root = os.path.join(base_dir, "epochs")
     rolled = os.path.join(base_dir, "rolled")
     state: dict = {
@@ -1165,48 +1059,14 @@ def ivf_add_stream(
     # every post-restart batch re-routes by the tiling the
     # maintenance ladder already retired.  The helper also sweeps
     # superseded generations and heals the swap's crash window.
-    from vectorsearch_scylla_spark.streaming.genstore import (
-        make_generation_storage,
-    )
-
-    gen_storage = make_generation_storage(storage, base_dir)
     gen_dir, gen_n, sidecar = _resume_newest_generation(
         spark, base_dir, rolled, id_col, "_centroids.json", "cluster_id",
-        vec_col=vec_col, storage=gen_storage,
+        vec_col=vec_col,
     )
     if gen_dir is not None:
         state["cents"] = [(int(c), list(v)) for c, v in sidecar]
         state["store"] = gen_dir
         state["generation"] = gen_n
-    m = dict(maintenance or {})
-    every = int(m.get("every", 1))
-    # commissioned-budget resume (see _resume_commissioned_budget),
-    # ONLY when commission mode will actually consume it — a stale
-    # _commission.json must never block a numeric-budget or pure-
-    # ingest restart of the same directory.  The cfg keys are the IVF
-    # watch's own: the era grid's FLOOR nprobe (the operating point a
-    # commissioning day measures), the audit population, the sample
-    # bound.
-    state["commissioned_budget"] = None
-    commission_path = os.path.join(base_dir, "_commission.json")
-    commission_cfg: dict = {}
-    if m.get("recall_budget") == "commission":
-        grid = tuple(m.get("nprobe_grid", (4, 8, 16, 32)))
-        if not grid:
-            raise ValueError(
-                "ivf_add_stream: nprobe_grid must be non-empty — the "
-                "grid IS the probe-spend policy, and commissioning "
-                "measures its floor point"
-            )
-        commission_cfg = {
-            "nprobe_floor": min(int(n) for n in grid),
-            "k": int(m.get("k", 5)),
-            "max_audit_queries": int(m.get("max_audit_queries", 64)),
-            "audit_source": m.get("audit_source", "members"),
-        }
-        commission_path, state["commissioned_budget"] = (
-            _resume_commissioned_budget(base_dir, commission_cfg)
-        )
 
     def _members_view() -> DataFrame:
         """The committed index: current generation (or gen-0 base
@@ -1231,70 +1091,18 @@ def ivf_add_stream(
                     F.col("cluster_id").cast("int").alias("cluster_id"),
                 )
             )
-        return base.coalesce(_conf_partitions(spark))
+        return base.coalesce(conf_partitions(spark))
 
     def _audit_and_plan() -> tuple[dict, tuple | None]:
         members = _members_view()
-        # audit_source picks WHO the recall budget protects:
-        # "members" (default — the registered, oracle-certified shape)
-        # samples the whole committed corpus; "recent" samples only
-        # the post-generation adds (the rolled store) — the
-        # drift-sensitive production choice the BENCH_SCALE drift
-        # weeks use ("sampled recall on the newest increment's
-        # vectors"): corpus-wide sampling dilutes a drifting new
-        # source below the trigger until it dominates the corpus.
-        q_src = members
-        if m.get("audit_source", "members") == "recent" and os.path.isdir(rolled):
-            q_src = spark.read.parquet(rolled)
-        queries = q_src.select(
+        queries = members.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
         )
-        # recall_budget="commission" (r13): the FIRST fired
-        # maintenance day measures the era grid's FLOOR point on the
-        # deployer-vouched undrifted state — that reading, minus commission_margin, becomes the
-        # working budget (persisted; restarts with mismatched flags
-        # are refused).  The commissioning day never escalates.
-        if (
-            m.get("recall_budget") == "commission"
-            and state["commissioned_budget"] is None
-        ):
-            nprobe0 = commission_cfg["nprobe_floor"]
-            recall, denom = ivf_recall_audit(
-                queries, state["cents"], members,
-                k=commission_cfg["k"], nprobe=nprobe0,
-                corpus_id=id_col, corpus_vec=vec_col,
-                dtype=dtype,
-                max_queries=commission_cfg["max_audit_queries"],
-            )
-            report = {
-                "actions": ["commission"],
-                "nprobe": nprobe0,
-                "recall_before": recall,
-                "n_audit_pairs": int(denom),
-            }
-            if recall is None:
-                return report, None  # no pairs yet — commission later
-            margin = float(m.get("commission_margin", 0.05))
-            state["commissioned_budget"] = max(0.0, recall - margin)
-            _persist_commissioned_budget(
-                commission_path, state["commissioned_budget"], recall,
-                margin, commission_cfg, denom,
-            )
-            report.update(
-                commissioned=True,
-                commission_margin=margin,
-                recall_budget=state["commissioned_budget"],
-            )
-            return report, None
-        if m.get("recall_budget") == "commission":
-            budget = state["commissioned_budget"]
-        else:
-            budget = float(m.get("recall_budget", 0.85))
         c2, m2, report = ivf_maintenance_step(
             members,
             state["cents"],
             queries,
-            recall_budget=budget,
+            recall_budget=float(m.get("recall_budget", 0.85)),
             nprobe_grid=tuple(m.get("nprobe_grid", (4, 8, 16, 32))),
             post_retrain_grid=m.get("post_retrain_grid"),
             max_size=m.get("max_size"),
@@ -1302,7 +1110,6 @@ def ivf_add_stream(
             k=int(m.get("k", 5)),
             id_col=id_col,
             vec_col=vec_col,
-            dtype=dtype,
             max_audit_queries=int(m.get("max_audit_queries", 64)),
         )
         if not ({"split", "retrain"} & set(report["actions"])):
@@ -1322,11 +1129,13 @@ def ivf_add_stream(
     def _maintain(epoch_id: int) -> None:
         _maintenance_day(
             spark, state, base_dir, rolled, epoch_id,
-            "_centroids.json", _audit_and_plan, storage=gen_storage,
+            "_centroids.json", _audit_and_plan,
         )
 
     def _write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        routed = _route(batch_df)
+        routed = assign_clusters(
+            batch_df, state["cents"], vec_col=vec_col, sim_col=sim_col
+        )
         # the epoch store keeps the VECTORS, not just ids+sims: the
         # rolled store is the add-side of the index the maintenance
         # ladder audits and re-routes, and a vector store that cannot
