@@ -1115,6 +1115,87 @@ def test_pq_adc_collect_guard(spark, sf_dir):
     )
 
 
+def test_build_ivf_index_raises_when_publish_fails(spark, monkeypatch):
+    """A failed staging-dir rename with no winner's copy in place is a
+    real fault (permissions, a bad temp dir): the build must raise, not
+    return a lists path that does not exist, and must leave no staging
+    dir behind."""
+    import glob
+    import os
+    import tempfile
+    import uuid
+
+    from vectorsearch_scylla_spark.operators.ivf import build_ivf_index
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    token = uuid.uuid4().hex
+
+    def refuse(src, dst):
+        raise PermissionError(13, "Permission denied", dst)
+
+    monkeypatch.setattr(os, "rename", refuse)
+    with pytest.raises(OSError):
+        build_ivf_index(df, token, k=2, iters=1)
+    monkeypatch.undo()
+    assert not glob.glob(os.path.join(tempfile.gettempdir(), f"vss_ivf_idx_{token}*"))
+
+
+def test_publish_dir_loser_keeps_the_winners_copy(tmp_path):
+    """The benign rename failure: a concurrent builder already
+    published, so the loser deletes its own staging dir and returns."""
+    import os
+
+    from vectorsearch_scylla_spark.sources.tables import publish_dir
+
+    path = tmp_path / "artifact"
+    path.mkdir()
+    (path / "done").write_text("winner")
+
+    def write(staging):
+        os.makedirs(staging)
+        with open(os.path.join(staging, "done"), "w") as f:
+            f.write("loser")
+
+    publish_dir(str(path), str(path / "done"), write)
+    assert (path / "done").read_text() == "winner"
+    assert os.listdir(tmp_path) == ["artifact"]
+
+
+def test_kernel_helpers_load_without_the_package(tmp_path):
+    """Executor kernels call functions.vector's NumPy helpers, and a
+    Python worker need not have this package on its path: the helpers
+    must pickle by value and run in a process that cannot import it."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from vectorsearch_scylla_spark.functions.vector import _topk_keep
+
+    blob = tmp_path / "fn.pkl"
+    blob.write_bytes(cloudpickle.dumps(_topk_keep))
+    code = (
+        "import importlib.util, pickle, sys; import numpy as np; "
+        "assert importlib.util.find_spec('vectorsearch_scylla_spark') is None; "
+        "f = pickle.load(open(sys.argv[1], 'rb')); "
+        "print([a.tolist() for a in f(np.array([[0.5, 1.0, 1.0]]), 1)])"
+    )
+    path = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in path if p and not os.path.isdir(os.path.join(p, "vectorsearch_scylla_spark"))
+    ))
+    done = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert done.returncode == 0, done.stderr
+    assert done.stdout.strip() == "[[0, 0], [1, 2]]"
+
+
 def test_sq8_recall_vs_exact(spark, sf_dir):
     """SQ8's quality claim made concrete: top-1 neighbors under the
     int8-dequantized corpus match the exact full-precision top-1 for
@@ -1141,7 +1222,7 @@ def test_sq8_recall_vs_exact(spark, sf_dir):
 
 
 def test_sql_text_cosine_bit_equals_column_api(spark):
-    """The r5 SQL-text expression builders (operators/ivf._arr_sql /
+    """The SQL-text expression builders (functions/vector._arr_sql /
     _fused_cos_sql — one JVM parse instead of k×d py4j round-trips)
     must be BIT-IDENTICAL to the Column-API construction they replace:
     repr(float) literals round-trip exactly through both Python and
@@ -1152,11 +1233,10 @@ def test_sql_text_cosine_bit_equals_column_api(spark):
     equality is exact ==, never approx."""
     import random
 
-    from vectorsearch_scylla_spark.functions.vector import cosine_similarity
-    from vectorsearch_scylla_spark.operators.ivf import (
+    from vectorsearch_scylla_spark.functions.vector import (
         _arr_sql,
-        _centroid_lit,
         _fused_cos_sql,
+        cosine_similarity,
     )
 
     rnd = random.Random(7)
@@ -1168,7 +1248,9 @@ def test_sql_text_cosine_bit_equals_column_api(spark):
     df = spark.createDataFrame(rows, "v array<double>")
     got = df.select(
         F.expr(_fused_cos_sql("`v`", _arr_sql(cvec))).alias("sql"),
-        cosine_similarity(F.col("v"), _centroid_lit(cvec)).alias("col"),
+        cosine_similarity(
+            F.col("v"), F.array(*[F.lit(float(x)) for x in cvec])
+        ).alias("col"),
     ).collect()
     assert all(r["sql"] == r["col"] for r in got), [
         (r["sql"], r["col"]) for r in got if r["sql"] != r["col"]
@@ -1189,7 +1271,7 @@ def test_arr_sql_literal_round_trip_property(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from vectorsearch_scylla_spark.operators.ivf import _arr_sql
+    from vectorsearch_scylla_spark.functions.vector import _arr_sql
 
     @settings(max_examples=6, deadline=None)
     @given(
@@ -1217,8 +1299,8 @@ def test_residual_pq_recall_beats_raw_at_same_budget(spark, sf_dir):
     a stable assertion, not a flaky benchmark."""
     import numpy as np
 
+    from vectorsearch_scylla_spark.functions.vector import _arr_sql
     from vectorsearch_scylla_spark.operators.ivf import (
-        _arr_sql,
         assign_clusters_np,
         lloyd_kmeans,
     )

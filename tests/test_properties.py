@@ -17,7 +17,12 @@ plan depends on, not just one instance of it:
   way through the band join (pigeonhole), and the Hamming filter
   excludes every pair above the bound;
 - the oracle gate is permutation-invariant, detects any single-cell
-  mutation, and never raises on the None/NaN mixes it normalizes.
+  mutation, and never raises on the None/NaN mixes it normalizes;
+- the per-batch kNN retention rule (``functions.vector._topk_keep``)
+  keeps every row that can win a global rank <= k: each batch's kept
+  set contains its brute-force top-k, and the re-ranked union of all
+  batches IS the brute-force top-k, under ties, ``-inf`` masks, empty
+  batches, ``keep >= N`` and ``exclude_self``.
 
 Spark-backed properties batch many drawn cases into one job and cap
 ``max_examples`` low (each example is a full Spark round-trip);
@@ -384,6 +389,67 @@ def test_oracle_gate_permutation_and_mutation_property():
         assert not ok2
 
     check()
+
+
+# ---------------------------------------------------------------------------
+# kNN per-batch retention: the kept set always holds the exact top-k
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=400, deadline=None)
+@given(data=st.data())
+def test_topk_keep_retains_exact_top_k_property(data):
+    """Scores come from a few levels so ties are common, ``-inf`` marks a
+    masked candidate, ``k`` may exceed the candidate count, and under
+    ``exclude_self`` each query's own id is one of the candidates.  The
+    candidates split into random batches, as Arrow batches do."""
+    import numpy as np
+
+    from vectorsearch_scylla_spark.functions.vector import _topk_keep
+
+    n_q = data.draw(st.integers(min_value=1, max_value=4))
+    n_c = data.draw(st.integers(min_value=0, max_value=9))
+    k = data.draw(st.integers(min_value=1, max_value=10))
+    exclude_self = data.draw(st.booleans())
+    levels = [-np.inf, -1.0, -0.5, 0.0, 0.5, 1.0]
+    scores = np.array(
+        [[data.draw(st.sampled_from(levels)) for _ in range(n_c)] for _ in range(n_q)],
+        dtype=np.float64,
+    ).reshape(n_q, n_c)
+    # ids are a permutation, so the id tie-break is not the column order
+    cids = np.array(data.draw(st.permutations(range(100, 100 + n_c))), dtype=np.int64)
+    qids = [
+        data.draw(st.sampled_from(cids.tolist())) if exclude_self and n_c else -1
+        for _ in range(n_q)
+    ]
+    cuts = sorted(data.draw(st.lists(st.integers(0, n_c), max_size=3)))
+    batches = [np.arange(a, b) for a, b in zip([0] + cuts, cuts + [n_c])]
+
+    def brute(q, cols):
+        ranked = sorted(
+            (-scores[q, c], int(cids[c]))
+            for c in cols
+            if scores[q, c] > -np.inf and not (exclude_self and cids[c] == qids[q])
+        )
+        return ranked[:k]
+
+    kept = {q: set() for q in range(n_q)}
+    for cols in batches:
+        qi, ci = _topk_keep(scores[:, cols], k + 1 if exclude_self else k)
+        assert np.all(scores[qi, cols[ci]] > -np.inf)
+        pairs = list(zip(qi.tolist(), ci.tolist()))
+        assert pairs == sorted(pairs)  # query-major, candidates ascending
+        batch_kept = {q: set() for q in range(n_q)}
+        for q, c in pairs:
+            batch_kept[q].add((-scores[q, cols[c]], int(cids[cols[c]])))
+        for q in range(n_q):
+            assert set(brute(q, cols)) <= batch_kept[q]
+            kept[q] |= batch_kept[q]
+    for q in range(n_q):
+        merged = sorted(
+            (s, c) for s, c in kept[q] if not (exclude_self and c == qids[q])
+        )
+        assert merged[:k] == brute(q, range(n_c))
 
 
 # ---------------------------------------------------------------------------

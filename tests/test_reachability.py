@@ -327,3 +327,37 @@ def test_every_option_is_varied_by_a_non_test_caller():
     )
     stale = sorted(n for n in ALLOWED_OPTIONS if n not in options or n in varied)
     assert not stale, f"ALLOWED_OPTIONS entries that are gone or now varied: {stale}"
+
+
+# The similarity convention (zero-norm guard, per-batch top-k retention)
+# has one home; a kernel that calls these itself has grown its own copy.
+CONVENTION_HOME = "functions.vector"
+
+
+def _convention_calls(tree: ast.Module) -> list[int]:
+    """Line numbers of ``*.linalg.norm(...)`` and ``*.argpartition(...)``
+    calls in ``tree``."""
+    lines = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if f.attr == "argpartition" or (
+                f.attr == "norm"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "linalg"
+            ):
+                lines.append(node.lineno)
+    return lines
+
+
+def test_similarity_convention_has_one_home():
+    copies = {
+        f"{name}:{line}"
+        for name, mod in _load_package().items()
+        if name != CONVENTION_HOME
+        for line in _convention_calls(mod.tree)
+    }
+    assert not copies, (
+        "np.linalg.norm / np.argpartition outside functions/vector.py — call "
+        f"its _unit_rows / _cosine_block / _topk_keep instead: {sorted(copies)}"
+    )

@@ -28,6 +28,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearch_scylla_spark.functions.vector import _pair_cosine, _rerank
+
 
 def _planes(n_planes: int, dim: int, seed: int):
     import numpy as np
@@ -132,7 +134,6 @@ def hyperplane_topk_join(
     (contrast ``topk_similarity_join_blocked``) — both sides stay
     distributed end-to-end, so this is also the large-Q shape.
     """
-    import numpy as np
     import pandas as pd
 
     if dim is None:
@@ -174,20 +175,11 @@ def hyperplane_topk_join(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ma = np.asarray(list(pdf["__vq"]), dtype=np.float64)
-            mb = np.asarray(list(pdf["__vc"]), dtype=np.float64)
-            na = np.linalg.norm(ma, axis=1)
-            nb = np.linalg.norm(mb, axis=1)
-            denom = na * nb
-            zero = denom == 0.0
-            denom[zero] = 1.0
-            sims = np.einsum("ij,ij->i", ma, mb) / denom
-            sims[zero] = 0.0
             out = pd.DataFrame(
                 {
                     query_id: pdf[query_id],
                     corpus_id: pdf[corpus_id],
-                    "similarity": sims,
+                    "similarity": _pair_cosine(pdf["__vq"], pdf["__vc"]),
                 }
             )
             if threshold is not None:
@@ -198,16 +190,7 @@ def hyperplane_topk_join(
         cosine_kernel,
         schema=f"{query_id} {qid_dt}, {corpus_id} {cid_dt}, similarity double",
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("similarity").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "similarity", "rank")
-    )
+    return _rerank(scored, k, query_id, corpus_id, "similarity", exclude_self=False)
 
 
 def hyperplane_near_dup_pairs(
@@ -258,7 +241,6 @@ def hyperplane_near_dup_pairs(
     8 GB broadcast-table cap or a driver OOM building the relation — a
     hard failure, not a slowdown).
     """
-    import numpy as np
     import pandas as pd
 
     if against is None and against_sigs is not None:
@@ -358,15 +340,7 @@ def hyperplane_near_dup_pairs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ma = np.asarray(list(pdf["__va"]), dtype=np.float64)
-            mb = np.asarray(list(pdf["__vb"]), dtype=np.float64)
-            na = np.linalg.norm(ma, axis=1)
-            nb = np.linalg.norm(mb, axis=1)
-            denom = na * nb
-            zero = denom == 0.0
-            denom[zero] = 1.0
-            sims = np.einsum("ij,ij->i", ma, mb) / denom
-            sims[zero] = 0.0  # zero-norm guard: cos := 0
+            sims = _pair_cosine(pdf["__va"], pdf["__vb"])
             keep = sims > threshold
             yield pd.DataFrame(
                 {

@@ -30,97 +30,41 @@ CONSTRUCTION on both engines:
   would have to match across engines).
 
 Execution cost per iteration at scale: one corpus scan (assignment is
-embarrassingly parallel; the fold-based cosine runs interpreted, so
-swap in a blocked NumPy ``mapInPandas`` kernel for the assignment pass
-when d×k grows) plus one k×d-sized shuffle (the update aggregate) —
-identical asymptotics to MLlib.  ``tests/test_operators.py`` checks
-the trainer's clustering quality against ``pyspark.ml.KMeans`` on the
-same corpus so determinism isn't bought with a degenerate clustering.
+embarrassingly parallel) plus one k×d-sized shuffle (the update
+aggregate) — identical asymptotics to MLlib.
+``tests/test_operators.py`` checks the trainer's clustering quality
+against ``pyspark.ml.KMeans`` on the same corpus so determinism isn't
+bought with a degenerate clustering.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearch_scylla_spark.functions.vector import (
+    _EPS,
+    _cosine_block,
+    _entries_sql,
+    _rerank,
+    _topk_keep,
+    _unit_rows,
+    quantize,
+)
 from vectorsearch_scylla_spark.operators.report import retrain_report
 from vectorsearch_scylla_spark.session import drop_inherited_stats
-
-# mirrors plans/registry.quantize (floor(x·10^n + 0.5 + eps)/10^n) —
-# redefined here to keep operators/ free of registry imports
-_EPS = 1e-6
+from vectorsearch_scylla_spark.sources.tables import publish_dir
 
 
-def _quantize(c: Column, n: int) -> Column:
-    scale = float(10**n)
-    return F.floor(c.cast("double") * scale + F.lit(0.5 + _EPS)) / scale
+def _centroid_block(centroids, dtype):
+    """(ids sorted ascending, d × k matrix of unit centroid columns in
+    that order) — the setup the NumPy assignment and probe kernels
+    share.  Sorted ids make the first maximum the lowest id."""
+    import numpy as np
 
-
-def _centroid_lit(cvec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in cvec])
-
-
-def _best_cluster_struct(
-    vec_col: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """array_max over per-centroid (similarity, -cluster_id) structs =
-    argmax cosine, tie-break LOWEST cluster id — the struct comparison
-    mirrors the oracle's ``ORDER BY cos DESC, cluster_id ASC``.
-
-    Column-API variant, kept for callers that pass a computed Column
-    (PQ's per-subspace slices over tiny ksub×dsub books).  For large
-    centroid sets use the SQL-text builders below: each ``F.lit`` here
-    is a py4j round-trip, and k×d of them cost SECONDS of driver time
-    per plan at k ≈ √N (measured 4 s at k=22, d=64)."""
-    from vectorsearch_scylla_spark.functions.vector import cosine_similarity
-
-    entries = [
-        F.struct(
-            cosine_similarity(vec_col, _centroid_lit(cvec)).alias("s"),
-            F.lit(-cid).alias("nc"),
-        )
-        for cid, cvec in centroids
-    ]
-    return F.array_max(F.array(*entries))
-
-
-# --- SQL-text expression builders -----------------------------------
-# Same semantics as the Column-API versions above, built as ONE SQL
-# string parsed JVM-side: literal rendering uses repr(float), whose
-# shortest-round-trip decimal parses back to the identical double in
-# both Python and Java, so the expression evaluates bit-identically to
-# the F.lit construction.  The fused fold mirrors
-# functions/vector.cosine_similarity exactly (same zip_with struct,
-# same accumulator init, same operation order, same zero-norm guard).
-
-
-def _arr_sql(vec: list[float]) -> str:
-    return "array(" + ",".join(
-        f"CAST('{float(x)!r}' AS DOUBLE)" for x in vec
-    ) + ")"
-
-
-def _fused_cos_sql(vec_sql: str, arr_sql: str) -> str:
-    return (
-        f"aggregate(zip_with({vec_sql}, {arr_sql}, "
-        "(x, y) -> named_struct('x', CAST(x AS DOUBLE), 'y', CAST(y AS DOUBLE))), "
-        "named_struct('ab', 0.0D, 'aa', 0.0D, 'bb', 0.0D), "
-        "(acc, s) -> named_struct("
-        "'ab', acc.ab + s.x * s.y, "
-        "'aa', acc.aa + s.x * s.x, "
-        "'bb', acc.bb + s.y * s.y), "
-        "acc -> CASE WHEN acc.aa = 0.0D OR acc.bb = 0.0D THEN 0.0D "
-        "ELSE acc.ab / (sqrt(acc.aa) * sqrt(acc.bb)) END)"
-    )
-
-
-def _entries_sql(vec_sql: str, centroids: list[tuple[int, list[float]]]) -> str:
-    entries = ", ".join(
-        f"named_struct('s', {_fused_cos_sql(vec_sql, _arr_sql(cvec))}, "
-        f"'nc', {-cid})"
-        for cid, cvec in centroids
-    )
-    return f"array({entries})"
+    ordered = sorted(centroids)
+    ids = np.array([cid for cid, _ in ordered], dtype=np.int64)
+    return ids, _unit_rows(np.asarray([v for _, v in ordered], dtype=dtype))[0].T
 
 
 def _id_out_dtype(centroids):
@@ -198,12 +142,7 @@ def assign_clusters_np(
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    ordered = sorted(centroids)
-    ids = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    C = np.asarray([v for _, v in ordered], dtype=dtype)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = (C / cn[:, None]).T  # d × k, normalized
+    ids, Cn = _centroid_block(centroids, dtype)
     spark_t, np_t = _id_out_dtype(centroids)
 
     fields = list(df.schema.fields) + [StructField(out_col, spark_t, False)]
@@ -213,11 +152,8 @@ def assign_clusters_np(
 
     def assign(batches):
         for pdf in batches:
-            V = np.asarray(list(pdf[vec_col]), dtype=dtype)
-            vn = np.linalg.norm(V, axis=1)
-            zero = vn == 0.0
-            vn[zero] = 1.0
-            sims = (V / vn[:, None]) @ Cn  # n × k cosine block
+            Vn, zero = _unit_rows(np.asarray(list(pdf[vec_col]), dtype=dtype))
+            sims = Vn @ Cn  # n × k cosine block
             sims[zero, :] = 0.0
             best_ix = np.argmax(sims, axis=1)
             pdf = pdf.copy()
@@ -280,12 +216,7 @@ def probe_clusters_np(
     import numpy as np
     from pyspark.sql.types import StructField, StructType
 
-    ordered = sorted(centroids)
-    ids = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    C = np.asarray([v for _, v in ordered], dtype=dtype)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = (C / cn[:, None]).T  # d × k, normalized
+    ids, Cn = _centroid_block(centroids, dtype)
     np_ = min(nprobe, len(ids))
     spark_t, np_t = _id_out_dtype(centroids)
 
@@ -297,11 +228,8 @@ def probe_clusters_np(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.asarray(list(pdf[vec_col]), dtype=dtype)
-            vn = np.linalg.norm(V, axis=1)
-            zero = vn == 0.0
-            vn[zero] = 1.0
-            sims = (V / vn[:, None]) @ Cn
+            Vn, zero = _unit_rows(np.asarray(list(pdf[vec_col]), dtype=dtype))
+            sims = Vn @ Cn
             sims[zero, :] = 0.0
             top = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
             rep = pdf.loc[pdf.index.repeat(np_)].reset_index(drop=True)
@@ -339,17 +267,15 @@ def ivf_probe_topk_grouped(
     rows, so skew is bounded by the quantizer's balance rather than by
     data volume.
 
-    Per-cluster candidates keep ``k`` rows per query (+1 spare under
-    ``exclude_self``, + boundary ties so the global rank-k stays exact
-    over the probed candidate set); the global re-rank window runs over
-    Q·nprobe·k candidate rows only.  Ranking: similarity DESC, corpus
-    id ASC — identical to every other kNN operator.  Results are exact
-    over the probed clusters; recall vs the unpruned scan is the
+    Each cluster's cosine block and candidate retention are
+    :mod:`~vectorsearch_scylla_spark.functions.vector`'s
+    ``_cosine_block`` and ``_topk_keep``, and the global re-rank over
+    the Q·nprobe·k candidate rows is its ``_rerank``, so results are
+    exact over the probed clusters; recall vs the unpruned scan is the
     standard IVF nprobe/K trade, measured in ``bench_scale.py``.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     keep = k + (1 if exclude_self else 0)
     qdt = probes.schema[query_id].dataType.simpleString()
@@ -360,34 +286,16 @@ def ivf_probe_topk_grouped(
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return empty
-        Qm = np.asarray(list(left[query_vec]), dtype=dtype)
-        Cm = np.asarray(list(right[corpus_vec]), dtype=dtype)
-        qn = np.linalg.norm(Qm, axis=1)
-        qz = qn == 0.0
-        qn[qz] = 1.0
-        cn = np.linalg.norm(Cm, axis=1)
-        cz = cn == 0.0
-        cn[cz] = 1.0
-        sims = ((Qm / qn[:, None]) @ (Cm / cn[:, None]).T).astype(np.float64)
-        sims[qz, :] = 0.0
-        sims[:, cz] = 0.0
-        nb = sims.shape[1]
-        take = min(keep, nb)
-        qids = left[query_id].to_numpy()
-        cids = right[corpus_id].to_numpy()
-        part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-        out_q, out_c, out_s = [], [], []
-        for qi in range(len(qids)):
-            cutoff = sims[qi, part[qi]].min()
-            cand = np.nonzero(sims[qi] >= cutoff)[0]  # boundary ties
-            out_q.append(np.full(len(cand), qids[qi]))
-            out_c.append(cids[cand])
-            out_s.append(sims[qi, cand])
+        sims = _cosine_block(
+            np.asarray(list(left[query_vec]), dtype=dtype),
+            np.asarray(list(right[corpus_vec]), dtype=dtype),
+        ).astype(np.float64)
+        qi, ci = _topk_keep(sims, keep)
         return pd.DataFrame(
             {
-                query_id: np.concatenate(out_q),
-                corpus_id: np.concatenate(out_c),
-                "similarity": np.concatenate(out_s),
+                query_id: left[query_id].to_numpy()[qi],
+                corpus_id: right[corpus_id].to_numpy()[ci],
+                "similarity": sims[qi, ci],
             }
         )
 
@@ -396,21 +304,7 @@ def ivf_probe_topk_grouped(
         .cogroup(members.groupBy(cluster_col))
         .applyInPandas(score, schema=out_schema)
     )
-    if exclude_self:
-        cands = cands.filter(F.col(corpus_id) != F.col(query_id))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("similarity").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id,
-            corpus_id,
-            "similarity",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _rerank(cands, k, query_id, corpus_id, "similarity", exclude_self)
 
 
 def build_ivf_index(
@@ -449,13 +343,12 @@ def build_ivf_index(
     Every subsequent search reads ONLY its probed clusters' partitions —
     Spark prunes the non-probed directories at the parquet scan, so a
     probe touches nprobe/C of the corpus bytes.  Concurrent builders
-    race safely: staging dir + atomic rename, loser deletes its copy.
+    race safely through :func:`~vectorsearch_scylla_spark.sources.
+    tables.publish_dir`.
     """
     import json
     import os
-    import shutil
     import tempfile
-    import uuid
 
     spark = df.sparkSession
     cap = 256 * k if train_rows is None else int(train_rows)
@@ -472,20 +365,18 @@ def build_ivf_index(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         decimals=decimals, train_rows=cap, kernel="numpy",
     )
-    staging = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(staging, exist_ok=True)
     members = assign_clusters_np(df, cents, vec_col=vec_col, dtype="float64")
-    # one file per non-empty cluster partition: the shuffle co-locates
-    # each inverted list, partitionBy splits them into prunable dirs
-    members.repartition(k, "cluster_id").write.partitionBy("cluster_id").parquet(
-        os.path.join(staging, "lists")
-    )
-    with open(os.path.join(staging, "centroids.json"), "w") as f:
-        json.dump(cents, f)
-    try:
-        os.rename(staging, path)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
+
+    def write(staging: str) -> None:
+        # one file per non-empty cluster partition: the shuffle co-locates
+        # each inverted list, partitionBy splits them into prunable dirs
+        members.repartition(k, "cluster_id").write.partitionBy(
+            "cluster_id"
+        ).parquet(os.path.join(staging, "lists"))
+        with open(os.path.join(staging, "centroids.json"), "w") as f:
+            json.dump(cents, f)
+
+    publish_dir(path, cents_file, write)
     return cents, lists_path
 
 
@@ -573,7 +464,7 @@ def lloyd_kmeans(
         rows = (
             assigned.select("cluster_id", F.posexplode("__v").alias("pos", "val"))
             .groupBy("cluster_id", "pos")
-            .agg(_quantize(F.avg("val"), decimals).alias("avg_val"))
+            .agg(quantize(F.avg("val"), decimals).alias("avg_val"))
             .groupBy("cluster_id")
             .agg(
                 F.array_sort(
@@ -718,16 +609,8 @@ def split_oversized_clusters(
         C = V[order[:kk]].copy()
 
         def assign_to(Cm: np.ndarray) -> np.ndarray:
-            cn = np.linalg.norm(Cm, axis=1)
-            cz = cn == 0.0
-            cn[cz] = 1.0
-            vn = np.linalg.norm(V, axis=1)
-            vz = vn == 0.0
-            vn[vz] = 1.0
-            sims = (V / vn[:, None]) @ (Cm / cn[:, None]).T
-            sims[vz, :] = 0.0
-            sims[:, cz] = 0.0
-            return np.argmax(sims, axis=1)  # first max = lowest child
+            # first max = lowest child
+            return np.argmax(_cosine_block(V, Cm), axis=1)
 
         for _ in range(iters):
             a = assign_to(C)

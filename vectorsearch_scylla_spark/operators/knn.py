@@ -35,7 +35,13 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vectorsearch_scylla_spark.functions.vector import cosine_similarity
+from vectorsearch_scylla_spark.functions.vector import (
+    _collect_capped,
+    _rerank,
+    _topk_keep,
+    _unit_rows,
+    cosine_similarity,
+)
 
 
 def topk_similarity_join(
@@ -169,13 +175,12 @@ def topk_similarity_join_blocked(
     that product, which is why the distributed default stays
     LSH-first.
 
-    ``max_collect_rows`` enforces that bounded-Q contract (r9 VERDICT:
-    a corpus-sized Q here was a silent driver OOM, not an actionable
-    error): the collect is capped at ``max_collect_rows + 1`` rows —
-    so the guard itself can never OOM the driver — and exceeding the
-    cap raises, naming the two large-Q paths above.
+    ``max_collect_rows`` enforces that bounded-Q contract through
+    ``functions.vector._collect_capped`` — the guard itself can never
+    OOM the driver — and exceeding the cap raises, naming the two
+    large-Q paths above.
     """
-    import math
+    import functools
 
     import numpy as np
     import pandas as pd
@@ -184,31 +189,23 @@ def topk_similarity_join_blocked(
     np_dtype = np.dtype(dtype)
     join_keys = join_keys or []
     sc = queries.sparkSession
-    # limit(cap+1) bounds the driver transfer BEFORE it happens; on an
-    # in-contract query side (≤ cap rows) it is the identity and the
-    # plan is still evaluated exactly once.
-    qrows_all = (
-        queries.select(query_id, query_vec, *join_keys)
-        .limit(int(max_collect_rows) + 1)
-        .collect()
+    qrows_all = _collect_capped(
+        queries.select(query_id, query_vec, *join_keys),
+        max_collect_rows,
+        "topk_similarity_join_blocked: query side exceeds "
+        f"max_collect_rows={max_collect_rows} — this exact sweep "
+        "collects Q to the driver and is the SMALL-Q path.  For a "
+        "corpus-sized Q use topk_similarity_join_cogrouped (exact, "
+        "no collect on either side) or "
+        "functions.hyperplane.hyperplane_topk_join (approximate, "
+        "banded); or raise max_collect_rows if the driver can "
+        "genuinely hold Q.",
     )
-    if len(qrows_all) > max_collect_rows:
-        raise ValueError(
-            "topk_similarity_join_blocked: query side exceeds "
-            f"max_collect_rows={max_collect_rows} — this exact sweep "
-            "collects Q to the driver and is the SMALL-Q path.  For a "
-            "corpus-sized Q use topk_similarity_join_cogrouped (exact, "
-            "no collect on either side) or "
-            "functions.hyperplane.hyperplane_topk_join (approximate, "
-            "banded); or raise max_collect_rows if the driver can "
-            "genuinely hold Q."
-        )
     n_q = len(qrows_all)
     if not n_q:
         return topk_similarity_join(
             queries, corpus, k, query_id, corpus_id, query_vec, corpus_vec
         )
-    nchunks = max(1, math.ceil(n_q / max_query_rows))
 
     out_fields = [
         T.StructField(corpus_id, corpus.schema[corpus_id].dataType, True),
@@ -222,17 +219,11 @@ def topk_similarity_join_blocked(
             T.StructField(query_id, queries.schema[query_id].dataType, True),
         ]
     )
-    # exclude_self drops ≤1 row per query AFTER the per-batch top-k, so
-    # each batch must supply one spare candidate to keep global rank k
-    # exact at the margin.
-    kk_target = k + 1 if exclude_self else k
+    keep = k + 1 if exclude_self else k
 
     def chunk_candidates(qrows: list) -> DataFrame:
         qids = [r[query_id] for r in qrows]
-        qmat = np.asarray([r[query_vec] for r in qrows], dtype=np_dtype)
-        qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qnorm[qnorm == 0.0] = 1.0
-        qunit = qmat / qnorm
+        qunit = _unit_rows(np.asarray([r[query_vec] for r in qrows], dtype=np_dtype))[0]
         if join_keys:
             # build a 1-D object array explicitly — np.asarray of
             # equal-length tuples would silently produce a 2-D array and
@@ -245,14 +236,11 @@ def topk_similarity_join_blocked(
 
         def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             qunit_b, qkeys_b = bq.value
-            nq = qunit_b.shape[0]
             for pdf in batches:
                 if pdf.empty:
                     continue
                 cmat = np.asarray(list(pdf[corpus_vec]), dtype=np_dtype)
-                cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-                cnorm[cnorm == 0.0] = 1.0
-                sims = (cmat / cnorm) @ qunit_b.T  # (n_corpus, n_queries)
+                sims = _unit_rows(cmat)[0] @ qunit_b.T  # (n_corpus, n_queries)
                 if qkeys_b is not None:
                     btuples = [
                         tuple(t) for t in pdf[join_keys].itertuples(index=False)
@@ -261,29 +249,14 @@ def topk_similarity_join_blocked(
                     bkeys[:] = btuples
                     match = bkeys[:, None] == qkeys_b[None, :]
                     sims = np.where(match, sims, -np.inf)
-                cids = pdf[corpus_id].to_numpy()
-                kk = min(kk_target, sims.shape[0])
-                # per-query partial top-k within this Arrow batch
-                idx = np.argpartition(-sims, kk - 1, axis=0)[:kk, :]
-                rows = {corpus_id: [], "__qidx": [], "similarity": []}
-                for qi in range(nq):
-                    # argpartition breaks boundary ties arbitrarily, but
-                    # the global re-rank breaks them by corpus_id ASC —
-                    # emit ALL candidates tied with the kth value so the
-                    # deterministic winner is never dropped batch-side.
-                    kth = sims[idx[:, qi], qi].min()
-                    if kth == -np.inf:
-                        # fewer matching candidates than k in this batch
-                        # — emit only the real (non-masked) ones
-                        sel = np.nonzero(sims[:, qi] > -np.inf)[0]
-                    else:
-                        sel = np.nonzero(sims[:, qi] >= kth)[0]
-                    if not len(sel):
-                        continue
-                    rows[corpus_id].extend(cids[sel])
-                    rows["__qidx"].extend([qi] * len(sel))
-                    rows["similarity"].extend(sims[sel, qi].astype(np.float64))
-                yield pd.DataFrame(rows)
+                qi, ci = _topk_keep(sims.T, keep)
+                yield pd.DataFrame(
+                    {
+                        corpus_id: pdf[corpus_id].to_numpy()[ci],
+                        "__qidx": qi,
+                        "similarity": sims[ci, qi].astype(np.float64),
+                    }
+                )
 
         cand = corpus.select(corpus_id, corpus_vec, *join_keys).mapInPandas(
             block_topk, schema=out_schema
@@ -293,26 +266,14 @@ def topk_similarity_join_blocked(
         )
         return cand.join(F.broadcast(qid_df), "__qidx").drop("__qidx")
 
-    if nchunks == 1:
-        joined = chunk_candidates(qrows_all)
-    else:
-        parts = [
-            chunk_candidates(qrows_all[ci * max_query_rows : (ci + 1) * max_query_rows])
-            for ci in range(nchunks)
-        ]
-        joined = parts[0]
-        for p in parts[1:]:
-            joined = joined.unionByName(p)
-    if exclude_self:
-        joined = joined.filter(F.col(query_id) != F.col(corpus_id))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("similarity").desc(), F.col(corpus_id).asc()
+    joined = functools.reduce(
+        DataFrame.unionByName,
+        [
+            chunk_candidates(qrows_all[i : i + max_query_rows])
+            for i in range(0, n_q, max_query_rows)
+        ],
     )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "similarity", "rank")
-    )
+    return _rerank(joined, k, query_id, corpus_id, "similarity", exclude_self)
 
 
 def topk_similarity_join_cogrouped(
@@ -358,7 +319,7 @@ def topk_similarity_join_cogrouped(
 
     np_dtype = np.dtype(dtype)
     qb_n, cb_n = int(n_query_blocks), int(n_corpus_blocks)
-    kk = k + 1 if exclude_self else k
+    keep = k + 1 if exclude_self else k
 
     qrep = queries.select(
         F.col(query_id).alias("__qid"),
@@ -382,46 +343,21 @@ def topk_similarity_join_cogrouped(
     def block_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame({query_id: [], corpus_id: [], "similarity": []})
-        qmat = np.asarray(list(left["__qvec"]), dtype=np_dtype)
-        qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qnorm[qnorm == 0.0] = 1.0
-        qunit = qmat / qnorm
+        qunit = _unit_rows(np.asarray(list(left["__qvec"]), dtype=np_dtype))[0]
         cmat = np.asarray(list(right["__cvec"]), dtype=np_dtype)
-        cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-        cnorm[cnorm == 0.0] = 1.0
-        sims = (cmat / cnorm) @ qunit.T  # (n_corpus, n_queries)
-        cids = right["__cid"].to_numpy()
-        qids = left["__qid"].to_numpy()
-        kk_eff = min(kk, sims.shape[0])
-        idx = np.argpartition(-sims, kk_eff - 1, axis=0)[:kk_eff, :]
-        out_q: list = []
-        out_c: list = []
-        out_s: list = []
-        for qi in range(sims.shape[1]):
-            # keep every candidate tied with the kth value — the global
-            # re-rank breaks ties by corpus_id ASC, and argpartition's
-            # arbitrary boundary choice must not drop the winner
-            kth = sims[idx[:, qi], qi].min()
-            sel = np.nonzero(sims[:, qi] >= kth)[0]
-            out_q.extend([qids[qi]] * len(sel))
-            out_c.extend(cids[sel])
-            out_s.extend(sims[sel, qi].astype(np.float64))
-        return pd.DataFrame({query_id: out_q, corpus_id: out_c, "similarity": out_s})
+        sims = _unit_rows(cmat)[0] @ qunit.T  # (n_corpus, n_queries)
+        qi, ci = _topk_keep(sims.T, keep)
+        return pd.DataFrame(
+            {
+                query_id: left["__qid"].to_numpy()[qi],
+                corpus_id: right["__cid"].to_numpy()[ci],
+                "similarity": sims[ci, qi].astype(np.float64),
+            }
+        )
 
     cand = (
         qrep.groupby("__qb", "__cb")
         .cogroup(crep.groupby("__qb", "__cb"))
         .applyInPandas(block_topk, schema=out_schema)
     )
-    if exclude_self:
-        cand = cand.filter(F.col(query_id) != F.col(corpus_id))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("similarity").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "similarity", "rank")
-    )
-
-
+    return _rerank(cand, k, query_id, corpus_id, "similarity", exclude_self)

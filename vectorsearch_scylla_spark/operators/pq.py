@@ -32,20 +32,20 @@ groupBy — no shuffle of vectors, no driver collect of the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectorsearch_scylla_spark.operators.ivf import (
-    _best_cluster_struct,
-    lloyd_kmeans,
+from vectorsearch_scylla_spark.functions.vector import (
+    _EPS,
+    _collect_capped,
+    _entries_sql,
+    _rerank,
+    _row_norms,
+    _topk_keep,
+    quantize,
 )
-
-_EPS = 1e-6
-
-
-def _quantize(c: Column, n: int) -> Column:
-    scale = float(10**n)
-    return F.floor(c.cast("double") * scale + F.lit(0.5 + _EPS)) / scale
+from vectorsearch_scylla_spark.operators.ivf import lloyd_kmeans
+from vectorsearch_scylla_spark.sources.tables import publish_dir
 
 
 def train_pq(
@@ -101,9 +101,9 @@ def encode_pq(
     reconstructed codeword's L2 norm, used as the ADC denominator).
     Pure projection — codebooks ride along as literals, no shuffle."""
     out = df
-    full = F.col(vec_col).cast("array<double>")
     for s, book in enumerate(books):
-        best = _best_cluster_struct(F.slice(full, s * dsub + 1, dsub), book)
+        sub = f"slice(CAST(`{vec_col}` AS ARRAY<DOUBLE>), {s * dsub + 1}, {dsub})"
+        best = F.expr(f"array_max({_entries_sql(sub, book)})")
         out = out.withColumn(f"code{s}", (-best["nc"]).cast("int"))
     nsq = {
         (s, code): float(sum(v * v for v in cvec))
@@ -149,14 +149,12 @@ def build_pq_index(
     analog: the index is constructed once, queries only read it) — the
     16 interpreted cosine folds per row run once per corpus, and every
     subsequent ADC scan reads 4 ints + 1 double per vector instead of
-    re-deriving them.  Concurrent builders race safely: staging dir +
-    atomic rename, loser deletes its copy.
+    re-deriving them.  Concurrent builders race safely through
+    :func:`~vectorsearch_scylla_spark.sources.tables.publish_dir`.
     """
     import json
     import os
-    import shutil
     import tempfile
-    import uuid
 
     cap = 256 * ksub if train_rows is None else int(train_rows)
     path = os.path.join(
@@ -172,24 +170,14 @@ def build_pq_index(
         df, m=m, ksub=ksub, iters=iters, dsub=dsub,
         id_col=id_col, vec_col=vec_col, decimals=decimals, train_rows=cap,
     )
-    staging = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(staging, exist_ok=True)
-    encode_pq(df.select(id_col, vec_col), books, dsub=dsub, vec_col=vec_col).drop(
-        vec_col
-    ).write.parquet(os.path.join(staging, "codes"))
-    with open(os.path.join(staging, "codebooks.json"), "w") as f:
-        json.dump(books, f)
-    try:
-        os.rename(staging, path)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        # The swallowed OSError is only benign if it means we LOST the
-        # build race (the winner's index is in place).  If the target
-        # never materialized (permissions, bad tmpdir, ...), surface
-        # the real failure now instead of an opaque parquet-read error
-        # at the caller.
-        if not os.path.isfile(books_file):
-            raise
+
+    def write(staging: str) -> None:
+        codes = encode_pq(df.select(id_col, vec_col), books, dsub=dsub, vec_col=vec_col)
+        codes.drop(vec_col).write.parquet(os.path.join(staging, "codes"))
+        with open(os.path.join(staging, "codebooks.json"), "w") as f:
+            json.dump(books, f)
+
+    publish_dir(path, books_file, write)
     return books, codes_path
 
 
@@ -268,7 +256,7 @@ def pq_adc_topk(
     approx = F.when(
         (F.col("qnorm") == 0.0) | (F.col("rnorm") == 0.0), F.lit(0.0)
     ).otherwise(dotsum / (F.col("qnorm") * F.col("rnorm")))
-    scored = scored.withColumn("approx_sim", _quantize(approx, decimals))
+    scored = scored.withColumn("approx_sim", quantize(approx, decimals))
     if exclude_self:
         scored = scored.filter(F.col(corpus_id) != F.col(query_id))
     from pyspark.sql import Window
@@ -307,13 +295,12 @@ def pq_adc_topk_np(
     The per-query LUT becomes one (Q × m × ksub) ndarray broadcast to
     every task; each Arrow batch of the code table scores all queries
     with m gather-adds (no join, no per-pair aggregation rows), keeps
-    each query's batch-local top-k (plus a spare under ``exclude_self``
-    and all boundary ties, so global rank-k stays exact), and a final
-    small global re-rank merges the per-batch candidates — the same
-    candidate-retention contract as
-    ``operators.knn.topk_similarity_join_blocked``.  Driver memory is
-    O(Q × d) for the collected query side (callers bound Q), shuffle is
-    candidates-only (≤ (k+2) rows per query per batch).
+    each query's batch-local candidates by
+    :mod:`~vectorsearch_scylla_spark.functions.vector`'s ``_topk_keep``
+    and merges them with its ``_rerank`` — the retention and ranking
+    every blocked kNN kernel shares.  Driver memory is O(Q × d) for the
+    collected query side (callers bound Q, enforced by
+    ``_collect_capped``); shuffle is candidates-only.
 
     ``probes`` (query_id, ``probe_col``) restricts each query's
     candidates to code rows whose ``probe_col`` value is among that
@@ -325,30 +312,21 @@ def pq_adc_topk_np(
     pruned at the scan.
     """
     import numpy as np
-    from pyspark.sql import Window
 
     m = len(books)
-    # bounded-Q contract enforced the same way as
-    # operators.knn.topk_similarity_join_blocked (r10): the collect is
-    # capped at max_collect_rows + 1 — the guard itself cannot OOM the
-    # driver — and exceeding it raises naming the large-Q path
-    qrows = (
-        queries.select(query_id, query_vec)
-        .limit(int(max_collect_rows) + 1)
-        .collect()
+    qrows = _collect_capped(
+        queries.select(query_id, query_vec),
+        max_collect_rows,
+        "pq_adc_topk_np: query side exceeds max_collect_rows="
+        f"{max_collect_rows} — the ADC LUT is built on the driver "
+        "(O(Q·m·ksub)), so this is the SMALL-Q path.  For a "
+        "corpus-sized Q use functions.hyperplane.hyperplane_topk_join "
+        "(approximate, no collect) or raise max_collect_rows if the "
+        "driver can genuinely hold the LUT.",
     )
-    if len(qrows) > max_collect_rows:
-        raise ValueError(
-            "pq_adc_topk_np: query side exceeds max_collect_rows="
-            f"{max_collect_rows} — the ADC LUT is built on the driver "
-            "(O(Q·m·ksub)), so this is the SMALL-Q path.  For a "
-            "corpus-sized Q use functions.hyperplane.hyperplane_topk_join "
-            "(approximate, no collect) or raise max_collect_rows if the "
-            "driver can genuinely hold the LUT."
-        )
     qids = np.array([r[query_id] for r in qrows])
     Qv = np.asarray([list(r[query_vec]) for r in qrows], dtype=dtype)
-    qn = np.linalg.norm(Qv, axis=1).astype(np.float64)
+    qn = _row_norms(Qv).astype(np.float64)
     code_maps = []  # per subspace: (sorted code ids, LUT slice (Q, ksub), nsq)
     lut = np.zeros((len(qids), m, max(len(b) for b in books)), dtype=np.float64)
     for s, book in enumerate(books):
@@ -363,19 +341,15 @@ def pq_adc_topk_np(
         # same cap as the query side: probes is Q × nprobe rows by
         # contract, but a caller that passes a corpus-sized frame by
         # mistake must get the actionable error, not a driver OOM
-        prows = (
-            probes.select(query_id, probe_col)
-            .limit(int(max_collect_rows) + 1)
-            .collect()
+        prows = _collect_capped(
+            probes.select(query_id, probe_col),
+            max_collect_rows,
+            "pq_adc_topk_np: probes side exceeds max_collect_rows="
+            f"{max_collect_rows} — probes must be the Q × nprobe "
+            "per-query fan-out (probe_clusters output), never a "
+            "corpus-sized assignment table; or raise "
+            "max_collect_rows if the driver can genuinely hold it.",
         )
-        if len(prows) > max_collect_rows:
-            raise ValueError(
-                "pq_adc_topk_np: probes side exceeds max_collect_rows="
-                f"{max_collect_rows} — probes must be the Q × nprobe "
-                "per-query fan-out (probe_clusters output), never a "
-                "corpus-sized assignment table; or raise "
-                "max_collect_rows if the driver can genuinely hold it."
-            )
         pkeys = np.array(sorted({r[probe_col] for r in prows}))
         qpos = {qid: i for i, qid in enumerate(qids.tolist())}
         probemat = np.zeros((len(qids), len(pkeys)), dtype=bool)
@@ -387,8 +361,8 @@ def pq_adc_topk_np(
         pkeys = probemat = None
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast((qids, qn, lut, code_maps, pkeys, probemat))
-    keep = k + (1 if exclude_self else 0) + 1  # spare + boundary-tie probe
-    eps, scale = 1e-6, float(10**decimals)
+    keep = k + 1 if exclude_self else k
+    eps, scale = _EPS, float(10**decimals)
     qid_dt = queries.schema[query_id].dataType.simpleString()
     cid_dt = codes.schema[corpus_id].dataType.simpleString()
 
@@ -419,31 +393,12 @@ def pq_adc_topk_np(
                 known = pkeys_b[kidx_c] == ck
                 mask = probemat_b[:, kidx_c] & known[None, :]
                 scores = np.where(mask, scores, -np.inf)
-            nids = pdf[corpus_id].to_numpy()
-            take = min(keep, nb)
-            out_q, out_n, out_s = [], [], []
-            part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
-            for qi in range(nq):
-                cand = part[qi]
-                cutoff = scores[qi, cand].min()
-                if cutoff == -np.inf:
-                    # fewer unmasked candidates than `take` in this
-                    # batch — emit only the real ones
-                    cand = np.nonzero(scores[qi] > -np.inf)[0]
-                else:
-                    cand = np.nonzero(scores[qi] >= cutoff)[0]
-                if not len(cand):
-                    continue
-                out_q.append(np.full(len(cand), qids_b[qi]))
-                out_n.append(nids[cand])
-                out_s.append(scores[qi, cand])
-            if not out_q:
-                continue
+            qi, ci = _topk_keep(scores, keep)
             yield pd.DataFrame(
                 {
-                    query_id: np.concatenate(out_q),
-                    corpus_id: np.concatenate(out_n),
-                    "approx_sim": np.concatenate(out_s),
+                    query_id: qids_b[qi],
+                    corpus_id: pdf[corpus_id].to_numpy()[ci],
+                    "approx_sim": scores[qi, ci],
                 }
             )
 
@@ -451,15 +406,4 @@ def pq_adc_topk_np(
         kernel,
         schema=f"{query_id} {qid_dt}, {corpus_id} {cid_dt}, approx_sim double",
     )
-    if exclude_self:
-        cands = cands.filter(F.col(corpus_id) != F.col(query_id))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "approx_sim", F.col("rank").cast("int").alias("rank"))
-    )
-
-
+    return _rerank(cands, k, query_id, corpus_id, "approx_sim", exclude_self)

@@ -35,10 +35,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from vectorsearch_scylla_spark.functions.vector import cosine_similarity
+from vectorsearch_scylla_spark.functions.vector import (
+    _EPS,
+    cosine_similarity,
+    quantize,
+)
 from vectorsearch_scylla_spark.sources.tables import (
     load_table,
     device_metrics_raw,
+    publish_dir,
     read_parquet_cached,
 )
 from vectorsearch_scylla_spark.operators.window_pivot import window_start
@@ -49,16 +54,9 @@ from vectorsearch_scylla_spark.operators.knn import (
 from vectorsearch_scylla_spark.operators.serving import bucket_10s
 
 # ---------------------------------------------------------------------
-# Cross-engine decimal quantization (see module docstring)
+# Cross-engine decimal quantization (see module docstring; the Spark
+# side, ``quantize``, lives with the cosine in functions/vector.py)
 # ---------------------------------------------------------------------
-
-_EPS = 1e-6
-
-
-def quantize(c: Column, n: int = 4) -> Column:
-    """floor(x*10^n + 0.5 + eps)/10^n — Spark side."""
-    scale = float(10**n)
-    return F.floor(c.cast("double") * scale + F.lit(0.5 + _EPS)) / scale
 
 
 def Q(expr: str, n: int = 4) -> str:
@@ -111,28 +109,23 @@ def query(name: str, oracle: str | None, survey_ids: list[str], doc: str = ""):
 # Driver-window ordering
 # ---------------------------------------------------------------------
 # The external correctness harness value-checks only the FIRST 50
-# entries of ``queries()``/``oracle_sql()`` (registration order).  The
-# registry has outgrown that window, so exposure order is decoupled
-# from source order: DRIVER_WINDOW pins the 50 queries that get a hard
-# driver row this round.
+# entries of ``queries()``/``oracle_sql()``.  The registry has outgrown
+# that window, so exposure order is decoupled from source order:
+# DRIVER_WINDOW pins the 50 queries that get a hard driver row this
+# round, and every other query follows in source order.
 #
-# ROTATION POLICY (instituted r5): no registered query's latest hard
-# driver row may age past ONE round.  Each round's window leads with
-# every query whose last in-window round is round-1 (the stalest
-# half), then the queries added or changed this round, then flagship
-# re-certifications; the remainder sit out exactly one round.  The
-# committed manifest ``plans/window_history.json`` records each
-# query's last in-window round and ``tests/test_oracle_parity.py::
-# test_window_rotation_policy`` pins the invariant (every query ≥
-# round-1, window entries == round).  Rotated-out queries keep full
-# verification via tests/test_oracle_parity.py, which replicates the
-# driver gate over the ENTIRE registry at sf0.001.
+# Rotation invariant: no registered query's latest hard driver row may
+# age past ONE round.  Each round's window leads with every query whose
+# last in-window round is round-1 (the stalest half), then the queries
+# added or changed this round, then flagship re-certifications; the
+# remainder sit out exactly one round.  The committed manifest
+# ``plans/window_history.json`` records each query's last in-window
+# round and ``tests/test_oracle_parity.py::test_window_rotation_policy``
+# pins the invariant (every query >= round-1, window entries == round).
+# Rotated-out queries keep full verification via
+# tests/test_oracle_parity.py, which replicates the driver gate over
+# the ENTIRE registry at sf0.001.
 DRIVER_WINDOW: list[str] = [
-    # -- r14 must-rotate set: the 42 r12-stamped sit-outs (all batch;
-    # tools/rotate_window.py report), in source order.  No forced
-    # changed-dependency leads this round — every query whose deps
-    # changed after the r13 stamp sat in the r13 window (r13 VERDICT
-    # task 1 confirmed this). ------------------------------------------
     "anomaly_events_build",
     "approx_distinct_check",
     "bpe_token_estimate",
@@ -175,23 +168,12 @@ DRIVER_WINDOW: list[str] = [
     "token_packing",
     "unigram_logprob_score",
     "zscore_outliers",
-    # -- flagship re-cert slot: ivf_grouped_knn holds a hard row
-    # because this round's task 7 (unified retrain-report contract)
-    # edits operators/ivf.py — the flagship IVF query certifies the
-    # module's query-consumed paths stayed inert. ----------------------
     "ivf_grouped_knn",
-    # -- streaming e2e LAST: a completed Structured Streaming query
+    # streaming queries LAST: a completed Structured Streaming query
     # leaves residue in the shared local JVM (streaming-state/codegen
     # caches and a stopped-query cleanup thread) that intermittently
-    # slows later heavy batch queries 10-50x in the same process —
-    # so every batch query must run before the first stream starts.
-    # ALL SEVEN streaming queries are in-window at r14 because this
-    # round's planned work (the object-store-safe generation-commit
-    # storage seam, the rolled-heal empty-dir + NaN-residue ADVICE
-    # fixes, the unified retrain-report contract consumed via the
-    # maintenance ladder) lands in streaming/pipeline.py — every
-    # registered consumer of that module holds a hard driver row
-    # against the changed code. ----------------------------------------
+    # slows later heavy batch queries 10-50x in the same process, so
+    # every batch query must run before the first stream starts.
     "streaming_neardup_e2e",
     "streaming_ivf_add_e2e",
     "streaming_dedup_e2e",
@@ -200,25 +182,6 @@ DRIVER_WINDOW: list[str] = [
     "streaming_rolling_stats",
     "streaming_window_pivot",
 ]
-# r14 rotation executed at ROUND START (manifest 50@14 + 42@13, per
-# r13 VERDICT task 1): the 42 r12-stamped sit-outs take the batch
-# slots, ivf_grouped_knn takes the one discretionary flagship slot
-# (operators/ivf.py is edited this round for the shared retrain-report
-# contract), and ALL SEVEN streaming queries hold the tail because the
-# round's planned streaming/pipeline.py work (storage-strategy seam
-# for generation commits, ADVICE crash-heal fixes) precedes the next
-# stamp — avoid query-consumed kernel edits after this stamp.
-#
-# r15 rotation note: the 50 r13-stamped queries sitting out this
-# round become r15's must-rotate set; any query whose code deps
-# change after the r14 stamp must lead the r15 window.  This round's
-# post-stamp edits are planned for streaming/pipeline.py,
-# multimodal/media.py, operators/ivf.py:maybe_retrain and
-# operators/pq.py:maybe_retrain_pq — whose registered consumers
-# (seven streaming queries; media_byte_features / media_frame_sample;
-# streaming_ivf_add_e2e via ivf_maintenance_step) all sit IN the r14
-# window, so r15 should again carry no forced leads unless the work
-# drifts into other query-consumed kernels.
 
 
 def _exposure_order() -> list[str]:
@@ -2210,8 +2173,8 @@ _RES_DECODE_CASE = (
 def q_ivfpq_residual_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
+    from vectorsearch_scylla_spark.functions.vector import _arr_sql
     from vectorsearch_scylla_spark.operators.ivf import (
-        _arr_sql,
         build_ivf_index,
         ivf_probe_topk_grouped,
         probe_clusters,
@@ -6484,9 +6447,7 @@ def _materialize_once(
     import glob
     import hashlib
     import os
-    import shutil
     import tempfile
-    import uuid
 
     stats = [
         f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}"
@@ -6502,13 +6463,9 @@ def _materialize_once(
     ).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
     if not os.path.isdir(path):
-        staging = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(staging)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # another process won the race — its copy is equivalent
-            shutil.rmtree(staging, ignore_errors=True)
+        publish_dir(
+            path, path, lambda staging: df.write.mode("overwrite").parquet(staging)
+        )
     return path
 
 

@@ -125,6 +125,29 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     return cached
 
 
+def publish_dir(path: str, marker: str, write) -> None:
+    """Build-once publish of an artifact dir: ``write(staging)`` fills a
+    private staging dir, which then renames atomically to ``path``.
+
+    A rename that fails because a concurrent builder published first is
+    benign — that copy is equivalent, and ``marker`` (a path that exists
+    once a complete copy is in place) shows it — so the loser deletes
+    its own.  Any other failure (permissions, a bad temp dir) raises
+    here instead of surfacing later as an unreadable artifact."""
+    import os
+    import shutil
+    import uuid
+
+    staging = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
+    write(staging)
+    try:
+        os.rename(staging, path)
+    except OSError:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.exists(marker):
+            raise
+
+
 def device_metrics_raw(
     spark: SparkSession,
     sf_dir: str,
