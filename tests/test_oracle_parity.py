@@ -87,7 +87,7 @@ def test_window_rotation_policy():
     plans/window_history.json records the last round each query sat
     inside the driver's 50-slot window, and NO registered query may go
     more than one round without a hard driver row — i.e. every entry
-    is `round` (in DRIVER_WINDOW now) or `round - 1` (sat out exactly
+    is `round` (in the driver window now) or `round - 1` (sat out exactly
     this round).  A query slipping to round-2 staleness, a manifest
     drifting from the registry, or a window edit without a manifest
     update all fail here."""
@@ -109,33 +109,34 @@ def test_window_rotation_policy():
         f"manifest-only={sorted(set(last) - set(REGISTRY))} "
         f"registry-only={sorted(set(REGISTRY) - set(last))}"
     )
-    in_window = set(registry.DRIVER_WINDOW)
+    in_window = set(registry.driver_window())
     for name, r in last.items():
         if name in in_window:
-            assert r == rnd, f"{name} is in DRIVER_WINDOW but manifest says {r} != {rnd}"
+            assert r == rnd, f"{name} is in the driver window but manifest says {r} != {rnd}"
         else:
             assert r == rnd - 1, (
                 f"{name} last had a driver row in round {r}; with current "
                 f"round {rnd} it would go {rnd - r} rounds unchecked — "
-                "rotate it into DRIVER_WINDOW"
+                "stamp the next window with tools/rotate_window.py --write"
             )
 
 
 def test_driver_window_exposure_order():
     """Pin the driver-window contract: the external harness checks only
     the first 50 entries of queries()/oracle_sql(), so those slots must
-    hold exactly DRIVER_WINDOW (the never-driver-checked + changed +
-    flagship set), and the full exposure must cover the registry with
-    no duplicates."""
+    hold exactly the window derived from the manifest, batch queries
+    before streaming ones, and the full exposure must cover the
+    registry with no duplicates."""
     from vectorsearch_scylla_spark.plans.registry import (
-        DRIVER_WINDOW,
+        driver_window,
         spark_queries,
     )
 
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    assert not missing, f"DRIVER_WINDOW names not in REGISTRY: {missing}"
-    assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50
+    window = driver_window()
+    assert len(window) == len(set(window)) == 50
+    streams = [n.startswith("streaming_") for n in window]
+    assert streams == sorted(streams)
 
     exposed = list(spark_queries())
-    assert exposed[:50] == DRIVER_WINDOW
+    assert exposed[:50] == window
     assert sorted(exposed) == sorted(REGISTRY)

@@ -350,14 +350,60 @@ def _convention_calls(tree: ast.Module) -> list[int]:
     return lines
 
 
+# The oracles' zero-guarded cosine has one home too: DuckDB's
+# list_cosine_similarity yields -1.0 on a zero vector, and the guard
+# lives in this one function.
+SQL_COSINE_HOME = ("plans.registry", "_cos_sql")
+
+
+def _sql_cosine_lines(name: str, tree: ast.Module) -> list[int]:
+    """Line numbers of string literals (docstrings aside) that spell out
+    ``list_cosine_similarity`` outside ``SQL_COSINE_HOME``."""
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    home = {
+        line
+        for fn in tree.body
+        if name == SQL_COSINE_HOME[0]
+        and isinstance(fn, ast.FunctionDef)
+        and fn.name == SQL_COSINE_HOME[1]
+        for line in range(fn.lineno, fn.end_lineno + 1)
+    }
+    return [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and "list_cosine_similarity" in n.value
+        and id(n) not in docs
+        and n.lineno not in home
+    ]
+
+
 def test_similarity_convention_has_one_home():
+    modules = _load_package()
     copies = {
         f"{name}:{line}"
-        for name, mod in _load_package().items()
+        for name, mod in modules.items()
         if name != CONVENTION_HOME
         for line in _convention_calls(mod.tree)
     }
     assert not copies, (
         "np.linalg.norm / np.argpartition outside functions/vector.py — call "
         f"its _unit_rows / _cosine_block / _topk_keep instead: {sorted(copies)}"
+    )
+    sql_copies = {
+        f"{name}:{line}"
+        for name, mod in modules.items()
+        for line in _sql_cosine_lines(name, mod.tree)
+    }
+    assert not sql_copies, (
+        "list_cosine_similarity outside registry._cos_sql — build the oracle "
+        f"cosine with _cos_sql instead: {sorted(sql_copies)}"
     )

@@ -1,6 +1,6 @@
-"""Guard-rail tests for tools/rotate_window.py --write (r5 ADVICE):
-a bad stamp silently rewrites the rotation manifest, so every refusal
-path must fire BEFORE any file is touched."""
+"""Tests for tools/rotate_window.py --write: it stamps the derived
+window, and a bad stamp (which would silently rewrite the rotation
+manifest) is refused BEFORE any file is touched."""
 
 from __future__ import annotations
 
@@ -44,43 +44,25 @@ def test_write_rejects_non_successor_round(tmp_manifest, monkeypatch, capsys):
         assert open(path).read() == before  # untouched
 
 
-def test_write_rejects_missized_window(tmp_manifest, monkeypatch, capsys):
+def test_write_stamps_the_derived_window(tmp_manifest, monkeypatch):
+    """--write stamps 50 names: every query that sat out the manifest's
+    round, every query the manifest does not know yet, and the rest
+    filled in source order; the other stamps are left as they were."""
     path, hist = tmp_manifest
-    before = open(path).read()
-    monkeypatch.setattr(registry, "DRIVER_WINDOW", registry.DRIVER_WINDOW[:49])
-    assert _run(monkeypatch, "--write", str(hist["round"] + 1)) == 1
-    assert "49 entries" in capsys.readouterr().out
-    assert open(path).read() == before
-
-
-def test_write_rejects_new_query_outside_window(tmp_manifest, monkeypatch, capsys):
-    """A brand-new registered query not placed in DRIVER_WINDOW used to
-    get a fabricated 'checked last round' stamp (last.get(n, rnd-1)),
-    silently defeating the new-query-must-enter-window rule."""
-    path, hist = tmp_manifest
-    before = open(path).read()
-    trimmed = dict(hist)
-    trimmed["last_in_window"] = {
-        n: r
-        for n, r in hist["last_in_window"].items()
-        if n not in registry.DRIVER_WINDOW[:1]
-    }
-    # drop one in-window query from the manifest: it is "new" AND in
-    # the window — allowed.  Then ALSO pretend an out-of-window query
-    # is new — must refuse.
-    out_of_window = next(
-        n for n in registry.REGISTRY if n not in registry.DRIVER_WINDOW
-    )
-    trimmed["last_in_window"] = {
-        n: r for n, r in trimmed["last_in_window"].items() if n != out_of_window
-    }
+    rnd = hist["round"]
+    new = next(iter(registry.REGISTRY))
+    last = {n: r for n, r in hist["last_in_window"].items() if n != new}
     with open(path, "w") as f:
-        json.dump(trimmed, f)
-    before = open(path).read()
-    assert _run(monkeypatch, "--write", str(hist["round"] + 1)) == 1
-    out = capsys.readouterr().out
-    assert "MUST enter the window" in out and out_of_window in out
-    assert open(path).read() == before
+        json.dump({**hist, "last_in_window": last}, f)
+    assert _run(monkeypatch, "--write", str(rnd + 1)) == 0
+    with open(path) as f:
+        out = json.load(f)
+    assert out["round"] == rnd + 1
+    assert set(out["last_in_window"]) == set(registry.REGISTRY)
+    stamped = {n for n, r in out["last_in_window"].items() if r == rnd + 1}
+    assert len(stamped) == 50
+    assert {n for n, r in last.items() if r == rnd - 1} | {new} <= stamped
+    assert all(out["last_in_window"][n] == r for n, r in last.items() if n not in stamped)
 
 
 def test_report_mode_never_writes(tmp_manifest, monkeypatch):

@@ -30,9 +30,10 @@ def main() -> None:
         f"{len(REGISTRY)} queries, every one paired with a DuckDB oracle "
         "(the driver's correctness gate). SURVEY ids map to the §2 "
         "operator inventory; details in `COVERAGE.md`. Rows are in "
-        "exposure order (`registry.DRIVER_WINDOW` first): # ≤ 50 sit "
-        "inside the external driver's 50-row correctness window; the "
-        "rest are verified by the full local parity suite.\n",
+        "exposure order: # ≤ 50 are the external driver's 50-row "
+        "correctness window, derived from `plans/window_history.json` "
+        "(`registry.driver_window`, rotated by `tools/rotate_window.py`); "
+        "the rest are verified by the full local parity suite.\n",
         "\n| # | Query | SURVEY ids | What it does |\n|---|---|---|---|\n",
     ]
     for i, name in enumerate(exposure, start=1):

@@ -1,25 +1,20 @@
 #!/usr/bin/env python
-"""Driver-window rotation helper.
+"""Driver-window rotation.
 
-The external harness hard-checks only the first 50 exposed queries
-(`registry.DRIVER_WINDOW`); the rotation policy (instituted r5) says
-no registered query's latest hard driver row may age past ONE round.
-This tool makes each round's rotation mechanical:
+The external harness hard-checks only the first 50 exposed queries.
+The window is derived from ``plans/window_history.json``
+(``registry.driver_window``): every query stamped with the manifest's
+round, plus every registered query the manifest does not know yet.
+The rotation policy says no registered query's latest hard driver row
+may age past ONE round, so the next round's window is every query that
+sat out this round (stamped ``round - 1``) and every new query, filled
+to 50 with the rest in source order.
 
-    python tools/rotate_window.py            # report: who MUST rotate in
-    python tools/rotate_window.py --write 6  # stamp the manifest for round 6
+    python tools/rotate_window.py            # report: this and next window
+    python tools/rotate_window.py --write 6  # stamp the next window as round 6
 
-Workflow for round N:
-1. run with no args — it prints the must-rotate set (every query whose
-   manifest entry is N-2 after the round increments, i.e. currently
-   ``round - 1`` and NOT in DRIVER_WINDOW) and how many free slots
-   remain for new/changed queries;
-2. edit ``registry.DRIVER_WINDOW`` until the report is clean
-   (must-rotate ⊆ window, len == 50, streaming queries last);
-3. ``--write N`` regenerates ``plans/window_history.json`` (everything
-   in the window stamps N, everything else keeps its previous stamp);
-4. ``tests/test_oracle_parity.py::test_window_rotation_policy`` is the
-   enforcement — it fails if any query would go 2 rounds unchecked.
+``tests/test_oracle_parity.py::test_window_rotation_policy`` is the
+enforcement — it fails if any query would go 2 rounds unchecked.
 """
 
 from __future__ import annotations
@@ -33,9 +28,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vectorsearch_scylla_spark.plans import registry  # noqa: E402
 
-MANIFEST = os.path.join(
-    os.path.dirname(registry.__file__), "window_history.json"
-)
+MANIFEST = registry.WINDOW_HISTORY
+WINDOW = 50
+
+
+def next_window(hist: dict) -> list[str]:
+    """Every query that sat out ``hist``'s round or is new, filled to
+    ``WINDOW`` in source order."""
+    last = hist["last_in_window"]
+    must = [n for n in registry.REGISTRY if last.get(n, hist["round"] - 1) < hist["round"]]
+    fill = [n for n in registry.REGISTRY if n not in must]
+    return must + fill[: max(0, WINDOW - len(must))]
 
 
 def main() -> int:
@@ -44,52 +47,27 @@ def main() -> int:
         "--write",
         type=int,
         metavar="ROUND",
-        help="stamp the manifest for this round from the current DRIVER_WINDOW",
+        help="stamp the next window for this round (manifest round + 1)",
     )
     args = ap.parse_args()
 
     with open(MANIFEST) as f:
         hist = json.load(f)
-    last = hist["last_in_window"]
     cur_round = hist["round"]
-    window = set(registry.DRIVER_WINDOW)
-    reg = set(registry.REGISTRY)
-
-    new_queries = sorted(reg - set(last))
-    removed = sorted(set(last) - reg)
-    # genuinely stale = would fail the rotation test as-stamped: last
-    # hard row is 2+ rounds behind the manifest round and not in the
-    # current window (sitting out ONE round at cur_round-1 is allowed)
-    stale_now = sorted(
-        n for n in reg & set(last) if last[n] <= cur_round - 2 and n not in window
-    )
-    # queries that sat out THIS round: they are next round's must-rotate set
-    sat_out = sorted(n for n in reg if n not in window)
-
-    print(f"manifest round: {cur_round}; registry: {len(reg)}; window: {len(window)}")
-    if removed:
-        print(f"in manifest but no longer registered (drop on --write): {removed}")
-    if new_queries:
-        print(f"registered but not in manifest (must be IN window): {new_queries}")
-    if stale_now:
-        print(
-            "STALE NOW (last hard row 2+ rounds behind, not in window — the "
-            f"rotation test fails until these rotate in): {stale_now}"
-        )
+    nxt = next_window(hist)
     print(
-        f"sitting out this round ({len(sat_out)}) — next round's must-rotate "
-        f"set, leaving {50 - len(sat_out)} slots for new/changed queries:"
+        f"manifest round: {cur_round}; registry: {len(registry.REGISTRY)}; "
+        f"window: {len(registry.window_of(hist))}"
     )
-    for n in sat_out:
+    print(f"next window ({len(nxt)}):")
+    for n in nxt:
         print(f"  {n}")
-
     if args.write is None:
-        return 1 if (stale_now or new_queries or len(window) != 50) else 0
+        return 0
 
     rnd = args.write
-    # --write guards: a bad stamp silently rewrites history and the
-    # enforcement test only catches SOME of the damage, so refuse
-    # loudly here instead (r5 ADVICE items 1 and 4).
+    # a bad stamp silently rewrites history and the enforcement test
+    # only catches SOME of the damage, so refuse loudly here instead
     if rnd != cur_round + 1:
         print(
             f"refusing --write {rnd}: manifest round is {cur_round}, only "
@@ -97,39 +75,21 @@ def main() -> int:
             "or a past round would rewrite history)"
         )
         return 1
-    if len(window) != 50:
-        print(
-            f"refusing --write: DRIVER_WINDOW has {len(window)} entries, "
-            "need exactly 50 — fix registry.DRIVER_WINDOW first"
-        )
-        return 1
-    missing_new = sorted(n for n in new_queries if n not in window)
-    if missing_new:
-        print(
-            "refusing --write: newly registered queries MUST enter the "
-            f"window on their first stamped round, but these are outside "
-            f"DRIVER_WINDOW: {missing_new}"
-        )
-        return 1
+    window = set(nxt)
     out = {
         "round": rnd,
         "note": hist.get("note", ""),
-        "last_in_window": dict(
-            sorted(
-                {
-                    n: (rnd if n in window else last.get(n, rnd - 1))
-                    for n in reg
-                }.items()
-            )
-        ),
+        "last_in_window": {
+            n: (rnd if n in window else hist["last_in_window"][n])
+            for n in sorted(registry.REGISTRY)
+        },
     }
     with open(MANIFEST, "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")
-    bad = [n for n, r in out["last_in_window"].items() if r < rnd - 1]
     print(f"wrote {MANIFEST} for round {rnd}")
-    if bad:
-        print(f"WARNING: {len(bad)} queries now >1 round stale: {bad}")
+    if len(nxt) > WINDOW:
+        print(f"WARNING: {len(nxt)} queries had to rotate in; the driver checks {WINDOW}")
         return 1
     return 0
 

@@ -219,7 +219,7 @@ def hyperplane_near_dup_pairs(
     the decision boundary — tune ``n_bands`` up for tighter thresholds.
 
     Incremental mode (``against`` given) — the embedding twin of
-    ``simhash_near_dup_pairs(against=…)``, the daily-increment shape
+    ``simhash_near_dup_pairs(against_sigs=…)``, the daily-increment shape
     at 100 TB: the NEW batch signs and band-joins against the BASE
     corpus's band index without ever re-pairing the base against
     itself, so the join is |new|·n_bands probe rows against the base
@@ -266,6 +266,8 @@ def hyperplane_near_dup_pairs(
             ),
         )
 
+    from vectorsearch_scylla_spark.operators.dedup import banded_pairs
+
     if against is None:
         # skew-hardened within-bucket expansion: a replica clique shares
         # every band key, and the plain self-join would hash its whole n²
@@ -287,7 +289,6 @@ def hyperplane_near_dup_pairs(
         # partition concurrently before its cached block registers;
         # deployments where the signing kernel dominates may prefer
         # eager=True there (one dedicated pass, strictly once).
-        from vectorsearch_scylla_spark.operators.dedup import banded_pairs
         from vectorsearch_scylla_spark.session import drop_inherited_stats
 
         if docs_sigs is None:
@@ -298,9 +299,9 @@ def hyperplane_near_dup_pairs(
         va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
         vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     else:
-        # INCREMENTAL: bipartite (new × base) band join — no salted
-        # expansion needed (per-bucket work is |new∩b|·|base∩b| and AQE
-        # skew-split applies; the small new side broadcasts)
+        # INCREMENTAL: banded_pairs' bipartite (new × base) band join,
+        # the new side statically broadcast; DISTINCT for the same
+        # several-bands reason
         sigs_b = (
             against_sigs
             if against_sigs is not None
@@ -309,25 +310,10 @@ def hyperplane_near_dup_pairs(
                 band_bits=band_bits, seed=seed, dim=dim,
             )
         )
-        # static broadcast hint on the new side (see operators/dedup.
-        # banded_pairs' against= note): a checkpointed increment has
-        # default stats, and without the hint the planner shuffles the
-        # whole base band index per run
-        new_side = F.broadcast(
-            _banded(sigs).select(
-                F.col(id_col).alias("id_a"), "band_idx", "band_val"
-            )
-        )
-        cand = (
-            new_side.join(
-                _banded(sigs_b).select(
-                    F.col(id_col).alias("id_b"), "band_idx", "band_val"
-                ),
-                ["band_idx", "band_val"],
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        cand = banded_pairs(
+            _banded(sigs), ["band_idx", "band_val"], id_col=id_col,
+            against=_banded(sigs_b),
+        ).distinct()
         va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
         vb = against.select(
             F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")

@@ -124,7 +124,7 @@ def banded_pairs(
     expansion step of every LSH band join, SKEW-HARDENED.
 
     Incremental mode (``against`` given) — the MinHash-class twin of
-    ``simhash_near_dup_pairs(against=…)`` / ``hyperplane_near_dup_pairs
+    ``simhash_near_dup_pairs(against_sigs=…)`` / ``hyperplane_near_dup_pairs
     (against=…)``, completing the daily-increment story for the third
     dedup evidence class: ``sides`` is the NEW batch's band table and
     ``against`` the (persisted) BASE corpus band table with the same
@@ -332,7 +332,6 @@ def simhash_near_dup_pairs(
     max_hamming: int = SIMHASH_BANDS - 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    against: DataFrame | None = None,
     against_sigs: DataFrame | None = None,
     docs_sigs: DataFrame | None = None,
 ) -> DataFrame:
@@ -340,21 +339,22 @@ def simhash_near_dup_pairs(
     EXACT for max_hamming ≤ bands−1 (pigeonhole: see module
     docstring), LSH-approximate above that.
 
-    Self-join mode (``against=None``): pairs within ``docs``,
+    Self-join mode (``against_sigs=None``): pairs within ``docs``,
     constrained ``id_a < id_b``.
 
-    Incremental mode (``against`` given): pairs (docs × against) — the
-    daily-increment shape at 100 TB: the NEW batch fingerprints and
-    band-joins against the (already fingerprinted) BASE corpus without
-    ever re-pairing the base against itself, so the join is
-    |new|·bands probe rows against the base's band index, not
+    Incremental mode (``against_sigs`` given: the BASE corpus's
+    simhash128 output, e.g. a persisted signature artifact): pairs
+    (docs × base) — the daily-increment shape at 100 TB: the NEW batch
+    fingerprints and band-joins against the already fingerprinted BASE
+    corpus without ever re-pairing the base against itself, so the
+    join is |new|·bands probe rows against the base's band index, not
     |base|².  Caller guarantees disjoint id spaces.  The new side
     broadcasts statically — see :func:`banded_pairs`' against= note
     for why the planner cannot pick that shape itself, and for the
     oversized-increment failure mode (the 8 GB broadcast cap / driver
     OOM reads as a hard failure, not a slowdown).
 
-    Plan shape: one fingerprint pass per join side, bands unpivoted to
+    Plan shape: one fingerprint pass over ``docs``, bands unpivoted to
     (id, band_idx, band_val) rows, per-band hash equi-join, Hamming
     filter, DISTINCT (a pair may collide in several bands).  No
     whole-band ``collect_list`` — a skewed band is an AQE skew-join,
@@ -379,16 +379,6 @@ def simhash_near_dup_pairs(
         if docs_sigs is not None
         else simhash128(docs, id_col=id_col, text_col=text_col)
     )
-    # against_sigs: a PRE-FINGERPRINTED base (simhash128 output shape)
-    # — the streaming/incremental caller materializes the base
-    # signature table once instead of re-fingerprinting it per call
-    # (per micro-batch, in the streaming case)
-    if against_sigs is not None:
-        sigs_b = against_sigs
-    elif against is not None:
-        sigs_b = simhash128(against, id_col=id_col, text_col=text_col)
-    else:
-        sigs_b = sigs
 
     def _banded(s: DataFrame) -> DataFrame:
         return s.select(
@@ -403,7 +393,7 @@ def simhash_near_dup_pairs(
         " + ".join(f"bit_count(a_s{m} ^ b_s{m})" for m in range(SIG_WORDS))
     ).cast("long")
 
-    if against is None and against_sigs is None:
+    if against_sigs is None:
         # SELF-JOIN mode: candidate ids through the skew-hardened
         # salted expansion (a replica clique shares every band key and
         # would otherwise put its whole n² expansion on one task).
@@ -461,7 +451,7 @@ def simhash_near_dup_pairs(
             "band_val",
         )
     )
-    b = _banded(sigs_b).select(
+    b = _banded(against_sigs).select(
         F.col(id_col).alias("id_b"),
         *[F.col(f"s{m}").alias(f"b_s{m}") for m in range(SIG_WORDS)],
         F.col("band_idx").alias("band_idx_b"),

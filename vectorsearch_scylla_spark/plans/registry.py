@@ -20,13 +20,24 @@ Conventions that make cross-engine value-hash comparison stable:
 - zero-norm cosine is guarded to 0.0 in both engines (DuckDB's
   ``list_cosine_similarity`` yields -1.0 on zero vectors).
 
+The vector queries' ranking convention (guarded cosine, similarity
+DESC, lower neighbor id first, ``row_number <= k``, quantized
+similarity, INT rank) has one home per engine, next to ``_cos_sql``:
+``_vecs``/``_queries``/``_corpus``/``_exact_topk``/``_ivf_index``/
+``_ivf_lists``/``_ivf_topk``/``_ranked``/``_with_exact_sim`` build the
+Spark bodies, and ``_cos_sql``/``_topk_sql``/``_exact_sim_sql`` build
+the DuckDB oracles.  The NumPy kernels they call keep it in
+``functions/vector.py``.
+
 SURVEY.md §2 operator ids are noted on each query (the judge's
 coverage checklist).
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 from dataclasses import dataclass, field
 from typing import Callable
@@ -109,84 +120,45 @@ def query(name: str, oracle: str | None, survey_ids: list[str], doc: str = ""):
 # Driver-window ordering
 # ---------------------------------------------------------------------
 # The external correctness harness value-checks only the FIRST 50
-# entries of ``queries()``/``oracle_sql()``.  The registry has outgrown
-# that window, so exposure order is decoupled from source order:
-# DRIVER_WINDOW pins the 50 queries that get a hard driver row this
-# round, and every other query follows in source order.
-#
-# Rotation invariant: no registered query's latest hard driver row may
-# age past ONE round.  Each round's window leads with every query whose
-# last in-window round is round-1 (the stalest half), then the queries
-# added or changed this round, then flagship re-certifications; the
-# remainder sit out exactly one round.  The committed manifest
-# ``plans/window_history.json`` records each query's last in-window
-# round and ``tests/test_oracle_parity.py::test_window_rotation_policy``
-# pins the invariant (every query >= round-1, window entries == round).
-# Rotated-out queries keep full verification via
+# entries of ``queries()``/``oracle_sql()``, so exposure order leads
+# with a derived window and every other query follows in source order.
+# The committed manifest ``plans/window_history.json`` records the last
+# round each query sat in the window; the window is every query stamped
+# with the manifest's round plus every registered query it does not
+# know yet.  ``tools/rotate_window.py --write`` stamps the next round's
+# window (every query that sat out the last round, filled to 50), so no
+# query's latest hard driver row ages past one round;
+# ``tests/test_oracle_parity.py::test_window_rotation_policy`` pins
+# that.  Rotated-out queries keep full verification in
 # tests/test_oracle_parity.py, which replicates the driver gate over
 # the ENTIRE registry at sf0.001.
-DRIVER_WINDOW: list[str] = [
-    "anomaly_events_build",
-    "approx_distinct_check",
-    "bpe_token_estimate",
-    "chunk_dedup",
-    "customer_order_coverage",
-    "dedup_clusters_incremental",
-    "dedup_exact",
-    "dedup_pipeline_funnel",
-    "doc_repetition_stats",
-    "domain_doc_cap",
-    "embedding_input_text",
-    "embedding_neardup_incremental",
-    "event_props_stats",
-    "event_sessionization",
-    "fleet_config_source",
-    "knn_bruteforce",
-    "knn_same_label",
-    "lsh_knn",
-    "media_byte_features",
-    "media_frame_sample",
-    "metric_percentiles",
-    "metric_percentiles_approx",
-    "minhash_dup_buckets",
-    "minhash_signatures",
-    "ngram_jaccard_incremental",
-    "ngram_jaccard_pairs",
-    "path2_anomaly",
-    "path3_novelty_flags",
-    "pii_redaction",
-    "profile_rebuild_after_feedback",
-    "resample_daily_locf",
-    "retention_sweep",
-    "simhash_dup_pairs",
-    "source_lang_rollup",
-    "source_mix_summary",
-    "sq8_knn",
-    "tfidf_top_terms",
-    "threshold_rules",
-    "token_budget_sample",
-    "token_packing",
-    "unigram_logprob_score",
-    "zscore_outliers",
-    "ivf_grouped_knn",
-    # streaming queries LAST: a completed Structured Streaming query
-    # leaves residue in the shared local JVM (streaming-state/codegen
-    # caches and a stopped-query cleanup thread) that intermittently
-    # slows later heavy batch queries 10-50x in the same process, so
-    # every batch query must run before the first stream starts.
-    "streaming_neardup_e2e",
-    "streaming_ivf_add_e2e",
-    "streaming_dedup_e2e",
-    "streaming_detect_e2e",
-    "streaming_novelty_e2e",
-    "streaming_rolling_stats",
-    "streaming_window_pivot",
-]
+WINDOW_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)), "window_history.json")
+
+
+def window_of(hist: dict) -> list[str]:
+    """The window manifest ``hist`` stamps: batch queries in source
+    order, then the streaming queries — a completed Structured
+    Streaming query leaves residue in the shared local JVM
+    (streaming-state/codegen caches and a stopped-query cleanup thread)
+    that intermittently slows later heavy batch queries 10-50x in the
+    same process, so every batch query must run before the first
+    stream starts."""
+    rnd, last = hist["round"], hist["last_in_window"]
+    window = [n for n in REGISTRY if last.get(n, rnd) == rnd]
+    return [n for n in window if not n.startswith("streaming_")] + [
+        n for n in window if n.startswith("streaming_")
+    ]
+
+
+def driver_window() -> list[str]:
+    """The current window, read from ``WINDOW_HISTORY``."""
+    with open(WINDOW_HISTORY) as f:
+        return window_of(json.load(f))
 
 
 def _exposure_order() -> list[str]:
-    """DRIVER_WINDOW first, then every remaining query in source order."""
-    window = [n for n in DRIVER_WINDOW if n in REGISTRY]
+    """The driver window first, then every remaining query in source order."""
+    window = driver_window()
     seen = set(window)
     return window + [n for n in REGISTRY if n not in seen]
 
@@ -789,27 +761,218 @@ def q_threshold_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without adding checked surface.)
 
 
-# cosine with zero-norm guard, DuckDB side (double precision)
-KNN_COS = (
-    "CASE WHEN list_sum(list_transform(a.embedding::DOUBLE[], x -> x*x)) = 0 "
-    "  OR list_sum(list_transform(b.embedding::DOUBLE[], x -> x*x)) = 0 THEN 0.0 "
-    "ELSE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) END"
+# ---------------------------------------------------------------------
+# The vector-query skeleton, once per engine (see the module docstring):
+# every kNN / IVF / SQ8 / PQ query below is composed from these.
+# ---------------------------------------------------------------------
+
+
+def _cos_sql(x: str, y: str) -> str:
+    """Zero-guarded cosine between two DOUBLE[] SQL expressions — the
+    oracles' only cosine."""
+    return (
+        f"CASE WHEN list_sum(list_transform({x}, v -> v*v)) = 0 "
+        f"  OR list_sum(list_transform({y}, v -> v*v)) = 0 THEN 0.0 "
+        f"ELSE list_cosine_similarity({x}, {y}) END"
+    )
+
+
+# the a/b self-join cosine over the raw embeddings table
+KNN_COS = _cos_sql("a.embedding::DOUBLE[]", "b.embedding::DOUBLE[]")
+
+
+def _topk_sql(q: str, n: str, score: str, source: str, k: int, **extra: str) -> str:
+    """The oracle twin of the ranking convention: per query ``q``, the
+    ``k`` neighbors ``n`` of ``source`` (a FROM/JOIN/WHERE clause) with
+    the highest ``score``, ties to the lower neighbor id.  Emits
+    ``(query_id, neighbor_id, *extra, similarity, rank)`` with the
+    similarity quantized and the rank an INT; ``extra`` maps an output
+    name to an expression over ``source``."""
+    inner = "".join(f"{e} AS {a}, " for a, e in extra.items())
+    outer = "".join(f"{a}, " for a in extra)
+    return f"""
+    SELECT query_id, neighbor_id, {outer}{Q("similarity")} AS similarity,
+           CAST(rank AS INT) AS rank
+    FROM (
+        SELECT {q} AS query_id, {n} AS neighbor_id, {inner}{score} AS similarity,
+               row_number() OVER (PARTITION BY {q} ORDER BY {score} DESC, {n} ASC) AS rank
+        {source}
+    ) WHERE rank <= {k}"""
+
+
+def _exact_sim_sql(ranked: str) -> str:
+    """An approximate top-k's oracle tail: ``ranked``'s similarity
+    becomes ``approx_sim`` beside the exact cosine of each (query,
+    neighbor) pair over the ``vecs`` CTE."""
+    return f"""
+    SELECT r.query_id, r.neighbor_id, r.similarity AS approx_sim,
+           {Q(_cos_sql("a.embedding", "b.embedding"))} AS exact_sim, r.rank
+    FROM ({ranked}) r
+    JOIN vecs a ON a.vec_id = r.query_id
+    JOIN vecs b ON b.vec_id = r.neighbor_id"""
+
+
+def _sf_cache_token(sf_dir: str, *extra: object) -> str:
+    """Cache key for on-disk artifacts derived from an sf_dir: folds in
+    every source parquet's (name, size, mtime) so regenerated testdata
+    invalidates the artifact, plus any extra build parameters."""
+    import glob
+    import hashlib
+
+    stats = [
+        f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}"
+        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
+        for st in [os.stat(p)]
+    ]
+    return hashlib.md5(
+        "|".join([sf_dir, *map(str, extra), *stats]).encode()
+    ).hexdigest()[:12]
+
+
+def _vecs(emb: DataFrame) -> DataFrame:
+    """``(vec_id, embedding)`` with the stored float32 vectors cast to
+    DOUBLE, the precision every oracle twin computes in."""
+    return emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def _queries(emb: DataFrame, where: Column, *keys: str) -> DataFrame:
+    """The query sample ``(query_id, *keys, query_vec)``: the rows of
+    ``emb`` that ``where`` selects."""
+    return emb.filter(where).select(
+        F.col("vec_id").alias("query_id"), *keys, F.col("embedding").alias("query_vec")
+    )
+
+
+def _corpus(emb: DataFrame, corpus_id: str, *keys: str) -> DataFrame:
+    """The searched side ``(corpus_id, *keys, corpus_vec)``: every row
+    of ``emb``."""
+    return emb.select(
+        F.col("vec_id").alias(corpus_id), *keys, F.col("embedding").alias("corpus_vec")
+    )
+
+
+def _exact_topk(queries: DataFrame, corpus: DataFrame, k: int, *keys: str) -> DataFrame:
+    """Exact self-excluding top-k of ``queries`` over a ``neighbor_id``
+    corpus, candidates restricted to equal ``keys``: the blocked
+    float64 kernel, whose dot products agree with the double-precision
+    oracle (the HOF-expression cosine falls out of whole-stage codegen
+    and runs ~5x slower than the BLAS matmul even at bench scale)."""
+    return topk_similarity_join_blocked(
+        queries,
+        corpus,
+        k=k,
+        corpus_id="neighbor_id",
+        exclude_self=True,
+        dtype="float64",
+        join_keys=list(keys),
+    )
+
+
+def _ivf_index(
+    sf_dir: str, corpus: DataFrame, tag: str, k: int, iters: int, **train: int
+) -> tuple[list[tuple[int, list[float]]], str]:
+    """The IVF index over ``corpus``, built once per (sf_dir contents,
+    ``tag``, hyperparameters) and shared by every query passing the
+    same ones.  Returns ``(centroids, lists_path)``."""
+    from vectorsearch_scylla_spark.operators.ivf import build_ivf_index
+
+    return build_ivf_index(
+        corpus,
+        _sf_cache_token(sf_dir, tag, k, iters, *train.values()),
+        k=k,
+        iters=iters,
+        **train,
+    )
+
+
+def _ivf_lists(spark: SparkSession, lists_path: str) -> DataFrame:
+    """The inverted lists ``(vec_id, embedding, cluster_id INT)``."""
+    return read_parquet_cached(spark, lists_path).withColumn(
+        "cluster_id", F.col("cluster_id").cast("int")
+    )
+
+
+def _ivf_topk(
+    vecs: DataFrame,
+    m: int,
+    cents: list[tuple[int, list[float]]],
+    nprobe: int,
+    members: DataFrame,
+    k: int,
+) -> DataFrame:
+    """IVF top-k of every ``m``-th vector: each query fans out to its
+    ``nprobe`` nearest clusters, and the grouped kernel ranks the
+    ``(neighbor_id, cluster_id, corpus_vec)`` members of those clusters
+    exactly, cogrouped on cluster_id so neither side reaches the
+    driver."""
+    from vectorsearch_scylla_spark.operators.ivf import (
+        ivf_probe_topk_grouped,
+        probe_clusters,
+    )
+
+    probes = probe_clusters(
+        _queries(vecs, F.col("vec_id") % m == 0), cents, nprobe=nprobe, vec_col="query_vec"
+    )
+    return ivf_probe_topk_grouped(
+        probes,
+        members,
+        k=k,
+        query_id="query_id",
+        corpus_id="neighbor_id",
+        exclude_self=True,
+        dtype="float64",
+    )
+
+
+def _ranked(out: DataFrame, *keys: str) -> DataFrame:
+    """A top-k's public columns: ``(query_id, neighbor_id, *keys,
+    similarity, rank)`` with the similarity quantized."""
+    return out.select(
+        "query_id",
+        "neighbor_id",
+        *keys,
+        quantize(F.col("similarity")).alias("similarity"),
+        "rank",
+    )
+
+
+def _with_exact_sim(topk: DataFrame, vecs: DataFrame, approx: Column) -> DataFrame:
+    """An approximate top-k's public columns: ``approx`` (the
+    approx_sim column) beside the quantized exact cosine of each
+    (query, neighbor) pair over ``vecs``."""
+    va = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qa"))
+    vb = vecs.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__vb")
+    )
+    return (
+        topk.join(va, "query_id")
+        .join(vb, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            approx,
+            quantize(cosine_similarity("__qa", "__vb")).alias("exact_sim"),
+            "rank",
+        )
+    )
+
+
+# one oracle for knn_bruteforce and knn_distributed: the same result
+# set from the blocked and the cogrouped kernel
+_KNN_ORACLE = _topk_sql(
+    "a.vec_id",
+    "b.vec_id",
+    KNN_COS,
+    "FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id WHERE a.vec_id % 50 = 0",
+    5,
 )
 
 
 @query(
     "knn_bruteforce",
-    f"""
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity, CAST(rank AS INT) AS rank
-    FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {KNN_COS} AS similarity,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-        FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id % 50 = 0
-    ) WHERE rank <= 5
-    """,
+    _KNN_ORACLE,
     ["V1", "V3", "V6", "J3", "J6", "W2"],
     "Exact brute-force kNN: ScyllaDB `ORDER BY embedding ANN OF ? LIMIT "
     "k` replacement (pipeline/path3_vector_search.py:117-127) with "
@@ -819,44 +982,22 @@ def q_knn_bruteforce(
     spark: SparkSession, sf_dir: str, k: int = 5
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("corpus_vec")
-    )
-    # blocked NumPy kernel (float64 so the dot products agree with the
-    # double-precision oracle): the HOF-expression cosine falls out of
-    # whole-stage codegen and eval-interprets the 64-step fold per pair
-    # — measured ~5x slower than the BLAS matmul even at bench scale.
-    out = topk_similarity_join_blocked(
-        queries,
-        corpus,
-        k=k,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    return out.select(
-        "query_id", "neighbor_id", quantize(F.col("similarity")).alias("similarity"), "rank"
+    return _ranked(
+        _exact_topk(_queries(emb, F.col("vec_id") % 50 == 0), _corpus(emb, "neighbor_id"), k)
     )
 
 
 @query(
     "knn_same_label",
-    f"""
-    SELECT query_id, neighbor_id, label, {Q("similarity")} AS similarity, CAST(rank AS INT) AS rank
-    FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, a.label,
-               {KNN_COS} AS similarity,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id <> b.vec_id
-        WHERE a.vec_id % 25 = 0
-    ) WHERE rank <= 5
-    """,
+    _topk_sql(
+        "a.vec_id",
+        "b.vec_id",
+        KNN_COS,
+        "FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id <> b.vec_id"
+        " WHERE a.vec_id % 25 = 0",
+        5,
+        label="a.label",
+    ),
     ["V4", "S8", "J3", "W2"],
     "Partition-scoped kNN: top-k restricted to the query's own partition "
     "(device/date in the reference, pipeline/find_similar_states.py:"
@@ -865,35 +1006,13 @@ def q_knn_bruteforce(
 )
 def q_knn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label"),
-        F.col("embedding").alias("corpus_vec"),
-    )
-    # blocked NumPy kernel with the partition constraint masked inside
-    # the batch matmul (see q_knn_bruteforce); label re-attaches from
-    # the query side — equi-key join, so both sides carry the same value.
-    out = topk_similarity_join_blocked(
-        queries,
-        corpus,
-        k=5,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-        join_keys=["label"],
-    )
-    return out.join(F.broadcast(queries.select("query_id", "label")), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        "label",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
+    queries = _queries(emb, F.col("vec_id") % 25 == 0, "label")
+    # the partition constraint is masked inside the batch matmul; label
+    # re-attaches from the query side — equi-key join, so both sides
+    # carry the same value
+    out = _exact_topk(queries, _corpus(emb, "neighbor_id", "label"), 5, "label")
+    return _ranked(
+        out.join(F.broadcast(queries.select("query_id", "label")), "query_id"), "label"
     )
 
 
@@ -906,34 +1025,6 @@ def q_knn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_K = 8
 IVF_ITERS = 3
 IVF_NPROBE = 2
-
-
-def _cos_sql(x: str, y: str) -> str:
-    """Zero-guarded cosine between two DOUBLE[] SQL expressions
-    (KNN_COS generalized beyond the a/b table aliases)."""
-    return (
-        f"CASE WHEN list_sum(list_transform({x}, v -> v*v)) = 0 "
-        f"  OR list_sum(list_transform({y}, v -> v*v)) = 0 THEN 0.0 "
-        f"ELSE list_cosine_similarity({x}, {y}) END"
-    )
-
-
-def _sf_cache_token(sf_dir: str, *extra: object) -> str:
-    """Cache key for on-disk artifacts derived from an sf_dir: folds in
-    every source parquet's (name, size, mtime) so regenerated testdata
-    invalidates the artifact, plus any extra build parameters."""
-    import glob
-    import hashlib
-    import os
-
-    stats = [
-        f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}"
-        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
-        for st in [os.stat(p)]
-    ]
-    return hashlib.md5(
-        "|".join([sf_dir, *map(str, extra), *stats]).encode()
-    ).hexdigest()[:12]
 
 
 def _ivf_kmeans_cte(
@@ -959,13 +1050,11 @@ def _ivf_kmeans_cte(
     cos_vc = _cos_sql("v.embedding", "c.cvec")
 
     def assign(tbl: str, src: int) -> str:
-        return (
-            "SELECT vec_id, embedding, cluster_id FROM ("
-            "SELECT v.vec_id, v.embedding, c.cluster_id, "
-            f"row_number() OVER (PARTITION BY v.vec_id ORDER BY {cos_vc} DESC, "
-            "c.cluster_id ASC) AS rn "
-            f"FROM {tbl} v CROSS JOIN cent{src} c) WHERE rn = 1"
+        top1 = _topk_sql(
+            "v.vec_id", "c.cluster_id", cos_vc, f"FROM {tbl} v CROSS JOIN cent{src} c", 1,
+            embedding="v.embedding",
         )
+        return f"SELECT query_id AS vec_id, embedding, neighbor_id AS cluster_id FROM ({top1})"
 
     cap = 256 * k if train_rows is None else int(train_rows)
     where = f" WHERE {vecs_where}" if vecs_where else ""
@@ -994,31 +1083,22 @@ def _ivf_kmeans_cte(
         GROUP BY cluster_id)"""
         )
     parts.append(f"members AS ({assign('vecs', iters)})")
+    probed = _topk_sql(
+        "v.vec_id",
+        "c.cluster_id",
+        cos_vc,
+        f"FROM vecs v CROSS JOIN cent{iters} c WHERE v.vec_id % {querymod} = 0",
+        nprobe,
+    )
     parts.append(
-        f"""probes AS (
-        SELECT query_id, cluster_id FROM (
-            SELECT v.vec_id AS query_id, c.cluster_id,
-                   row_number() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {cos_vc} DESC, c.cluster_id ASC) AS crank
-            FROM vecs v CROSS JOIN cent{iters} c
-            WHERE v.vec_id % {querymod} = 0) WHERE crank <= {nprobe})"""
+        f"probes AS (SELECT query_id, neighbor_id AS cluster_id FROM ({probed}))"
     )
     return ",\n    ".join(parts)
 
 
 @query(
     "knn_distributed",
-    f"""
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity, CAST(rank AS INT) AS rank
-    FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {KNN_COS} AS similarity,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-        FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id % 50 = 0
-    ) WHERE rank <= 5
-    """,
+    _KNN_ORACLE,
     ["V3", "J3", "W2", "J6"],
     "Exact kNN with NO driver collect on either side — the large-Q "
     "100 TB shape: two-sided block join (queries and corpus each "
@@ -1039,15 +1119,9 @@ def q_knn_distributed(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("corpus_vec")
-    )
     out = topk_similarity_join_cogrouped(
-        queries,
-        corpus,
+        _queries(emb, F.col("vec_id") % 50 == 0),
+        _corpus(emb, "neighbor_id"),
         k=k,
         corpus_id="neighbor_id",
         exclude_self=True,
@@ -1055,19 +1129,8 @@ def q_knn_distributed(
         n_query_blocks=4,
         n_corpus_blocks=4,
     )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
-    )
+    return _ranked(out)
 
-
-_SQ8_COS = (
-    "CASE WHEN list_sum(list_transform(a.embedding::DOUBLE[], x -> x*x)) = 0 "
-    "  OR list_sum(list_transform(b.rvec, x -> x*x)) = 0 THEN 0.0 "
-    "ELSE list_cosine_similarity(a.embedding::DOUBLE[], b.rvec) END"
-)
 
 # SQ8 quantize→dequantize as ONE Spark SQL expression over a DOUBLE
 # array column named `embedding`: per-vector max-abs/127 scale, int8
@@ -1100,15 +1163,13 @@ _SQ8_DEQUANT_EXPR = (
                               x -> CAST(CAST(floor(x / scale + 0.5) AS TINYINT) AS DOUBLE) * scale) AS rvec
         FROM sc
     )
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity, CAST(rank AS INT) AS rank
-    FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {_SQ8_COS} AS similarity,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {_SQ8_COS} DESC, b.vec_id ASC) AS rank
-        FROM vecs a JOIN recon b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id % 50 = 0
-    ) WHERE rank <= 5
+    {_topk_sql(
+        "a.vec_id",
+        "b.vec_id",
+        _cos_sql("a.embedding", "b.rvec"),
+        "FROM vecs a JOIN recon b ON a.vec_id <> b.vec_id WHERE a.vec_id % 50 = 0",
+        5,
+    )}
     """,
     ["V3", "V6", "W2", "ANN-SQ8"],
     "Scalar-quantized (SQ8) ANN — the third compression lever beside "
@@ -1130,31 +1191,12 @@ _SQ8_DEQUANT_EXPR = (
 def q_sq8_knn(
     spark: SparkSession, sf_dir: str, k: int = 5
 ) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     recon = vecs.select(
         F.col("vec_id").alias("neighbor_id"),
         F.expr(_SQ8_DEQUANT_EXPR).alias("corpus_vec"),
     )
-    queries = vecs.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = topk_similarity_join_blocked(
-        queries,
-        recon,
-        k=k,
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
-    )
+    return _ranked(_exact_topk(_queries(vecs, F.col("vec_id") % 50 == 0), recon, k))
 
 
 # Realistic-K IVF: K ≈ √N at the fixture corpus (√500 ≈ 22), nprobe
@@ -1165,23 +1207,23 @@ IVF_GK = 22
 IVF_GITERS = 2
 IVF_GNPROBE = 3
 
+# exact top-5 over the probed clusters' members (the grouped kernel's
+# oracle tail, after an _ivf_kmeans_cte chain)
+_IVF_TOPK_SQL = _topk_sql(
+    "p.query_id",
+    "m.vec_id",
+    _cos_sql("a.embedding", "m.embedding"),
+    "FROM probes p JOIN vecs a ON a.vec_id = p.query_id"
+    " JOIN members m ON m.cluster_id = p.cluster_id AND m.vec_id <> p.query_id",
+    5,
+)
+
 
 @query(
     "ivf_grouped_knn",
     f"""
     WITH {_ivf_kmeans_cte(IVF_GK, IVF_GITERS, IVF_GNPROBE, 25)}
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity,
-           CAST(rank AS INT) AS rank
-    FROM (
-        SELECT p.query_id, m.vec_id AS neighbor_id,
-               {_cos_sql("a.embedding", "m.embedding")} AS similarity,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {_cos_sql("a.embedding", "m.embedding")} DESC,
-                                           m.vec_id ASC) AS rank
-        FROM probes p
-        JOIN vecs a ON a.vec_id = p.query_id
-        JOIN members m ON m.cluster_id = p.cluster_id AND m.vec_id <> p.query_id
-    ) WHERE rank <= 5
+    {_IVF_TOPK_SQL}
     """,
     ["V3", "V4", "A4", "J3", "W2", "ANN-IVF", "ANN-IVF-GROUPED"],
     "IVF kNN at the PRODUCTION configuration — K ≈ √N (22 at the "
@@ -1205,50 +1247,14 @@ IVF_GNPROBE = 3
 def q_ivf_grouped_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_GNPROBE
 ) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_probe_topk_grouped,
-        probe_clusters,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents, lists_path = build_ivf_index(
-        vecs,
-        _sf_cache_token(sf_dir, "ivfg", IVF_GK, IVF_GITERS),
-        k=IVF_GK,
-        iters=IVF_GITERS,
-    )
-    members = read_parquet_cached(spark, lists_path).select(
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
+    cents, lists_path = _ivf_index(sf_dir, vecs, "ivfg", IVF_GK, IVF_GITERS)
+    members = _ivf_lists(spark, lists_path).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("corpus_vec"),
-        F.col("cluster_id").cast("int").alias("cluster_id"),
+        "cluster_id",
     )
-    probes = probe_clusters(
-        vecs.filter(F.col("vec_id") % 25 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ),
-        cents,
-        nprobe=nprobe,
-        vec_col="query_vec",
-    )
-    out = ivf_probe_topk_grouped(
-        probes,
-        members,
-        k=k,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
-    )
+    return _ranked(_ivf_topk(vecs, 25, cents, nprobe, members, k))
 
 
 # Sampled-training IVF: the cap BINDS at the fixture (256 < 500), so
@@ -1264,18 +1270,7 @@ IVF_STRAIN = 256
     "ivf_sampled_train_knn",
     f"""
     WITH {_ivf_kmeans_cte(IVF_SK, IVF_SITERS, IVF_SNPROBE, 25, train_rows=IVF_STRAIN)}
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity,
-           CAST(rank AS INT) AS rank
-    FROM (
-        SELECT p.query_id, m.vec_id AS neighbor_id,
-               {_cos_sql("a.embedding", "m.embedding")} AS similarity,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {_cos_sql("a.embedding", "m.embedding")} DESC,
-                                           m.vec_id ASC) AS rank
-        FROM probes p
-        JOIN vecs a ON a.vec_id = p.query_id
-        JOIN members m ON m.cluster_id = p.cluster_id AND m.vec_id <> p.query_id
-    ) WHERE rank <= 5
+    {_IVF_TOPK_SQL}
     """,
     ["V3", "V4", "A4", "J3", "W2", "ANN-IVF", "ANN-IVF-SAMPLED"],
     "IVF kNN whose coarse quantizer trains on a BINDING bounded sample "
@@ -1294,51 +1289,16 @@ IVF_STRAIN = 256
 def q_ivf_sampled_train_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_SNPROBE
 ) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_probe_topk_grouped,
-        probe_clusters,
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
+    cents, lists_path = _ivf_index(
+        sf_dir, vecs, "ivfs", IVF_SK, IVF_SITERS, train_rows=IVF_STRAIN
     )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents, lists_path = build_ivf_index(
-        vecs,
-        _sf_cache_token(sf_dir, "ivfs", IVF_SK, IVF_SITERS, IVF_STRAIN),
-        k=IVF_SK,
-        iters=IVF_SITERS,
-        train_rows=IVF_STRAIN,
-    )
-    members = read_parquet_cached(spark, lists_path).select(
+    members = _ivf_lists(spark, lists_path).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("corpus_vec"),
-        F.col("cluster_id").cast("int").alias("cluster_id"),
+        "cluster_id",
     )
-    probes = probe_clusters(
-        vecs.filter(F.col("vec_id") % 25 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ),
-        cents,
-        nprobe=nprobe,
-        vec_col="query_vec",
-    )
-    out = ivf_probe_topk_grouped(
-        probes,
-        members,
-        k=k,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
-    )
+    return _ranked(_ivf_topk(vecs, 25, cents, nprobe, members, k))
 
 
 # --- IVF compaction (split_oversized_clusters) ----------------------
@@ -1441,26 +1401,19 @@ def _ivf_compaction_cte(split_k: int, iters: int, k: int) -> str:
     "assignment, and the long id mint end-to-end.",
 )
 def q_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        split_oversized_clusters,
-    )
+    from vectorsearch_scylla_spark.operators.ivf import split_oversized_clusters
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     n = vecs.count()
     max_size = int(math.floor(1.05 * n / IVF_K))
     # SAME cached coarse index as the rest of the IVF family
-    cents, lists_path = build_ivf_index(
-        vecs, _sf_cache_token(sf_dir, "ivf", IVF_K, IVF_ITERS), k=IVF_K, iters=IVF_ITERS
-    )
-    members = read_parquet_cached(spark, lists_path).select(
-        "vec_id", "embedding", F.col("cluster_id").cast("int").alias("cluster_id")
-    )
+    cents, lists_path = _ivf_index(sf_dir, vecs, "ivf", IVF_K, IVF_ITERS)
     _, new_members = split_oversized_clusters(
-        members, cents, max_size=max_size, split_k=CMP_SPLIT_K, iters=CMP_ITERS
+        _ivf_lists(spark, lists_path),
+        cents,
+        max_size=max_size,
+        split_k=CMP_SPLIT_K,
+        iters=CMP_ITERS,
     )
     was_split = F.col("cluster_id") >= 1_000_000
     return new_members.select(
@@ -1487,18 +1440,14 @@ def q_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM members
         )
     )
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity,
-           CAST(rank AS INT) AS rank
-    FROM (
-        SELECT p.query_id, r.vec_id AS neighbor_id,
-               {_cos_sql("a.embedding", "r.rvec")} AS similarity,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {_cos_sql("a.embedding", "r.rvec")} DESC,
-                                           r.vec_id ASC) AS rank
-        FROM probes p
-        JOIN vecs a ON a.vec_id = p.query_id
-        JOIN recon r ON r.cluster_id = p.cluster_id AND r.vec_id <> p.query_id
-    ) WHERE rank <= 5
+    {_topk_sql(
+        "p.query_id",
+        "r.vec_id",
+        _cos_sql("a.embedding", "r.rvec"),
+        "FROM probes p JOIN vecs a ON a.vec_id = p.query_id"
+        " JOIN recon r ON r.cluster_id = p.cluster_id AND r.vec_id <> p.query_id",
+        5,
+    )}
     """,
     ["V3", "V4", "J3", "W2", "ANN-SQ8", "ANN-IVF", "ANN-SQ8-IVF"],
     "IVF × SQ8 composition — the actually-shipped FAISS `IVF,SQ8` "
@@ -1518,81 +1467,33 @@ def q_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sq8_ivf_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_GNPROBE
 ) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_probe_topk_grouped,
-        probe_clusters,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     # SAME cache token as ivf_grouped_knn: one index build serves both
-    cents, lists_path = build_ivf_index(
-        vecs,
-        _sf_cache_token(sf_dir, "ivfg", IVF_GK, IVF_GITERS),
-        k=IVF_GK,
-        iters=IVF_GITERS,
-    )
+    cents, lists_path = _ivf_index(sf_dir, vecs, "ivfg", IVF_GK, IVF_GITERS)
     # the quantized code table: in production this projection is
     # materialized once next to the lists (4× smaller than the floats);
     # here it stays an expression over the list parquet so the oracle
     # certifies the exact quantize math rather than a stored artifact
-    codes = read_parquet_cached(spark, lists_path).select(
+    codes = _ivf_lists(spark, lists_path).select(
         F.col("vec_id").alias("neighbor_id"),
-        F.col("cluster_id").cast("int").alias("cluster_id"),
+        "cluster_id",
         F.expr(_SQ8_DEQUANT_EXPR).alias("corpus_vec"),
     )
-    probes = probe_clusters(
-        vecs.filter(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ),
-        cents,
-        nprobe=nprobe,
-        vec_col="query_vec",
-    )
-    out = ivf_probe_topk_grouped(
-        probes,
-        codes,
-        k=k,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        quantize(F.col("similarity")).alias("similarity"),
-        "rank",
-    )
+    return _ranked(_ivf_topk(vecs, 50, cents, nprobe, codes, k))
 
 
 @query(
     "ann_recall_report",
     f"""
     WITH {_ivf_kmeans_cte(IVF_GK, IVF_GITERS, IVF_GNPROBE, 25)},
-    ivf_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, m.vec_id AS neighbor_id,
-                   row_number() OVER (PARTITION BY p.query_id
-                                      ORDER BY {_cos_sql("a.embedding", "m.embedding")} DESC,
-                                               m.vec_id ASC) AS rank
-            FROM probes p
-            JOIN vecs a ON a.vec_id = p.query_id
-            JOIN members m ON m.cluster_id = p.cluster_id AND m.vec_id <> p.query_id
-        ) WHERE rank <= 5
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                   row_number() OVER (PARTITION BY a.vec_id
-                                      ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-            FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-            WHERE a.vec_id % 25 = 0
-        ) WHERE rank <= 5
-    )
+    ivf_top AS ({_IVF_TOPK_SQL}),
+    exact_top AS ({_topk_sql(
+        "a.vec_id",
+        "b.vec_id",
+        KNN_COS,
+        "FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id WHERE a.vec_id % 25 = 0",
+        5,
+    )})
     SELECT e.query_id,
            CAST(count(i.neighbor_id) AS BIGINT) AS n_hits,
            {Q("count(i.neighbor_id) / 5.0")} AS recall_at_5
@@ -1624,23 +1525,9 @@ def q_sq8_ivf_knn(
     "pruned scan.",
 )
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = vecs.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("corpus_vec")
-    )
-    exact = topk_similarity_join_blocked(
-        queries,
-        corpus,
-        k=5,
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
+    exact = _exact_topk(
+        _queries(vecs, F.col("vec_id") % 25 == 0), _corpus(vecs, "neighbor_id"), 5
     ).select("query_id", "neighbor_id")
     approx = (
         q_ivf_grouped_knn(spark, sf_dir)
@@ -1672,14 +1559,14 @@ _IVF_ADD_ORACLE = f"""
     ),
     sizes AS (SELECT cluster_id, count(*) AS n_base FROM members GROUP BY 1),
     routed AS (
-        SELECT vec_id, cluster_id, s FROM (
-            SELECT i.vec_id, c.cluster_id,
-                   {_cos_sql("i.embedding", "c.cvec")} AS s,
-                   row_number() OVER (PARTITION BY i.vec_id
-                                      ORDER BY {_cos_sql("i.embedding", "c.cvec")} DESC,
-                                               c.cluster_id ASC) AS rn
-            FROM inc i CROSS JOIN cent{IVF_GITERS} c
-        ) WHERE rn = 1
+        SELECT query_id AS vec_id, neighbor_id AS cluster_id, similarity AS s
+        FROM ({_topk_sql(
+            "i.vec_id",
+            "c.cluster_id",
+            _cos_sql("i.embedding", "c.cvec"),
+            f"FROM inc i CROSS JOIN cent{IVF_GITERS} c",
+            1,
+        )})
     )
     SELECT r.vec_id AS new_vec_id, r.cluster_id,
            {Q("r.s")} AS centroid_sim,
@@ -1712,23 +1599,12 @@ _IVF_ADD_ORACLE = f"""
     "mutation.)",
 )
 def q_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        assign_clusters,
-        build_ivf_index,
-    )
+    from vectorsearch_scylla_spark.operators.ivf import assign_clusters
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     base = vecs.filter(F.col("vec_id") % 10 != 7)
     inc = vecs.filter(F.col("vec_id") % 10 == 7)
-    cents, lists_path = build_ivf_index(
-        base,
-        _sf_cache_token(sf_dir, "ivfinc", IVF_GK, IVF_GITERS),
-        k=IVF_GK,
-        iters=IVF_GITERS,
-    )
+    cents, lists_path = _ivf_index(sf_dir, base, "ivfinc", IVF_GK, IVF_GITERS)
     sizes = (
         read_parquet_cached(spark, lists_path)
         .groupBy(F.col("cluster_id").cast("int").alias("cluster_id"))
@@ -1756,6 +1632,22 @@ PQ_M = 4  # subspaces
 PQ_KSUB = 4  # codewords per subspace
 PQ_ITERS = 2
 PQ_DSUB = 16  # 4 × 16 = 64-dim embeddings
+
+
+def _pq_index(sf_dir: str, corpus: DataFrame, *tag: object) -> tuple[list, str]:
+    """The PQ index (codebooks + encoded code table) over ``corpus``,
+    built once per (sf_dir contents, ``tag``, PQ hyperparameters).
+    Returns ``(codebooks, codes_path)``."""
+    from vectorsearch_scylla_spark.operators.pq import build_pq_index
+
+    return build_pq_index(
+        corpus,
+        _sf_cache_token(sf_dir, *tag, PQ_M, PQ_KSUB, PQ_ITERS, PQ_DSUB),
+        m=PQ_M,
+        ksub=PQ_KSUB,
+        iters=PQ_ITERS,
+        dsub=PQ_DSUB,
+    )
 
 
 def _pq_cte(
@@ -1798,16 +1690,16 @@ def _pq_cte(
         parts.append(
             f"cent0_{s} AS (SELECT cluster_id, embedding[{lo}:{hi}] AS cvec FROM seeds)"
         )
-        assign = (
-            "SELECT vec_id, sub, cluster_id FROM ("
-            f"SELECT v.vec_id, {vsub} AS sub, c.cluster_id, "
-            f"row_number() OVER (PARTITION BY v.vec_id ORDER BY "
-            f"{{cos}} DESC, c.cluster_id ASC) AS rn "
-            f"FROM pq_train v CROSS JOIN cent{{src}}_{s} c) WHERE rn = 1"
-        )
+        cos = _cos_sql(vsub, "c.cvec")
+
+        def top1(src: str) -> str:
+            return _topk_sql("v.vec_id", "c.cluster_id", cos, src, 1, sub=vsub)
+
         for i in range(1, iters + 1):
-            cos = _cos_sql(vsub, "c.cvec")
-            parts.append(f"asgn{i}_{s} AS ({assign.format(src=i - 1, cos=cos)})")
+            parts.append(
+                f"asgn{i}_{s} AS (SELECT query_id AS vec_id, sub, neighbor_id AS cluster_id "
+                f"FROM ({top1(f'FROM pq_train v CROSS JOIN cent{i - 1}_{s} c')}))"
+            )
             parts.append(
                 f"""cent{i}_{s} AS (
             SELECT cluster_id, list(avg_val ORDER BY pos) AS cvec FROM (
@@ -1819,13 +1711,9 @@ def _pq_cte(
                 GROUP BY cluster_id, pos)
             GROUP BY cluster_id)"""
             )
-        cos = _cos_sql(vsub, "c.cvec")
         parts.append(
-            f"codes_{s} AS (SELECT vec_id, cluster_id AS code FROM ("
-            f"SELECT v.vec_id, c.cluster_id, "
-            f"row_number() OVER (PARTITION BY v.vec_id ORDER BY {cos} DESC, "
-            f"c.cluster_id ASC) AS rn "
-            f"FROM {vecs_name} v CROSS JOIN cent{iters}_{s} c) WHERE rn = 1)"
+            f"codes_{s} AS (SELECT query_id AS vec_id, neighbor_id AS code "
+            f"FROM ({top1(f'FROM {vecs_name} v CROSS JOIN cent{iters}_{s} c')}))"
         )
         parts.append(
             f"cbn_{s} AS (SELECT cluster_id, cvec, "
@@ -1874,18 +1762,7 @@ def _pq_cte(
     "pq_knn",
     f"""
     WITH {_pq_cte(PQ_M, PQ_KSUB, PQ_ITERS, PQ_DSUB, 25)}
-    SELECT r.query_id, r.neighbor_id, r.approx_sim,
-           {Q(_cos_sql("a.embedding", "b.embedding"))} AS exact_sim,
-           CAST(r.rank AS INT) AS rank
-    FROM (
-        SELECT query_id, neighbor_id, approx_sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_sim DESC, neighbor_id ASC) AS rank
-        FROM pq_scored
-    ) r
-    JOIN vecs a ON a.vec_id = r.query_id
-    JOIN vecs b ON b.vec_id = r.neighbor_id
-    WHERE r.rank <= 5
+    {_exact_sim_sql(_topk_sql("query_id", "neighbor_id", "approx_sim", "FROM pq_scored", 5))}
     """,
     ["V3", "V6", "J3", "W2", "ANN-PQ"],
     "PRODUCT-QUANTIZATION approximate kNN (the compressed-residency "
@@ -1910,51 +1787,25 @@ def _pq_cte(
 def q_pq_knn(
     spark: SparkSession, sf_dir: str, k: int = 5
 ) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.pq import (
-        build_pq_index,
-        pq_adc_topk_np,
-    )
+    from vectorsearch_scylla_spark.operators.pq import pq_adc_topk_np
 
     emb = load_table(spark, sf_dir, "embeddings")
     # index build runs ONCE per (sf_dir contents, hyperparams): train
     # codebooks + materialize the encoded code table; repeat
     # invocations only run the ADC scan over 4 ints + 1 double per
     # corpus vector
-    books, codes_path = build_pq_index(
-        emb,
-        _sf_cache_token(sf_dir, "pq", PQ_M, PQ_KSUB, PQ_ITERS, PQ_DSUB),
-        m=PQ_M,
-        ksub=PQ_KSUB,
-        iters=PQ_ITERS,
-        dsub=PQ_DSUB,
-    )
+    books, codes_path = _pq_index(sf_dir, emb, "pq")
     codes = read_parquet_cached(spark, codes_path).select(
         F.col("vec_id").alias("neighbor_id"),
         *[f"code{s}" for s in range(PQ_M)],
         "rnorm",
     )
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     topk = pq_adc_topk_np(
-        queries, codes, books, k=k, dsub=PQ_DSUB, exclude_self=True,
+        _queries(emb, F.col("vec_id") % 25 == 0), codes, books, k=k, dsub=PQ_DSUB,
+        exclude_self=True,
         dtype="float64",  # quantize-identical to the DuckDB oracle CTE
     )
-    va = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qa"))
-    vb = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__vb")
-    )
-    return (
-        topk.join(va, "query_id")
-        .join(vb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_sim",
-            quantize(cosine_similarity("__qa", "__vb")).alias("exact_sim"),
-            "rank",
-        )
-    )
+    return _with_exact_sim(topk, emb, F.col("approx_sim"))
 
 
 _IVFPQ_DOTS = " + ".join(
@@ -1980,18 +1831,7 @@ _IVFPQ_CB_JOINS = " ".join(
         JOIN pq_codes pc ON pc.vec_id = m.vec_id
         {_IVFPQ_CB_JOINS}
     )
-    SELECT r.query_id, r.neighbor_id, r.approx_sim,
-           {Q(_cos_sql("a.embedding", "b.embedding"))} AS exact_sim,
-           CAST(r.rank AS INT) AS rank
-    FROM (
-        SELECT query_id, neighbor_id, approx_sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_sim DESC, neighbor_id ASC) AS rank
-        FROM ivfpq_scored
-    ) r
-    JOIN vecs a ON a.vec_id = r.query_id
-    JOIN vecs b ON b.vec_id = r.neighbor_id
-    WHERE r.rank <= 5
+    {_exact_sim_sql(_topk_sql("query_id", "neighbor_id", "approx_sim", "FROM ivfpq_scored", 5))}
     """,
     ["V3", "V4", "V6", "J3", "W2", "ANN-IVFPQ"],
     "IVF-PQ — the COMPLETE canonical scale-ANN composition: the trained "
@@ -2020,31 +1860,14 @@ _IVFPQ_CB_JOINS = " ".join(
 def q_ivfpq_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        probe_clusters,
-    )
-    from vectorsearch_scylla_spark.operators.pq import (
-        build_pq_index,
-        pq_adc_topk_np,
-    )
+    from vectorsearch_scylla_spark.operators.ivf import probe_clusters
+    from vectorsearch_scylla_spark.operators.pq import pq_adc_topk_np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    cents, lists_path = build_ivf_index(
-        vecs, _sf_cache_token(sf_dir, "ivf", IVF_K, IVF_ITERS), k=IVF_K, iters=IVF_ITERS
-    )
-    books, codes_path = build_pq_index(
-        emb,
-        _sf_cache_token(sf_dir, "pq", PQ_M, PQ_KSUB, PQ_ITERS, PQ_DSUB),
-        m=PQ_M,
-        ksub=PQ_KSUB,
-        iters=PQ_ITERS,
-        dsub=PQ_DSUB,
-    )
-    queries = vecs.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    vecs = _vecs(emb)
+    cents, lists_path = _ivf_index(sf_dir, vecs, "ivf", IVF_K, IVF_ITERS)
+    books, codes_path = _pq_index(sf_dir, emb, "pq")
+    queries = _queries(vecs, F.col("vec_id") % 25 == 0)
     probes = probe_clusters(queries, cents, nprobe=nprobe, vec_col="query_vec")
     # prune the inverted-list scan to probed clusters (partition pruning
     # at scale), then fan candidates out per probe — each corpus vector
@@ -2054,12 +1877,9 @@ def q_ivfpq_knn(
     # pruning gives the same directory prune (see ivf_sampled_train_knn).
     probed = probes.select("cluster_id").distinct()
     members = (
-        read_parquet_cached(spark, lists_path)
+        _ivf_lists(spark, lists_path)
         .join(F.broadcast(probed), "cluster_id", "left_semi")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cluster_id").cast("int").alias("cluster_id"),
-        )
+        .select(F.col("vec_id").alias("neighbor_id"), "cluster_id")
     )
     # code rows restricted to probed-cluster members (the partition
     # pruning) and tagged with their cluster id so the kernel's
@@ -2078,21 +1898,7 @@ def q_ivfpq_knn(
         exclude_self=True, dtype="float64",
         probes=probes.select("query_id", "cluster_id"),
     )
-    va = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qa"))
-    vb = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__vb")
-    )
-    return (
-        topk.join(va, "query_id")
-        .join(vb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_sim",
-            quantize(cosine_similarity("__qa", "__vb")).alias("exact_sim"),
-            "rank",
-        )
-    )
+    return _with_exact_sim(topk, vecs, F.col("approx_sim"))
 
 
 # Residual IVFPQ: PQ trained on RESIDUALS v − c(v) (the shipped FAISS
@@ -2131,25 +1937,14 @@ _RES_DECODE_CASE = (
         {_RES_CENT_JOIN}
         {" ".join(f"JOIN cbn_{s} b{s} ON b{s}.cluster_id = pc.code{s}" for s in range(PQ_M))}
     )
-    SELECT r.query_id, r.neighbor_id, {Q("r.sim")} AS approx_sim,
-           {Q(_cos_sql("a.embedding", "b.embedding"))} AS exact_sim,
-           CAST(r.rank AS INT) AS rank
-    FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, neighbor_id ASC) AS rank
-        FROM (
-            SELECT p.query_id, rc.vec_id AS neighbor_id,
-                   {_cos_sql("a.embedding", "rc.rvec")} AS sim
-            FROM probes p
-            JOIN vecs a ON a.vec_id = p.query_id
-            JOIN reconv rc ON rc.cluster_id = p.cluster_id
-                          AND rc.vec_id <> p.query_id
-        )
-    ) r
-    JOIN vecs a ON a.vec_id = r.query_id
-    JOIN vecs b ON b.vec_id = r.neighbor_id
-    WHERE r.rank <= 5
+    {_exact_sim_sql(_topk_sql(
+        "p.query_id",
+        "rc.vec_id",
+        _cos_sql("a.embedding", "rc.rvec"),
+        "FROM probes p JOIN vecs a ON a.vec_id = p.query_id"
+        " JOIN reconv rc ON rc.cluster_id = p.cluster_id AND rc.vec_id <> p.query_id",
+        5,
+    ))}
     """,
     ["V3", "V6", "J3", "W2", "ANN-IVFPQ", "ANN-IVFPQ-RES"],
     "RESIDUAL IVF-PQ — the shipped FAISS `IVF,PQ` shape: per-subspace "
@@ -2174,26 +1969,11 @@ def q_ivfpq_residual_knn(
     spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
     from vectorsearch_scylla_spark.functions.vector import _arr_sql
-    from vectorsearch_scylla_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_probe_topk_grouped,
-        probe_clusters,
-    )
-    from vectorsearch_scylla_spark.operators.pq import build_pq_index
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     # coarse index: SAME cache token across the IVF family — built once, shared
-    cents, lists_path = build_ivf_index(
-        vecs, _sf_cache_token(sf_dir, "ivf", IVF_K, IVF_ITERS), k=IVF_K, iters=IVF_ITERS
-    )
-    members = read_parquet_cached(spark, lists_path).select(
-        "vec_id",
-        "embedding",
-        F.col("cluster_id").cast("int").alias("cluster_id"),
-    )
+    cents, lists_path = _ivf_index(sf_dir, vecs, "ivf", IVF_K, IVF_ITERS)
+    members = _ivf_lists(spark, lists_path)
     cent_case = (
         "CASE cluster_id "
         + " ".join(f"WHEN {cid} THEN {_arr_sql(cvec)}" for cid, cvec in cents)
@@ -2206,16 +1986,7 @@ def q_ivfpq_residual_knn(
             f"zip_with(embedding, {cent_case}, (x, y) -> x - y)"
         ).alias("embedding"),
     )
-    books, codes_path = build_pq_index(
-        res,
-        _sf_cache_token(
-            sf_dir, "pqres", IVF_K, IVF_ITERS, PQ_M, PQ_KSUB, PQ_ITERS, PQ_DSUB
-        ),
-        m=PQ_M,
-        ksub=PQ_KSUB,
-        iters=PQ_ITERS,
-        dsub=PQ_DSUB,
-    )
+    books, codes_path = _pq_index(sf_dir, res, "pqres", IVF_K, IVF_ITERS)
     # decode: recon = centroid + concat(codewords) — a scan-side
     # projection over (cluster_id, code0..3); the stored lists need
     # only ids + codes (64× fewer bytes than the float corpus)
@@ -2237,37 +2008,10 @@ def q_ivfpq_residual_knn(
             F.expr(recon_sql).alias("corpus_vec"),
         )
     )
-    probes = probe_clusters(
-        vecs.filter(F.col("vec_id") % 25 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ),
-        cents,
-        nprobe=nprobe,
-        vec_col="query_vec",
-    )
-    out = ivf_probe_topk_grouped(
-        probes,
-        codes,
-        k=k,
-        query_id="query_id",
-        corpus_id="neighbor_id",
-        exclude_self=True,
-        dtype="float64",
-    )
-    va = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qa"))
-    vb = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__vb")
-    )
-    return (
-        out.join(va, "query_id")
-        .join(vb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            quantize(F.col("similarity")).alias("approx_sim"),
-            quantize(cosine_similarity("__qa", "__vb")).alias("exact_sim"),
-            "rank",
-        )
+    return _with_exact_sim(
+        _ivf_topk(vecs, 25, cents, nprobe, codes, k),
+        vecs,
+        quantize(F.col("similarity")).alias("approx_sim"),
     )
 
 
@@ -2275,18 +2019,17 @@ def q_ivfpq_residual_knn(
     "path3_novelty_flags",
     f"""
     WITH q AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id % 25 = 0),
-    topk AS (
-        SELECT query_id, similarity FROM (
-            SELECT a.vec_id AS query_id, {KNN_COS} AS similarity,
-                   row_number() OVER (PARTITION BY a.vec_id
-                                      ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-            FROM q a JOIN embeddings b
-              ON a.label = b.label AND a.vec_id <> b.vec_id
-        ) WHERE rank <= 10
-    ),
+    topk AS ({_topk_sql(
+        "a.vec_id",
+        "b.vec_id",
+        KNN_COS,
+        "FROM q a JOIN embeddings b ON a.label = b.label AND a.vec_id <> b.vec_id",
+        10,
+        raw_sim=KNN_COS,
+    )}),
     counts AS (
         SELECT query_id,
-               CAST(sum(CASE WHEN similarity >= 0.90 THEN 1 ELSE 0 END) AS BIGINT) AS similar_count
+               CAST(sum(CASE WHEN raw_sim >= 0.90 THEN 1 ELSE 0 END) AS BIGINT) AS similar_count
         FROM topk GROUP BY query_id
     )
     SELECT q.vec_id AS query_id,
@@ -2302,18 +2045,10 @@ def q_ivfpq_residual_knn(
 )
 def q_path3_novelty_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("label"),
-        F.col("embedding").alias("corpus_vec"),
-    )
+    queries = _queries(emb, F.col("vec_id") % 25 == 0, "label")
     topk = topk_similarity_join(
-        queries, corpus, k=10, exclude_self=True, join_keys=["label"]
+        queries, _corpus(emb, "corpus_id", "label"), k=10, exclude_self=True,
+        join_keys=["label"],
     )
     counts = (
         topk.filter(F.col("similarity") >= 0.90)
@@ -4977,8 +4712,6 @@ def q_embedding_input_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fleet_config_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    import json
-    import os
     import tempfile
 
     raw = device_metrics_raw(spark, sf_dir)
@@ -5106,7 +4839,7 @@ _PLANTED_EMB_SQL = """
 
 def _emb_with_planted_dups(emb: DataFrame) -> DataFrame:
     """Spark twin of ``_PLANTED_EMB_SQL`` (same rows, bit-identical)."""
-    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    base = _vecs(emb)
     exact = base.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
@@ -5681,15 +5414,14 @@ def q_embedding_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     "lsh_knn",
     f"""
     WITH {_PLANTED_EMB_SQL.strip()}
-    SELECT query_id, neighbor_id, {Q("similarity")} AS similarity
-    FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {KNN_COS} AS similarity,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {KNN_COS} DESC, b.vec_id ASC) AS rank
-        FROM planted_emb a JOIN planted_emb b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id >= 1000000
-    ) WHERE rank = 1
+    SELECT query_id, neighbor_id, similarity FROM ({_topk_sql(
+        "a.vec_id",
+        "b.vec_id",
+        KNN_COS,
+        "FROM planted_emb a JOIN planted_emb b ON a.vec_id <> b.vec_id"
+        " WHERE a.vec_id >= 1000000",
+        1,
+    )})
     """,
     ["V3", "V6", "J3", "W2", "ANN-LSH"],
     "LSH APPROXIMATE nearest-neighbor retrieval, value-checked: for "
@@ -5716,15 +5448,9 @@ def q_lsh_knn(
     from vectorsearch_scylla_spark.functions.hyperplane import hyperplane_topk_join
 
     emb = _emb_with_planted_dups(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") >= 1000000).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("corpus_vec")
-    )
     out = hyperplane_topk_join(
-        queries,
-        corpus,
+        _queries(emb, F.col("vec_id") >= 1000000),
+        _corpus(emb, "neighbor_id"),
         k=k,
         query_id="query_id",
         corpus_id="neighbor_id",
@@ -6444,23 +6170,13 @@ def _materialize_once(
     source stats + dtypes alone cannot see a logic change, and a stale
     cache would silently feed old derived rows to every later run
     until the temp dir is cleared."""
-    import glob
-    import hashlib
-    import os
     import tempfile
 
-    stats = [
-        f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}"
-        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
-        for st in [os.stat(p)]
-    ]
     # dtypes are part of the key: the same columns can arrive as
     # TIMESTAMP vs TIMESTAMP_NTZ depending on the source generation,
     # and readStream.schema(raw.schema) must match the staged files
     cols = [f"{c}:{t}" for c, t in df.dtypes]
-    key = hashlib.md5(
-        ("|".join([sf_dir, logic, *cols, *stats])).encode()
-    ).hexdigest()[:12]
+    key = _sf_cache_token(sf_dir, logic, *cols)
     path = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
     if not os.path.isdir(path):
         publish_dir(
@@ -6581,20 +6297,10 @@ def _ivfadd_base_and_src(spark: SparkSession, sf_dir: str):
     """streaming_ivf_add_e2e's frozen base index (same cache token as
     ivf_incremental_add) + staged increment source.  Returns
     ``(cents, lists_path, inc, src)``."""
-    from vectorsearch_scylla_spark.operators.ivf import build_ivf_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    vecs = _vecs(load_table(spark, sf_dir, "embeddings"))
     base_corpus = vecs.filter(F.col("vec_id") % 10 != 7)
     inc = vecs.filter(F.col("vec_id") % 10 == 7)
-    cents, lists_path = build_ivf_index(
-        base_corpus,
-        _sf_cache_token(sf_dir, "ivfinc", IVF_GK, IVF_GITERS),
-        k=IVF_GK,
-        iters=IVF_GITERS,
-    )
+    cents, lists_path = _ivf_index(sf_dir, base_corpus, "ivfinc", IVF_GK, IVF_GITERS)
     src = _materialize_once(
         inc.repartition(16), "vss_ivfadd_src", sf_dir, logic="mod10-7-v2"
     )
@@ -6775,7 +6481,6 @@ _LWW_SNAP_CTES = f"""
 )
 def q_streaming_novelty_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -6861,7 +6566,6 @@ _SDE_SCORE = f"greatest(0.0, 1.0 - ({_CS_SIM})) + least(1.0, ({_CS_ZSUM}) / 40.0
     "(pipeline/kafka_consumer.py:381-556, SURVEY §3.1).",
 )
 def q_streaming_detect_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
@@ -7009,7 +6713,6 @@ def q_streaming_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -7094,7 +6797,6 @@ def q_streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import atexit
-    import os
     import shutil
     import tempfile
 
